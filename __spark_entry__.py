@@ -1,42 +1,14 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry-point contract for the PySpark engine.
 
 ``entry(spark)`` smoke-runs the flagship query; ``queries()`` exposes
-every implemented operator from SURVEY.md §2 (plus the training-data
-operators); ``oracle_sql()`` gives the DuckDB-equivalent SQL for each.
-The only entries without oracles are ``approx_stats`` (sketch
-estimates, tolerance-checked in tests/test_sketches.py) and
-``compression_ratio`` (zlib is not expressible in SQL; pinned on
-known inputs in tests/test_text.py). Two entries graduated to full
-oracles in round 3: ``frequent_tokens`` (deterministic two-pass
-Misra-Gries sketch-then-recount — exact top-k,
-partition-independent, with an in-plan provability guard) and
-``ivf_topk`` (declarative k-means-refined IVF whose entire index
-build + probe replays in SQL; the numpy multi-iteration quantizer
-stays recall-tested in tests/test_similarity.py). The rest of the approximate family (``lsh_topk``,
-``pq_topk``, ``ivf_topk_seeded``, ``dedup_embedding_lsh``) is fully
-deterministic (md5-derived hyperplanes / sampled codebooks / seeded
-quantizers) and oracle-checked.
-
-Late round 3 added a statistics/ML layer, every entry oracle-checked
-end to end: ``quality_classifier`` (the DuckDB oracle replays the
-ENTIRE Jacobi-preconditioned logistic-regression fit, not just the
-model), KMV bottom-k sketches (``kmv_distinct``/``kmv_overlap`` —
-deterministic, so even the ESTIMATES replay), graph analytics
-(``cooccurrence_graph``/``triangle_count``), leakage-proof
-``cluster_split``, drift/outlier/changepoint monitoring
-(``psi_drift``/``mad_outliers``/``cusum_changepoints``),
-``bootstrap_ci`` (deterministic Poisson bootstrap),
-``golden_record`` (entity-resolution survivorship),
-``resample_interpolate``, ``kaplan_meier`` and
-``attribution_linear``. Round 4 added an evaluation/retrieval layer,
-likewise fully oracle-checked: ``classifier_auc`` (Mann-Whitney
-mid-rank ROC-AUC + thresholded metrics over the replayed classifier
-fit), ``calibration_bins``, ``hybrid_rrf`` (reciprocal-rank fusion of
-BM25 and hashed-embedding cosine rankings), ``retrieval_ndcg``,
-``ann_recall``, ``zipf_fit`` and
-``cluster_quality``. The registry iteration order leads with entries
-that have never appeared in a driver sample (plus stale-fail and
-brand-new ones) so a sampled scoreboard covers them first.
+every registry query (the operators from SURVEY.md §2 plus the
+training-data, statistics, evaluation and retrieval layers);
+``oracle_sql()`` gives the DuckDB-equivalent SQL for each. The one
+entry without an oracle is ``compression_ratio`` (zlib is not
+expressible in SQL; pinned on known inputs in tests/test_text.py).
+The approximate operators (LSH, PQ, IVF, KMV and Misra-Gries sketches,
+the logistic-regression classifier) are deterministic, so their
+oracles replay them exactly.
 
 Every query builder is wrapped so it runs correctly on ANY
 SparkSession the caller provides, not just the repo's own

@@ -3,21 +3,24 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec, ...}, "sf": ...}.
 
-Each query is timed end-to-end (plan build + execution) with a noop
-sink write: unlike ``count()`` — which lets Catalyst prune every
-projection column and can reduce a map-only query to a parquet
-row-count — the noop sink materializes every output column without
-ferrying rows to the driver.
+Every query run in this file and in ``tools/bench_isolated.py`` is
+timed by ``measure(spark, sf_dir, name, runs)``: one JVM GC, then per
+run clear the cache and evict the query's owned session stores
+(``STORE_OWNERS``), and only then time the plan build plus a noop sink
+write. Unlike ``count()`` — which lets Catalyst prune every projection
+column and can reduce a map-only query to a parquet row-count — the
+noop sink materializes every output column without ferrying rows to
+the driver.
 
-Each query runs three times: an untimed first run pays Janino/JIT
+The sweep measures each query three times. Run 0 pays Janino/JIT
 compilation of its generated code (7+ s for the big signature folds — a
 per-JVM one-time cost that is noise at cluster scale and would swamp
-the sub-second data work at sf0.1), then TWO timed steady-state runs
-against a cleared cache; ``queries`` records the min (GC-pause noise is
-strictly additive, so min estimates the plan's true cost) and both raw
-values appear under ``warm_runs``. The cold first-run seconds are still
-reported verbatim under ``cold``. The cache is cleared between runs so
-every timed run re-reads parquet and re-materializes its own persists.
+the sub-second data work at sf0.1) and is reported verbatim under
+``cold``. Runs 1-2 are the steady state: both raws appear under
+``warm_runs`` and ``queries`` records their min (GC-pause noise is
+strictly additive, so min estimates the plan's true cost). The cache is
+cleared before every run so each run re-reads parquet and
+re-materializes its own persists.
 """
 
 from __future__ import annotations
@@ -231,25 +234,17 @@ if len(HEADLINE) != len(set(HEADLINE)):
         + ", ".join(sorted(n for n in set(HEADLINE) if HEADLINE.count(n) > 1))
     )
 
-# Store-accounting (round 10, per the r09 verdict): the r09 session
-# stores moved deterministic family-shared builds into an untimed
-# cold run, which left ~12 HEADLINE rows timing a scan of their own
-# memoized output instead of the work the query exists to measure.
-# Each store now has exactly ONE designated BUILDER query — the
+# Store accounting: each store below has exactly ONE owner query — the
 # family member whose declared result IS (or trivially projects) the
-# store — and before EVERY run of that query (cold and both timed
-# warm runs) its stores are evicted, so the builder's bench row
-# carries build + readout while every other family member legitimately
-# times readout against a built store. Defensible shared INTERMEDIATES
-# whose consumers all do real distinct work in the timed region
-# (trade_ed/trade_nodes under pagerank's 6 hash-join iterations,
-# qc_scored under the AUC/PR/kappa/calibration aggregates, coarse_asg
-# under semantic_dedup's pair join, cooc_edges under the triangle/
-# k-core enumerations, minhash_sig64 under dedup_pr_eval's band joins,
-# kmv_hashes/rfm_base/emb_pairs/bpe_merges under their eval joins)
-# keep the r08-blessed sharing — but each of THOSE builds is also
-# owned below by the family member that serves it verbatim, so every
-# store build in the registry is timed exactly once per sweep.
+# store — and ``measure`` evicts the owner's stores before every one of
+# its runs, so the owner's row carries build + readout while every other
+# consumer times readout against a built store.
+#
+# Twelve stores have no owner, so no warm row times their build; it is
+# paid only in the cold run of whichever consumer runs first:
+# ngram_pairs, minhash_sigs, simhash_sigs, coarse_asg, emb_pairs,
+# emb_lsh_index, trade_ed, trade_nodes, kmv_hashes, cooc_edges,
+# rfm_base and qc_model (the classifier fit).
 STORE_OWNERS: dict[str, list[str]] = {
     "scd2_events": ["scd2_state"],
     "dsir_weights": ["dsir_scores"],
@@ -266,8 +261,8 @@ STORE_OWNERS: dict[str, list[str]] = {
     "minhash_near_dup": ["minhash_pairs"],
     "simhash_near_dup": ["simhash_sigs_full"],
     "bpe_merges": ["bpe_merges"],
-    # bucketed_join's table write is memoized separately
-    # (_BUCKETED_LAST); _evict_owned special-cases it.
+    # bucketed_join's tables are memoized separately (_BUCKETED_LAST);
+    # _evict_owned special-cases it.
 }
 
 
@@ -280,7 +275,7 @@ def _evict_owned(spark, sf_dir: str, name: str) -> None:
     for store in STORE_OWNERS.get(name, ()):
         Q._evict_session_store(spark, sf_dir, store)
     if name == "bucketed_join":
-        Q._BUCKETED_LAST.pop(spark.sparkContext.applicationId, None)
+        Q._evict_bucketed(spark, sf_dir)
 
 # FROZEN anchor set (round 6, per the r05 verdict): cross-round
 # headline totals drown in registry growth (85→96→112→129→135 queries)
@@ -382,6 +377,20 @@ FLOOR_RERUN_RATIO = 1.25
 FLOOR_RERUN_SLACK = 0.25
 
 
+def exceeders(timings: dict[str, float], floors: dict[str, float]) -> list[str]:
+    """Names in ``timings`` (in its order) whose reading exceeds their
+    isolated floor by more than FLOOR_RERUN_RATIO and, so sub-second
+    noise does not trigger, by more than FLOOR_RERUN_SLACK seconds.
+    Names without a floor never exceed."""
+    return [
+        n
+        for n, t in timings.items()
+        if n in floors
+        and t > floors[n] * FLOOR_RERUN_RATIO
+        and t - floors[n] > FLOOR_RERUN_SLACK
+    ]
+
+
 def _isolated_floors() -> dict[str, float]:
     """The committed per-query quiet floors, {} when absent/unreadable
     (the retime pass then simply never fires)."""
@@ -415,6 +424,51 @@ def _shuffle_bytes(spark) -> int:
         return -1
 
 
+def measure(
+    spark, sf_dir: str, name: str, runs: int
+) -> tuple[list[float], list[int]]:
+    """Time ``runs`` runs of registry query ``name``; return the per-run
+    seconds and shuffle-write bytes.
+
+    One full JVM GC first: a long sweep accumulates enough old-gen
+    garbage (plans, codegen classes, UI metadata) that stop-the-world
+    pauses would otherwise land inside late queries and get billed to
+    them. Then, before every run and outside the timed region, the
+    cache is cleared and the query's owned stores are evicted, so each
+    run re-reads parquet and an owner pays its store build. The timed
+    region is the Python plan build plus a noop sink write (analysis,
+    optimization, planning and execution). A shuffle delta is -1 when
+    the UI is off or its stage buffer evicted mid-run."""
+    fn, _ = QUERIES[name]
+    try:
+        spark.sparkContext._jvm.System.gc()
+    except Exception:
+        pass
+    times: list[float] = []
+    marks = [_shuffle_bytes(spark)]
+    for _ in range(runs):
+        spark.catalog.clearCache()
+        _evict_owned(spark, sf_dir, name)
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        times.append(round(time.perf_counter() - t0, 3))
+        marks.append(_shuffle_bytes(spark))
+    spark.catalog.clearCache()
+    shuffle = [b - a if 0 <= a <= b else -1 for a, b in zip(marks, marks[1:])]
+    return times, shuffle
+
+
+def _retime(spark, sf_dir: str, names) -> tuple[dict, dict]:
+    """Warm min-of-two re-reading of ``names`` at sweep end, with the
+    1-min loadavg each started under."""
+    times: dict[str, float] = {}
+    load: dict[str, float] = {}
+    for name in names:
+        load[name] = _load1()
+        times[name] = min(measure(spark, sf_dir, name, 2)[0])
+    return times, load
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -432,12 +486,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     machine_start = _machine_state()
 
-    def run(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
     # Warmup: touch the big tables + run the flagship once.
     fn, _ = QUERIES["pricing_summary"]
-    run(fn(spark, sf_dir))
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
@@ -445,47 +496,17 @@ def main() -> None:
     retimes: dict[str, list[float]] = {}
     qload: dict[str, float] = {}
     for name in HEADLINE:
-        fn, _ = QUERIES[name]
         qload[name] = _load1()
-        # Full GC between queries: ~160 query executions accumulate
-        # enough old-gen garbage (plans, codegen classes, UI metadata)
-        # that stop-the-world pauses land inside late queries and get
-        # billed to them — force the collection into the gap instead.
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
-        _evict_owned(spark, sf_dir, name)
-        t0 = time.perf_counter()
-        run(fn(spark, sf_dir))
-        cold[name] = round(time.perf_counter() - t0, 3)
-        spark.catalog.clearCache()
-        sb0 = _shuffle_bytes(spark)
-        _evict_owned(spark, sf_dir, name)
-        t0 = time.perf_counter()
-        run(fn(spark, sf_dir))
-        warm1 = time.perf_counter() - t0
-        sb1 = _shuffle_bytes(spark)  # first warm run's delta only
+        times, sb = measure(spark, sf_dir, name, 3)
+        cold[name] = times[0]
         # Two timed warm runs for EVERY query, min taken, both raws
-        # recorded. Timing noise in a 150-query shared JVM is strictly
-        # additive (stop-the-world GC pauses land mid-query and inflate;
-        # nothing makes a run spuriously fast), so min is the standard
-        # low-variance estimator for the plan's steady-state cost —
-        # and applying it unconditionally keeps the estimator identical
-        # across queries and rounds, unlike r03's one-sided conditional
-        # re-time (see BENCH_NOTES.md for the methodology change).
-        spark.catalog.clearCache()
-        _evict_owned(spark, sf_dir, name)
-        t0 = time.perf_counter()
-        run(fn(spark, sf_dir))
-        warm2 = time.perf_counter() - t0
-        retimes[name] = [round(warm1, 3), round(warm2, 3)]
-        timings[name] = round(min(warm1, warm2), 3)
-        if sb0 >= 0 and sb1 >= sb0:
-            # sb1 < sb0 means the stage buffer evicted mid-query and the
-            # delta is meaningless — omit rather than record garbage.
-            shuffle[name] = sb1 - sb0
-        spark.catalog.clearCache()
+        # recorded: timing noise in a shared JVM is strictly additive,
+        # so min is the low-variance estimator of the plan's
+        # steady-state cost, identical across queries and rounds.
+        retimes[name] = times[1:]
+        timings[name] = min(times[1:])
+        if sb[1] >= 0:  # first warm run's delta only
+            shuffle[name] = sb[1]
 
     total = round(sum(timings.values()), 3)
     anchor_total = round(sum(timings[n] for n in ANCHOR), 3)
@@ -494,8 +515,7 @@ def main() -> None:
     # Self-arbitration: a sweep that STARTED under external load
     # re-times the frozen anchor set at the end, warm, min-of-two —
     # recorded ALONGSIDE the primary numbers (methodology unchanged)
-    # so the artifact carries its own quiet-er reading instead of
-    # deferring a >1.3x anchor move to a next-round arbitration.
+    # so the artifact carries its own quiet-er reading.
     start_load1 = machine_start.get("loadavg", "-1").split()[0]
     anchor_rerun: dict = {}
     try:
@@ -503,27 +523,7 @@ def main() -> None:
     except ValueError:
         contaminated = False
     if contaminated:
-        rerun_times: dict[str, float] = {}
-        rerun_load: dict[str, float] = {}
-        for name in ANCHOR:
-            fn, _ = QUERIES[name]
-            rerun_load[name] = _load1()
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception:
-                pass
-            spark.catalog.clearCache()
-            _evict_owned(spark, sf_dir, name)
-            t0 = time.perf_counter()
-            run(fn(spark, sf_dir))
-            w1 = time.perf_counter() - t0
-            spark.catalog.clearCache()
-            _evict_owned(spark, sf_dir, name)
-            t0 = time.perf_counter()
-            run(fn(spark, sf_dir))
-            w2 = time.perf_counter() - t0
-            rerun_times[name] = round(min(w1, w2), 3)
-            spark.catalog.clearCache()
+        rerun_times, rerun_load = _retime(spark, sf_dir, ANCHOR)
         anchor_rerun = {
             "reason": f"start load1 {start_load1} > {ANCHOR_RERUN_LOAD1}",
             "anchor_total_retimed": round(sum(rerun_times.values()), 3),
@@ -532,59 +532,27 @@ def main() -> None:
         }
 
     # Per-query self-adjudication: re-time every query whose primary
-    # reading exceeds its committed isolated floor by >1.5x (and by
-    # an absolute slack, so sub-second noise doesn't trigger) —
-    # recorded alongside, never replacing, the primary numbers. The
-    # anchor rerun's values are reused rather than re-measured.
+    # reading exceeds its committed isolated floor — recorded
+    # alongside, never replacing, the primary numbers. The anchor
+    # rerun's values are reused rather than re-measured.
     floors = _isolated_floors()
     floor_rerun: dict = {}
-    exceeders = [
-        n
-        for n in HEADLINE
-        if n in floors
-        and timings[n] > floors[n] * FLOOR_RERUN_RATIO
-        and timings[n] - floors[n] > FLOOR_RERUN_SLACK
-    ]
-    if exceeders:
-        fr_times: dict[str, float] = {}
-        fr_load: dict[str, float] = {}
-        reused = anchor_rerun.get("queries", {}) if anchor_rerun else {}
-        for name in exceeders:
-            if name in reused:
-                fr_times[name] = reused[name]
-                continue
-            fn, _ = QUERIES[name]
-            fr_load[name] = _load1()
-            try:
-                spark.sparkContext._jvm.System.gc()
-            except Exception:
-                pass
-            spark.catalog.clearCache()
-            _evict_owned(spark, sf_dir, name)
-            t0 = time.perf_counter()
-            run(fn(spark, sf_dir))
-            w1 = time.perf_counter() - t0
-            spark.catalog.clearCache()
-            _evict_owned(spark, sf_dir, name)
-            t0 = time.perf_counter()
-            run(fn(spark, sf_dir))
-            w2 = time.perf_counter() - t0
-            fr_times[name] = round(min(w1, w2), 3)
-            spark.catalog.clearCache()
+    over = exceeders(timings, floors)
+    if over:
+        reused = anchor_rerun.get("queries", {})
+        fr_times, fr_load = _retime(
+            spark, sf_dir, [n for n in over if n not in reused]
+        )
+        fr_times.update({n: reused[n] for n in over if n in reused})
         floor_rerun = {
             "reason": (
                 f"primary reading > {FLOOR_RERUN_RATIO}x isolated floor "
                 f"(+{FLOOR_RERUN_SLACK}s slack)"
             ),
-            "floors": {n: floors[n] for n in exceeders},
+            "floors": {n: floors[n] for n in over},
             "queries": fr_times,
             "load1_per_query": fr_load,
-            "still_above": sorted(
-                n
-                for n, v in fr_times.items()
-                if v > floors[n] * FLOOR_RERUN_RATIO
-                and v - floors[n] > FLOOR_RERUN_SLACK
-            ),
+            "still_above": sorted(exceeders(fr_times, floors)),
         }
     full = {
         "metric": "headline_queries_total",

@@ -208,12 +208,12 @@ def resample_interpolate(
     key_col: str,
     ts_col: str,
     value_col: str,
-    step: str = "1 hour",
     trunc_unit: str = "hour",
 ) -> DataFrame:
     """(key, t, value, observed) — regularize an irregular time series
-    to a fixed grid with linear interpolation across gaps: observations
-    aggregate (mean) into truncated buckets, each key's grid spans ITS
+    to a grid of one ``trunc_unit`` per step with linear interpolation
+    across gaps: observations aggregate (mean) into truncated buckets
+    (``date_trunc`` units: hour, day, ...), each key's grid spans ITS
     OWN [min, max] bucket (resampling never extrapolates), and an
     empty bucket takes prev + (next − prev)·Δt/ΔT from the nearest
     observed buckets on each side.
@@ -229,10 +229,9 @@ def resample_interpolate(
     plus TWO grid-sized window sorts (ASC + DESC running ignore-nulls
     frames over ~1M rows at sf0.1); this shape pays one window over
     the far smaller bucket table and a Generate. Grid rows are
-    identical (all buckets sit on the hourly lattice, so per-segment
-    sequences tile the old per-key [min, max] sequence exactly —
-    contract: ``step`` must equal one ``trunc_unit``, the shipped
-    configuration) and the interpolation arithmetic is term-for-term
+    identical (all buckets sit on the ``trunc_unit`` lattice, so
+    per-segment sequences tile the old per-key [min, max] sequence
+    exactly) and the interpolation arithmetic is term-for-term
     the same doubles, so the output is byte-identical (oracle
     hash-verified). Grid points at observed buckets pass through
     exactly (observed = true); interior gaps are bounded by observed
@@ -256,7 +255,7 @@ def resample_interpolate(
     # plus the gap rows it left-bounds; the per-key LAST bucket
     # (next_t null) emits only itself — so resampling still never
     # extrapolates past a key's own first/last observation
-    step_iv = F.expr(f"INTERVAL {step}")
+    step_iv = F.expr(f"INTERVAL 1 {trunc_unit}")
     pts = F.sequence(
         F.col("t"),
         F.coalesce(F.col("__nt") - step_iv, F.col("t")),

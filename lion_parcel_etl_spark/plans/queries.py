@@ -874,54 +874,72 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 _BUCKETED_LAST: dict = {}
 
 
+_BUCKETED_TABLES = ("q_b_orders", "q_b_lineitem")
+
+
+def _bucketed_root(spark, sf_dir) -> str:
+    """Directory of q_bucketed_join's tables, keyed by applicationId and
+    an md5 of the FULL sf_dir: concurrent sessions on one sf_dir cannot
+    clobber each other's tables mid-read, and two sf_dirs that share a
+    basename (/a/sf1 vs /b/sf1) never serve each other's data."""
+    import hashlib
+    import os
+    import tempfile
+
+    sfd = hashlib.md5(str(sf_dir).encode()).hexdigest()[:8]
+    return os.path.join(
+        tempfile.gettempdir(),
+        f"lpe_bucketed_{spark.sparkContext.applicationId}_{sfd}",
+    )
+
+
+def _evict_bucketed(spark, sf_dir) -> None:
+    """Forget this session's bucketed tables for ``sf_dir`` — memo,
+    catalog entries and files — so the next q_bucketed_join call
+    rewrites them from scratch."""
+    import shutil
+
+    _BUCKETED_LAST.pop(spark.sparkContext.applicationId, None)
+    for table in _BUCKETED_TABLES:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+    shutil.rmtree(_bucketed_root(spark, sf_dir), ignore_errors=True)
+
+
 def q_bucketed_join(spark, sf_dir):
     """Fact-fact join via pre-bucketed tables: both sides written
     hash-bucketed+sorted on the join key, so the join itself plans
     with zero Exchange nodes (asserted in tests/test_bucketing.py).
     The one-time bucketing write is the amortized cost that every
     hourly downstream join at 100 TB then avoids."""
-    import hashlib
-    import tempfile
-
     from lion_parcel_etl_spark.operators.bucketing import (
         bucketed_join,
         write_bucketed,
     )
 
-    # Root keyed by applicationId + md5 of the FULL sf_dir (r09
-    # VERDICT/ADVICE): the old basename-only root meant (a) two
-    # concurrent sessions on the same sf_dir could clobber each
-    # other's bucketed tables mid-read and (b) a session alternating
-    # between two sf_dirs that share a basename (/a/sf1 vs /b/sf1)
-    # would silently serve tables built from the OTHER dataset. The
-    # memo value is the full sf_dir string, exactly like
-    # _session_store's key.
-    import os
-
     key = spark.sparkContext.applicationId
-    sfd = hashlib.md5(str(sf_dir).encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), f"lpe_bucketed_{key}_{sfd}")
+    root = _bucketed_root(spark, sf_dir)
+    b_orders, b_lineitem = _BUCKETED_TABLES
     # Write the bucketed tables once per (session, sf_dir) — the
     # r09-optimization analog of the session stores, and literally the
     # query's own documented claim ("the one-time bucketing write is
     # the amortized cost that every hourly downstream join avoids"):
     # before r09 the bench re-paid both table writes on every timed
     # run, so 3.4 s of its 3.9 s floor measured the amortized write,
-    # not the zero-exchange join. Since r10, bench.py charges the
-    # write back to THIS query's timed runs by popping _BUCKETED_LAST
-    # first (store-accounting — exactly one timed row carries the
-    # build); other in-session consumers still amortize.
+    # not the zero-exchange join. bench.py charges the write back to
+    # THIS query's timed runs by calling _evict_bucketed first
+    # (store-accounting — exactly one timed row carries the build);
+    # other in-session consumers still amortize.
     if _BUCKETED_LAST.get(key) != str(sf_dir):
         orders = _t(spark, sf_dir, "orders")
         li = _t(spark, sf_dir, "lineitem").withColumnRenamed(
             "l_orderkey", "o_orderkey"
         )
-        write_bucketed(orders, "q_b_orders", ["o_orderkey"], 8, path=f"{root}/o")
-        write_bucketed(li, "q_b_lineitem", ["o_orderkey"], 8, path=f"{root}/l")
+        write_bucketed(orders, b_orders, ["o_orderkey"], 8, path=f"{root}/o")
+        write_bucketed(li, b_lineitem, ["o_orderkey"], 8, path=f"{root}/l")
         _BUCKETED_LAST[key] = str(sf_dir)
         _register_store_cleanup(root)
     return (
-        bucketed_join(spark, "q_b_lineitem", "q_b_orders", ["o_orderkey"])
+        bucketed_join(spark, b_lineitem, b_orders, ["o_orderkey"])
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
@@ -1906,12 +1924,15 @@ _STORE_CLEANUP_PATHS: list = []
 def _register_store_cleanup(path: str) -> None:
     """atexit-remove every session store this process created (ADVICE
     r06: stores leaked under tempfile.gettempdir() across sessions).
-    Registered once per process; a store that survives an unclean exit
-    is at least identifiable now (stable md5 suffix instead of a
-    hash-seed-randomized one) for manual or harness sweeps."""
+    Each path is listed once however often its store is rebuilt, and
+    the atexit hook is registered once per process; a store that
+    survives an unclean exit is at least identifiable (stable md5
+    suffix) for manual or harness sweeps."""
     import atexit
     import shutil
 
+    if path in _STORE_CLEANUP_PATHS:
+        return
     if not _STORE_CLEANUP_PATHS:
         def _cleanup():
             for p in _STORE_CLEANUP_PATHS:

@@ -1,13 +1,59 @@
 from __future__ import annotations
 
+import json
 import os
+from types import SimpleNamespace
 
 import pytest
 
 from lion_parcel_etl_spark.session import get_spark
 
 REFERENCE = "/root/reference"
+REFERENCE_JSON = os.path.join(REFERENCE, "downloads_json")
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
+
+needs_ref = pytest.mark.skipif(
+    not os.path.isdir(REFERENCE_JSON),
+    reason=f"reference fixtures unavailable: {REFERENCE_JSON} does not exist",
+)
+
+# A small MetricDataResults corpus (FIXTURES.md §5) covering the shapes the
+# bonus pipeline must handle: ids shared across files (m1, m2), several
+# entries in one document, an empty Values array (m3) and an object-valued
+# message.
+_TS = ["2025-08-01T03:15:00+00:00", "2025-08-01T04:15:00+00:00"]
+BONUS_DOCS = {
+    "result-json-0.json": {
+        "MetricDataResults": [
+            {"Id": "m1", "Label": "VisualLoadTime", "Timestamps": _TS,
+             "Values": [2049.0, 1800.5], "StatusCode": "Complete"},
+        ],
+        "Messages": [],
+    },
+    "result-json-1.json": {
+        "MetricDataResults": [
+            {"Id": "m1", "Label": "VisualLoadTime", "Timestamps": _TS[:1],
+             "Values": [2500.0], "StatusCode": "Complete"},
+            {"Id": "m2", "Label": "PageLoadTime", "Timestamps": _TS,
+             "Values": [900.0, 1100.0], "StatusCode": "Complete"},
+        ],
+        "Messages": ["partial data"],
+    },
+    "result-json-2.json": {
+        "MetricDataResults": [
+            {"Id": "m3", "Label": "Empty", "Timestamps": [], "Values": [],
+             "StatusCode": "Complete"},
+        ],
+        "Messages": [],
+    },
+    "result-json-3.json": {
+        "MetricDataResults": [
+            {"Id": "m2", "Label": "PageLoadTime", "Timestamps": _TS[1:],
+             "Values": [1300.0], "StatusCode": "Complete"},
+        ],
+        "Messages": [{"Description": "High Priority Access"}],
+    },
+}
 
 
 @pytest.fixture(scope="session")
@@ -21,3 +67,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.path.join(TESTDATA, "sf0.001")
+
+
+@pytest.fixture(scope="session")
+def bonus_json(tmp_path_factory):
+    """BONUS_DOCS written one file each; ``entries`` (detail rows) and
+    ``ids`` (final rows) are derived from the documents themselves."""
+    d = tmp_path_factory.mktemp("bonus_json")
+    for name, doc in BONUS_DOCS.items():
+        (d / name).write_text(json.dumps(doc))
+    metrics = [m for doc in BONUS_DOCS.values() for m in doc["MetricDataResults"]]
+    return SimpleNamespace(
+        path=str(d),
+        files=len(BONUS_DOCS),
+        entries=len(metrics),
+        ids=len({m["Id"] for m in metrics}),
+    )

@@ -1,0 +1,57 @@
+"""bench.measure, the one timing protocol behind bench.py and
+tools/bench_isolated.py, and the floor-exceeder selection."""
+
+from __future__ import annotations
+
+import time
+
+import bench
+import lion_parcel_etl_spark.plans.queries as Q
+
+
+def test_measure_rebuilds_owned_store_before_every_run(spark, sf_dir, monkeypatch):
+    built = []
+    real = Q._register_store_cleanup
+
+    def spy(path):
+        built.append(path)
+        real(path)
+
+    monkeypatch.setattr(Q, "_register_store_cleanup", spy)
+    times, shuffle = bench.measure(spark, sf_dir, "ks_drift", 3)
+    assert len(times) == len(shuffle) == 3
+    assert all(t > 0 for t in times)
+    assert len([p for p in built if "_ks_exact_" in p]) == 3
+
+
+def test_eviction_is_outside_the_timed_region(spark, sf_dir, monkeypatch):
+    plain = min(bench.measure(spark, sf_dir, "ks_drift", 2)[0])
+    real = bench._evict_owned
+
+    def slow(*args):
+        time.sleep(2)
+        real(*args)
+
+    monkeypatch.setattr(bench, "_evict_owned", slow)
+    slowed = min(bench.measure(spark, sf_dir, "ks_drift", 2)[0])
+    assert abs(slowed - plain) < 1.0
+
+
+def test_exceeders_select_by_ratio_and_slack():
+    ratio, slack = bench.FLOOR_RERUN_RATIO, bench.FLOOR_RERUN_SLACK
+    floors = {
+        "ratio_at": 10.0,
+        "ratio_above": 10.0,
+        "slack_at": 0.5,
+        "slack_above": 0.5,
+        "at_floor": 2.0,
+    }
+    timings = {
+        "ratio_at": 10.0 * ratio,
+        "ratio_above": 10.0 * ratio + 0.01,
+        "slack_at": 0.5 + slack,
+        "slack_above": 0.5 + slack + 0.01,
+        "at_floor": 2.0,
+        "no_floor": 100.0,
+    }
+    assert bench.exceeders(timings, floors) == ["ratio_above", "slack_above"]

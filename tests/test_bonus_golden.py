@@ -10,16 +10,8 @@ from __future__ import annotations
 
 import os
 
-import pytest
-
 from lion_parcel_etl_spark.pipelines.bonus import metrics_detail, metrics_final
-from tests.conftest import REFERENCE
-
-JSON_DIR = os.path.join(REFERENCE, "downloads_json")
-
-needs_ref = pytest.mark.skipif(
-    not os.path.isdir(JSON_DIR), reason="reference fixtures unavailable"
-)
+from tests.conftest import REFERENCE, REFERENCE_JSON, needs_ref
 
 
 def df_to_csv_text(df) -> str:
@@ -30,13 +22,13 @@ def df_to_csv_text(df) -> str:
 
 @needs_ref
 def test_detail_matches_golden(spark):
-    detail = metrics_detail(spark, JSON_DIR)
+    detail = metrics_detail(spark, REFERENCE_JSON)
     expected = open(os.path.join(REFERENCE, "combined_detail_per_file.csv")).read()
     assert df_to_csv_text(detail) == expected
 
 
 @needs_ref
 def test_final_matches_golden(spark):
-    final = metrics_final(metrics_detail(spark, JSON_DIR))
+    final = metrics_final(metrics_detail(spark, REFERENCE_JSON))
     expected = open(os.path.join(REFERENCE, "combined_table.csv")).read()
     assert df_to_csv_text(final) == expected

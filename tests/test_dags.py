@@ -89,19 +89,19 @@ def test_retail_tag_selection_runs_subgraph(spark, wh):
     assert not wh.exists("retail_transactions")
 
 
-def test_bonus_dag_golden_rowcounts(spark, wh):
+def test_bonus_dag_golden_rowcounts(spark, wh, bonus_json):
     p = build_bonus_pipeline()
-    ctx = {"spark": spark, "warehouse": wh, "json_dir": "/root/reference/downloads_json"}
+    ctx = {"spark": spark, "warehouse": wh, "json_dir": bonus_json.path}
     p.run(ctx)
-    assert wh.read(spark, "bonus_detail_per_file").count() == 8
+    assert wh.read(spark, "bonus_detail_per_file").count() == bonus_json.entries
     prod = wh.read(spark, "lion_parcell_bonus_test")
-    assert prod.count() == 4
+    assert prod.count() == bonus_json.ids
     assert prod.columns == ["id", "runtime_date", "load_time", "Message"]
     # the dbt-test stage ran and passed
     assert all(s["passed"] for s in ctx["check_results"]["bonus_test"])
     # idempotent re-run (hourly schedule replays): same result
     p.run(ctx)
-    assert wh.read(spark, "lion_parcell_bonus_test").count() == 4
+    assert wh.read(spark, "lion_parcell_bonus_test").count() == bonus_json.ids
 
 
 def test_write_csv_single_file(spark, wh, tmp_path):

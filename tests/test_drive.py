@@ -68,9 +68,9 @@ def test_download_all_filters_and_writes(tmp_path):
     assert read_json_file(written[0]) == {"x": 1}
 
 
-def test_reference_fixture_glob_roundtrip():
-    files = list_json_files("/root/reference/downloads_json")
-    assert len(files) == 8
+def test_reference_fixture_glob_roundtrip(bonus_json):
+    files = list_json_files(bonus_json.path)
+    assert len(files) == bonus_json.files
     doc = read_json_file(files[0])
     assert "MetricDataResults" in doc
 

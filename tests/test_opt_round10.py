@@ -191,3 +191,28 @@ def test_qc_model_store_scores_identical_to_inline_fit(spark, sf_dir):
     assert inline.count() == stored.count()
     assert inline.exceptAll(stored).count() == 0
     assert stored.exceptAll(inline).count() == 0
+
+
+def test_evict_owned_bucketed_join_removes_tables_and_root(spark, sf_dir):
+    """Evicting bucketed_join drops its catalog tables and deletes the
+    per-(session, sf_dir) root, and rebuilding it (or any store) any
+    number of times lists its path for atexit cleanup only once."""
+    import bench
+    import lion_parcel_etl_spark.plans.queries as Q
+
+    root = Q._bucketed_root(spark, sf_dir)
+    for _ in range(2):
+        Q.q_bucketed_join(spark, sf_dir)
+        assert os.path.isdir(root)
+        bench._evict_owned(spark, sf_dir, "bucketed_join")
+        assert not os.path.exists(root)
+        for table in Q._BUCKETED_TABLES:
+            assert not spark.catalog.tableExists(table)
+    assert Q._STORE_CLEANUP_PATHS.count(root) == 1
+
+    fn, _ = Q.QUERIES["ks_drift"]
+    for _ in range(2):
+        bench._evict_owned(spark, sf_dir, "ks_drift")
+        fn(spark, sf_dir)
+    path = Q._SIG_STORE_MEMO[(spark.sparkContext.applicationId, str(sf_dir), "ks_exact")]
+    assert Q._STORE_CLEANUP_PATHS.count(path) == 1

@@ -18,7 +18,6 @@ from lion_parcel_etl_spark.streaming import (
     stream_running_user_totals,
 )
 
-FIXTURES = "/root/reference/downloads_json"
 EVENTS = "/root/testdata/sf0.001/events.parquet"
 
 
@@ -40,14 +39,14 @@ def events_dir(spark, tmp_path):
     return out
 
 
-def test_stream_metrics_detail_matches_batch(spark, tmp_path):
-    stream = stream_metrics_detail(spark, FIXTURES)
+def test_stream_metrics_detail_matches_batch(spark, tmp_path, bonus_json):
+    stream = stream_metrics_detail(spark, bonus_json.path)
     assert stream.isStreaming
     run_available_now(
         stream, str(tmp_path / "ckpt"), out_path=str(tmp_path / "out")
     )
     got = spark.read.parquet(str(tmp_path / "out"))
-    want = metrics_detail(spark, FIXTURES)
+    want = metrics_detail(spark, bonus_json.path)
     cols = ["id", "runtime_date", "sum_ms", "cnt", "load_time", "Message", "source_file"]
     assert _rows(got, cols) == _rows(want, cols)
 

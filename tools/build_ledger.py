@@ -241,6 +241,12 @@ def main() -> int:
     with open(dst, "w") as f:
         json.dump(out, f, indent=1, sort_keys=False)
     print(f"wrote {dst}: {len(ledger)} queries, variants: {sorted(meta)}")
+    open_super = sorted(
+        q
+        for q, e in ledger.items()
+        if e.get("sf1", {}).get("ratio", 0) > 10 and "note" not in e
+    )
+    print(f"unannotated >10x sf1/sf0.1 ratios: {open_super or 'none'}")
     return 0
 
 

@@ -40,24 +40,10 @@ sys.path.insert(0, ".")
 
 from pyspark.sql import functions as F
 
+from bench import _shuffle_bytes
 from lion_parcel_etl_spark.operators import dedup as DD
 from lion_parcel_etl_spark.operators.text import analyze_documents
 from lion_parcel_etl_spark.session import get_spark
-
-
-def _shuffle_bytes(spark) -> int:
-    import json
-    import urllib.request
-
-    try:
-        ui = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app}/stages?status=COMPLETE", timeout=5
-        ) as r:
-            return sum(s.get("shuffleWriteBytes", 0) for s in json.load(r))
-    except Exception:
-        return -1
 
 
 def skew_main() -> None:
