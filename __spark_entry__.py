@@ -60,15 +60,15 @@ def _wrap(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSessio
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     _harden(spark)
-    fn, _ = QUERIES["pricing_summary"]
+    fn = QUERIES["pricing_summary"].build
     return fn(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return {name: _wrap(fn) for name, (fn, _) in QUERIES.items()}
+    return {name: _wrap(q.build) for name, q in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent ANSI SQL per query (same column names/types)."""
-    return {name: sql for name, (_, sql) in QUERIES.items() if sql is not None}
+    return {name: q.oracle for name, q in QUERIES.items() if q.oracle is not None}

@@ -5,12 +5,12 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Every query run in this file and in ``tools/bench_isolated.py`` is
 timed by ``measure(spark, sf_dir, name, runs)``: one JVM GC, then per
-run clear the cache and evict the query's owned session stores
-(``STORE_OWNERS``), and only then time the plan build plus a noop sink
-write. Unlike ``count()`` — which lets Catalyst prune every projection
-column and can reduce a map-only query to a parquet row-count — the
-noop sink materializes every output column without ferrying rows to
-the driver.
+run clear the cache and evict the session stores the query owns
+(``Query.owns`` in the registry), and only then time the plan build
+plus a noop sink write. Unlike ``count()`` — which lets Catalyst prune
+every projection column and can reduce a map-only query to a parquet
+row-count — the noop sink materializes every output column without
+ferrying rows to the driver.
 
 The sweep measures each query three times. Run 0 pays Janino/JIT
 compilation of its generated code (7+ s for the big signature folds — a
@@ -38,252 +38,37 @@ from lion_parcel_etl_spark.session import get_spark
 
 # Headline set: the flagship aggregate, the heavy relational shapes
 # (joins, SCD2/merge state machines), and the scale-path training-data
-# operators. Cheap projection-only queries are excluded to keep the
-# signal on shuffles and joins.
-HEADLINE = [
-    "pricing_summary",
-    "join_inner_residual",
-    "multi_join_topk",
-    "star_join_revenue",
-    "distinct_agg",
-    "merge_upsert",
-    "softdelete_mart",
-    "scd2_events",
-    "window_topk",
-    "window_running",
-    "window_ranks",
-    "window_range",
-    "funnel_conversion",
-    "full_outer_join",
-    "exists_subquery",
-    "scalar_subquery",
-    "having_agg",
-    "min_cost_supplier",
-    "exclusive_returns",
-    "sliding_window",
-    "ntile_quartiles",
-    "mode_median",
-    "incremental_rollup",
-    "conditional_agg",
-    "fuzzy_join",
-    "nested_semi_join",
-    "order_limit",
-    "rollup_agg",
-    "cube_agg",
-    "grouping_sets",
-    "set_ops",
-    "stats_agg",
-    "approx_stats",
-    "tumbling_window",
-    "session_window_native",
-    "session_overlap",
-    "sliding_distinct",
-    "cumulative_distinct",
-    "top_decile_orders",
-    "frequent_tokens",
-    "heavy_hitters_exact",
-    "sessionize",
-    "event_transitions",
-    "cohort_retention",
-    "pagerank",
-    "asof_join",
-    "range_join",
-    "stratified_sample",
-    "reservoir_sample",
-    "weighted_sample",
-    "bloom_prefilter",
-    "pivot",
-    "salted_agg",
-    "string_set_agg",
-    "weighted_avg",
-    "json_extract",
-    "dedup_exact",
-    "minhash_near_dup",
-    "minhash_incremental",
-    "simhash_incremental",
-    "simhash_near_dup",
-    "text_analysis",
-    "ewma",
-    "window_firstlast",
-    "compression_ratio",
-    "contamination_check",
-    "repetition_metrics",
-    "domain_caps",
-    "dup_spans",
-    "span_dedup_rewrite",
-    "ngram_novelty",
-    "dsir_weights",
-    "dsir_select",
-    "quality_classifier",
-    "kmv_overlap",
-    "triangle_count",
-    "resample_interpolate",
-    "golden_record",
-    "cluster_split",
-    "mad_outliers",
-    "attribution_linear",
-    "perplexity_buckets",
-    "snapshot_diff",
-    "apply_changelog",
-    "split_leakage",
-    "pack_sequences",
-    "epoch_shuffle",
-    "interleave_sources",
-    "embedding_quantize",
-    "column_profile",
-    "tfidf_topk",
-    "bm25_rank",
-    "token_frequency",
-    "pmi_collocations",
-    "bpe_merges",
-    "bpe_encode",
-    "lm_surprisal",
-    "lm_backoff",
-    "gopher_rules",
-    "gopher_audit",
-    "token_budget_mix",
-    "training_mix_pipeline",
-    "embedding_outliers",
-    "hashed_embedding",
-    "knn_label_eval",
-    "bpe_fertility",
-    "corpus_summary",
-    "dup_cluster_sizes",
-    "pack_fill_stats",
-    "dedup_source_matrix",
-    "doc_chunking",
-    "embedding_centroids",
-    "dedup_clusters",
-    "curation_pipeline",
-    "multimodal_features",
-    "cosine_topk",
-    "lsh_topk",
-    "pq_topk",
-    "ivf_topk_seeded",
-    "ivf_topk",
-    "dedup_embedding",
-    "dedup_embedding_lsh",
-    "semantic_dedup",
-    "embedding_lsh_incremental",
-    # round-4 evaluation/retrieval layer. The three classifier-family
-    # queries share one in-session fit memo (plans/queries._qc_scored):
-    # the first of them to run pays the 10-step GD fit in its COLD
-    # number; warm numbers for all three time plan-reuse + scoring —
-    # the steady-state cost a shared session actually pays (see
-    # BENCH_NOTES.md).
-    "classifier_auc",
-    "classifier_pr_auc",
-    "classifier_kappa",
-    "calibration_bins",
-    "calibration_ece",
-    "hybrid_rrf",
-    "retrieval_ndcg",
-    "ann_recall",
-    "zipf_fit",
-    "cluster_quality",
-    # round-5 multi-query retrieval eval layer
-    "hybrid_rrf_multi",
-    "retrieval_ndcg_multi",
-    # round-6 real-decode multimodal path
-    "multimodal_decode",
-    # round-6 eval additions
-    "domain_reweight",
-    "retrieval_mrr",
-    "mrl_recall",
-    "quant_recall",
-    "dedup_pr_eval",
-    "acf_lags",
-    "vocab_kl",
-    "seasonal_dow",
-    "market_basket",
-    "kcenter_select",
-    "rfm_segments",
-    "revenue_gini",
-    "seasonal_naive_eval",
-    # round-7 additions
-    "rfm_segments_approx",
-    "rfm_agreement",
-    "holt_winters_eval",
-    "kcore_peel",
-    "ks_drift",
-    "benford_audit",
-    "ppr_seeded",
-    "unigram_entropy",
-    "trimmed_stats",
-    "ks_drift_binned",
-    "ks_agreement",
-    # round-9 additions (apply_changelog itself was added to the main
-    # list at its registry graduation; only gif_frames is new here)
-    "gif_frames",
-    # round-10 additions: the two session-store BUILDER queries whose
-    # stores previously had no timed owner anywhere in the bench
-    # (minhash_sig64's k=64 fold and the bucketed-table write) — see
-    # STORE_OWNERS below.
-    "minhash_signature",
-    "bucketed_join",
-]
-# A duplicated name would silently bench a query twice (it happened to
-# apply_changelog in round 9: listed at graduation AND in the round-9
-# block — the timings dict keeps one entry so no number was distorted,
-# but the sweep paid the 3 runs twice). Fail fast instead — with an
-# explicit raise, not assert, so python -O cannot compile the guard
-# out (r09 ADVICE).
-if len(HEADLINE) != len(set(HEADLINE)):
-    raise ValueError(
-        "duplicate HEADLINE entry: "
-        + ", ".join(sorted(n for n in set(HEADLINE) if HEADLINE.count(n) > 1))
-    )
+# operators. Cheap projection-only queries set ``headline=False`` in the
+# registry to keep the signal on shuffles and joins.
+HEADLINE = [n for n, q in QUERIES.items() if q.headline]
 
-# Store accounting: each store below has exactly ONE owner query — the
-# family member whose declared result IS (or trivially projects) the
-# store — and ``measure`` evicts the owner's stores before every one of
-# its runs, so the owner's row carries build + readout while every other
-# consumer times readout against a built store.
-#
-# Twelve stores have no owner, so no warm row times their build; it is
-# paid only in the cold run of whichever consumer runs first:
-# ngram_pairs, minhash_sigs, simhash_sigs, coarse_asg, emb_pairs,
-# emb_lsh_index, trade_ed, trade_nodes, kmv_hashes, cooc_edges,
-# rfm_base and qc_model (the classifier fit).
-STORE_OWNERS: dict[str, list[str]] = {
-    "scd2_events": ["scd2_state"],
-    "dsir_weights": ["dsir_scores"],
-    "quality_classifier": ["qc_scored"],
-    "cosine_topk": ["cosine_rank"],
-    "lsh_topk": ["lsh_rank"],
-    "pq_topk": ["pq_rank"],
-    "ivf_topk_seeded": ["ivf_seeded_rank"],
-    "hybrid_rrf": ["fused_single"],
-    "hybrid_rrf_multi": ["fused_multi"],
-    "ks_drift": ["ks_exact"],
-    "ks_drift_binned": ["ks_binned"],
-    "minhash_signature": ["minhash_sig64"],
-    "minhash_near_dup": ["minhash_pairs"],
-    "simhash_near_dup": ["simhash_sigs_full"],
-    "bpe_merges": ["bpe_merges"],
-    # bucketed_join's tables are memoized separately (_BUCKETED_LAST);
-    # _evict_owned special-cases it.
-}
+# Store ownership is declared per query in ``Query.owns``: ``measure``
+# evicts the owner's stores before each of its runs, so the owner's row
+# carries build + readout while every other consumer times readout
+# against a built store. A store no entry owns is built only in the
+# cold run of whichever consumer runs first.
+STORE_OWNERS = {n: q.owns for n, q in QUERIES.items() if q.owns}
 
 
 def _evict_owned(spark, sf_dir: str, name: str) -> None:
-    """Evict the session stores OWNED by query ``name`` (see
-    STORE_OWNERS) so its next run pays the build inside the timed
-    region. No-op for non-owner queries."""
+    """Evict the session stores OWNED by query ``name`` so its next run
+    pays the build inside the timed region. No-op for a query that owns
+    none; a name outside the registry raises KeyError."""
     from lion_parcel_etl_spark.plans import queries as Q
 
-    for store in STORE_OWNERS.get(name, ()):
+    if name not in QUERIES:
+        raise KeyError(f"not a registry query: {name!r}")
+    for store in QUERIES[name].owns:
         Q._evict_session_store(spark, sf_dir, store)
-    if name == "bucketed_join":
-        Q._evict_bucketed(spark, sf_dir)
+
 
 # FROZEN anchor set (round 6, per the r05 verdict): cross-round
 # headline totals drown in registry growth (85→96→112→129→135 queries)
 # plus ±17% same-day machine drift, so round-over-round comparisons
 # track THIS fixed subtotal instead. Composition: the §2 reference
 # core (7) + one representative per operator family (17). DO NOT
-# EDIT — additions go to HEADLINE; the whole point of the anchor is
-# that its membership never changes (BENCH_NOTES.md round-6 row).
+# EDIT — the whole point of the anchor is that its membership never
+# changes (BENCH_NOTES.md round-6 row).
 ANCHOR = [
     # §2 reference core
     "pricing_summary",
@@ -439,7 +224,7 @@ def measure(
     region is the Python plan build plus a noop sink write (analysis,
     optimization, planning and execution). A shuffle delta is -1 when
     the UI is off or its stage buffer evicted mid-run."""
-    fn, _ = QUERIES[name]
+    fn = QUERIES[name].build
     try:
         spark.sparkContext._jvm.System.gc()
     except Exception:
@@ -487,8 +272,8 @@ def main() -> None:
     machine_start = _machine_state()
 
     # Warmup: touch the big tables + run the flagship once.
-    fn, _ = QUERIES["pricing_summary"]
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    warmup = QUERIES["pricing_summary"].build(spark, sf_dir)
+    warmup.write.format("noop").mode("overwrite").save()
 
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}

@@ -60,7 +60,7 @@ def main(argv: list[str] | None = None) -> int:
             return 2
         spark = get_spark(app_name=f"lpe-query-{args.name}", master=args.master)
         # persist so show() + count() execute the plan once, not twice
-        df = QUERIES[args.name][0](spark, args.sf_dir).persist()
+        df = QUERIES[args.name].build(spark, args.sf_dir).persist()
         try:
             df.show(args.show, truncate=40)
             print(f"rows: {df.count()}")

@@ -1,5 +1,6 @@
 """Query inventory: every operator from SURVEY.md §2 plus the
-training-data operators, each as (Spark builder, DuckDB oracle SQL).
+training-data operators, each a ``Query`` record: Spark builder, DuckDB
+oracle SQL and its bench metadata.
 
 Determinism contract with the oracle (what makes hash-equality hold):
 
@@ -23,6 +24,7 @@ relative to /root/reference).
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -868,12 +870,6 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 """
 
 
-#: applicationId -> full sf_dir whose bucketed tables were last
-#: written this session (see q_bucketed_join; ANY changed sf_dir —
-#: even one sharing a basename — forces a rewrite).
-_BUCKETED_LAST: dict = {}
-
-
 _BUCKETED_TABLES = ("q_b_orders", "q_b_lineitem")
 
 
@@ -893,51 +889,29 @@ def _bucketed_root(spark, sf_dir) -> str:
     )
 
 
-def _evict_bucketed(spark, sf_dir) -> None:
-    """Forget this session's bucketed tables for ``sf_dir`` — memo,
-    catalog entries and files — so the next q_bucketed_join call
-    rewrites them from scratch."""
-    import shutil
-
-    _BUCKETED_LAST.pop(spark.sparkContext.applicationId, None)
-    for table in _BUCKETED_TABLES:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-    shutil.rmtree(_bucketed_root(spark, sf_dir), ignore_errors=True)
-
-
 def q_bucketed_join(spark, sf_dir):
     """Fact-fact join via pre-bucketed tables: both sides written
     hash-bucketed+sorted on the join key, so the join itself plans
     with zero Exchange nodes (asserted in tests/test_bucketing.py).
-    The one-time bucketing write is the amortized cost that every
-    hourly downstream join at 100 TB then avoids."""
+    Every call drops both tables, removes their root and writes them
+    again, so the query's time includes the bucketing write."""
+    import shutil
+
     from lion_parcel_etl_spark.operators.bucketing import (
         bucketed_join,
         write_bucketed,
     )
 
-    key = spark.sparkContext.applicationId
     root = _bucketed_root(spark, sf_dir)
     b_orders, b_lineitem = _BUCKETED_TABLES
-    # Write the bucketed tables once per (session, sf_dir) — the
-    # r09-optimization analog of the session stores, and literally the
-    # query's own documented claim ("the one-time bucketing write is
-    # the amortized cost that every hourly downstream join avoids"):
-    # before r09 the bench re-paid both table writes on every timed
-    # run, so 3.4 s of its 3.9 s floor measured the amortized write,
-    # not the zero-exchange join. bench.py charges the write back to
-    # THIS query's timed runs by calling _evict_bucketed first
-    # (store-accounting — exactly one timed row carries the build);
-    # other in-session consumers still amortize.
-    if _BUCKETED_LAST.get(key) != str(sf_dir):
-        orders = _t(spark, sf_dir, "orders")
-        li = _t(spark, sf_dir, "lineitem").withColumnRenamed(
-            "l_orderkey", "o_orderkey"
-        )
-        write_bucketed(orders, b_orders, ["o_orderkey"], 8, path=f"{root}/o")
-        write_bucketed(li, b_lineitem, ["o_orderkey"], 8, path=f"{root}/l")
-        _BUCKETED_LAST[key] = str(sf_dir)
-        _register_store_cleanup(root)
+    for table in _BUCKETED_TABLES:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+    shutil.rmtree(root, ignore_errors=True)
+    orders = _t(spark, sf_dir, "orders")
+    li = _t(spark, sf_dir, "lineitem").withColumnRenamed("l_orderkey", "o_orderkey")
+    write_bucketed(orders, b_orders, ["o_orderkey"], 8, path=f"{root}/o")
+    write_bucketed(li, b_lineitem, ["o_orderkey"], 8, path=f"{root}/l")
+    _register_store_cleanup(root)
     return (
         bucketed_join(spark, b_lineitem, b_orders, ["o_orderkey"])
         .groupBy("o_orderpriority")
@@ -8484,7 +8458,7 @@ def _qc_model(spark, sf_dir) -> DataFrame:
     serves the model table; re-fitting per readout is exactly the cost
     the artifact exists to avoid). Splitting it out of `qc_scored`
     matters for the r10 bench accounting: quality_classifier is
-    qc_scored's designated timed OWNER (bench.py STORE_OWNERS), so its
+    qc_scored's designated timed OWNER (its registry ``owns``), so its
     timed runs re-run tokenize→hash-features→score — the per-corpus
     scoring pass, its honest pre-store cost — without re-running the
     ~30 s driver-round-trip fit, which stays session-amortized exactly
@@ -12018,276 +11992,259 @@ FROM rec WHERE t = len(ys) ORDER BY event_type
 """
 
 
-QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
-    "quality_classifier": (q_quality_classifier, _duck_quality_classifier()),
-    "kmv_distinct": (q_kmv_distinct, _duck_kmv_distinct()),
-    "kmv_overlap": (q_kmv_overlap, _duck_kmv_overlap()),
-    "cooccurrence_graph": (q_cooccurrence_graph, _duck_cooccurrence_graph()),
-    "triangle_count": (q_triangle_count, _duck_triangle_count()),
-    "cluster_split": (q_cluster_split, _duck_cluster_split()),
-    "psi_drift": (q_psi_drift, _duck_psi_drift()),
-    "bootstrap_ci": (q_bootstrap_ci, _duck_bootstrap_ci()),
-    "golden_record": (q_golden_record, _duck_golden_record()),
-    "resample_interpolate": (q_resample_interpolate, SQL_RESAMPLE),
-    "cusum_changepoints": (q_cusum_changepoints, SQL_CUSUM),
-    "mad_outliers": (q_mad_outliers, SQL_MAD),
-    "kaplan_meier": (q_kaplan_meier, SQL_KM),
-    "attribution_linear": (q_attribution_linear, SQL_ATTRIBUTION),
-    "trend_ols": (q_trend_ols, SQL_TREND_OLS),
-    "trend_theil_sen": (q_trend_theil_sen, SQL_TREND_TS),
-    "dsir_weights": (q_dsir_weights, _duck_dsir_weights()),
-    "dsir_select": (q_dsir_select, _duck_dsir_select()),
-    "perplexity_buckets": (q_perplexity_buckets, SQL_PERPLEXITY_BUCKETS),
-    "span_dedup_rewrite": (q_span_dedup_rewrite, SQL_SPAN_REWRITE),
-    "ngram_novelty": (q_ngram_novelty, SQL_NGRAM_NOVELTY),
-    "temperature_mix": (q_temperature_mix, SQL_TEMPERATURE_MIX),
-    "jl_project": (q_jl_project, _duck_jl_project()),
-    "mlm_mask": (q_mlm_mask, SQL_MLM_MASK),
-    "minhash_est_error": (q_minhash_est_error, _duck_minhash_est_error()),
-    "dq_checks": (q_dq_checks, SQL_DQ_CHECKS),
-    "clm_examples": (q_clm_examples, SQL_CLM_EXAMPLES),
-    "langid_eval": (q_langid_eval, _duck_langid_eval()),
-    "hard_negatives": (q_hard_negatives, _duck_hard_negatives()),
-    "gopher_rules": (q_gopher_rules, _duck_gopher_rules()),
-    "gopher_audit": (q_gopher_audit, _duck_gopher_audit()),
-    "embedding_outliers": (q_embedding_outliers, SQL_EMB_OUTLIERS),
-    "dedup_source_matrix": (q_dedup_source_matrix, _duck_dedup_source_matrix()),
-    "training_mix_pipeline": (q_training_mix_pipeline, _duck_training_mix()),
-    "hashed_embedding": (q_hashed_embedding, _duck_hashed_embedding()),
-    "knn_label_eval": (q_knn_label_eval, _duck_knn_eval()),
-    "bpe_fertility": (q_bpe_fertility, _duck_bpe_fertility()),
-    "corpus_summary": (q_corpus_summary, _duck_corpus_summary()),
-    "dup_cluster_sizes": (q_dup_cluster_sizes, _duck_dup_cluster_sizes()),
-    "pack_fill_stats": (q_pack_fill_stats, _duck_pack_fill_stats()),
-    "token_budget_mix": (q_token_budget_mix, _duck_token_budget_mix()),
-    "lm_backoff": (q_lm_backoff, SQL_LM_BACKOFF),
-    "bpe_encode": (q_bpe_encode, _duck_bpe_encode()),
-    "semantic_dedup": (q_semantic_dedup, _duck_semantic_dedup()),
-    "pmi_collocations": (q_pmi_collocations, SQL_PMI),
-    "bpe_merges": (q_bpe_merges, _duck_bpe_merges()),
-    "reservoir_sample": (q_reservoir_sample, _duck_reservoir_sample()),
-    "weighted_sample": (q_weighted_sample, _duck_weighted_sample()),
-    "bloom_prefilter": (q_bloom_prefilter, _duck_bloom_prefilter()),
-    "asof_join_forward": (q_asof_join_forward, SQL_ASOF_FWD),
-    "source_mix": (q_source_mix, _duck_source_mix()),
-    "epoch_shuffle": (q_epoch_shuffle, _duck_epoch_shuffle()),
-    "interleave_sources": (q_interleave_sources, _duck_interleave_sources()),
-    "embedding_quantize": (q_embedding_quantize, SQL_EMB_QUANT),
-    "pii_redact": (q_pii_redact, _duck_pii_redact()),
-    "resize_images": (q_resize_images, SQL_RESIZE),
-    "frame_sample": (q_frame_sample, SQL_FRAMES),
-    "curation_pipeline": (q_curation_pipeline, _duck_curation()),
-    "minhash_incremental": (q_minhash_incremental, _duck_minhash_incremental()),
-    "tfidf_topk": (q_tfidf_topk, SQL_TFIDF),
-    "bm25_rank": (q_bm25_rank, SQL_BM25),
-    "embedding_clusters": (q_embedding_clusters, _duck_embedding_clusters()),
-    "lsh_topk": (q_lsh_topk, _duck_lsh_topk()),
-    "pq_topk": (q_pq_topk, _duck_pq_topk()),
-    "ivf_topk_seeded": (q_ivf_topk_seeded, _duck_ivf_seeded()),
-    "ivf_topk": (q_ivf_topk, _duck_ivf_refined()),
-    "scd2_timetravel": (q_scd2_timetravel, SQL_SCD2_TT),
-    "scd2_version_count": (q_scd2_version_count, SQL_SCD2_VC),
-    "interval_arith": (q_interval_arith, SQL_INTERVAL),
-    "exists_subquery": (q_exists_subquery, SQL_EXISTS),
-    "scalar_subquery": (q_scalar_subquery, SQL_SCALAR_SUBQ),
-    "having_agg": (q_having_agg, SQL_HAVING),
-    "window_running": (q_window_running, SQL_WINDOW_RUN),
-    "star_join_revenue": (q_star_join_revenue, SQL_STAR_JOIN),
-    "window_ranks": (q_window_ranks, SQL_WINDOW_RANKS),
-    "date_spine_fill": (q_date_spine_fill, SQL_DATE_SPINE),
-    "full_outer_join": (q_full_outer_join, SQL_FULL_OUTER),
-    "token_frequency": (q_token_frequency, SQL_TOKEN_FREQ),
-    "doc_chunking": (q_doc_chunking, SQL_CHUNKING),
-    "embedding_centroids": (q_embedding_centroids, SQL_CENTROIDS),
-    "simhash_incremental": (q_simhash_incremental, _duck_simhash_incremental()),
-    "embedding_lsh_incremental": (
-        q_embedding_lsh_incremental,
-        _duck_embedding_lsh_incremental(),
+class Query(NamedTuple):
+    """One registry entry. ``build(spark, sf_dir)`` returns the query's
+    DataFrame and ``oracle`` is its DuckDB SQL (None: no exact oracle).
+    ``owns`` names the session stores whose build this query's bench row
+    carries: bench.py evicts them before each of its timed runs, so every
+    other consumer times only the readout. ``headline`` puts the query in
+    bench.py's sweep."""
+
+    build: Callable[[SparkSession, str], DataFrame]
+    oracle: str | None
+    owns: tuple[str, ...] = ()
+    headline: bool = True
+
+
+# Iteration order is the order bench.py, __spark_entry__ and tools/ run queries in.
+QUERIES: dict[str, Query] = {
+    "gif_frames": Query(q_gif_frames, _duck_gif_frames()),
+    "apply_changelog": Query(q_apply_changelog, SQL_APPLY_CHANGELOG),
+    "multimodal_decode": Query(q_multimodal_decode, _duck_multimodal_decode()),
+    "hybrid_rrf_multi": Query(
+        q_hybrid_rrf_multi, _duck_hybrid_rrf_multi(), owns=("fused_multi",)
     ),
-    "frequent_tokens": (q_frequent_tokens, SQL_FREQUENT_TOKENS),
-    "pricing_summary": (q_pricing_summary, SQL_PRICING),
-    "stage_load": (q_stage_load, SQL_STAGE),
-    "project_filter_cast": (q_project_filter_cast, SQL_PROJECT),
-    "merge_upsert": (q_merge_upsert, SQL_MERGE),
-    "softdelete_mart": (q_softdelete_mart, SQL_SOFTDELETE),
-    "scd2_events": (q_scd2_events, SQL_SCD2),
-    "scd2_dimension_join": (
+    "retrieval_mrr": Query(q_retrieval_mrr, _duck_retrieval_mrr()),
+    "retrieval_ndcg_multi": Query(q_retrieval_ndcg_multi, _duck_retrieval_ndcg_multi()),
+    "ks_drift": Query(q_ks_drift, SQL_KS_DRIFT, owns=("ks_exact",)),
+    "ks_drift_binned": Query(
+        q_ks_drift_binned, _duck_ks_drift_binned(), owns=("ks_binned",)
+    ),
+    "ks_agreement": Query(q_ks_agreement, _duck_ks_agreement()),
+    "minhash_near_dup": Query(
+        q_minhash_pairs, _duck_minhash_pairs(), owns=("minhash_pairs",)
+    ),
+    "dedup_clusters": Query(q_dedup_clusters, _duck_dedup_clusters()),
+    "curation_pipeline": Query(q_curation_pipeline, _duck_curation()),
+    "dedup_source_matrix": Query(q_dedup_source_matrix, _duck_dedup_source_matrix()),
+    "dup_cluster_sizes": Query(q_dup_cluster_sizes, _duck_dup_cluster_sizes()),
+    "cluster_split": Query(q_cluster_split, _duck_cluster_split()),
+    "dedup_ngram_jaccard": Query(q_dedup_jaccard, SQL_DEDUP_JACCARD, headline=False),
+    "minhash_est_error": Query(
+        q_minhash_est_error, _duck_minhash_est_error(), headline=False
+    ),
+    "dedup_pr_eval": Query(q_dedup_pr_eval, _duck_dedup_pr_eval()),
+    "simhash": Query(q_simhash, _duck_simhash(), headline=False),
+    "simhash_near_dup": Query(
+        q_simhash_pairs, _duck_simhash_pairs(), owns=("simhash_sigs_full",)
+    ),
+    "bpe_merges": Query(q_bpe_merges, _duck_bpe_merges(), owns=("bpe_merges",)),
+    "bpe_encode": Query(q_bpe_encode, _duck_bpe_encode()),
+    "bpe_fertility": Query(q_bpe_fertility, _duck_bpe_fertility()),
+    "dedup_embedding": Query(q_embedding_near_dup, _duck_embedding_near_dup()),
+    "embedding_clusters": Query(
+        q_embedding_clusters, _duck_embedding_clusters(), headline=False
+    ),
+    "kmv_distinct": Query(q_kmv_distinct, _duck_kmv_distinct(), headline=False),
+    "kmv_overlap": Query(q_kmv_overlap, _duck_kmv_overlap()),
+    "rfm_segments": Query(q_rfm_segments, SQL_RFM),
+    "rfm_segments_approx": Query(q_rfm_segments_approx, _duck_rfm_segments_approx()),
+    "rfm_agreement": Query(q_rfm_agreement, _duck_rfm_agreement()),
+    "compression_ratio": Query(q_compression_ratio, None),
+    "quality_classifier": Query(
+        q_quality_classifier, _duck_quality_classifier(), owns=("qc_scored",)
+    ),
+    "cooccurrence_graph": Query(
+        q_cooccurrence_graph, _duck_cooccurrence_graph(), headline=False
+    ),
+    "triangle_count": Query(q_triangle_count, _duck_triangle_count()),
+    "psi_drift": Query(q_psi_drift, _duck_psi_drift(), headline=False),
+    "bootstrap_ci": Query(q_bootstrap_ci, _duck_bootstrap_ci(), headline=False),
+    "golden_record": Query(q_golden_record, _duck_golden_record()),
+    "resample_interpolate": Query(q_resample_interpolate, SQL_RESAMPLE),
+    "cusum_changepoints": Query(q_cusum_changepoints, SQL_CUSUM, headline=False),
+    "mad_outliers": Query(q_mad_outliers, SQL_MAD),
+    "kaplan_meier": Query(q_kaplan_meier, SQL_KM, headline=False),
+    "attribution_linear": Query(q_attribution_linear, SQL_ATTRIBUTION),
+    "trend_ols": Query(q_trend_ols, SQL_TREND_OLS, headline=False),
+    "trend_theil_sen": Query(q_trend_theil_sen, SQL_TREND_TS, headline=False),
+    "dsir_weights": Query(q_dsir_weights, _duck_dsir_weights(), owns=("dsir_scores",)),
+    "dsir_select": Query(q_dsir_select, _duck_dsir_select()),
+    "perplexity_buckets": Query(q_perplexity_buckets, SQL_PERPLEXITY_BUCKETS),
+    "span_dedup_rewrite": Query(q_span_dedup_rewrite, SQL_SPAN_REWRITE),
+    "ngram_novelty": Query(q_ngram_novelty, SQL_NGRAM_NOVELTY),
+    "temperature_mix": Query(q_temperature_mix, SQL_TEMPERATURE_MIX, headline=False),
+    "jl_project": Query(q_jl_project, _duck_jl_project(), headline=False),
+    "mlm_mask": Query(q_mlm_mask, SQL_MLM_MASK, headline=False),
+    "dq_checks": Query(q_dq_checks, SQL_DQ_CHECKS, headline=False),
+    "clm_examples": Query(q_clm_examples, SQL_CLM_EXAMPLES, headline=False),
+    "langid_eval": Query(q_langid_eval, _duck_langid_eval(), headline=False),
+    "hard_negatives": Query(q_hard_negatives, _duck_hard_negatives(), headline=False),
+    "gopher_rules": Query(q_gopher_rules, _duck_gopher_rules()),
+    "gopher_audit": Query(q_gopher_audit, _duck_gopher_audit()),
+    "embedding_outliers": Query(q_embedding_outliers, SQL_EMB_OUTLIERS),
+    "training_mix_pipeline": Query(q_training_mix_pipeline, _duck_training_mix()),
+    "hashed_embedding": Query(q_hashed_embedding, _duck_hashed_embedding()),
+    "knn_label_eval": Query(q_knn_label_eval, _duck_knn_eval()),
+    "corpus_summary": Query(q_corpus_summary, _duck_corpus_summary()),
+    "pack_fill_stats": Query(q_pack_fill_stats, _duck_pack_fill_stats()),
+    "token_budget_mix": Query(q_token_budget_mix, _duck_token_budget_mix()),
+    "lm_backoff": Query(q_lm_backoff, SQL_LM_BACKOFF),
+    "semantic_dedup": Query(q_semantic_dedup, _duck_semantic_dedup()),
+    "pmi_collocations": Query(q_pmi_collocations, SQL_PMI),
+    "reservoir_sample": Query(q_reservoir_sample, _duck_reservoir_sample()),
+    "weighted_sample": Query(q_weighted_sample, _duck_weighted_sample()),
+    "bloom_prefilter": Query(q_bloom_prefilter, _duck_bloom_prefilter()),
+    "asof_join_forward": Query(q_asof_join_forward, SQL_ASOF_FWD, headline=False),
+    "source_mix": Query(q_source_mix, _duck_source_mix(), headline=False),
+    "epoch_shuffle": Query(q_epoch_shuffle, _duck_epoch_shuffle()),
+    "interleave_sources": Query(q_interleave_sources, _duck_interleave_sources()),
+    "embedding_quantize": Query(q_embedding_quantize, SQL_EMB_QUANT),
+    "pii_redact": Query(q_pii_redact, _duck_pii_redact(), headline=False),
+    "resize_images": Query(q_resize_images, SQL_RESIZE, headline=False),
+    "frame_sample": Query(q_frame_sample, SQL_FRAMES, headline=False),
+    "minhash_incremental": Query(q_minhash_incremental, _duck_minhash_incremental()),
+    "tfidf_topk": Query(q_tfidf_topk, SQL_TFIDF),
+    "bm25_rank": Query(q_bm25_rank, SQL_BM25),
+    "lsh_topk": Query(q_lsh_topk, _duck_lsh_topk(), owns=("lsh_rank",)),
+    "pq_topk": Query(q_pq_topk, _duck_pq_topk(), owns=("pq_rank",)),
+    "ivf_topk_seeded": Query(
+        q_ivf_topk_seeded, _duck_ivf_seeded(), owns=("ivf_seeded_rank",)
+    ),
+    "ivf_topk": Query(q_ivf_topk, _duck_ivf_refined()),
+    "scd2_timetravel": Query(q_scd2_timetravel, SQL_SCD2_TT, headline=False),
+    "scd2_version_count": Query(q_scd2_version_count, SQL_SCD2_VC, headline=False),
+    "interval_arith": Query(q_interval_arith, SQL_INTERVAL, headline=False),
+    "exists_subquery": Query(q_exists_subquery, SQL_EXISTS),
+    "scalar_subquery": Query(q_scalar_subquery, SQL_SCALAR_SUBQ),
+    "having_agg": Query(q_having_agg, SQL_HAVING),
+    "window_running": Query(q_window_running, SQL_WINDOW_RUN),
+    "star_join_revenue": Query(q_star_join_revenue, SQL_STAR_JOIN),
+    "window_ranks": Query(q_window_ranks, SQL_WINDOW_RANKS),
+    "date_spine_fill": Query(q_date_spine_fill, SQL_DATE_SPINE, headline=False),
+    "full_outer_join": Query(q_full_outer_join, SQL_FULL_OUTER),
+    "token_frequency": Query(q_token_frequency, SQL_TOKEN_FREQ),
+    "doc_chunking": Query(q_doc_chunking, SQL_CHUNKING),
+    "embedding_centroids": Query(q_embedding_centroids, SQL_CENTROIDS),
+    "simhash_incremental": Query(q_simhash_incremental, _duck_simhash_incremental()),
+    "embedding_lsh_incremental": Query(
+        q_embedding_lsh_incremental, _duck_embedding_lsh_incremental()
+    ),
+    "frequent_tokens": Query(q_frequent_tokens, SQL_FREQUENT_TOKENS),
+    "pricing_summary": Query(q_pricing_summary, SQL_PRICING),
+    "stage_load": Query(q_stage_load, SQL_STAGE, headline=False),
+    "project_filter_cast": Query(q_project_filter_cast, SQL_PROJECT, headline=False),
+    "merge_upsert": Query(q_merge_upsert, SQL_MERGE),
+    "softdelete_mart": Query(q_softdelete_mart, SQL_SOFTDELETE),
+    "scd2_events": Query(q_scd2_events, SQL_SCD2, owns=("scd2_state",)),
+    "scd2_dimension_join": Query(
         q_scd2_dimension_join,
         _sql_scd2_dim_join().format(scd2=SQL_SCD2),
+        headline=False,
     ),
-    "join_left": (q_join_left, SQL_JOIN_LEFT),
-    "min_cost_supplier": (q_min_cost_supplier, SQL_MIN_COST),
-    "exclusive_returns": (q_exclusive_returns, SQL_EXCL_RETURNS),
-    "sliding_window": (q_sliding_window, SQL_SLIDING),
-    "ntile_quartiles": (q_ntile_quartiles, SQL_NTILE),
-    "mode_median": (q_mode_median, SQL_MODE_MEDIAN),
-    "incremental_rollup": (q_incremental_rollup, SQL_INCR_ROLLUP),
-    "conditional_agg": (q_conditional_agg, SQL_COND_AGG),
-    "fuzzy_join": (q_fuzzy_join, SQL_FUZZY),
-    "nested_semi_join": (q_nested_semi_join, SQL_NESTED_SEMI),
-    "lm_surprisal": (q_lm_surprisal, SQL_LM_SURPRISAL),
-    "domain_reweight": (q_domain_reweight, _duck_domain_reweight()),
-    "event_transitions": (q_event_transitions, SQL_TRANSITIONS),
-    "cohort_retention": (q_cohort_retention, SQL_COHORT),
-    "pagerank": (q_pagerank, _duck_pagerank()),
-    "session_window_native": (q_session_window_native, SQL_SESSION_NATIVE),
-    "ewma": (q_ewma, SQL_EWMA),
-    "compression_ratio": (q_compression_ratio, None),
-    "contamination_check": (q_contamination_check, SQL_CONTAMINATION),
-    "sliding_distinct": (q_sliding_distinct, SQL_SLIDING_DISTINCT),
-    "cumulative_distinct": (q_cumulative_distinct, SQL_CUM_DISTINCT),
-    "heavy_hitters_exact": (q_heavy_hitters_exact, SQL_HEAVY_HITTERS),
-    "repetition_metrics": (q_repetition_metrics, _duck_repetition()),
-    "domain_caps": (q_domain_caps, _duck_domain_caps()),
-    "snapshot_diff": (q_snapshot_diff, SQL_SNAPSHOT_DIFF),
-    "apply_changelog": (q_apply_changelog, SQL_APPLY_CHANGELOG),
-    "dup_spans": (q_dup_spans, SQL_DUP_SPANS),
-    "split_leakage": (q_split_leakage, _duck_split_leakage()),
-    "pack_sequences": (q_pack_sequences, _duck_pack()),
-    "column_profile": (q_column_profile, _duck_column_profile()),
-    "top_decile_orders": (q_top_decile_orders, SQL_TOP_DECILE),
-    "window_firstlast": (q_window_firstlast, SQL_FIRSTLAST),
-    "session_overlap": (q_session_overlap, SQL_SESSION_OVERLAP),
-    "multi_join_topk": (q_multi_join_topk, SQL_MULTI_JOIN),
-    "grouping_sets": (q_grouping_sets, SQL_GROUPING_SETS),
-    "set_ops": (q_set_ops, SQL_SET_OPS),
-    "set_ops_all": (q_set_ops_all, SQL_SET_OPS_ALL),
-    "window_range": (q_window_range, SQL_WINDOW_RANGE),
-    "funnel_conversion": (q_funnel_conversion, SQL_FUNNEL),
-    "histogram": (q_histogram, SQL_HISTOGRAM),
-    "dormant_customers": (q_dormant_customers, SQL_DORMANT),
-    "corr_stats": (q_corr_stats, SQL_CORR),
-    "bigram_frequency": (q_bigram_frequency, SQL_BIGRAM_FREQ),
-    "unpivot": (q_unpivot, SQL_UNPIVOT),
-    "distinct_agg": (q_distinct_agg, SQL_DISTINCT_AGG),
-    "join_inner_residual": (q_join_inner_residual, SQL_JOIN_INNER),
-    "anti_join": (q_anti_join, SQL_ANTI),
-    "semi_join": (q_semi_join, SQL_SEMI),
-    "union_all": (q_union_all, SQL_UNION),
-    "string_set_agg": (q_string_set_agg, SQL_STRING_AGG),
-    "weighted_avg": (q_weighted_avg, SQL_WEIGHTED),
-    "max_ts_iso": (q_max_ts_iso, SQL_MAX_TS),
-    "case_coalesce_nullsafe": (q_case_coalesce_nullsafe, SQL_CASE),
-    "window_topk": (q_window_topk, SQL_WINDOW_TOPK),
-    "order_limit": (q_order_limit, SQL_ORDER_LIMIT),
-    "rollup_agg": (q_rollup_agg, SQL_ROLLUP),
-    "cube_agg": (q_cube_agg, SQL_CUBE),
-    "stats_agg": (q_stats_agg, SQL_STATS),
-    "approx_stats": (q_approx_stats, _duck_approx_stats()),
-    "bucketed_join": (q_bucketed_join, SQL_BUCKETED_JOIN),
-    "tumbling_window": (q_tumbling_window, SQL_TUMBLING),
-    "sessionize": (q_sessionize, SQL_SESSIONIZE),
-    "asof_join": (q_asof_join, SQL_ASOF),
-    "range_join": (q_range_join, SQL_RANGE_JOIN),
-    "scalar_functions": (q_scalar_functions, SQL_SCALARS),
-    "salted_agg": (q_salted_agg, SQL_SALTED),
-    "sql_api": (q_sql_api, SQL_SQL_API),
-    "pivot": (q_pivot, SQL_PIVOT),
-    "json_extract": (q_json_extract, SQL_JSON),
-    "array_reduce": (q_array_reduce, SQL_ARRAY_REDUCE),
-    "hash_split": (q_hash_split, _duck_hash_split()),
-    "stratified_sample": (q_stratified_sample, _duck_stratified_sample()),
-    "dedup_exact": (q_dedup_exact, SQL_DEDUP_EXACT),
-    "dedup_ngram_jaccard": (q_dedup_jaccard, SQL_DEDUP_JACCARD),
-    "minhash_signature": (q_minhash_signature, SQL_MINHASH_SIG),
-    "minhash_near_dup": (q_minhash_pairs, _duck_minhash_pairs()),
-    "dedup_clusters": (q_dedup_clusters, _duck_dedup_clusters()),
-    "simhash": (q_simhash, _duck_simhash()),
-    "simhash_near_dup": (q_simhash_pairs, _duck_simhash_pairs()),
-    "text_analysis": (q_text_analysis, _duck_text_analysis()),
-    "multimodal_features": (q_multimodal_features, SQL_MULTIMODAL),
-    "multimodal_decode": (q_multimodal_decode, _duck_multimodal_decode()),
-    "gif_frames": (q_gif_frames, _duck_gif_frames()),
-    "cosine_topk": (q_cosine_topk, SQL_COSINE),
-    "dedup_embedding": (q_embedding_near_dup, _duck_embedding_near_dup()),
-    "dedup_embedding_lsh": (q_embedding_near_dup_lsh, _duck_embedding_near_dup_lsh()),
-    "classifier_auc": (q_classifier_auc, _duck_classifier_auc()),
-    "classifier_pr_auc": (q_classifier_pr_auc, _duck_classifier_pr_auc()),
-    "classifier_kappa": (q_classifier_kappa, _duck_classifier_kappa()),
-    "calibration_bins": (q_calibration_bins, _duck_calibration_bins()),
-    "calibration_ece": (q_calibration_ece, _duck_calibration_ece()),
-    "hybrid_rrf": (q_hybrid_rrf, _duck_hybrid_rrf()),
-    "hybrid_rrf_multi": (q_hybrid_rrf_multi, _duck_hybrid_rrf_multi()),
-    "retrieval_ndcg_multi": (
-        q_retrieval_ndcg_multi,
-        _duck_retrieval_ndcg_multi(),
+    "join_left": Query(q_join_left, SQL_JOIN_LEFT, headline=False),
+    "min_cost_supplier": Query(q_min_cost_supplier, SQL_MIN_COST),
+    "exclusive_returns": Query(q_exclusive_returns, SQL_EXCL_RETURNS),
+    "sliding_window": Query(q_sliding_window, SQL_SLIDING),
+    "ntile_quartiles": Query(q_ntile_quartiles, SQL_NTILE),
+    "mode_median": Query(q_mode_median, SQL_MODE_MEDIAN),
+    "incremental_rollup": Query(q_incremental_rollup, SQL_INCR_ROLLUP),
+    "conditional_agg": Query(q_conditional_agg, SQL_COND_AGG),
+    "fuzzy_join": Query(q_fuzzy_join, SQL_FUZZY),
+    "nested_semi_join": Query(q_nested_semi_join, SQL_NESTED_SEMI),
+    "lm_surprisal": Query(q_lm_surprisal, SQL_LM_SURPRISAL),
+    "domain_reweight": Query(q_domain_reweight, _duck_domain_reweight()),
+    "event_transitions": Query(q_event_transitions, SQL_TRANSITIONS),
+    "cohort_retention": Query(q_cohort_retention, SQL_COHORT),
+    "pagerank": Query(q_pagerank, _duck_pagerank()),
+    "session_window_native": Query(q_session_window_native, SQL_SESSION_NATIVE),
+    "ewma": Query(q_ewma, SQL_EWMA),
+    "contamination_check": Query(q_contamination_check, SQL_CONTAMINATION),
+    "sliding_distinct": Query(q_sliding_distinct, SQL_SLIDING_DISTINCT),
+    "cumulative_distinct": Query(q_cumulative_distinct, SQL_CUM_DISTINCT),
+    "heavy_hitters_exact": Query(q_heavy_hitters_exact, SQL_HEAVY_HITTERS),
+    "repetition_metrics": Query(q_repetition_metrics, _duck_repetition()),
+    "domain_caps": Query(q_domain_caps, _duck_domain_caps()),
+    "snapshot_diff": Query(q_snapshot_diff, SQL_SNAPSHOT_DIFF),
+    "dup_spans": Query(q_dup_spans, SQL_DUP_SPANS),
+    "split_leakage": Query(q_split_leakage, _duck_split_leakage()),
+    "pack_sequences": Query(q_pack_sequences, _duck_pack()),
+    "column_profile": Query(q_column_profile, _duck_column_profile()),
+    "top_decile_orders": Query(q_top_decile_orders, SQL_TOP_DECILE),
+    "window_firstlast": Query(q_window_firstlast, SQL_FIRSTLAST),
+    "session_overlap": Query(q_session_overlap, SQL_SESSION_OVERLAP),
+    "multi_join_topk": Query(q_multi_join_topk, SQL_MULTI_JOIN),
+    "grouping_sets": Query(q_grouping_sets, SQL_GROUPING_SETS),
+    "set_ops": Query(q_set_ops, SQL_SET_OPS),
+    "set_ops_all": Query(q_set_ops_all, SQL_SET_OPS_ALL, headline=False),
+    "window_range": Query(q_window_range, SQL_WINDOW_RANGE),
+    "funnel_conversion": Query(q_funnel_conversion, SQL_FUNNEL),
+    "histogram": Query(q_histogram, SQL_HISTOGRAM, headline=False),
+    "dormant_customers": Query(q_dormant_customers, SQL_DORMANT, headline=False),
+    "corr_stats": Query(q_corr_stats, SQL_CORR, headline=False),
+    "bigram_frequency": Query(q_bigram_frequency, SQL_BIGRAM_FREQ, headline=False),
+    "unpivot": Query(q_unpivot, SQL_UNPIVOT, headline=False),
+    "distinct_agg": Query(q_distinct_agg, SQL_DISTINCT_AGG),
+    "join_inner_residual": Query(q_join_inner_residual, SQL_JOIN_INNER),
+    "anti_join": Query(q_anti_join, SQL_ANTI, headline=False),
+    "semi_join": Query(q_semi_join, SQL_SEMI, headline=False),
+    "union_all": Query(q_union_all, SQL_UNION, headline=False),
+    "string_set_agg": Query(q_string_set_agg, SQL_STRING_AGG),
+    "weighted_avg": Query(q_weighted_avg, SQL_WEIGHTED),
+    "max_ts_iso": Query(q_max_ts_iso, SQL_MAX_TS, headline=False),
+    "case_coalesce_nullsafe": Query(q_case_coalesce_nullsafe, SQL_CASE, headline=False),
+    "window_topk": Query(q_window_topk, SQL_WINDOW_TOPK),
+    "order_limit": Query(q_order_limit, SQL_ORDER_LIMIT),
+    "rollup_agg": Query(q_rollup_agg, SQL_ROLLUP),
+    "cube_agg": Query(q_cube_agg, SQL_CUBE),
+    "stats_agg": Query(q_stats_agg, SQL_STATS),
+    "approx_stats": Query(q_approx_stats, _duck_approx_stats()),
+    "bucketed_join": Query(q_bucketed_join, SQL_BUCKETED_JOIN),
+    "tumbling_window": Query(q_tumbling_window, SQL_TUMBLING),
+    "sessionize": Query(q_sessionize, SQL_SESSIONIZE),
+    "asof_join": Query(q_asof_join, SQL_ASOF),
+    "range_join": Query(q_range_join, SQL_RANGE_JOIN),
+    "scalar_functions": Query(q_scalar_functions, SQL_SCALARS, headline=False),
+    "salted_agg": Query(q_salted_agg, SQL_SALTED),
+    "sql_api": Query(q_sql_api, SQL_SQL_API, headline=False),
+    "pivot": Query(q_pivot, SQL_PIVOT),
+    "json_extract": Query(q_json_extract, SQL_JSON),
+    "array_reduce": Query(q_array_reduce, SQL_ARRAY_REDUCE, headline=False),
+    "hash_split": Query(q_hash_split, _duck_hash_split(), headline=False),
+    "stratified_sample": Query(q_stratified_sample, _duck_stratified_sample()),
+    "dedup_exact": Query(q_dedup_exact, SQL_DEDUP_EXACT),
+    "minhash_signature": Query(
+        q_minhash_signature, SQL_MINHASH_SIG, owns=("minhash_sig64",)
     ),
-    "zipf_fit": (q_zipf_fit, SQL_ZIPF),
-    "cluster_quality": (q_cluster_quality, _duck_cluster_quality()),
-    "retrieval_ndcg": (q_retrieval_ndcg, _duck_retrieval_ndcg()),
-    "retrieval_mrr": (q_retrieval_mrr, _duck_retrieval_mrr()),
-    "ann_recall": (q_ann_recall, _duck_ann_recall()),
-    "mrl_recall": (q_mrl_recall, _duck_mrl_recall()),
-    "quant_recall": (q_quant_recall, _duck_quant_recall()),
-    "dedup_pr_eval": (q_dedup_pr_eval, _duck_dedup_pr_eval()),
-    "acf_lags": (q_acf_lags, _duck_acf_lags()),
-    "vocab_kl": (q_vocab_kl, SQL_VOCAB_KL),
-    "seasonal_dow": (q_seasonal_dow, SQL_SEASONAL_DOW),
-    "market_basket": (q_market_basket, SQL_MARKET_BASKET),
-    "kcenter_select": (q_kcenter_select, _duck_kcenter()),
-    "rfm_segments": (q_rfm_segments, SQL_RFM),
-    "rfm_segments_approx": (q_rfm_segments_approx, _duck_rfm_segments_approx()),
-    "rfm_agreement": (q_rfm_agreement, _duck_rfm_agreement()),
-    "revenue_gini": (q_revenue_gini, SQL_REVENUE_GINI),
-    "seasonal_naive_eval": (q_seasonal_naive_eval, SQL_SEASONAL_NAIVE),
-    "holt_winters_eval": (q_holt_winters_eval, _duck_holt_winters_eval()),
-    "kcore_peel": (q_kcore_peel, _duck_kcore_peel()),
-    "ks_drift": (q_ks_drift, SQL_KS_DRIFT),
-    "benford_audit": (q_benford_audit, _duck_benford_audit()),
-    "ppr_seeded": (q_ppr_seeded, _duck_ppr_seeded()),
-    "unigram_entropy": (q_unigram_entropy, SQL_UNIGRAM_ENTROPY),
-    "trimmed_stats": (q_trimmed_stats, SQL_TRIMMED_STATS),
-    "ks_drift_binned": (q_ks_drift_binned, _duck_ks_drift_binned()),
-    "ks_agreement": (q_ks_agreement, _duck_ks_agreement()),
-}
-
-# Round-9 registry head: queries that are new or whose plan changed
-# this round lead, so each gets a fresh official driver row.
-# New: gif_frames (real animated-GIF frame decode) and
-# apply_changelog (replay graduated to an oracle row).
-# Changed plans: multimodal_decode (progressive JPEG + GIF video
-# rows) and every member of the nine families now riding shared
-# session stores (retrieval fused ranking, exact/binned KS,
-# minhash/ngram/embedding pair tables, simhash signatures, BPE merge
-# table, KMV hashes, RFM base). compression_ratio remains the single
-# rows-only query (zlib is honestly not SQL) and stays at the head
-# for a current clean no-oracle row. Everything else keeps its prior
-# relative order; lookup semantics are unaffected.
-_R9_HEAD = [
-    "gif_frames",
-    "apply_changelog",
-    "multimodal_decode",
-    "hybrid_rrf_multi",
-    "retrieval_mrr",
-    "retrieval_ndcg_multi",
-    "ks_drift",
-    "ks_drift_binned",
-    "ks_agreement",
-    "minhash_near_dup",
-    "dedup_clusters",
-    "curation_pipeline",
-    "dedup_source_matrix",
-    "dup_cluster_sizes",
-    "cluster_split",
-    "dedup_ngram_jaccard",
-    "minhash_est_error",
-    "dedup_pr_eval",
-    "simhash",
-    "simhash_near_dup",
-    "bpe_merges",
-    "bpe_encode",
-    "bpe_fertility",
-    "dedup_embedding",
-    "embedding_clusters",
-    "kmv_distinct",
-    "kmv_overlap",
-    "rfm_segments",
-    "rfm_segments_approx",
-    "rfm_agreement",
-    "compression_ratio",
-]
-assert set(_R9_HEAD) <= set(QUERIES), sorted(set(_R9_HEAD) - set(QUERIES))
-QUERIES = {
-    **{name: QUERIES[name] for name in _R9_HEAD},
-    **{name: fn for name, fn in QUERIES.items() if name not in set(_R9_HEAD)},
+    "text_analysis": Query(q_text_analysis, _duck_text_analysis()),
+    "multimodal_features": Query(q_multimodal_features, SQL_MULTIMODAL),
+    "cosine_topk": Query(q_cosine_topk, SQL_COSINE, owns=("cosine_rank",)),
+    "dedup_embedding_lsh": Query(
+        q_embedding_near_dup_lsh, _duck_embedding_near_dup_lsh()
+    ),
+    "classifier_auc": Query(q_classifier_auc, _duck_classifier_auc()),
+    "classifier_pr_auc": Query(q_classifier_pr_auc, _duck_classifier_pr_auc()),
+    "classifier_kappa": Query(q_classifier_kappa, _duck_classifier_kappa()),
+    "calibration_bins": Query(q_calibration_bins, _duck_calibration_bins()),
+    "calibration_ece": Query(q_calibration_ece, _duck_calibration_ece()),
+    "hybrid_rrf": Query(q_hybrid_rrf, _duck_hybrid_rrf(), owns=("fused_single",)),
+    "zipf_fit": Query(q_zipf_fit, SQL_ZIPF),
+    "cluster_quality": Query(q_cluster_quality, _duck_cluster_quality()),
+    "retrieval_ndcg": Query(q_retrieval_ndcg, _duck_retrieval_ndcg()),
+    "ann_recall": Query(q_ann_recall, _duck_ann_recall()),
+    "mrl_recall": Query(q_mrl_recall, _duck_mrl_recall()),
+    "quant_recall": Query(q_quant_recall, _duck_quant_recall()),
+    "acf_lags": Query(q_acf_lags, _duck_acf_lags()),
+    "vocab_kl": Query(q_vocab_kl, SQL_VOCAB_KL),
+    "seasonal_dow": Query(q_seasonal_dow, SQL_SEASONAL_DOW),
+    "market_basket": Query(q_market_basket, SQL_MARKET_BASKET),
+    "kcenter_select": Query(q_kcenter_select, _duck_kcenter()),
+    "revenue_gini": Query(q_revenue_gini, SQL_REVENUE_GINI),
+    "seasonal_naive_eval": Query(q_seasonal_naive_eval, SQL_SEASONAL_NAIVE),
+    "holt_winters_eval": Query(q_holt_winters_eval, _duck_holt_winters_eval()),
+    "kcore_peel": Query(q_kcore_peel, _duck_kcore_peel()),
+    "benford_audit": Query(q_benford_audit, _duck_benford_audit()),
+    "ppr_seeded": Query(q_ppr_seeded, _duck_ppr_seeded()),
+    "unigram_entropy": Query(q_unigram_entropy, SQL_UNIGRAM_ENTROPY),
+    "trimmed_stats": Query(q_trimmed_stats, SQL_TRIMMED_STATS),
 }

@@ -1,12 +1,29 @@
 """bench.measure, the one timing protocol behind bench.py and
-tools/bench_isolated.py, and the floor-exceeder selection."""
+tools/bench_isolated.py, the floor-exceeder selection, and the bench
+lists derived from the query registry."""
 
 from __future__ import annotations
 
 import time
+from collections import Counter
+
+import pytest
 
 import bench
 import lion_parcel_etl_spark.plans.queries as Q
+
+
+def test_registry_ownership_and_bench_lists():
+    owners = {n: q for n, q in Q.QUERIES.items() if q.owns}
+    assert all(q.headline for q in owners.values())
+    counts = Counter(s for q in owners.values() for s in q.owns)
+    assert [s for s, c in counts.items() if c > 1] == []
+    assert set(bench.ANCHOR) <= set(bench.HEADLINE)
+
+
+def test_evict_owned_rejects_name_outside_registry():
+    with pytest.raises(KeyError, match="minhash_near_dupp"):
+        bench._evict_owned(None, "/nowhere", "minhash_near_dupp")
 
 
 def test_measure_rebuilds_owned_store_before_every_run(spark, sf_dir, monkeypatch):

@@ -44,7 +44,7 @@ def _canon(df):
 
 @pytest.mark.parametrize("name", [q for q in QUERIES if q not in EXCLUDED])
 def test_result_is_partition_layout_invariant(spark, sf_dir, name):
-    fn, _ = QUERIES[name]
+    fn = QUERIES[name].build
     base = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         # run A uses the session's existing layout (base) as-is

@@ -66,15 +66,11 @@ def test_bench_store_owners_map_to_real_stores(spark, sf_dir):
     for owner, stores in bench.STORE_OWNERS.items():
         assert owner in bench.HEADLINE, owner
         assert owner in Q.QUERIES, owner
-        fn, _ = Q.QUERIES[owner]
+        fn = Q.QUERIES[owner].build
         fn(spark, sf_dir)  # building the stores is a call-time effect
         for store in stores:
             key = (app, str(sf_dir), store)
             assert key in Q._SIG_STORE_MEMO, (owner, store)
-    # bucketed_join is owned via its separate memo
-    assert "bucketed_join" in bench.HEADLINE
-    bench._evict_owned(spark, sf_dir, "bucketed_join")
-    assert app not in Q._BUCKETED_LAST
 
 
 def test_evict_owned_forces_rebuild(spark, sf_dir):
@@ -84,7 +80,7 @@ def test_evict_owned_forces_rebuild(spark, sf_dir):
     import bench
     import lion_parcel_etl_spark.plans.queries as Q
 
-    fn, _ = Q.QUERIES["ks_drift"]
+    fn = Q.QUERIES["ks_drift"].build
     fn(spark, sf_dir)
     key = (spark.sparkContext.applicationId, str(sf_dir), "ks_exact")
     path_before = Q._SIG_STORE_MEMO[key]
@@ -106,10 +102,10 @@ def test_evict_owned_forces_rebuild(spark, sf_dir):
 
 
 def test_bucketed_root_distinguishes_full_sf_dir(spark, sf_dir, tmp_path, monkeypatch):
-    """r09 ADVICE (medium): the bucketed-table memo must key on the
-    FULL sf_dir — two paths sharing a basename are different datasets.
-    A call with an aliased path (same basename, different parent) must
-    rewrite, not serve the other dataset's tables."""
+    """r09 ADVICE (medium): the bucketed-table root must key on the
+    FULL sf_dir — two paths sharing a basename are different datasets,
+    so a call with an aliased path (same basename, different parent)
+    writes under its own root, not the other dataset's."""
     import lion_parcel_etl_spark.operators.bucketing as B
     import lion_parcel_etl_spark.plans.queries as Q
 
@@ -123,47 +119,40 @@ def test_bucketed_root_distinguishes_full_sf_dir(spark, sf_dir, tmp_path, monkey
     monkeypatch.setattr(B, "write_bucketed", counting)
     key = spark.sparkContext.applicationId
     # an alias directory with the SAME basename pointing at the same
-    # parquet data — under the old basename-derived root this memo-hit
-    # and silently served the other path's tables
+    # parquet data — under the old basename-derived root both calls
+    # shared one root
     alias_parent = tmp_path / "alias"
     alias_parent.mkdir()
     alias = alias_parent / os.path.basename(os.path.normpath(str(sf_dir)))
     alias.symlink_to(str(sf_dir))
 
-    Q._BUCKETED_LAST.pop(key, None)
-    try:
-        Q.q_bucketed_join(spark, sf_dir)
-        n_first = len(calls)
-        assert n_first == 2  # orders + lineitem
-        Q.q_bucketed_join(spark, sf_dir)
-        assert len(calls) == n_first  # same full path: memo hit
-        Q.q_bucketed_join(spark, str(alias))
-        assert len(calls) == n_first + 2  # same basename, new path: rewrite
-        # roots embed the applicationId (concurrent sessions cannot
-        # clobber each other) and differ across the two sf_dirs
-        roots = {os.path.dirname(p) for _, p in calls}
-        assert len(roots) == 2
-        for r in roots:
-            assert key in os.path.basename(r)
-    finally:
-        Q._BUCKETED_LAST.pop(key, None)
+    Q.q_bucketed_join(spark, sf_dir)
+    Q.q_bucketed_join(spark, str(alias))
+    assert len(calls) == 4  # orders + lineitem, per call
+    # roots embed the applicationId (concurrent sessions cannot
+    # clobber each other) and differ across the two sf_dirs
+    roots = {os.path.dirname(p) for _, p in calls}
+    assert len(roots) == 2
+    for r in roots:
+        assert key in os.path.basename(r)
 
 
 def test_bench_guards_are_not_bare_asserts():
-    """r09 ADVICE (low): the HEADLINE-uniqueness and kmax guards must
-    survive python -O — i.e. be explicit raises, not asserts."""
+    """r09 ADVICE (low): import-time guards in bench.py and the
+    registry module, and the kmax guard, must survive python -O — i.e.
+    be explicit raises, not asserts."""
     import ast
     import inspect
 
     import bench
     import lion_parcel_etl_spark.plans.queries as Q
 
-    bench_src = inspect.getsource(bench)
-    tree = ast.parse(bench_src)
-    module_level_asserts = [
-        n for n in tree.body if isinstance(n, ast.Assert)
-    ]
-    assert module_level_asserts == []
+    for module in (bench, Q):
+        tree = ast.parse(inspect.getsource(module))
+        module_level_asserts = [
+            n.lineno for n in tree.body if isinstance(n, ast.Assert)
+        ]
+        assert module_level_asserts == [], module.__name__
     kpr_src = inspect.getsource(Q.q_dedup_pr_eval)
     assert "assert kmax" not in kpr_src
 
@@ -193,24 +182,23 @@ def test_qc_model_store_scores_identical_to_inline_fit(spark, sf_dir):
     assert stored.exceptAll(inline).count() == 0
 
 
-def test_evict_owned_bucketed_join_removes_tables_and_root(spark, sf_dir):
-    """Evicting bucketed_join drops its catalog tables and deletes the
-    per-(session, sf_dir) root, and rebuilding it (or any store) any
-    number of times lists its path for atexit cleanup only once."""
+def test_bucketed_join_rewrites_fresh_root_each_call(spark, sf_dir):
+    """Every q_bucketed_join call replaces the per-(session, sf_dir)
+    root with a fresh one, and rebuilding it (or any store) any number
+    of times lists its path for atexit cleanup only once."""
     import bench
     import lion_parcel_etl_spark.plans.queries as Q
 
     root = Q._bucketed_root(spark, sf_dir)
     for _ in range(2):
         Q.q_bucketed_join(spark, sf_dir)
-        assert os.path.isdir(root)
-        bench._evict_owned(spark, sf_dir, "bucketed_join")
-        assert not os.path.exists(root)
+        assert not os.path.exists(os.path.join(root, "stale"))
         for table in Q._BUCKETED_TABLES:
-            assert not spark.catalog.tableExists(table)
+            assert spark.catalog.tableExists(table)
+        open(os.path.join(root, "stale"), "w").close()
     assert Q._STORE_CLEANUP_PATHS.count(root) == 1
 
-    fn, _ = Q.QUERIES["ks_drift"]
+    fn = Q.QUERIES["ks_drift"].build
     for _ in range(2):
         bench._evict_owned(spark, sf_dir, "ks_drift")
         fn(spark, sf_dir)

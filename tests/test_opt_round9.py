@@ -3,7 +3,7 @@ exactly the rows its inline build produces (the property that makes
 store-backed plans safe on the oracle hash path — the
 test_round9_queries discipline, extended to this round's stores), plus
 the two behavior-preserving operator changes (minhash prefix slicing,
-k-core fixed-point early exit) and the bucketed-write session memo."""
+k-core fixed-point early exit) and repeatable bucketed-join results."""
 
 from __future__ import annotations
 
@@ -154,11 +154,9 @@ def test_kcore_early_exit_matches_full_unroll(spark):
         assert got == want, rounds
 
 
-def test_bucketed_join_write_memoized_per_session(spark, sf_dir, monkeypatch):
-    """The bucketed-table write runs once per (session, sf_dir root):
-    a repeat call must NOT rewrite (the bench's timed runs measure the
-    join, not the amortized write) and must return identical rows; a
-    CHANGED root must rewrite (no stale table served)."""
+def test_bucketed_join_repeat_call_returns_identical_rows(spark, sf_dir, monkeypatch):
+    """Each q_bucketed_join call rewrites both bucketed tables and a
+    repeat call returns identical rows."""
     import lion_parcel_etl_spark.operators.bucketing as B
     import lion_parcel_etl_spark.plans.queries as Q
 
@@ -172,14 +170,7 @@ def test_bucketed_join_write_memoized_per_session(spark, sf_dir, monkeypatch):
     # q_bucketed_join imports write_bucketed inside the function body,
     # so patch the SOURCE module
     monkeypatch.setattr(B, "write_bucketed", counting)
-    key = spark.sparkContext.applicationId
-    Q._BUCKETED_LAST.pop(key, None)
-    try:
-        first = _rows(Q.q_bucketed_join(spark, sf_dir))
-        n_writes_first = len(calls)
-        again = _rows(Q.q_bucketed_join(spark, sf_dir))
-        assert n_writes_first == 2  # orders + lineitem
-        assert len(calls) == n_writes_first  # repeat call: no rewrite
-        assert first == again and len(first) > 0
-    finally:
-        Q._BUCKETED_LAST.pop(key, None)
+    first = _rows(Q.q_bucketed_join(spark, sf_dir))
+    again = _rows(Q.q_bucketed_join(spark, sf_dir))
+    assert len(calls) == 4  # orders + lineitem, per call
+    assert first == again and len(first) > 0

@@ -28,7 +28,7 @@ JUSTIFIED = {("full_outer_join", "SMJ")}
 
 @pytest.mark.parametrize("name", list(QUERIES))
 def test_plan_has_no_scale_antipatterns(spark, sf_dir, name):
-    fn, _ = QUERIES[name]
+    fn = QUERIES[name].build
     plan = formatted_plan(fn(spark, sf_dir))
     flags = [f for f in audit(name, plan) if (name, f) not in JUSTIFIED]
     assert not flags, f"{name}: {flags}\n{plan[:2000]}"

@@ -274,11 +274,11 @@ def test_split_leakage_only_cross_split_spans(spark, sf_dir):
     pairs at the same window size."""
     from lion_parcel_etl_spark.plans.queries import QUERIES
 
-    leak = QUERIES["split_leakage"][0](spark, sf_dir)
+    leak = QUERIES["split_leakage"].build(spark, sf_dir)
     rows = leak.collect()
     assert all(r.n_train_docs > 0 and r.n_eval_docs > 0 for r in rows)
     # subset of all duplicated spans
-    dup = {r.span_hash for r in QUERIES["dup_spans"][0](spark, sf_dir).collect()}
+    dup = {r.span_hash for r in QUERIES["dup_spans"].build(spark, sf_dir).collect()}
     assert {r.span_hash for r in rows} <= dup
 
 

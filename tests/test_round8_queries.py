@@ -164,9 +164,9 @@ def test_lag_family_is_day_based_on_sparse_data(spark, tmp_path):
         "trend_theil_sen",
         "seasonal_dow",
     ):
-        fn, sql = QUERIES[name]
-        got = [tuple(r) for r in fn(spark, sf).collect()]
-        want = [tuple(r) for r in con.execute(sql).fetchall()]
+        query = QUERIES[name]
+        got = [tuple(r) for r in query.build(spark, sf).collect()]
+        want = [tuple(r) for r in con.execute(query.oracle).fetchall()]
         assert sorted(got, key=str) == sorted(want, key=str), name
         assert got, name
 

@@ -50,7 +50,7 @@ name, sf_dir, runs = sys.argv[1], sys.argv[2], int(sys.argv[3])
 spark = get_spark(app_name="bench-isolated")
 spark.sparkContext.setLogLevel("ERROR")
 times, _ = bench.measure(spark, sf_dir, name, runs + 1)
-rows = bench.QUERIES[name][0](spark, sf_dir).count()
+rows = bench.QUERIES[name].build(spark, sf_dir).count()
 print("BENCH_ISOLATED_RESULT " + json.dumps(
     {{"cold": times[0], "times": times[1:], "rows": rows}}
 ))

@@ -40,7 +40,7 @@ def main() -> None:
     spark = get_spark(app_name=f"capture-plans-{suffix}")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
-        fn, _ = QUERIES[name]
+        fn = QUERIES[name].build
         try:
             plan = formatted_plan(fn(spark, sf_dir))
         except Exception as e:  # noqa: BLE001

@@ -36,11 +36,11 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs("/tmp/lpe_plans", exist_ok=True)
-    for name, (fn, _) in QUERIES.items():
+    for name, query in QUERIES.items():
         if only and name not in only:
             continue
         try:
-            plan = formatted_plan(fn(spark, sf_dir))
+            plan = formatted_plan(query.build(spark, sf_dir))
         except Exception as e:  # noqa: BLE001
             print(f"ERR  {name}: {e}")
             continue
