@@ -23,6 +23,10 @@ relative to /root/reference).
 
 from __future__ import annotations
 
+import hashlib
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from typing import NamedTuple
 
@@ -68,6 +72,102 @@ def _t(spark, sf_dir, name) -> DataFrame:
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
+
+
+# ---------------------------------------------------------------------------
+# Session stores
+# ---------------------------------------------------------------------------
+
+#: store name -> ``(spark, sf_dir) -> DataFrame`` builder, filled by @_store
+STORES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+
+
+def _store(name: str):
+    """Register the decorated ``(spark, sf_dir) -> DataFrame`` builder as
+    session store ``name``. A name has exactly one builder: a second
+    registration raises at import, so no consumer can be served another
+    builder's rows under a shared name."""
+
+    def register(build):
+        if name in STORES:
+            raise ValueError(
+                f"session store {name!r} is already built by "
+                f"{STORES[name].__qualname__}; pick a distinct store name"
+            )
+        STORES[name] = build
+        return build
+
+    return register
+
+
+def _store_path(spark, sf_dir, name: str) -> str:
+    """Directory of store ``name`` for this session and sf_dir. The
+    applicationId keeps concurrent sessions apart; an md5 of the FULL
+    sf_dir (stable across processes, unlike the builtin hash) keeps two
+    datasets that share a basename apart and makes a leftover directory
+    identifiable."""
+    sfd = hashlib.md5(str(sf_dir).encode()).hexdigest()[:8]
+    return os.path.join(
+        tempfile.gettempdir(),
+        f"lpe_store_{spark.sparkContext.applicationId}_{name}_{sfd}",
+    )
+
+
+def _session_store(spark, sf_dir, name: str) -> DataFrame:
+    """Store ``name`` read back from its parquet directory, built first
+    if the directory holds no committed write.
+
+    A store is an expensive deterministic intermediate that several
+    queries share: a signature table, a pair list, an ANN ranking, a
+    fitted model. Writing it once per (session, sf_dir) and scanning it
+    back is the production shape of an incremental operator's store
+    (dedup.pin: "the 100 TB version of this function is write the
+    signature table to storage and read it back"). Each consumer pays
+    one scan instead of a recompute, and a table scan survives cache
+    clears. The stored rows are byte-identical to the builder's, so
+    oracle parity does not depend on whether a call builds or reads.
+
+    An existence check decides build or read, as dbt's
+    ``is_incremental()`` checks for its target table: the directory's
+    ``_SUCCESS`` marker. A directory without it (a killed write) is
+    rebuilt."""
+    path = _store_path(spark, sf_dir, name)
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        STORES[name](spark, sf_dir).write.mode("overwrite").parquet(path)
+        _register_store_cleanup(path)
+    return spark.read.parquet(path)
+
+
+def _evict_session_store(spark, sf_dir, name: str) -> None:
+    """Delete store ``name`` so the next ``_session_store`` call rebuilds
+    it. bench.py evicts an owner query's stores before each timed run;
+    tests evict after patching a builder's input. A name outside
+    ``STORES`` raises KeyError, so a typo in ``Query.owns`` cannot leave
+    the owner's row timing a warm scan."""
+    if name not in STORES:
+        raise KeyError(f"not a session store: {name!r}")
+    shutil.rmtree(_store_path(spark, sf_dir, name), ignore_errors=True)
+
+
+_STORE_CLEANUP_PATHS: list = []
+
+
+def _register_store_cleanup(path: str) -> None:
+    """atexit-remove every session store this process created, so
+    repeated sessions do not accumulate stores under the temp dir. Each
+    path is listed once however often its store is rebuilt, and the
+    atexit hook is registered once per process."""
+    import atexit
+
+    if path in _STORE_CLEANUP_PATHS:
+        return
+    if not _STORE_CLEANUP_PATHS:
+        def _cleanup():
+            for p in _STORE_CLEANUP_PATHS:
+                shutil.rmtree(p, ignore_errors=True)
+
+        atexit.register(_cleanup)
+    _STORE_CLEANUP_PATHS.append(path)
 
 
 # cents / fmt_ts now live in lion_parcel_etl_spark.functions (shared
@@ -289,7 +389,7 @@ def q_scd2_dimension_join(spark, sf_dir):
     from lion_parcel_etl_spark.operators.temporal import asof_join
 
     ev = _t(spark, sf_dir, "events")
-    state2 = _scd2_state(spark, sf_dir)
+    state2 = _session_store(spark, sf_dir, "scd2_state")
     dim = state2.select(
         "user_id",
         F.col("valid_from").alias("ts"),
@@ -327,30 +427,23 @@ FROM events e JOIN dim d
 """
 
 
-def _scd2_state(spark, sf_dir) -> DataFrame:
+@_store("scd2_state")
+def _build_scd2_state(spark, sf_dir) -> DataFrame:
     """The raw two-run SCD2 dimension state (timestamp-typed validity
-    columns) SHARED by the SCD2 readout family — scd2_events,
-    scd2_version_count, scd2_timetravel, scd2_dimension_join — via the
-    _session_store discipline (r09 optimization round): all four
-    re-ran the two snapshot windows + the change-detection state
-    machine to reach the identical deterministic state (LEDGER floors
-    1.26 + 2.10 + 1.70 + 2.02 s). Timestamps are micros (parquet
-    round-trips them exactly); every value is exact, so the store is
-    byte-identical to the inline build. A fresh session's first family
-    member pays the full two-run apply — the cost the driver's
-    standalone correctness runs measure."""
-    def build():
-        ev = _t(spark, sf_dir, "events")
-        s1 = _event_snapshot(ev, EV_C1)
-        s2 = _event_snapshot(ev, EV_C2)
-        state1 = scd2_apply(
-            None, s1, ["user_id"], ["event_type", "value"], "ts", RUN0
-        )
-        return scd2_apply(
-            state1, s2, ["user_id"], ["event_type", "value"], "ts", RUN1
-        )
-
-    return _session_store(spark, sf_dir, "scd2_state", build)
+    columns) shared by the SCD2 readout family: scd2_events,
+    scd2_version_count, scd2_timetravel and scd2_dimension_join each
+    re-ran the two snapshot windows and the change-detection state
+    machine to reach the same deterministic state. Timestamps are
+    micros, which parquet round-trips exactly."""
+    ev = _t(spark, sf_dir, "events")
+    s1 = _event_snapshot(ev, EV_C1)
+    s2 = _event_snapshot(ev, EV_C2)
+    state1 = scd2_apply(
+        None, s1, ["user_id"], ["event_type", "value"], "ts", RUN0
+    )
+    return scd2_apply(
+        state1, s2, ["user_id"], ["event_type", "value"], "ts", RUN1
+    )
 
 
 def q_scd2_events(spark, sf_dir):
@@ -359,7 +452,7 @@ def q_scd2_events(spark, sf_dir):
     latest event per user at each cutoff; run 1 full refresh, run 2
     incremental with null-safe change detection on (event_type, value).
     State via the family-shared `scd2_state` store."""
-    state2 = _scd2_state(spark, sf_dir)
+    state2 = _session_store(spark, sf_dir, "scd2_state")
     return state2.select(
         "user_id",
         "event_type",
@@ -873,36 +966,18 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 _BUCKETED_TABLES = ("q_b_orders", "q_b_lineitem")
 
 
-def _bucketed_root(spark, sf_dir) -> str:
-    """Directory of q_bucketed_join's tables, keyed by applicationId and
-    an md5 of the FULL sf_dir: concurrent sessions on one sf_dir cannot
-    clobber each other's tables mid-read, and two sf_dirs that share a
-    basename (/a/sf1 vs /b/sf1) never serve each other's data."""
-    import hashlib
-    import os
-    import tempfile
-
-    sfd = hashlib.md5(str(sf_dir).encode()).hexdigest()[:8]
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"lpe_bucketed_{spark.sparkContext.applicationId}_{sfd}",
-    )
-
-
 def q_bucketed_join(spark, sf_dir):
     """Fact-fact join via pre-bucketed tables: both sides written
     hash-bucketed+sorted on the join key, so the join itself plans
     with zero Exchange nodes (asserted in tests/test_bucketing.py).
     Every call drops both tables, removes their root and writes them
     again, so the query's time includes the bucketing write."""
-    import shutil
-
     from lion_parcel_etl_spark.operators.bucketing import (
         bucketed_join,
         write_bucketed,
     )
 
-    root = _bucketed_root(spark, sf_dir)
+    root = _store_path(spark, sf_dir, "bucketed")
     b_orders, b_lineitem = _BUCKETED_TABLES
     for table in _BUCKETED_TABLES:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
@@ -1627,92 +1702,74 @@ _DUCK_SHINGLES = (
 JACCARD_THRESHOLD = 0.08
 
 
-def _ngram_pairs(spark, sf_dir) -> DataFrame:
+@_store("ngram_pairs")
+def _build_ngram_pairs(spark, sf_dir) -> DataFrame:
     """Exact n-gram-Jaccard pairs at the dedup family's (n=3,
-    threshold={JACCARD_THRESHOLD}) shape, SHARED by q_dedup_jaccard,
-    q_minhash_est_error and q_dedup_pr_eval via the _session_store
-    discipline (r09 — the _cooc_edges pattern): three queries used to
-    re-pay the shingle-equality join to reach the identical
-    deterministic (id_a, id_b, round-6 jaccard) table. Byte-identical
-    to the inline build, so oracle hash parity is unaffected."""
-    docs = _t(spark, sf_dir, "documents")
-    return _session_store(
-        spark,
-        sf_dir,
-        "ngram_pairs",
-        lambda: DD.ngram_jaccard_pairs(
-            docs, "doc_id", "text", n=3, threshold=JACCARD_THRESHOLD
-        ),
+    threshold={JACCARD_THRESHOLD}) shape, shared by q_dedup_jaccard,
+    q_minhash_est_error and q_dedup_pr_eval, which each paid the
+    shingle-equality join to reach the same (id_a, id_b, round-6
+    jaccard) table."""
+    return DD.ngram_jaccard_pairs(
+        _t(spark, sf_dir, "documents"),
+        "doc_id",
+        "text",
+        n=3,
+        threshold=JACCARD_THRESHOLD,
     )
 
 
-def _minhash_pairs(spark, sf_dir) -> DataFrame:
-    """Verified MinHash-LSH near-dup pairs at the dedup family's
-    default shape, SHARED by q_minhash_pairs, q_dedup_clusters,
-    q_curation_pipeline, q_dedup_source_matrix, q_dup_cluster_sizes
-    and q_cluster_split (r09): six queries each re-ran the full
-    shingle→minhash→band→verify pipeline to reach the identical
-    deterministic pair table. Session-scoped parquet store —
-    byte-identical to the inline build (integer ids + round-6
-    jaccard), one build per (session, sf_dir)."""
-    docs = _t(spark, sf_dir, "documents")
-    return _session_store(
-        spark,
-        sf_dir,
-        "minhash_pairs",
-        lambda: DD.minhash_near_dup(
-            docs, "doc_id", "text", threshold=JACCARD_THRESHOLD
-        ),
+@_store("minhash_pairs")
+def _build_minhash_pairs(spark, sf_dir) -> DataFrame:
+    """Verified MinHash-LSH near-dup pairs at the dedup family's default
+    shape, shared by q_minhash_pairs, q_dedup_clusters,
+    q_curation_pipeline, q_dedup_source_matrix, q_dup_cluster_sizes and
+    q_cluster_split, which each ran the full
+    shingle→minhash→band→verify pipeline to reach the same pair table
+    (integer ids + round-6 jaccard)."""
+    return DD.minhash_near_dup(
+        _t(spark, sf_dir, "documents"),
+        "doc_id",
+        "text",
+        threshold=JACCARD_THRESHOLD,
     )
 
 
-def _minhash_sig64(spark, sf_dir) -> DataFrame:
+@_store("minhash_sig64")
+def _build_minhash_sig64(spark, sf_dir) -> DataFrame:
     """(doc, n_sh, sig) per-doc k={DD.MINHASH_K_CORPUS} MinHash
-    signatures over ALL documents, SHARED by q_dedup_pr_eval (k=64
+    signatures over ALL documents, shared by q_dedup_pr_eval (k=64
     bands + k=16 prefix — the coefficient stream is prefix-stable, so
     sig64[:16] IS the k=16 signature, pinned in
     tests/test_opt_round9.py), q_minhash_est_error and
-    q_minhash_signature (both k=16 via slice) — the r09-optimization
-    twin of the `_simhash_sigs` full-corpus store. The signature fold
-    is the dominant cost of all three members (LEDGER floors 3.59 +
-    2.49 + 1.51 s); its output is exact bigints, byte-identical
-    through parquet. n_sh (shingle count) rides along so consumers can
-    re-apply the empty-shingle filter without re-shingling."""
+    q_minhash_signature (both k=16 via slice). The signature fold is
+    the dominant cost of all three; its output is exact bigints. n_sh
+    (shingle count) rides along so consumers can re-apply the
+    empty-shingle filter without re-shingling."""
     docs = _t(spark, sf_dir, "documents")
-    return _session_store(
-        spark,
-        sf_dir,
-        "minhash_sig64",
-        lambda: DD.minhash_signatures(
-            docs, "doc_id", "text", n=3, k=DD.MINHASH_K_CORPUS
-        ).select("doc", F.size("shingles").alias("n_sh"), "sig"),
-    )
+    return DD.minhash_signatures(
+        docs, "doc_id", "text", n=3, k=DD.MINHASH_K_CORPUS
+    ).select("doc", F.size("shingles").alias("n_sh"), "sig")
 
 
-def _simhash_sigs(spark, sf_dir) -> DataFrame:
-    """Per-doc 64-bit SimHash signatures (doc, sh), SHARED by
-    q_simhash and q_simhash_pairs (r09): the 64-term md5 bit fold is
+@_store("simhash_sigs_full")
+def _build_simhash_sigs_full(spark, sf_dir) -> DataFrame:
+    """Per-doc 64-bit SimHash signatures (doc, sh) over ALL documents,
+    shared by q_simhash and q_simhash_pairs: the 64-term md5 bit fold is
     the dominant cost of both, and its output is a tiny deterministic
     corpus-keyed table — the literal production shape (the
-    simhash_signatures docstring: persist this and never recompute
-    the historical corpus). Named distinctly from the incremental
-    twin's "simhash_sigs" store, which holds the doc_id %% 4 != 0
-    HISTORICAL subset only — a shared name would silently serve the
-    subset to full-corpus consumers (caught by the oracle gate when
-    this store first landed)."""
-    docs = _t(spark, sf_dir, "documents")
-    return _session_store(
-        spark,
-        sf_dir,
-        "simhash_sigs_full",
-        lambda: DD.simhash_signatures(docs, "doc_id", "text"),
+    simhash_signatures docstring: persist this and never recompute the
+    historical corpus). Distinct from the incremental twin's
+    "simhash_sigs" store, which holds only the doc_id % 4 != 0
+    historical subset."""
+    return DD.simhash_signatures(
+        _t(spark, sf_dir, "documents"), "doc_id", "text"
     )
 
 
 def q_dedup_jaccard(spark, sf_dir):
     """Exact n-gram-Jaccard near-dup pairs (ground truth for MinHash),
-    via the family-shared _ngram_pairs store."""
-    return _ngram_pairs(spark, sf_dir)
+    via the `ngram_pairs` store."""
+    return _session_store(spark, sf_dir, "ngram_pairs")
 
 
 SQL_DEDUP_JACCARD = f"""
@@ -1745,12 +1802,12 @@ def _duck_minhash_sig() -> str:
 
 def q_minhash_signature(spark, sf_dir):
     """MinHash signatures as comma-joined strings (hash parity check).
-    Served as the k={DD.MINHASH_K} PREFIX of the family-shared
-    `_minhash_sig64` store (r09 optimization round): the coefficient
+    Served as the k={DD.MINHASH_K} PREFIX of the `minhash_sig64`
+    store: the coefficient
     stream is prefix-stable, so slice(sig64, 1, 16) is bit-identical
     to the direct k=16 fold — including NULL-text (NULL sig) and
     empty-shingle (sentinel) rows."""
-    return _minhash_sig64(spark, sf_dir).select(
+    return _session_store(spark, sf_dir, "minhash_sig64").select(
         F.col("doc").alias("doc_id"),
         F.concat_ws(
             ",",
@@ -1772,8 +1829,8 @@ ORDER BY doc_id
 
 def q_minhash_pairs(spark, sf_dir):
     """Full MinHash-LSH banding + exact-Jaccard verification, via the
-    family-shared _minhash_pairs store."""
-    return _minhash_pairs(spark, sf_dir)
+    `minhash_pairs` store."""
+    return _session_store(spark, sf_dir, "minhash_pairs")
 
 
 def _duck_minhash_pairs() -> str:
@@ -1809,111 +1866,14 @@ SELECT * FROM scored WHERE jaccard >= {JACCARD_THRESHOLD}
 """
 
 
-_SIG_STORE_MEMO: dict = {}
-
-#: store name -> builder __qualname__ (collision guard, see
-#: _session_store docstring)
-_STORE_BUILDER_SITES: dict = {}
-
-
-def _session_store(spark, sf_dir, name: str, build) -> DataFrame:
-    """Materialize an incremental operator's signature STORE once per
-    (session, sf_dir) as a parquet table under the temp dir and read
-    it back — the literal production shape of the store argument
-    (dedup.pin docstring: "the 100 TB version of this function is
-    write the signature table to storage and read it back").
-    Recomputing the historical corpus' signatures on every run is
-    exactly the cost the incremental path exists to avoid, so with
-    the store as a real table the bench times the honest per-batch
-    work: batch signatures + one store SCAN + the pruned join — and
-    (unlike an in-memory pin) a table scan survives cache clears with
-    no recompute race between the join's consumers. Driver
-    correctness runs are unaffected: a fresh session's first call
-    pays the full store build, and the stored rows are byte-identical
-    to the inline computation's.
-
-    Each store NAME must map to one builder: the memo is keyed by
-    name, so two call sites sharing a name would silently serve one
-    site's rows to the other (this nearly happened in r09 — a
-    full-corpus signature store reused the incremental twin's
-    "simhash_sigs" name and got the historical SUBSET). The builder's
-    definition site is recorded and a reused name from a different
-    site fails fast."""
-    key = (spark.sparkContext.applicationId, str(sf_dir), name)
-    site = getattr(build, "__qualname__", repr(build))
-    prev_site = _STORE_BUILDER_SITES.setdefault(name, site)
-    if prev_site != site:
-        raise ValueError(
-            f"session store name {name!r} is already bound to builder "
-            f"{prev_site}; refusing to serve it to {site} — pick a "
-            "distinct store name"
-        )
-    path = _SIG_STORE_MEMO.get(key)
-    if path is None:
-        import hashlib
-        import os
-        import tempfile
-
-        # stable digest (not PYTHONHASHSEED-randomized builtin hash) so
-        # the on-disk name is identifiable across processes; atexit
-        # removal below keeps repeated bench/test sessions from
-        # accumulating orphaned stores under the temp dir.
-        sfd = hashlib.md5(str(sf_dir).encode()).hexdigest()[:8]
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"lpe_store_{spark.sparkContext.applicationId}_{name}_{sfd}",
-        )
-        build().write.mode("overwrite").parquet(path)
-        _SIG_STORE_MEMO[key] = path
-        _register_store_cleanup(path)
-    return spark.read.parquet(path)
-
-
-def _evict_session_store(spark, sf_dir, name: str) -> None:
-    """Drop a store's memo entry (and its on-disk parquet) so the NEXT
-    call rebuilds from scratch. Two callers: tests that monkeypatch a
-    store's underlying builder input (e.g. the empty-seed-cohort guard
-    test patches _trade_edges), and bench.py's store-accounting pass
-    (r10), which evicts a family's store before every timed run of its
-    designated BUILDER query so exactly one bench row carries the
-    build cost.
-
-    The builder-site registration is deliberately KEPT (r09 ADVICE):
-    popping it would disarm the duplicate-name collision guard for the
-    rest of the process after any eviction. The on-disk path is
-    removed (same ADVICE) so a rebuild can never silently depend on
-    the overwrite-same-path invariant."""
-    import shutil
-
-    path = _SIG_STORE_MEMO.pop(
-        (spark.sparkContext.applicationId, str(sf_dir), name), None
+@_store("minhash_sigs")
+def _build_minhash_sigs(spark, sf_dir) -> DataFrame:
+    """MinHash signatures of the historical documents (doc_id % 4 != 0)
+    that q_minhash_incremental matches each new batch against."""
+    docs = _t(spark, sf_dir, "documents")
+    return DD.minhash_signatures(
+        docs.filter("doc_id % 4 != 0"), "doc_id", "text"
     )
-    if path is not None:
-        shutil.rmtree(path, ignore_errors=True)
-
-
-_STORE_CLEANUP_PATHS: list = []
-
-
-def _register_store_cleanup(path: str) -> None:
-    """atexit-remove every session store this process created (ADVICE
-    r06: stores leaked under tempfile.gettempdir() across sessions).
-    Each path is listed once however often its store is rebuilt, and
-    the atexit hook is registered once per process; a store that
-    survives an unclean exit is at least identifiable (stable md5
-    suffix) for manual or harness sweeps."""
-    import atexit
-    import shutil
-
-    if path in _STORE_CLEANUP_PATHS:
-        return
-    if not _STORE_CLEANUP_PATHS:
-        def _cleanup():
-            for p in _STORE_CLEANUP_PATHS:
-                shutil.rmtree(p, ignore_errors=True)
-
-        atexit.register(_cleanup)
-    _STORE_CLEANUP_PATHS.append(path)
 
 
 def q_minhash_incremental(spark, sf_dir):
@@ -1925,14 +1885,7 @@ def q_minhash_incremental(spark, sf_dir):
     is a real session-scoped parquet table (_session_store), so each
     run pays the production per-batch cost, not a store recompute."""
     docs = _t(spark, sf_dir, "documents")
-    store = _session_store(
-        spark,
-        sf_dir,
-        "minhash_sigs",
-        lambda: DD.minhash_signatures(
-            docs.filter("doc_id % 4 != 0"), "doc_id", "text"
-        ),
-    )
+    store = _session_store(spark, sf_dir, "minhash_sigs")
     batch = docs.filter("doc_id % 4 = 0")
     return DD.minhash_near_dup_incremental(
         store, batch, "doc_id", "text", threshold=JACCARD_THRESHOLD
@@ -1957,7 +1910,7 @@ def q_dedup_clusters(spark, sf_dir):
     rest. The oracle computes the same transitive closure with a
     recursive CTE."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = _minhash_pairs(spark, sf_dir)
+    pairs = _session_store(spark, sf_dir, "minhash_pairs")
     # Broadcast the label table: it holds only docs that appear in a
     # near-dup pair, and its localCheckpoint lineage has no stats, so
     # the planner would otherwise fall back to a sort-merge join and
@@ -1993,8 +1946,8 @@ FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
 
 def q_simhash(spark, sf_dir):
     """Per-doc 64-bit SimHash fingerprints, via the family-shared
-    _simhash_sigs store (one md5 bit-fold per session)."""
-    return _simhash_sigs(spark, sf_dir).select(
+    `simhash_sigs_full` store (one md5 bit-fold per session)."""
+    return _session_store(spark, sf_dir, "simhash_sigs_full").select(
         F.col("doc").alias("doc_id"), F.col("sh").alias("simhash")
     )
 
@@ -2031,7 +1984,7 @@ def q_simhash_pairs(spark, sf_dir):
         "doc_id",
         "text",
         max_hamming=SIMHASH_MAX_HAMMING,
-        sig=_simhash_sigs(spark, sf_dir),
+        sig=_session_store(spark, sf_dir, "simhash_sigs_full"),
     )
 
 
@@ -2054,6 +2007,20 @@ FROM cand WHERE bit_count(xor(sa, sb)) <= {SIMHASH_MAX_HAMMING}
 """
 
 
+@_store("simhash_sigs")
+def _build_simhash_sigs(spark, sf_dir) -> DataFrame:
+    """SimHash signatures of the historical documents (doc_id % 4 != 0)
+    that q_simhash_incremental matches each new batch against. Reading
+    them from a stored table also keeps the quarter join's inferred
+    isnotnull(sh) from being rewritten into a per-row re-run of the
+    simhash fold (the FOLD_IN_FILTER hazard, measured 2.4× wall at
+    sf0.1 on a live projection)."""
+    docs = _t(spark, sf_dir, "documents")
+    return DD.simhash_signatures(
+        docs.filter("doc_id % 4 != 0"), "doc_id", "text"
+    )
+
+
 def q_simhash_incremental(spark, sf_dir):
     """Incremental SimHash dedup against a persisted signature store
     (continuous-ingest shape, completing the incremental path for both
@@ -2063,19 +2030,7 @@ def q_simhash_incremental(spark, sf_dir):
     restricted to those pairs. The batch's quarter rows are broadcast
     — the store is scanned once, never shuffled."""
     docs = _t(spark, sf_dir, "documents")
-    # the store is a real session-scoped parquet table
-    # (_session_store) — materialization also keeps the quarter
-    # join's inferred isnotnull(sh) from being rewritten into a
-    # per-row re-run of the simhash fold (the FOLD_IN_FILTER hazard,
-    # measured 2.4× wall at sf0.1 on a live projection)
-    store = _session_store(
-        spark,
-        sf_dir,
-        "simhash_sigs",
-        lambda: DD.simhash_signatures(
-            docs.filter("doc_id % 4 != 0"), "doc_id", "text"
-        ),
-    )
+    store = _session_store(spark, sf_dir, "simhash_sigs")
     batch = docs.filter("doc_id % 4 = 0")
     return DD.simhash_near_dup_incremental(
         store, batch, "doc_id", "text", max_hamming=SIMHASH_MAX_HAMMING
@@ -2772,7 +2727,7 @@ def q_curation_pipeline(spark, sf_dir):
         (F.col("quality") >= CURATION_MIN_QUALITY)
         & (F.col("n_tokens") >= CURATION_MIN_TOKENS)
     )
-    pairs = _minhash_pairs(spark, sf_dir)
+    pairs = _session_store(spark, sf_dir, "minhash_pairs")
     cc = F.broadcast(DD.connected_components(pairs, "id_a", "id_b"))
     lab = keep.join(cc, keep["doc_id"] == cc["node"], "left").select(
         keep["doc_id"],
@@ -2831,7 +2786,7 @@ def q_embedding_clusters(spark, sf_dir):
     the second modality. Labels broadcast for the final left join
     (only paired vectors carry labels)."""
     emb = _t(spark, sf_dir, "embeddings")
-    pairs = _emb_pairs(spark, sf_dir)
+    pairs = _session_store(spark, sf_dir, "emb_pairs")
     cc = F.broadcast(DD.connected_components(pairs, "id_a", "id_b"))
     return (
         emb.select("vec_id")
@@ -2863,22 +2818,17 @@ FROM embeddings e LEFT JOIN comp c ON c.node = e.vec_id
 SEMANTIC_DEDUP_THRESHOLD = 0.35
 
 
-def _coarse_asg(spark, sf_dir) -> DataFrame:
+@_store("coarse_asg")
+def _build_coarse_asg(spark, sf_dir) -> DataFrame:
     """(cid, code, ev, nv) — the deterministic {CLUSTER_QUALITY_K}-seed
     coarse clustering of the embedding space
-    (similarity.seeded_assignment), SHARED by q_semantic_dedup and
-    q_cluster_quality via the _session_store discipline (r09
-    optimization round): both re-ran the broadcast-argmax assignment —
-    and semantic_dedup ran it TWICE, once per side of its pair join —
-    to reach the identical deterministic table (round-6 argmax, seed-id
-    tie-breaks; vectors and norms ride along exactly)."""
+    (similarity.seeded_assignment), shared by q_semantic_dedup and
+    q_cluster_quality: both re-ran the broadcast-argmax assignment —
+    semantic_dedup ran it TWICE, once per side of its pair join — to
+    reach the same table (round-6 argmax, seed-id tie-breaks; vectors
+    and norms ride along exactly)."""
     emb = _t(spark, sf_dir, "embeddings")
-    return _session_store(
-        spark,
-        sf_dir,
-        "coarse_asg",
-        lambda: SIM.seeded_assignment(emb, n_centroids=CLUSTER_QUALITY_K),
-    )
+    return SIM.seeded_assignment(emb, n_centroids=CLUSTER_QUALITY_K)
 
 
 def q_semantic_dedup(spark, sf_dir):
@@ -2896,7 +2846,7 @@ def q_semantic_dedup(spark, sf_dir):
         emb,
         SEMANTIC_DEDUP_THRESHOLD,
         n_centroids=CLUSTER_QUALITY_K,
-        assignment=_coarse_asg(spark, sf_dir),
+        assignment=_session_store(spark, sf_dir, "coarse_asg"),
     )
 
 
@@ -2926,30 +2876,22 @@ FROM withv w LEFT JOIN dup d ON d.did = w.cid
 """
 
 
+@_store("cosine_rank")
 def _build_cosine_topk(spark, sf_dir):
-    """Inline exact-ANN baseline build behind the `cosine_rank` store."""
+    """The exact cosine top-k ranking shared by the ANN admissibility
+    family (cosine_topk, ann_recall, mrl_recall, quant_recall): each
+    re-ran the corpus-wide broadcast pair join + window to reach the
+    same bounded (queries×k)-row baseline. Rows are deterministic
+    (round-6 cosine, id tie-breaks)."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     return SIM.cosine_topk(emb, queries, k=5)
 
 
-def _cosine_rank(spark, sf_dir) -> DataFrame:
-    """The exact cosine top-k ranking SHARED by the ANN admissibility
-    family (cosine_topk, ann_recall, mrl_recall, quant_recall) via the
-    _session_store discipline (r09 optimization round): four queries
-    re-ran the corpus-wide broadcast pair join + window to reach the
-    identical bounded (queries×k)-row baseline every run. Rows are
-    deterministic (round-6 cosine, id tie-breaks) → byte-identical
-    through parquet; a fresh session's first member pays the build."""
-    return _session_store(
-        spark, sf_dir, "cosine_rank", lambda: _build_cosine_topk(spark, sf_dir)
-    )
-
-
 def q_cosine_topk(spark, sf_dir):
     """Brute-force exact ANN baseline: top-5 cosine neighbors for the
     first 5 vectors — via the family-shared `cosine_rank` store."""
-    return _cosine_rank(spark, sf_dir)
+    return _session_store(spark, sf_dir, "cosine_rank")
 
 
 SQL_COSINE = """
@@ -2976,28 +2918,22 @@ SELECT query_id, neighbor_id, cosine_sim, rank FROM ranked WHERE rank <= 5
 """
 
 
-def _emb_pairs(spark, sf_dir) -> DataFrame:
+@_store("emb_pairs")
+def _build_emb_pairs(spark, sf_dir) -> DataFrame:
     """Exact cosine near-dup pairs over the embedding table at the
-    dedup family's (threshold=0.35, n_blocks=8) shape, SHARED by
-    q_embedding_near_dup and q_embedding_clusters via the
-    _session_store discipline (r09): both re-ran the blocked
-    all-pairs kernel — the single most expensive primitive in the
-    sf1 ledger — to reach the identical deterministic
-    (id_a, id_b, round-6 cosine) table."""
+    dedup family's (threshold=0.35, n_blocks=8) shape, shared by
+    q_embedding_near_dup and q_embedding_clusters: both re-ran the
+    blocked all-pairs kernel — the most expensive primitive in the sf1
+    ledger — to reach the same (id_a, id_b, round-6 cosine) table."""
     emb = _t(spark, sf_dir, "embeddings")
-    return _session_store(
-        spark,
-        sf_dir,
-        "emb_pairs",
-        lambda: SIM.embedding_near_dup(emb, threshold=0.35, n_blocks=8),
-    )
+    return SIM.embedding_near_dup(emb, threshold=0.35, n_blocks=8)
 
 
 def q_embedding_near_dup(spark, sf_dir):
     """Dedup by embedding cosine: exact all-pairs (blocked Arrow block
     products, no driver collect) at threshold 0.35, via the
-    family-shared _emb_pairs store."""
-    return _emb_pairs(spark, sf_dir)
+    `emb_pairs` store."""
+    return _session_store(spark, sf_dir, "emb_pairs")
 
 
 def _duck_embedding_near_dup(threshold: float = 0.35) -> str:
@@ -3080,6 +3016,14 @@ def q_embedding_near_dup_lsh(spark, sf_dir):
     return SIM.embedding_near_dup_lsh(emb, threshold=0.35, dims=64)
 
 
+@_store("emb_lsh_index")
+def _build_emb_lsh_index(spark, sf_dir) -> DataFrame:
+    """LSH bucket index of the historical vectors (vec_id % 4 != 0)
+    that q_embedding_lsh_incremental probes with each new batch."""
+    emb = _t(spark, sf_dir, "embeddings")
+    return SIM.embedding_lsh_index(emb.filter("vec_id % 4 != 0"), dims=64)
+
+
 def q_embedding_lsh_incremental(spark, sf_dir):
     """Incremental embedding dedup against a persisted vector store
     (continuous-ingest shape, completing the incremental path for all
@@ -3088,19 +3032,11 @@ def q_embedding_lsh_incremental(spark, sf_dir):
     run restricted to those pairs. The batch's (table, bucket) keys
     broadcast-semi prune the store, which streams once and is never
     shuffled against itself; old×old pairs skip inside the verify.
-    The store's bucket INDEX is a real session-scoped parquet table
-    (_session_store + similarity.embedding_lsh_index — an LSH index
-    is persisted at ingest by definition), so each run pays the
-    production per-batch cost, not a store re-bucketing."""
+    The store's bucket INDEX is the `emb_lsh_index` session store (an
+    LSH index is persisted at ingest by definition), so each run pays
+    the production per-batch cost, not a store re-bucketing."""
     emb = _t(spark, sf_dir, "embeddings")
-    index = _session_store(
-        spark,
-        sf_dir,
-        "emb_lsh_index",
-        lambda: SIM.embedding_lsh_index(
-            emb.filter("vec_id % 4 != 0"), dims=64
-        ),
-    )
+    index = _session_store(spark, sf_dir, "emb_lsh_index")
     batch = emb.filter("vec_id % 4 = 0")
     return SIM.embedding_near_dup_lsh_incremental(
         None, batch, threshold=0.35, dims=64, store_index=index
@@ -3141,16 +3077,14 @@ def q_lsh_topk(spark, sf_dir):
     embeds the identical coefficient lists as literals and replays
     bucketing + candidate join + exact re-rank (see _duck_lsh_topk).
     Recall vs the exact baseline is additionally asserted in
-    tests/test_similarity.py. Served from the family-shared
-    `lsh_rank` store (r09 optimization round — its other consumer is
-    ann_recall)."""
-    return _session_store(
-        spark, sf_dir, "lsh_rank", lambda: _build_lsh_topk(spark, sf_dir)
-    )
+    tests/test_similarity.py. Served from the `lsh_rank` store, shared
+    with ann_recall."""
+    return _session_store(spark, sf_dir, "lsh_rank")
 
 
+@_store("lsh_rank")
 def _build_lsh_topk(spark, sf_dir):
-    """Inline LSH ranking build behind the `lsh_rank` store."""
+    """The LSH ranking behind the `lsh_rank` store."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     return SIM.lsh_topk(emb, queries, dims=64, k=5)
@@ -4156,26 +4090,20 @@ def q_bpe_merges(spark, sf_dir):
     merge argmax (one row) is the only thing the driver sees per
     round; the greedy pair replacement is a pure array fold the
     DuckDB oracle replays with list_reduce."""
-    return _bpe_merge_table(spark, sf_dir)
+    return _session_store(spark, sf_dir, "bpe_merges")
 
 
-def _bpe_merge_table(spark, sf_dir) -> DataFrame:
-    """The learned {BPE_K_MERGES}-row merge table SHARED by
-    q_bpe_merges, q_bpe_encode and q_bpe_fertility via the
-    _session_store discipline (r09): three queries each re-ran the
-    k-round driver-coordinated merge loop to reach the identical
-    deterministic (step, lhs, rhs, ...) table. Consumers sort by
-    `step` after the scan (parquet has no row order), exactly as the
-    inline collect already did."""
+@_store("bpe_merges")
+def _build_bpe_merges(spark, sf_dir) -> DataFrame:
+    """The learned {BPE_K_MERGES}-row merge table shared by
+    q_bpe_merges, q_bpe_encode and q_bpe_fertility, which each re-ran
+    the k-round driver-coordinated merge loop to reach the same
+    (step, lhs, rhs, ...) table. Consumers sort by `step` after the
+    scan (parquet has no row order)."""
     from lion_parcel_etl_spark.operators.text import bpe_merges
 
     docs = _t(spark, sf_dir, "documents")
-    return _session_store(
-        spark,
-        sf_dir,
-        "bpe_merges",
-        lambda: bpe_merges(docs, "text", k_merges=BPE_K_MERGES),
-    )
+    return bpe_merges(docs, "text", k_merges=BPE_K_MERGES)
 
 
 def _duck_bpe_merges(k: int = BPE_K_MERGES) -> str:
@@ -4707,13 +4635,12 @@ def q_pq_topk(spark, sf_dir):
     store (r09 optimization round — its other consumer is ann_recall;
     the ADC plan shape is guarded on the inline build in
     tests/test_plan_shapes.py)."""
-    return _session_store(
-        spark, sf_dir, "pq_rank", lambda: _build_pq_topk(spark, sf_dir)
-    )
+    return _session_store(spark, sf_dir, "pq_rank")
 
 
+@_store("pq_rank")
 def _build_pq_topk(spark, sf_dir):
-    """Inline PQ ranking build behind the `pq_rank` store."""
+    """The PQ ranking behind the `pq_rank` store."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     return SIM.pq_topk(emb, queries, n_codes=16, m=8, dsub=8, k=5)
@@ -5099,17 +5026,12 @@ def q_ivf_topk_seeded(spark, sf_dir):
     equality) and the refinement quality (there, by recall). Served
     from the family-shared `ivf_seeded_rank` store (r09 optimization
     round — its other consumer is ann_recall)."""
-    return _session_store(
-        spark,
-        sf_dir,
-        "ivf_seeded_rank",
-        lambda: _build_ivf_topk_seeded(spark, sf_dir),
-    )
+    return _session_store(spark, sf_dir, "ivf_seeded_rank")
 
 
+@_store("ivf_seeded_rank")
 def _build_ivf_topk_seeded(spark, sf_dir):
-    """Inline seeded-IVF ranking build behind the `ivf_seeded_rank`
-    store."""
+    """The seeded-IVF ranking behind the `ivf_seeded_rank` store."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     return SIM.ivf_topk_seeded(emb, queries, n_centroids=16, nprobe=4, k=5)
@@ -5361,35 +5283,27 @@ def _trade_edges(spark, sf_dir):
     return edges, deg
 
 
-def _trade_ed(spark, sf_dir) -> DataFrame:
-    """The degree-annotated trade edge list (src, dst, out_deg) SHARED
-    by q_pagerank and q_ppr_seeded via the _session_store discipline
-    (r09 optimization round — the _cooc_edges pattern): both queries
-    re-ran the lineitem⨝orders join + 16-byte-pair distinct + degree
-    aggregate + degree join to reach the IDENTICAL deterministic edge
-    table before their power iterations (LEDGER floors 5.67 s +
-    6.08 s, of which the iterations themselves are a minority). The
-    rows are exact (string keys, integer degrees), so the store is
-    byte-identical to the inline build and oracle hash parity is
-    unaffected; a fresh session's first family member pays the build."""
-    def build():
-        edges, deg = _trade_edges(spark, sf_dir)
-        return edges.join(deg, "src")
-
-    return _session_store(spark, sf_dir, "trade_ed", build)
+@_store("trade_ed")
+def _build_trade_ed(spark, sf_dir) -> DataFrame:
+    """The degree-annotated trade edge list (src, dst, out_deg) shared
+    by q_pagerank and q_ppr_seeded: both re-ran the lineitem⨝orders
+    join + 16-byte-pair distinct + degree aggregate + degree join to
+    reach the same edge table before their power iterations, which are
+    the minority of their cost. The rows are exact (string keys,
+    integer degrees)."""
+    edges, deg = _trade_edges(spark, sf_dir)
+    return edges.join(deg, "src")
 
 
-def _trade_nodes(spark, sf_dir) -> DataFrame:
+@_store("trade_nodes")
+def _build_trade_nodes(spark, sf_dir) -> DataFrame:
     """(node) distinct trade-graph nodes, derived from the trade_ed
     store's parquet (every node appears as src — edges go both ways),
     so the |edges|-sized distinct also runs once per session."""
-    return _session_store(
-        spark,
-        sf_dir,
-        "trade_nodes",
-        lambda: _trade_ed(spark, sf_dir)
+    return (
+        _session_store(spark, sf_dir, "trade_ed")
         .select(F.col("src").alias("node"))
-        .distinct(),
+        .distinct()
     )
 
 
@@ -5429,8 +5343,10 @@ def q_pagerank(spark, sf_dir):
     # would NOT establish hash partitioning). No explicit partition
     # count — both pins inherit spark.sql.shuffle.partitions, so they
     # satisfy every downstream ENSURE_REQUIREMENTS.
-    ed = DD.pin(_trade_ed(spark, sf_dir).repartition("src"))
-    nodes = DD.pin(_trade_nodes(spark, sf_dir).repartition("node"))
+    ed = DD.pin(_session_store(spark, sf_dir, "trade_ed").repartition("src"))
+    nodes = DD.pin(
+        _session_store(spark, sf_dir, "trade_nodes").repartition("node")
+    )
     n_nodes = nodes.count()
     ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
     # SHUFFLE_HASH hints on the SMALL side of both per-iteration joins
@@ -5514,7 +5430,7 @@ def q_ppr_seeded(spark, sf_dir):
     # Same family-shared stores as q_pagerank (r09 optimization
     # round); the seed flag is a computed column on the stored node
     # table — no extra join, no extra shuffle.
-    ed = DD.pin(_trade_ed(spark, sf_dir).repartition("src"))
+    ed = DD.pin(_session_store(spark, sf_dir, "trade_ed").repartition("src"))
     # substring(node, 2) to END of string — a 12-char cap would
     # truncate supplier keys >= 1e12 and diverge from the oracle's
     # substr(node, 2)
@@ -5522,7 +5438,7 @@ def q_ppr_seeded(spark, sf_dir):
         F.expr("substring(node, 2)").cast("long") % PPR_SEED_MOD == 0
     )
     nodes = DD.pin(
-        _trade_nodes(spark, sf_dir)
+        _session_store(spark, sf_dir, "trade_nodes")
         .select("node", is_seed.alias("seed"))
         .repartition("node")
     )
@@ -5712,14 +5628,13 @@ def q_ks_drift(spark, sf_dir):
     the streaming twin (stream_value_counts → read_ks_drift) is
     lossless; the statistic pipeline is SHARED with that twin
     (operators/checks.ks_from_group_value_counts — grid/window/scale
-    notes live there). The per-type readout rides the family-shared
-    `_ks_exact_store` (r09): q_ks_agreement consumes the same rows,
+    notes live there). The per-type readout rides the `ks_exact`
+    store: q_ks_agreement consumes the same rows,
     so the corpus scan + ECDF grid run once per session, not twice."""
-    return _session_store(
-        spark, sf_dir, "ks_exact", lambda: _build_ks_drift(spark, sf_dir)
-    )
+    return _session_store(spark, sf_dir, "ks_exact")
 
 
+@_store("ks_exact")
 def _build_ks_drift(spark, sf_dir):
     from lion_parcel_etl_spark.operators.checks import (
         ks_from_group_value_counts,
@@ -5810,14 +5725,13 @@ def q_ks_drift_binned(spark, sf_dir):
     are sufficient for a frequency-weighted percentile), which is
     exactly what makes the streaming twin
     (streaming/jobs.read_ks_drift_binned over merged count logs)
-    lossless. The per-type readout rides the family-shared
-    `_ks_binned_store` (r09) — q_ks_agreement consumes the same rows,
+    lossless. The per-type readout rides the `ks_binned`
+    store: q_ks_agreement consumes the same rows,
     so the scan + bucketing run once per session, not twice."""
-    return _session_store(
-        spark, sf_dir, "ks_binned", lambda: _build_ks_drift_binned(spark, sf_dir)
-    )
+    return _session_store(spark, sf_dir, "ks_binned")
 
 
+@_store("ks_binned")
 def _build_ks_drift_binned(spark, sf_dir):
     from lion_parcel_etl_spark.operators.checks import ks_binned_from_counts
     from lion_parcel_etl_spark.operators.sampling import HASH_MOD, id_hash
@@ -5961,12 +5875,12 @@ def q_kcore_peel(spark, sf_dir):
     filter + one aggregate, the pagerank discipline. Per-round cost:
     two semi-joins of the store-backed symmetric edge list against the
     shrinking alive set + one map-side-combined |edges|-sized degree
-    aggregate. Edge list via the family-shared _cooc_edges store —
-    the r07 floor showed ~10.2 s of this query's 11.4 s was rebuilding
-    the graph triangle_count had already built."""
+    aggregate. Edge list via the `cooc_edges` store —
+    rebuilding the graph triangle_count had already built was ~10.2 s
+    of this query's 11.4 s."""
     from lion_parcel_etl_spark.operators.graph import kcore_survivors
 
-    edges = _cooc_edges(spark, sf_dir)
+    edges = _session_store(spark, sf_dir, "cooc_edges")
     return kcore_survivors(edges, k=KCORE_K, rounds=KCORE_ROUNDS).orderBy(
         "node"
     )
@@ -7044,7 +6958,7 @@ def q_bpe_encode(spark, sf_dir):
     from lion_parcel_etl_spark.operators.text import bpe_encode
 
     docs = _t(spark, sf_dir, "documents")
-    learned = _bpe_merge_table(spark, sf_dir).collect()
+    learned = _session_store(spark, sf_dir, "bpe_merges").collect()
     merges = [(r["lhs"], r["rhs"]) for r in sorted(learned, key=lambda r: r["step"])]
     return bpe_encode(docs, merges)
 
@@ -7259,7 +7173,7 @@ def q_dedup_source_matrix(spark, sf_dir):
     At 100 TB this is the same cost as minhash_near_dup itself plus
     two broadcast joins of bare (id, source) pairs."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = _minhash_pairs(spark, sf_dir)
+    pairs = _session_store(spark, sf_dir, "minhash_pairs")
     src = docs.select("doc_id", "source")
     a = src.select(F.col("doc_id").alias("id_a"), F.col("source").alias("src_a"))
     b = src.select(F.col("doc_id").alias("id_b"), F.col("source").alias("src_b"))
@@ -7514,7 +7428,7 @@ def q_bpe_fertility(spark, sf_dir):
     from lion_parcel_etl_spark.operators.text import bpe_encode
 
     docs = _t(spark, sf_dir, "documents")
-    learned = _bpe_merge_table(spark, sf_dir).collect()
+    learned = _session_store(spark, sf_dir, "bpe_merges").collect()
     merges = [(r["lhs"], r["rhs"]) for r in sorted(learned, key=lambda r: r["step"])]
     enc = bpe_encode(docs, merges)
     toks = docs.select(
@@ -7638,7 +7552,7 @@ def q_dup_cluster_sizes(spark, sf_dir):
     number a curation report leads with. Cost = dedup_clusters + two
     aggregates over ≤ |docs| and ≤ |distinct sizes| rows."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = _minhash_pairs(spark, sf_dir)
+    pairs = _session_store(spark, sf_dir, "minhash_pairs")
     cc = F.broadcast(DD.connected_components(pairs, "id_a", "id_b"))
     labeled = (
         docs.select("doc_id")
@@ -7919,10 +7833,10 @@ def q_minhash_est_error(spark, sf_dir):
     picking k/bands at corpus scale; the estimate is a pure
     zip-and-count over the two signatures, so the only cost beyond
     the ground-truth join is two broadcast-or-keyed sig lookups."""
-    exact = _ngram_pairs(spark, sf_dir)
+    exact = _session_store(spark, sf_dir, "ngram_pairs")
     # k=16 signatures as the prefix of the family-shared sig64 store
     # (prefix-stable coefficient stream — r09 optimization round)
-    sigs = _minhash_sig64(spark, sf_dir).select(
+    sigs = _session_store(spark, sf_dir, "minhash_sig64").select(
         "doc", F.slice(F.col("sig"), 1, DD.MINHASH_K).alias("sig")
     )
     sa = sigs.select(F.col("doc").alias("id_a"), F.col("sig").alias("siga"))
@@ -8275,24 +8189,14 @@ DSIR_K = 100
 DSIR_TARGET_LANG = "en"
 
 
-def _dsir_weights_df(spark, sf_dir):
-    """Shared DSIR fit+score chain: target = {DSIR_TARGET_LANG} docs,
-    raw = the whole corpus (the standard 'make the crawl look like
-    the reference corpus' setup). r09 optimization round: served from
-    the family-shared `dsir_scores` store — dsir_weights and
-    dsir_select each re-ran the tokenize→hash-features→fit→score
-    corpus passes (LEDGER floors 2.16 s + 2.50 s) to reach the same
-    (doc_id, n_feats, logw) table. The unrounded double logw
-    round-trips parquet exactly, so both members' outputs (round-6
-    weights; gumbel-key top-k) are byte-identical to the inline
-    build's."""
-    return _session_store(
-        spark, sf_dir, "dsir_scores", lambda: _build_dsir_weights(spark, sf_dir)
-    )
-
-
+@_store("dsir_scores")
 def _build_dsir_weights(spark, sf_dir):
-    """Inline DSIR fit+score build behind the `dsir_scores` store."""
+    """Shared DSIR fit+score chain: target = {DSIR_TARGET_LANG} docs,
+    raw = the whole corpus (the standard 'make the crawl look like the
+    reference corpus' setup). dsir_weights and dsir_select each re-ran
+    the tokenize→hash-features→fit→score corpus passes to reach the
+    same (doc_id, n_feats, logw) table. The unrounded double logw
+    round-trips parquet exactly."""
     from lion_parcel_etl_spark.operators import selection as SEL
 
     docs = _t(spark, sf_dir, "documents")
@@ -8309,7 +8213,7 @@ def q_dsir_weights(spark, sf_dir):
     combined), a broadcast log-ratio join, one per-doc sum — the
     standard published recipe for distribution-matching data
     selection, entirely in JVM expressions."""
-    w = _dsir_weights_df(spark, sf_dir)
+    w = _session_store(spark, sf_dir, "dsir_scores")
     return w.select("doc_id", "n_feats", F.round("logw", 6).alias("logw"))
 
 
@@ -8321,7 +8225,7 @@ def q_dsir_select(spark, sf_dir):
     per-partition top-k, k rows to the driver, no global sort."""
     from lion_parcel_etl_spark.operators import selection as SEL
 
-    sel = SEL.dsir_select(_dsir_weights_df(spark, sf_dir), DSIR_K)
+    sel = SEL.dsir_select(_session_store(spark, sf_dir, "dsir_scores"), DSIR_K)
     return sel.select(
         "doc_id",
         F.round("logw", 6).alias("logw"),
@@ -8415,73 +8319,56 @@ def q_quality_classifier(spark, sf_dir):
     reaches the driver. The DuckDB oracle replays the ENTIRE fit —
     preconditioner, every unrolled step, the scoring — not just the
     final model."""
-    return _qc_scored(spark, sf_dir).orderBy("doc_id")
+    return _session_store(spark, sf_dir, "qc_scored").orderBy("doc_id")
 
 
-def _qc_scored(spark, sf_dir):
-    """Fit + score the quality classifier (the q_quality_classifier
-    pipeline without the final ordering) — shared by the classifier
+@_store("qc_scored")
+def _build_qc_scored(spark, sf_dir) -> DataFrame:
+    """The (doc_id, y, p, pred) scored table — the q_quality_classifier
+    pipeline without the final ordering — shared by the classifier
     query and its five evaluation queries (classifier_auc / pr_auc /
-    kappa, calibration_bins / ece) so all six replay the identical
-    fit. r09 optimization round: the in-session DataFrame memo (which
-    shared the FIT but re-ran tokenize→hash-features→score on every
-    run — ~2 s × 6 family members per sweep, LEDGER floors) became a
-    _session_store: the (doc_id, y, p, pred) scored table — exact
-    ints and a 1e-6-rounded double, byte-identical through parquet —
-    is materialized once per (session, sf_dir) and each family member
-    pays one small scan. A fresh session's first member pays the full
-    fit + scoring, which is exactly what the driver's standalone
-    correctness runs measure."""
+    kappa, calibration_bins / ece), which would otherwise each re-run
+    tokenize→hash-features→score. Exact ints and a 1e-6-rounded
+    double."""
     from lion_parcel_etl_spark.operators.classifier import (
         doc_features,
         logreg_score,
     )
     from lion_parcel_etl_spark.operators.dedup import pin
 
-    def build():
-        docs = _t(spark, sf_dir, "documents")
-        feats = pin(doc_features(docs, QC_RULE_SPARK()))
-        w = {
-            r["bucket"]: r["w"]
-            for r in _qc_model(spark, sf_dir).collect()
-        }
-        return logreg_score(feats, w)
-
-    return _session_store(spark, sf_dir, "qc_scored", build)
+    docs = _t(spark, sf_dir, "documents")
+    feats = pin(doc_features(docs, QC_RULE_SPARK()))
+    w = {
+        r["bucket"]: r["w"]
+        for r in _session_store(spark, sf_dir, "qc_model").collect()
+    }
+    return logreg_score(feats, w)
 
 
-def _qc_model(spark, sf_dir) -> DataFrame:
-    """(bucket, w) — the FITTED quality-classifier weights as their own
-    session store (r10): the {QC_STEPS}-step preconditioned GD fit is
-    the canonical persisted-model artifact (the r08/r09-blessed
-    `_QC_SCORED_MEMO` precedent — a production pipeline fits once and
-    serves the model table; re-fitting per readout is exactly the cost
-    the artifact exists to avoid). Splitting it out of `qc_scored`
-    matters for the r10 bench accounting: quality_classifier is
-    qc_scored's designated timed OWNER (its registry ``owns``), so its
-    timed runs re-run tokenize→hash-features→score — the per-corpus
-    scoring pass, its honest pre-store cost — without re-running the
-    ~30 s driver-round-trip fit, which stays session-amortized exactly
-    as the memo always was. Weights are raw driver doubles; parquet
-    round-trips them bit-exactly, and logreg_score sorts the dict by
-    bucket, so the scored table is byte-identical either way (pinned
-    by test_qc_model_store_scores_identical_to_inline_fit)."""
+@_store("qc_model")
+def _build_qc_model(spark, sf_dir) -> DataFrame:
+    """(bucket, w) — the FITTED quality-classifier weights, the
+    canonical persisted-model artifact: a production pipeline fits once
+    and serves the model table. Kept apart from `qc_scored` so that
+    store's owner (quality_classifier) times the per-corpus scoring
+    pass without re-running the ~30 s {QC_STEPS}-step driver-round-trip
+    fit. Weights are raw driver doubles; parquet round-trips them
+    bit-exactly, and logreg_score sorts the dict by bucket, so the
+    scored table is byte-identical either way (pinned by
+    test_qc_model_store_scores_identical_to_inline_fit)."""
     from lion_parcel_etl_spark.operators.classifier import (
         doc_features,
         logreg_fit,
     )
     from lion_parcel_etl_spark.operators.dedup import pin
 
-    def build():
-        docs = _t(spark, sf_dir, "documents")
-        feats = pin(doc_features(docs, QC_RULE_SPARK()))
-        w = logreg_fit(feats, steps=QC_STEPS, lr=QC_LR)
-        return spark.createDataFrame(
-            [(int(b), float(v)) for b, v in sorted(w.items())],
-            "bucket int, w double",
-        )
-
-    return _session_store(spark, sf_dir, "qc_model", build)
+    docs = _t(spark, sf_dir, "documents")
+    feats = pin(doc_features(docs, QC_RULE_SPARK()))
+    w = logreg_fit(feats, steps=QC_STEPS, lr=QC_LR)
+    return spark.createDataFrame(
+        [(int(b), float(v)) for b, v in sorted(w.items())],
+        "bucket int, w double",
+    )
 
 
 def _duck_quality_classifier() -> str:
@@ -8558,22 +8445,19 @@ def _kmv_shingle_keys(spark, sf_dir):
     )
 
 
-def _kmv_hashes(spark, sf_dir) -> DataFrame:
-    """The distinct (source, 60-bit md5 hash) shingle-key table SHARED
-    by q_kmv_distinct and q_kmv_overlap via the _session_store
-    discipline (r09): both re-ran the tokenize/shingle/explode/
-    distinct chain — the dominant cost of each — to reach the
-    identical deterministic table that the bounded sketch ranks then
+@_store("kmv_hashes")
+def _build_kmv_hashes(spark, sf_dir) -> DataFrame:
+    """The distinct (source, 60-bit md5 hash) shingle-key table shared
+    by q_kmv_distinct and q_kmv_overlap: both re-ran the
+    tokenize/shingle/explode/distinct chain — the dominant cost of
+    each — to reach the same table that the bounded sketch ranks then
     collapse."""
     from lion_parcel_etl_spark.operators.sampling import id_hash
 
-    return _session_store(
-        spark,
-        sf_dir,
-        "kmv_hashes",
-        lambda: _kmv_shingle_keys(spark, sf_dir)
+    return (
+        _kmv_shingle_keys(spark, sf_dir)
         .select("source", id_hash(F.col("s"), salt="kmv").alias("h"))
-        .distinct(),
+        .distinct()
     )
 
 
@@ -8590,12 +8474,11 @@ def q_kmv_distinct(spark, sf_dir):
         kmv_sketch_hashed,
     )
 
-    # the distinct (source, hash) table comes from the family-shared
-    # _kmv_hashes store: the sketch rank AND the exact count both
-    # consume it, q_kmv_overlap consumes it too, and the tokenize/
-    # shingle/explode/distinct chain is the dominant cost — the
-    # cooccurrence_edges lesson applied (r09: pin -> session store)
-    hashes = _kmv_hashes(spark, sf_dir)
+    # the distinct (source, hash) table comes from the `kmv_hashes`
+    # store: the sketch rank AND the exact count both consume it,
+    # q_kmv_overlap consumes it too, and the tokenize/shingle/explode/
+    # distinct chain is the dominant cost
+    hashes = _session_store(spark, sf_dir, "kmv_hashes")
     sk = kmv_sketch_hashed(hashes, ["source"], k=KMV_QUERY_K)
     exact = hashes.groupBy("source").agg(
         F.count(F.lit(1)).alias("exact_distinct")
@@ -8634,7 +8517,7 @@ def q_kmv_overlap(spark, sf_dir):
     # kmv_sketch_hashed, so building from the family-shared hash
     # store is value-identical (r09)
     sk = kmv_sketch_hashed(
-        _kmv_hashes(spark, sf_dir), ["source"], k=KMV_QUERY_K
+        _session_store(spark, sf_dir, "kmv_hashes"), ["source"], k=KMV_QUERY_K
     )
     return kmv_overlap(sk, "source", k=KMV_QUERY_K).orderBy(
         "group_a", "group_b"
@@ -8741,34 +8624,23 @@ def _user_key_rows(spark, sf_dir):
     )
 
 
-def _cooc_edges(spark, sf_dir) -> DataFrame:
-    """The user co-occurrence edge list SHARED by the graph family
-    (cooccurrence_graph, triangle_count, kcore_peel): built once per
-    (session, sf_dir) and materialized as a session-scoped parquet
-    table (_session_store — the same discipline as the incremental
-    signature stores and _rfm_base), because the ~10 s bipartite→
-    similarity projection dominated each member's wall when every
-    query rebuilt it independently (r07 VERDICT: the suite paid the
-    build three times). The edge rows are deterministic (exact shared
-    counts + round(,6) jaccard), so the store is byte-identical to
-    the inline build and DuckDB-oracle hash parity is unaffected; a
-    fresh session's first family member pays the full build, the
-    other two pay one parquet scan. The parquet table also replaces
-    the old per-query pin(): a disk-backed scan survives cache
-    evictions with no recompute race between the multi-consumer
-    triangle/k-core plans."""
+@_store("cooc_edges")
+def _build_cooc_edges(spark, sf_dir) -> DataFrame:
+    """The user co-occurrence edge list shared by the graph family
+    (cooccurrence_graph, triangle_count, kcore_peel): the ~10 s
+    bipartite→similarity projection dominated each member's wall when
+    every query rebuilt it. The edge rows are deterministic (exact
+    shared counts + round(,6) jaccard). The stored table also replaces
+    a per-query pin(): a disk-backed scan survives cache evictions with
+    no recompute race between the multi-consumer triangle/k-core
+    plans."""
     from lion_parcel_etl_spark.operators.graph import cooccurrence_edges
 
-    return _session_store(
-        spark,
-        sf_dir,
-        "cooc_edges",
-        lambda: cooccurrence_edges(
-            _user_key_rows(spark, sf_dir),
-            "k",
-            "user_id",
-            min_jaccard=COOC_MIN_JACCARD,
-        ),
+    return cooccurrence_edges(
+        _user_key_rows(spark, sf_dir),
+        "k",
+        "user_id",
+        min_jaccard=COOC_MIN_JACCARD,
     )
 
 
@@ -8779,8 +8651,9 @@ def q_cooccurrence_graph(spark, sf_dir):
     threshold, so the rule survives a corpus growing 100×; the
     operator's max_key_degree hub cap (not needed at this key
     cardinality) bounds the projection exchange at Σ min(deg,cap)².
-    Edge list via the family-shared _cooc_edges store."""
-    return _cooc_edges(spark, sf_dir).orderBy("node_a", "node_b")
+    Edge list via the `cooc_edges` store."""
+    edges = _session_store(spark, sf_dir, "cooc_edges")
+    return edges.orderBy("node_a", "node_b")
 
 
 def q_triangle_count(spark, sf_dir):
@@ -8789,11 +8662,12 @@ def q_triangle_count(spark, sf_dir):
     enumeration (each a<b<c triangle produced once), wedge volume a
     property of the graph not the corpus. Clustering coefficient 1.0
     = the node's neighborhood is a clique (in dedup graphs: a
-    copy-paste cluster). Edge list via the family-shared _cooc_edges
-    store (one build per session, not one per family member)."""
+    copy-paste cluster). Edge list via the `cooc_edges` store
+    (one build per session, not one per family member)."""
     from lion_parcel_etl_spark.operators.graph import triangle_counts
 
-    return triangle_counts(_cooc_edges(spark, sf_dir)).orderBy("node")
+    edges = _session_store(spark, sf_dir, "cooc_edges")
+    return triangle_counts(edges).orderBy("node")
 
 
 _DUCK_COOC = f"""
@@ -8873,7 +8747,7 @@ def q_cluster_split(spark, sf_dir):
     from lion_parcel_etl_spark.operators.sampling import cluster_split
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = _minhash_pairs(spark, sf_dir)
+    pairs = _session_store(spark, sf_dir, "minhash_pairs")
     return cluster_split(
         docs, pairs, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}
     ).select("doc_id", "cluster_id", "split").orderBy("doc_id")
@@ -9604,7 +9478,7 @@ def q_classifier_auc(spark, sf_dir):
     whole statistic — fit, scores, AUC — replays in the oracle."""
     from lion_parcel_etl_spark.operators.evaluation import roc_auc
 
-    return roc_auc(_qc_scored(spark, sf_dir))
+    return roc_auc(_session_store(spark, sf_dir, "qc_scored"))
 
 
 def _duck_classifier_auc() -> str:
@@ -9660,7 +9534,8 @@ def q_calibration_bins(spark, sf_dir):
     bins are the only exchange."""
     from lion_parcel_etl_spark.operators.evaluation import calibration_bins
 
-    return calibration_bins(_qc_scored(spark, sf_dir), n_bins=CALIB_BINS)
+    scored = _session_store(spark, sf_dir, "qc_scored")
+    return calibration_bins(scored, n_bins=CALIB_BINS)
 
 
 def _duck_calibration_bins() -> str:
@@ -9682,7 +9557,7 @@ def q_classifier_pr_auc(spark, sf_dir):
     (operators/evaluation.py pr_auc): the step-interpolated area
     under the precision-recall curve, with the prevalence baseline
     riding along — the metric that stays informative under class
-    imbalance where ROC-AUC saturates. Shares _qc_scored's fit memo
+    imbalance where ROC-AUC saturates. Shares the `qc_scored` store
     and roc_auc's scale shape: the corpus collapses to
     per-distinct-score counts before the only window (which runs over
     distinct scores descending, never corpus rows); per-group
@@ -9690,7 +9565,7 @@ def q_classifier_pr_auc(spark, sf_dir):
     doubles, so the statistic replays in the oracle."""
     from lion_parcel_etl_spark.operators.evaluation import pr_auc
 
-    return pr_auc(_qc_scored(spark, sf_dir))
+    return pr_auc(_session_store(spark, sf_dir, "qc_scored"))
 
 
 def _duck_classifier_pr_auc() -> str:
@@ -9733,7 +9608,8 @@ def q_classifier_kappa(spark, sf_dir):
     corpus."""
     from lion_parcel_etl_spark.operators.evaluation import agreement_kappa
 
-    return agreement_kappa(_qc_scored(spark, sf_dir), "pred", "y")
+    scored = _session_store(spark, sf_dir, "qc_scored")
+    return agreement_kappa(scored, "pred", "y")
 
 
 def _duck_classifier_kappa() -> str:
@@ -9769,7 +9645,8 @@ def q_calibration_ece(spark, sf_dir):
     corpus pass."""
     from lion_parcel_etl_spark.operators.evaluation import calibration_bins
 
-    bins = calibration_bins(_qc_scored(spark, sf_dir), n_bins=CALIB_BINS)
+    scored = _session_store(spark, sf_dir, "qc_scored")
+    bins = calibration_bins(scored, n_bins=CALIB_BINS)
     return bins.agg(
         F.sum("n").alias("n_rows"),
         F.count(F.lit(1)).alias("n_bins_nonempty"),
@@ -9810,18 +9687,17 @@ def q_hybrid_rrf(spark, sf_dir):
     top-{RRF_POOL} cuts are TakeOrderedAndProject, and every window
     (dense rank, fused rank) runs over ≤{RRF_POOL} survivor rows.
 
-    Served from the family-shared `fused_single` store (r09
-    optimization round — the single-query twin of `_fused_multi`): its
-    other consumer is retrieval_ndcg, which re-ran the whole BM25 +
-    hashed-embedding corpus build to reach this {RRF_TOPN}-row list."""
-    return _session_store(
-        spark, sf_dir, "fused_single", lambda: _build_hybrid_rrf(spark, sf_dir)
-    )
+    Served from the `fused_single` store (the single-query twin of
+    `fused_multi`): its other consumer is retrieval_ndcg, which re-ran
+    the whole BM25 + hashed-embedding corpus build to reach this
+    {RRF_TOPN}-row list."""
+    return _session_store(spark, sf_dir, "fused_single")
 
 
+@_store("fused_single")
 def _build_hybrid_rrf(spark, sf_dir):
-    """Inline fused-ranking build behind the `fused_single` store —
-    see q_hybrid_rrf for semantics and scale shape."""
+    """The fused ranking behind the `fused_single` store — see
+    q_hybrid_rrf for semantics and scale shape."""
     from lion_parcel_etl_spark.operators.evaluation import rrf_fuse
 
     docs = _t(spark, sf_dir, "documents")
@@ -9915,8 +9791,8 @@ def q_retrieval_mrr(spark, sf_dir):
     (the MRR proper).
 
     Scale shape: relevance reuses the one-pass token-stream join from
-    retrieval_ndcg_multi; the fused list comes from the family-shared
-    `_fused_multi` session store (r09 — no second corpus pass); the
+    retrieval_ndcg_multi; the fused list comes from the `fused_multi`
+    store (no second corpus pass); the
     first-relevant rank is a min over the
     BROADCAST queries×{RRF_TOPN} fused list inner-joined to relevance
     (fused docs without a relevance row can't be first-relevant, so
@@ -10299,8 +10175,14 @@ RETRIEVAL_QUERY_SET: list[tuple[str, list[str]]] = _normalize_query_terms([
 ])
 
 
+@_store("fused_multi")
 def _build_hybrid_rrf_multi(spark, sf_dir):
-    """The inline fused-ranking build behind `_fused_multi` — see
+    """The queries×{RRF_TOPN} fused hybrid ranking shared by the
+    retrieval eval family (hybrid_rrf_multi, retrieval_mrr,
+    retrieval_ndcg_multi), each of which otherwise re-pays the full
+    corpus-sized build — the BM25 keyed token pass plus the
+    hashed-embedding cell table — to reach a ranking of a few hundred
+    rows (integer ranks, doc_id tie-breaks, round(,6) rrf). See
     q_hybrid_rrf_multi for the semantics and scale shape."""
     from lion_parcel_etl_spark.operators.evaluation import rrf_fuse_keyed
 
@@ -10341,27 +10223,6 @@ def _build_hybrid_rrf_multi(spark, sf_dir):
     )
 
 
-def _fused_multi(spark, sf_dir) -> DataFrame:
-    """The queries×{RRF_TOPN} fused hybrid ranking SHARED by the
-    retrieval eval family (hybrid_rrf_multi, retrieval_mrr,
-    retrieval_ndcg_multi): built once per (session, sf_dir) and
-    materialized as a session-scoped parquet table (_session_store —
-    the _cooc_edges discipline, r09), because each family member
-    otherwise re-pays the full corpus-sized build — the BM25 keyed
-    token pass plus the hashed-embedding cell table — to reach a
-    ranking of a few hundred rows. The fused rows are deterministic
-    (integer ranks, doc_id tie-breaks, round(,6) rrf), so the store
-    is byte-identical to the inline build and DuckDB-oracle hash
-    parity is unaffected; a fresh session's first family member pays
-    the build, the other two pay one tiny parquet scan."""
-    return _session_store(
-        spark,
-        sf_dir,
-        "fused_multi",
-        lambda: _build_hybrid_rrf_multi(spark, sf_dir),
-    )
-
-
 def q_hybrid_rrf_multi(spark, sf_dir):
     """Hybrid retrieval over the {len(RETRIEVAL_QUERY_SET)}-query eval
     set: per query, BM25 lexical top-{RRF_POOL}
@@ -10371,15 +10232,14 @@ def q_hybrid_rrf_multi(spark, sf_dir):
     table is built once and joined to a BROADCAST queries×dims cell
     table) by per-key reciprocal-rank fusion
     (operators/evaluation.py rrf_fuse_keyed). Output: each query's
-    fused top-{RRF_TOPN} with per-list ranks, via the family-shared
-    `_fused_multi` store (one corpus-sized build per session — the
-    retrieval twin of the graph family's _cooc_edges store, r09).
+    fused top-{RRF_TOPN} with per-list ranks, via the `fused_multi`
+    store (one corpus-sized build per session).
 
     Scale shape: everything corpus-sized happens ONCE regardless of
     query count — the query dimension only fans out bounded
     per-(query, doc) candidate rows; every window partitions by
     query_id, so per-partition work never grows with the query set."""
-    return _fused_multi(spark, sf_dir)
+    return _session_store(spark, sf_dir, "fused_multi")
 
 
 def _duck_qt_values() -> str:
@@ -10498,8 +10358,8 @@ def q_retrieval_ndcg_multi(spark, sf_dir):
     keeps the big side streaming (a left join from the fused side
     can't build-broadcast its left input and would shuffle the
     relevance table instead); the fused list comes from the
-    family-shared `_fused_multi` session store (r09 — this query
-    re-pays only the relevance pass, never the ranking build);
+    `fused_multi` store (this query re-pays only the relevance pass,
+    never the ranking build);
     queries whose fused list has no
     relevant doc rejoin with dcg 0 through the literal query-id
     spine. The mean row aggregates {len(RETRIEVAL_QUERY_SET)} rows."""
@@ -10705,7 +10565,7 @@ def q_cluster_quality(spark, sf_dir):
     return SIM.cluster_quality(
         emb,
         n_centroids=CLUSTER_QUALITY_K,
-        assignment=_coarse_asg(spark, sf_dir),
+        assignment=_session_store(spark, sf_dir, "coarse_asg"),
     )
 
 
@@ -10898,7 +10758,7 @@ def q_dedup_pr_eval(spark, sf_dir):
     join (never all-pairs — same verifier the dedup family already
     trusts); each candidate set is the band bucket join; the P/R
     arithmetic acts on three counts per config."""
-    truth = _ngram_pairs(spark, sf_dir).select(
+    truth = _session_store(spark, sf_dir, "ngram_pairs").select(
         "id_a", "id_b", F.lit(1).alias("__t")
     )
     n_true = truth.agg(F.count(F.lit(1)).alias("n_true"))
@@ -10907,8 +10767,8 @@ def q_dedup_pr_eval(spark, sf_dir):
     # so the k=16 signature IS the first 16 positions of the k=64 one
     # and _banded(sig64, 16, 4) reads exactly those — identical values
     # to a separate k=16 fold at half the fold cost.
-    # Signatures from the family-shared `_minhash_sig64` store (r09
-    # optimization round; kmax = MINHASH_K_CORPUS = the store's k):
+    # Signatures from the `minhash_sig64` store (kmax =
+    # MINHASH_K_CORPUS = the store's k):
     # the empty-shingle filter re-applies via the stored n_sh column,
     # so the band input is exactly what the old pinned fold produced.
     kmax = max(k for k, _ in LSH_PR_CONFIGS)
@@ -10920,7 +10780,7 @@ def q_dedup_pr_eval(spark, sf_dir):
             f"holds only MINHASH_K_CORPUS={DD.MINHASH_K_CORPUS} hashes"
         )
     sig = (
-        _minhash_sig64(spark, sf_dir)
+        _session_store(spark, sf_dir, "minhash_sig64")
         .filter(F.col("n_sh") > 0)
         .select("doc", "sig")
     )
@@ -11448,20 +11308,14 @@ def _duck_kcenter() -> str:
     )
 
 
-def _rfm_base(spark, sf_dir) -> DataFrame:
-    """Per-customer (custkey, recency_days, frequency, monetary_cents)
-    — the shared input of the exact and approx RFM twins, served from
-    a session-scoped parquet store (r09: the per-query pin became a
-    family-wide store, so rfm_segments / rfm_segments_approx /
-    rfm_agreement pay the orders-sized aggregate once per session).
-    All values exact integers (day diffs, counts, cents), so
-    everything downstream replays in SQL."""
-    return _session_store(
-        spark, sf_dir, "rfm_base", lambda: _build_rfm_base(spark, sf_dir)
-    )
-
-
+@_store("rfm_base")
 def _build_rfm_base(spark, sf_dir) -> DataFrame:
+    """Per-customer (custkey, recency_days, frequency, monetary_cents)
+    — the shared input of the exact and approx RFM twins, so
+    rfm_segments / rfm_segments_approx / rfm_agreement pay the
+    orders-sized aggregate once per session. All values exact integers
+    (day diffs, counts, cents), so everything downstream replays in
+    SQL."""
     o = _t(spark, sf_dir, "orders")
     per = o.groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.max("o_orderdate").alias("last_order"),
@@ -11512,14 +11366,16 @@ def q_rfm_segments(spark, sf_dir, base: DataFrame | None = None):
     inputs are exact (integer day diffs, counts, cents), so the whole
     segmentation replays in SQL.
 
-    Plan: _rfm_base's orders-sized hash aggregate, then three exact
-    global NTILE(5)s — a total order each, the honest cost of exact
-    quintiles over the |customers|-sized aggregate. This is the
+    Plan: the `rfm_base` store's orders-sized hash aggregate, then
+    three exact global NTILE(5)s — a total order each, the honest cost
+    of exact quintiles over the |customers|-sized aggregate. This is the
     documented 100 TB cliff; q_rfm_segments_approx is the production
     path (sample-quantile boundaries, zero global sort) and
     q_rfm_agreement measures how much segment fidelity the approx
     path trades away."""
-    per = base if base is not None else _rfm_base(spark, sf_dir)
+    per = (
+        base if base is not None else _session_store(spark, sf_dir, "rfm_base")
+    )
     r = F.ntile(5).over(
         Window.orderBy(F.col("recency_days").desc(), F.col("custkey").asc())
     )
@@ -11608,7 +11464,7 @@ def _rfm_approx_scored(spark, sf_dir, base: DataFrame | None = None) -> DataFram
     from lion_parcel_etl_spark.operators.sampling import HASH_MOD, id_hash
 
     if base is None:
-        base = _rfm_base(spark, sf_dir)
+        base = _session_store(spark, sf_dir, "rfm_base")
     samp = base.filter(
         id_hash(F.col("custkey"), salt="rfmq")
         < F.lit(HASH_MOD // APPROX_SAMPLE_DIV)
@@ -11713,11 +11569,10 @@ def q_rfm_agreement(spark, sf_dir):
     exact quintile segmentation — the number that justifies running
     the zero-sort twin at scale, exactly as ann_recall does for ANN.
     One |customers|-sized join of the two scored frames; the shared
-    _rfm_base aggregate is a session STORE fed to both scorers (r07
-    review: unshared, the orders-sized groupBy executed once per
-    twin; r09: the pin became a store serving the whole family). The
+    `rfm_base` aggregate is a session store fed to both scorers
+    (unshared, the orders-sized groupBy executed once per twin). The
     floor is pinned in tests/test_query_extensions.py."""
-    base = _rfm_base(spark, sf_dir)  # session store — already disk-backed
+    base = _session_store(spark, sf_dir, "rfm_base")  # already disk-backed
     exact = q_rfm_segments(spark, sf_dir, base=base).select(
         "custkey",
         F.col("r_score").alias("er"),

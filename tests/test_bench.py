@@ -1,6 +1,6 @@
 """bench.measure, the one timing protocol behind bench.py and
-tools/bench_isolated.py, the floor-exceeder selection, and the bench
-lists derived from the query registry."""
+tools/bench_isolated.py, the floor-exceeder selection, the bench lists
+derived from the query registry, and the session-store table."""
 
 from __future__ import annotations
 
@@ -21,24 +21,62 @@ def test_registry_ownership_and_bench_lists():
     assert set(bench.ANCHOR) <= set(bench.HEADLINE)
 
 
+# Stores no query owns, so no warm bench row times their build. A new
+# store must either get an owner (Query.owns) or be added here on purpose.
+UNOWNED_STORES = [
+    "coarse_asg",
+    "cooc_edges",
+    "emb_lsh_index",
+    "emb_pairs",
+    "kmv_hashes",
+    "minhash_sigs",
+    "ngram_pairs",
+    "qc_model",
+    "rfm_base",
+    "simhash_sigs",
+    "trade_ed",
+    "trade_nodes",
+]
+
+
+def test_registry_stores_are_owned_or_listed_and_named_once():
+    owned = {s for q in Q.QUERIES.values() for s in q.owns}
+    assert sorted(owned - set(Q.STORES)) == []
+    assert sorted(set(Q.STORES) - owned) == UNOWNED_STORES
+    before = dict(Q.STORES)
+    with pytest.raises(ValueError, match="ks_exact"):
+
+        @Q._store("ks_exact")
+        def _second_ks_exact(spark, sf_dir):
+            return None
+
+    assert Q.STORES == before
+
+
 def test_evict_owned_rejects_name_outside_registry():
     with pytest.raises(KeyError, match="minhash_near_dupp"):
         bench._evict_owned(None, "/nowhere", "minhash_near_dupp")
 
 
+def test_registry_evict_rejects_unknown_store():
+    # the name is checked before the session is touched
+    with pytest.raises(KeyError, match="ks_exactt"):
+        Q._evict_session_store(None, "/nowhere", "ks_exactt")
+
+
 def test_measure_rebuilds_owned_store_before_every_run(spark, sf_dir, monkeypatch):
-    built = []
-    real = Q._register_store_cleanup
+    builds = []
+    real = Q.STORES["ks_exact"]
 
-    def spy(path):
-        built.append(path)
-        real(path)
+    def counting(spark, sf_dir):
+        builds.append(sf_dir)
+        return real(spark, sf_dir)
 
-    monkeypatch.setattr(Q, "_register_store_cleanup", spy)
+    monkeypatch.setitem(Q.STORES, "ks_exact", counting)
     times, shuffle = bench.measure(spark, sf_dir, "ks_drift", 3)
     assert len(times) == len(shuffle) == 3
     assert all(t > 0 for t in times)
-    assert len([p for p in built if "_ks_exact_" in p]) == 3
+    assert builds == [sf_dir] * 3
 
 
 def test_eviction_is_outside_the_timed_region(spark, sf_dir, monkeypatch):

@@ -160,11 +160,11 @@ def test_calibration_ece_is_weighted_gap_rollup(spark):
     """The ECE query equals Σ (n/N)·gap over its own bins — pinned
     against an independent recomputation from calibration_bins."""
     from lion_parcel_etl_spark.operators.evaluation import calibration_bins
-    from lion_parcel_etl_spark.plans.queries import QUERIES, _qc_scored
+    from lion_parcel_etl_spark.plans.queries import QUERIES, _session_store
 
     sf = "/root/testdata/sf0.001"
     got = QUERIES["calibration_ece"][0](spark, sf).collect()[0]
-    bins = calibration_bins(_qc_scored(spark, sf)).collect()
+    bins = calibration_bins(_session_store(spark, sf, "qc_scored")).collect()
     n_total = sum(b["n"] for b in bins)
     want = round(sum(b["n"] * b["gap"] for b in bins) / n_total, 6)
     assert got["ece"] == want

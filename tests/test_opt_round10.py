@@ -12,45 +12,66 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 
-def test_evict_keeps_builder_site_and_removes_path(spark):
-    """_evict_session_store (r09 ADVICE): eviction must NOT disarm the
-    duplicate-name collision guard, and must remove the on-disk
-    parquet so a rebuild never depends on overwrite-same-path."""
+def _success_mtime(spark, sf_dir, name):
     import lion_parcel_etl_spark.plans.queries as Q
 
-    def build_a():
+    marker = os.path.join(Q._store_path(spark, sf_dir, name), "_SUCCESS")
+    return os.path.getmtime(marker) if os.path.exists(marker) else None
+
+
+def test_evict_removes_store_path_and_next_call_rebuilds(spark, monkeypatch):
+    """_evict_session_store removes the on-disk parquet, so the next
+    call rebuilds from the builder instead of depending on an
+    overwrite of the same path; a call on a built store reads it."""
+    import shutil
+
+    import lion_parcel_etl_spark.plans.queries as Q
+
+    builds = []
+
+    def build(spark, sf_dir):
+        builds.append(sf_dir)
         return spark.range(3).toDF("n")
 
-    def build_b():
-        return spark.range(5).toDF("n")
-
-    name = "evict_guard_test_r10"
-    key = (spark.sparkContext.applicationId, "/x", name)
+    name = "evict_test_store"
+    monkeypatch.setitem(Q.STORES, name, build)
+    path = Q._store_path(spark, "/x", name)
     try:
-        assert Q._session_store(spark, "/x", name, build_a).count() == 3
-        path = Q._SIG_STORE_MEMO[key]
-        assert os.path.exists(path)
+        assert Q._session_store(spark, "/x", name).count() == 3
+        assert Q._session_store(spark, "/x", name).count() == 3
+        assert len(builds) == 1
         Q._evict_session_store(spark, "/x", name)
-        # on-disk store gone, memo gone ...
         assert not os.path.exists(path)
-        assert key not in Q._SIG_STORE_MEMO
-        # ... but the builder-site binding survives: a DIFFERENT call
-        # site still cannot claim the evicted name
-        with pytest.raises(ValueError, match="distinct store name"):
-            Q._session_store(spark, "/x", name, build_b)
-        # and the original site rebuilds cleanly
-        assert Q._session_store(spark, "/x", name, build_a).count() == 3
+        assert Q._session_store(spark, "/x", name).count() == 3
+        assert len(builds) == 2
     finally:
-        Q._STORE_BUILDER_SITES.pop(name, None)
-        p = Q._SIG_STORE_MEMO.pop(key, None)
-        if p:
-            import shutil
+        shutil.rmtree(path, ignore_errors=True)
 
-            shutil.rmtree(p, ignore_errors=True)
+
+def test_store_dir_without_success_marker_is_rebuilt(spark, monkeypatch):
+    """A directory at the store path with no _SUCCESS marker is a
+    killed write: the next call rebuilds it from the builder instead
+    of reading the partial rows."""
+    import shutil
+
+    import lion_parcel_etl_spark.plans.queries as Q
+
+    name = "killed_write_test_store"
+    monkeypatch.setitem(
+        Q.STORES, name, lambda spark, sf_dir: spark.range(3).toDF("n")
+    )
+    path = Q._store_path(spark, "/x", name)
+    try:
+        spark.range(100, 107).toDF("n").write.mode("overwrite").parquet(path)
+        os.remove(os.path.join(path, "_SUCCESS"))
+        rows = Q._session_store(spark, "/x", name).collect()
+        assert sorted(r["n"] for r in rows) == [0, 1, 2]
+        assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def test_bench_store_owners_map_to_real_stores(spark, sf_dir):
@@ -62,15 +83,14 @@ def test_bench_store_owners_map_to_real_stores(spark, sf_dir):
     import bench
     import lion_parcel_etl_spark.plans.queries as Q
 
-    app = spark.sparkContext.applicationId
     for owner, stores in bench.STORE_OWNERS.items():
         assert owner in bench.HEADLINE, owner
         assert owner in Q.QUERIES, owner
+        bench._evict_owned(spark, sf_dir, owner)
         fn = Q.QUERIES[owner].build
         fn(spark, sf_dir)  # building the stores is a call-time effect
         for store in stores:
-            key = (app, str(sf_dir), store)
-            assert key in Q._SIG_STORE_MEMO, (owner, store)
+            assert _success_mtime(spark, sf_dir, store), (owner, store)
 
 
 def test_evict_owned_forces_rebuild(spark, sf_dir):
@@ -82,23 +102,12 @@ def test_evict_owned_forces_rebuild(spark, sf_dir):
 
     fn = Q.QUERIES["ks_drift"].build
     fn(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, str(sf_dir), "ks_exact")
-    path_before = Q._SIG_STORE_MEMO[key]
-    mtime_before = max(
-        os.path.getmtime(os.path.join(path_before, f))
-        for f in os.listdir(path_before)
-    )
+    mtime_before = _success_mtime(spark, sf_dir, "ks_exact")
+    assert mtime_before is not None
     bench._evict_owned(spark, sf_dir, "ks_drift")
-    assert key not in Q._SIG_STORE_MEMO
-    assert not os.path.exists(path_before)
+    assert not os.path.exists(Q._store_path(spark, sf_dir, "ks_exact"))
     fn(spark, sf_dir)
-    path_after = Q._SIG_STORE_MEMO[key]
-    mtime_after = max(
-        os.path.getmtime(os.path.join(path_after, f))
-        for f in os.listdir(path_after)
-    )
-    assert mtime_after >= mtime_before
-    assert os.path.exists(path_after)
+    assert _success_mtime(spark, sf_dir, "ks_exact") >= mtime_before
 
 
 def test_bucketed_root_distinguishes_full_sf_dir(spark, sf_dir, tmp_path, monkeypatch):
@@ -176,7 +185,7 @@ def test_qc_model_store_scores_identical_to_inline_fit(spark, sf_dir):
     inline = logreg_score(feats, w)
     for name in ("qc_scored", "qc_model"):
         Q._evict_session_store(spark, sf_dir, name)
-    stored = Q._qc_scored(spark, sf_dir)
+    stored = Q._session_store(spark, sf_dir, "qc_scored")
     assert inline.count() == stored.count()
     assert inline.exceptAll(stored).count() == 0
     assert stored.exceptAll(inline).count() == 0
@@ -189,7 +198,7 @@ def test_bucketed_join_rewrites_fresh_root_each_call(spark, sf_dir):
     import bench
     import lion_parcel_etl_spark.plans.queries as Q
 
-    root = Q._bucketed_root(spark, sf_dir)
+    root = Q._store_path(spark, sf_dir, "bucketed")
     for _ in range(2):
         Q.q_bucketed_join(spark, sf_dir)
         assert not os.path.exists(os.path.join(root, "stale"))
@@ -202,5 +211,5 @@ def test_bucketed_join_rewrites_fresh_root_each_call(spark, sf_dir):
     for _ in range(2):
         bench._evict_owned(spark, sf_dir, "ks_drift")
         fn(spark, sf_dir)
-    path = Q._SIG_STORE_MEMO[(spark.sparkContext.applicationId, str(sf_dir), "ks_exact")]
+    path = Q._store_path(spark, sf_dir, "ks_exact")
     assert Q._STORE_CLEANUP_PATHS.count(path) == 1

@@ -49,46 +49,25 @@ def test_opt_stores_byte_identical_to_inline_builds(spark, sf_dir):
             st1, s2, ["user_id"], ["event_type", "value"], "ts", Q.RUN1
         )
 
-    cases = {
-        "trade_ed": (Q._trade_ed(spark, sf_dir), inline_trade_ed()),
-        "trade_nodes": (
-            Q._trade_nodes(spark, sf_dir),
-            inline_trade_ed().select(F.col("src").alias("node")).distinct(),
-        ),
-        "qc_scored": (Q._qc_scored(spark, sf_dir), inline_qc_scored()),
-        "cosine_rank": (
-            Q._cosine_rank(spark, sf_dir),
-            Q._build_cosine_topk(spark, sf_dir),
-        ),
-        "lsh_rank": (
-            Q.q_lsh_topk(spark, sf_dir),
-            Q._build_lsh_topk(spark, sf_dir),
-        ),
-        "pq_rank": (
-            Q.q_pq_topk(spark, sf_dir),
-            Q._build_pq_topk(spark, sf_dir),
-        ),
-        "ivf_seeded_rank": (
-            Q.q_ivf_topk_seeded(spark, sf_dir),
-            Q._build_ivf_topk_seeded(spark, sf_dir),
-        ),
-        "fused_single": (
-            Q.q_hybrid_rrf(spark, sf_dir),
-            Q._build_hybrid_rrf(spark, sf_dir),
-        ),
-        "dsir_scores": (
-            Q._dsir_weights_df(spark, sf_dir),
-            Q._build_dsir_weights(spark, sf_dir),
-        ),
-        "scd2_state": (Q._scd2_state(spark, sf_dir), inline_scd2_state()),
-        "minhash_sig64": (
-            Q._minhash_sig64(spark, sf_dir),
-            minhash_signatures(
-                docs, "doc_id", "text", n=3, k=Q.DD.MINHASH_K_CORPUS
-            ).select("doc", F.size("shingles").alias("n_sh"), "sig"),
-        ),
+    inline_builds = {
+        "trade_ed": inline_trade_ed(),
+        "trade_nodes": inline_trade_ed()
+        .select(F.col("src").alias("node"))
+        .distinct(),
+        "qc_scored": inline_qc_scored(),
+        "cosine_rank": Q.STORES["cosine_rank"](spark, sf_dir),
+        "lsh_rank": Q.STORES["lsh_rank"](spark, sf_dir),
+        "pq_rank": Q.STORES["pq_rank"](spark, sf_dir),
+        "ivf_seeded_rank": Q.STORES["ivf_seeded_rank"](spark, sf_dir),
+        "fused_single": Q.STORES["fused_single"](spark, sf_dir),
+        "dsir_scores": Q.STORES["dsir_scores"](spark, sf_dir),
+        "scd2_state": inline_scd2_state(),
+        "minhash_sig64": minhash_signatures(
+            docs, "doc_id", "text", n=3, k=Q.DD.MINHASH_K_CORPUS
+        ).select("doc", F.size("shingles").alias("n_sh"), "sig"),
     }
-    for name, (stored, inline) in cases.items():
+    for name, inline in inline_builds.items():
+        stored = Q._session_store(spark, sf_dir, name)
         got = _rows(stored)
         want = _rows(inline)
         assert got == want, f"store {name} diverges from inline build"

@@ -52,26 +52,27 @@ def test_ks_binned_grid_is_bounded(spark, sf_dir):
 
 
 def test_cooc_edges_store_is_shared_and_byte_identical(spark, sf_dir):
-    """The graph family's _cooc_edges store must (a) be built once per
-    (session, sf_dir) — the second family member reuses the SAME
-    parquet path — and (b) contain rows byte-identical to an inline
+    """The graph family's cooc_edges store must (a) be built once per
+    (session, sf_dir) — later family members read it without rewriting
+    it — and (b) contain rows byte-identical to an inline
     cooccurrence_edges build, so oracle parity can't silently depend
-    on the memo."""
+    on whether a call built or read the store."""
+    import os
+
     from lion_parcel_etl_spark.operators.graph import cooccurrence_edges
     from lion_parcel_etl_spark.plans.queries import (
-        _SIG_STORE_MEMO,
         COOC_MIN_JACCARD,
-        _cooc_edges,
+        _session_store,
+        _store_path,
         _user_key_rows,
     )
 
-    stored = _cooc_edges(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, str(sf_dir), "cooc_edges")
-    path1 = _SIG_STORE_MEMO.get(key)
-    assert path1 is not None
+    stored = _session_store(spark, sf_dir, "cooc_edges")
+    marker = os.path.join(_store_path(spark, sf_dir, "cooc_edges"), "_SUCCESS")
+    written = os.path.getmtime(marker)
     _ = q_triangle_count(spark, sf_dir).collect()
     _ = q_cooccurrence_graph(spark, sf_dir).collect()
-    assert _SIG_STORE_MEMO.get(key) == path1  # no rebuild happened
+    assert os.path.getmtime(marker) == written  # no rebuild happened
     inline = cooccurrence_edges(
         _user_key_rows(spark, sf_dir),
         "k",

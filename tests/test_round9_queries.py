@@ -72,42 +72,12 @@ def test_apply_changelog_registry_reconstructs_new_snapshot(spark, sf_dir):
     assert replayed.count() > 0
 
 
-def test_session_store_name_collision_fails_fast(spark):
-    """r09: _session_store memoizes by NAME — two call sites sharing
-    a name would silently serve one site's rows to the other (a
-    full-corpus signature store briefly reused the incremental twin's
-    "simhash_sigs" name and got the doc_id %% 4 != 0 HISTORICAL
-    subset; the oracle gate caught it as a row-count mismatch). The
-    guard must reject a reused name from a different builder site and
-    keep serving repeat calls from the SAME site."""
-    import lion_parcel_etl_spark.plans.queries as Q
-
-    def build_a():
-        return spark.range(3).toDF("n")
-
-    def build_b():
-        return spark.range(5).toDF("n")
-
-    name = "collision_guard_test"
-    try:
-        assert Q._session_store(spark, "/x", name, build_a).count() == 3
-        # same site, same name: memo hit, no rebuild, no error
-        assert Q._session_store(spark, "/x", name, build_a).count() == 3
-        with pytest.raises(ValueError, match="distinct store name"):
-            Q._session_store(spark, "/x", name, build_b)
-    finally:
-        Q._STORE_BUILDER_SITES.pop(name, None)
-        Q._SIG_STORE_MEMO.pop(
-            (spark.sparkContext.applicationId, "/x", name), None
-        )
-
-
 def test_simhash_pairs_store_equals_inline_after_incremental(spark, sf_dir):
-    """The regression the collision guard exists for, pinned end to
-    end: run simhash_incremental FIRST (it builds the historical
-    "simhash_sigs" store), then q_simhash_pairs — the full-corpus
-    pair set must equal the inline operator over all documents, not
-    the incremental twin's subset."""
+    """The regression one builder per store name exists for, pinned
+    end to end: run simhash_incremental FIRST (it builds the
+    historical "simhash_sigs" store), then q_simhash_pairs — the
+    full-corpus pair set must equal the inline operator over all
+    documents, not the incremental twin's subset."""
     import lion_parcel_etl_spark.operators.dedup as DD
     import lion_parcel_etl_spark.plans.queries as Q
 
@@ -139,43 +109,23 @@ def test_session_stores_byte_identical_to_inline_builds(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cases = {
-        "fused_multi": (
-            Q._fused_multi(spark, sf_dir),
-            Q._build_hybrid_rrf_multi(spark, sf_dir),
+    inline_builds = {
+        "fused_multi": Q.STORES["fused_multi"](spark, sf_dir),
+        "minhash_pairs": DD.minhash_near_dup(
+            docs, "doc_id", "text", threshold=Q.JACCARD_THRESHOLD
         ),
-        "minhash_pairs": (
-            Q._minhash_pairs(spark, sf_dir),
-            DD.minhash_near_dup(
-                docs, "doc_id", "text", threshold=Q.JACCARD_THRESHOLD
-            ),
+        "ngram_pairs": DD.ngram_jaccard_pairs(
+            docs, "doc_id", "text", n=3, threshold=Q.JACCARD_THRESHOLD
         ),
-        "ngram_pairs": (
-            Q._ngram_pairs(spark, sf_dir),
-            DD.ngram_jaccard_pairs(
-                docs, "doc_id", "text", n=3, threshold=Q.JACCARD_THRESHOLD
-            ),
-        ),
-        "emb_pairs": (
-            Q._emb_pairs(spark, sf_dir),
-            SIM.embedding_near_dup(emb, threshold=0.35, n_blocks=8),
-        ),
-        "kmv_hashes": (
-            Q._kmv_hashes(spark, sf_dir),
-            Q._kmv_shingle_keys(spark, sf_dir)
-            .select("source", id_hash(F.col("s"), salt="kmv").alias("h"))
-            .distinct(),
-        ),
-        "bpe_merges": (
-            Q._bpe_merge_table(spark, sf_dir),
-            bpe_merges(docs, "text", k_merges=Q.BPE_K_MERGES),
-        ),
-        "rfm_base": (
-            Q._rfm_base(spark, sf_dir),
-            Q._build_rfm_base(spark, sf_dir),
-        ),
+        "emb_pairs": SIM.embedding_near_dup(emb, threshold=0.35, n_blocks=8),
+        "kmv_hashes": Q._kmv_shingle_keys(spark, sf_dir)
+        .select("source", id_hash(F.col("s"), salt="kmv").alias("h"))
+        .distinct(),
+        "bpe_merges": bpe_merges(docs, "text", k_merges=Q.BPE_K_MERGES),
+        "rfm_base": Q.STORES["rfm_base"](spark, sf_dir),
     }
-    for name, (stored, inline) in cases.items():
+    for name, inline in inline_builds.items():
+        stored = Q._session_store(spark, sf_dir, name)
         got = sorted(map(tuple, stored.collect()))
         want = sorted(map(tuple, inline.collect()))
         assert got == want, f"store {name} diverges from inline build"
