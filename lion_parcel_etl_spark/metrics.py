@@ -6,7 +6,9 @@ and sizes via ``df.info(memory_usage='deep')`` (reference
 ``public/source_transaction_lion_parcel.py:79-83``). The engine analog
 records, for every warehouse write, the written table's row count and
 on-disk bytes as structured data the runner attaches to its per-task
-report.
+report. Each write is tagged with the task running on the writing
+thread (see :meth:`RunMetrics.running`), so the attribution holds while
+independent tasks run side by side.
 
 Counting is free of recompute: rows come from the parquet FOOTERS of
 the files just written (pyarrow metadata read — no second action over
@@ -17,7 +19,9 @@ the directory swap that precedes them.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
 from dataclasses import dataclass, field
 
 
@@ -27,6 +31,7 @@ class WriteMetrics:
     rows: int
     bytes: int
     files: int
+    task: str | None = None
 
     def as_dict(self) -> dict:
         return {
@@ -56,15 +61,33 @@ def scan_parquet_dir(path: str) -> tuple[int, int, int]:
 
 @dataclass
 class RunMetrics:
-    """Accumulates WriteMetrics; the runner slices the list per task."""
+    """Accumulates WriteMetrics, each tagged with the task running on
+    the writing thread; the runner filters the list per task."""
 
     writes: list[WriteMetrics] = field(default_factory=list)
+    _current: threading.local = field(
+        default_factory=threading.local, repr=False, compare=False
+    )
 
-    def record_write(self, table: str, path: str) -> WriteMetrics:
-        rows, size, files = scan_parquet_dir(path)
-        wm = WriteMetrics(table=table, rows=rows, bytes=size, files=files)
+    @contextlib.contextmanager
+    def running(self, task: str):
+        """Tag every write this thread records inside the block with
+        ``task`` (the runner wraps each task's attempts in it)."""
+        prev = getattr(self._current, "task", None)
+        self._current.task = task
+        try:
+            yield
+        finally:
+            self._current.task = prev
+
+    def _add(self, table: str, rows: int, size: int, files: int) -> WriteMetrics:
+        task = getattr(self._current, "task", None)
+        wm = WriteMetrics(table, rows, size, files, task)
         self.writes.append(wm)
         return wm
+
+    def record_write(self, table: str, path: str) -> WriteMetrics:
+        return self._add(table, *scan_parquet_dir(path))
 
     def record_dirs(self, table: str, paths: list[str]) -> WriteMetrics:
         """One WriteMetrics over several directories — the partitioned
@@ -74,9 +97,7 @@ class RunMetrics:
         for p in paths:
             r, s, f = scan_parquet_dir(p)
             rows, size, files = rows + r, size + s, files + f
-        wm = WriteMetrics(table=table, rows=rows, bytes=size, files=files)
-        self.writes.append(wm)
-        return wm
+        return self._add(table, rows, size, files)
 
     def record_files(self, table: str, paths: list[str]) -> WriteMetrics:
         """One WriteMetrics over an explicit file list — the append
@@ -87,10 +108,9 @@ class RunMetrics:
         for fp in paths:
             rows += pq.ParquetFile(fp).metadata.num_rows
             size += os.path.getsize(fp)
-        wm = WriteMetrics(table=table, rows=rows, bytes=size, files=len(paths))
-        self.writes.append(wm)
-        return wm
+        return self._add(table, rows, size, len(paths))
 
     def mark(self) -> int:
-        """Position marker; writes[mark:] are the ones since."""
+        """Position marker; writes[mark:] are the ones since (for
+        serial callers — concurrent tasks filter on ``task``)."""
         return len(self.writes)

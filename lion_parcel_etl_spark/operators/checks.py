@@ -10,8 +10,8 @@ engine operators.
 
 Each check returns a DataFrame of VIOLATIONS (empty = pass) so the
 caller decides whether to fail, quarantine, or log; ``run_checks``
-evaluates a batch and returns one summary row per check. All checks
-are single aggregate/join plans:
+evaluates a batch in one Spark action and returns one summary row per
+check. All checks are single aggregate/join plans:
 
 - uniqueness: one hash aggregate on the key (partial agg first — the
   shuffle carries one row per distinct key per task);
@@ -22,6 +22,8 @@ are single aggregate/join plans:
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -73,13 +75,26 @@ def expect_ref_integrity(
 
 
 def run_checks(named_checks: dict[str, DataFrame]) -> list[dict]:
-    """Evaluate a batch of checks; one summary dict per check:
-    ``{"check": name, "violations": n, "passed": bool}``. Counts run
-    as independent jobs — group related checks on a cached input when
-    the source scan is expensive."""
+    """Evaluate a batch of checks; one summary dict per check, in dict
+    order: ``{"check": name, "violations": n, "passed": bool}``.
+
+    All checks run as ONE Spark action: each violations frame is
+    reduced to a ``__check`` index column, the frames are unioned and
+    counted per index with one ``groupBy`` + ``collect``. The checks'
+    own shuffle stages are independent inside that one job, so AQE
+    runs them side by side instead of one driver round-trip per check.
+    A check with no violations has no group and counts 0."""
+    if not named_checks:
+        return []
+    tagged = [
+        viol.select(F.lit(i).alias("__check"))
+        for i, viol in enumerate(named_checks.values())
+    ]
+    union = reduce(DataFrame.unionAll, tagged)
+    counts = {r["__check"]: r["count"] for r in union.groupBy("__check").count().collect()}
     out = []
-    for name, viol in named_checks.items():
-        n = viol.count()
+    for i, name in enumerate(named_checks):
+        n = counts.get(i, 0)
         out.append({"check": name, "violations": n, "passed": n == 0})
     return out
 

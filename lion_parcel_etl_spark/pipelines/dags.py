@@ -64,8 +64,10 @@ def build_retail_pipeline() -> Pipeline:
         out = scd2_apply(
             target, snap, ["id"], SCD_TRACKED, "updated_at", ctx["run_ts"]
         )
-        # partition by is_current: history is append-only at scale, only
-        # the small current partition churns per run (SURVEY §7 item 8)
+        # partitioned by is_current, but overwrite rewrites the WHOLE
+        # table (history included) every run; the layout that appends
+        # history and swaps only the current partition is
+        # operators.scd2.scd2_apply_partitioned (SURVEY §7 item 8)
         wh.overwrite(out, "retail_transactions_scd", partition_by=["is_current"])
 
     def checks(ctx):

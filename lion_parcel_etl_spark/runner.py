@@ -1,4 +1,4 @@
-"""Pipeline runner: topological task execution with tag selection.
+"""Pipeline runner: dependency-scheduled task execution with tag selection.
 
 Replaces both orchestration layers of the reference:
 
@@ -16,12 +16,19 @@ at reference ``dags/retail_hourly_etl.py:29``), and reports per-task
 wall time. ``ctx`` is caller-provided shared state (SparkSession,
 Warehouse, run_ts, ...) — run-time values are injected, never read from
 ``now()``, so replays are deterministic (SURVEY.md §7 hard part 6).
+
+Tasks whose dependencies are done run concurrently, one thread each, as
+on Airflow's LocalExecutor: in the retail DAG the merge and the SCD2
+tasks both start once ``stage`` finishes. So tasks that can run at the
+same time must not write the same table, and a task that reads another
+task's output declares that task as a dep.
 """
 
 from __future__ import annotations
 
 import time
 from collections.abc import Callable, Iterable
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta
 
@@ -143,6 +150,16 @@ class Pipeline:
             {task: {"wall_s": float,
                     "writes": [{"table", "rows", "bytes", "files"}]}}
 
+        keyed in topological order. Every task whose selected deps are
+        done runs at once on its own thread (Airflow LocalExecutor
+        semantics), so tasks that can overlap must not write the same
+        table, and a task reading another's output must list it as a
+        dep. Fail-fast: after a failure no new task starts, tasks
+        already running finish, and the ``TaskFailed`` raised is the
+        first failed task in topological order. When ``ctx["spark"]``
+        is a SparkSession, each task thread inherits the caller's Spark
+        local properties (job group, scheduler pool).
+
         Writes are attributed to the task that performed them via a
         ``RunMetrics`` recorder: uses ``ctx["run_metrics"]`` if the
         caller supplied one (sharing it with their Warehouse), else
@@ -151,6 +168,7 @@ class Pipeline:
         """
         from lion_parcel_etl_spark.metrics import RunMetrics
 
+        order = self._topo(self._select(tags))
         rm = ctx.get("run_metrics")
         attached = False
         wh = ctx.get("warehouse")
@@ -167,28 +185,81 @@ class Pipeline:
                 wh.metrics = rm
                 attached = True
 
-        report: dict[str, dict] = {}
+        mark = rm.mark()
         try:
-            for t in self._topo(self._select(tags)):
-                mark = rm.mark()
-                t0 = time.perf_counter()
-                for attempt in range(t.retries + 1):
-                    try:
-                        t.fn(ctx)
-                        break
-                    except Exception as e:  # noqa: BLE001
-                        if attempt == t.retries:
-                            raise TaskFailed(t.name, e) from e
-                        if t.retry_delay_s > 0:
-                            time.sleep(t.retry_delay_s)
-                report[t.name] = {
-                    "wall_s": time.perf_counter() - t0,
-                    "writes": [w.as_dict() for w in rm.writes[mark:]],
-                }
+            walls = self._run_ready(order, ctx, rm)
         finally:
             if attached:
                 wh.metrics = prev_metrics
-        return report
+        writes = rm.writes[mark:]
+        return {
+            name: {
+                "wall_s": wall,
+                "writes": [w.as_dict() for w in writes if w.task == name],
+            }
+            for name, wall in walls.items()
+        }
+
+    def _run_ready(self, order: list[Task], ctx: dict, rm) -> dict[str, float]:
+        """Run ``order`` (topologically sorted) by dependency: each task
+        is submitted as soon as its selected deps are done. Returns
+        task → seconds in topological order."""
+        names = {t.name for t in order}
+        deps = {t.name: [d for d in t.deps if d in names] for t in order}
+        execute = _thread_target(ctx.get("spark"))(_execute)
+        walls: dict[str, float] = {}
+        failed: dict[str, TaskFailed] = {}
+        running: dict[Future, str] = {}
+        pending = list(order)
+        with ThreadPoolExecutor(max(1, len(order)), thread_name_prefix=self.name) as pool:
+            while True:
+                if not failed:
+                    for t in [t for t in pending if all(d in walls for d in deps[t.name])]:
+                        pending.remove(t)
+                        running[pool.submit(execute, t, ctx, rm)] = t.name
+                if not running:
+                    break
+                finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                for f in finished:
+                    name = running.pop(f)
+                    try:
+                        walls[name] = f.result()
+                    except TaskFailed as e:
+                        failed[name] = e
+        for t in order:
+            if t.name in failed:
+                raise failed[t.name]
+        return {t.name: walls[t.name] for t in order}
+
+
+def _execute(t: Task, ctx: dict, rm) -> float:
+    """One task with its retries, its writes to ``rm`` tagged with its
+    name; returns its wall seconds."""
+    t0 = time.perf_counter()
+    with rm.running(t.name):
+        for attempt in range(t.retries + 1):
+            try:
+                t.fn(ctx)
+                break
+            except Exception as e:  # noqa: BLE001
+                if attempt == t.retries:
+                    raise TaskFailed(t.name, e) from e
+                if t.retry_delay_s > 0:
+                    time.sleep(t.retry_delay_s)
+    return time.perf_counter() - t0
+
+
+def _thread_target(spark) -> Callable[[Callable], Callable]:
+    """Wrapper that carries the calling thread's Spark local properties
+    into a task thread; identity when ``spark`` is not a session."""
+    if spark is not None:
+        from pyspark import inheritable_thread_target
+        from pyspark.sql import SparkSession
+
+        if isinstance(spark, SparkSession):
+            return inheritable_thread_target(spark)
+    return lambda fn: fn
+
 
 @dataclass(frozen=True)
 class ScheduledRun:

@@ -70,6 +70,52 @@ def test_run_checks_summary(spark):
     ]
 
 
+def test_run_checks_matches_per_check_counts(spark):
+    """The one-action evaluation gives each check the count its own
+    violations frame has, in dict order, across frames of different
+    schemas and with passing and failing checks mixed."""
+    orders = spark.createDataFrame(
+        [(1, "a", 10.0), (1, "b", None), (2, None, 3.0), (3, "c", 4.0), (3, "d", 5.0)],
+        "id int, status string, amount double",
+    )
+    events = spark.createDataFrame(
+        [("e1", "OPEN"), ("e2", "BOGUS"), ("e3", None), ("e4", "DONE")],
+        "eid string, state string",
+    )
+    parents = spark.createDataFrame([(1,), (2,)], "id int")
+    checks = {
+        "orders.id_unique": expect_unique(orders, ["id"]),
+        "orders.status_not_null": expect_not_null(orders, ["status"]),
+        "events.eid_unique": expect_unique(events, ["eid"]),
+        "events.state_accepted": expect_accepted_values(events, "state", ["OPEN", "DONE"]),
+        "orders.amount_or_status_null": expect_not_null(orders, ["status", "amount"]),
+        "orders.id_ref": expect_ref_integrity(orders, "id", parents, "id"),
+        "events.eid_not_null": expect_not_null(events, ["eid"]),
+    }
+    counts = [viol.count() for viol in checks.values()]
+    assert counts == [2, 1, 0, 1, 2, 2, 0]
+    want = [
+        {"check": name, "violations": n, "passed": n == 0}
+        for name, n in zip(checks, counts)
+    ]
+    assert run_checks(checks) == want
+
+
+def test_run_checks_empty_starts_no_job(spark):
+    sc = spark.sparkContext
+    df = spark.createDataFrame([(1,)], "id int")
+    sc.setJobGroup("run_checks_empty", "run_checks_empty")
+    try:
+        assert run_checks({}) == []
+        assert list(sc.statusTracker().getJobIdsForGroup("run_checks_empty")) == []
+        # the same probe does see the jobs of a non-empty batch
+        run_checks({"id_unique": expect_unique(df, ["id"])})
+        assert list(sc.statusTracker().getJobIdsForGroup("run_checks_empty")) != []
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
 def test_column_profile_counts_and_renderers(spark):
     from lion_parcel_etl_spark.operators.checks import column_profile
 

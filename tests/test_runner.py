@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import contextlib
+import threading
+
 import pytest
 
 from lion_parcel_etl_spark.runner import CycleError, Pipeline, TaskFailed
@@ -99,19 +102,98 @@ def test_retries_exhausted_raises_taskfailed():
     assert calls["n"] == 3
 
 
+def test_independent_tasks_overlap():
+    """Both branches wait on one barrier: a serial runner would time
+    out in the first of them, so completion pins the concurrency."""
+    barrier = threading.Barrier(2, timeout=30)
+    done = []
+
+    def branch(name):
+        def fn(ctx):
+            barrier.wait()
+            done.append(name)
+
+        return fn
+
+    p = (
+        Pipeline("overlap")
+        .task("stage", lambda c: None)
+        .task("merge", branch("merge"), deps=["stage"])
+        .task("scd", branch("scd"), deps=["stage"])
+        .task("checks", lambda c: done.append("checks"), deps=["merge", "scd"])
+    )
+    report = p.run_with_metrics({})
+    assert sorted(done[:2]) == ["merge", "scd"] and done[2] == "checks"
+    assert list(report) == ["stage", "merge", "scd", "checks"]
+
+
+def test_failed_branch_stops_downstream_sibling_finishes():
+    failed_yet = threading.Event()
+    ran = []
+
+    def boom(ctx):
+        failed_yet.set()
+        raise ValueError("nope")
+
+    def sibling(ctx):
+        # still running when its sibling fails; it must be let finish
+        assert failed_yet.wait(30)
+        ran.append("sibling")
+
+    p = (
+        Pipeline("branch")
+        .task("stage", lambda c: None)
+        .task("bad", boom, deps=["stage"])
+        .task("sibling", sibling, deps=["stage"])
+        .task("down", lambda c: ran.append("down"), deps=["bad", "sibling"])
+        .task("late", lambda c: ran.append("late"), deps=["sibling"])
+    )
+    with pytest.raises(TaskFailed) as ei:
+        p.run({})
+    assert ei.value.task == "bad"
+    assert isinstance(ei.value.cause, ValueError)
+    # no new task starts after the failure, even one whose deps are done
+    assert ran == ["sibling"]
+
+
+def test_two_failures_raise_first_in_topological_order():
+    second_failed = threading.Event()
+
+    def first(ctx):
+        # fails LAST in time, but comes first in topological order
+        assert second_failed.wait(30)
+        raise RuntimeError("first")
+
+    def second(ctx):
+        second_failed.set()
+        raise RuntimeError("second")
+
+    p = Pipeline("two").task("first", first).task("second", second)
+    with pytest.raises(TaskFailed) as ei:
+        p.run({})
+    assert ei.value.task == "first"
+
+
 def test_run_with_metrics_attributes_writes_per_task(spark, tmp_path):
     """Structured per-task report: each task's warehouse writes show up
     under that task with footer-derived row counts and on-disk bytes —
-    the engine's MERGE-20-style command-tag analog."""
+    the engine's MERGE-20-style command-tag analog — also when two
+    independent writers run at the same time."""
     from lion_parcel_etl_spark.catalog import Warehouse
     from lion_parcel_etl_spark.metrics import RunMetrics
 
     rm = RunMetrics()
     wh = Warehouse(str(tmp_path / "wh"), metrics=rm)
+    barrier = threading.Barrier(2, timeout=60)
 
     def write_a(ctx):
+        barrier.wait()
         df = spark.range(20).withColumnRenamed("id", "k")
         ctx["warehouse"].overwrite(df, "tbl_a")
+
+    def write_d(ctx):
+        barrier.wait()
+        ctx["warehouse"].overwrite(spark.range(5), "tbl_d")
 
     def write_b(ctx):
         ctx["warehouse"].overwrite(spark.range(13), "tbl_b")
@@ -122,6 +204,7 @@ def test_run_with_metrics_attributes_writes_per_task(spark, tmp_path):
     p = (
         Pipeline("m")
         .task("a", write_a)
+        .task("d", write_d)
         .task("b", write_b, deps=["a"])
         .task("c", no_write, deps=["b"])
     )
@@ -129,9 +212,33 @@ def test_run_with_metrics_attributes_writes_per_task(spark, tmp_path):
     assert [w["table"] for w in report["a"]["writes"]] == ["tbl_a"]
     assert report["a"]["writes"][0]["rows"] == 20
     assert report["a"]["writes"][0]["bytes"] > 0
+    assert [w["table"] for w in report["d"]["writes"]] == ["tbl_d"]
+    assert report["d"]["writes"][0]["rows"] == 5
     assert report["b"]["writes"][0]["rows"] == 13
     assert report["c"]["writes"] == []
+    assert set(report["a"]["writes"][0]) == {"table", "rows", "bytes", "files"}
     assert all(r["wall_s"] >= 0 for r in report.values())
+
+
+@contextlib.contextmanager
+def _job_group(sc, group: str):
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def test_task_threads_inherit_callers_job_group(spark):
+    sc = spark.sparkContext
+    seen = []
+    p = Pipeline("jg").task(
+        "t", lambda ctx: seen.append(sc.getLocalProperty("spark.jobGroup.id"))
+    )
+    with _job_group(sc, "g"):
+        p.run({"spark": spark})
+    assert seen == ["g"]
 
 
 def test_run_with_metrics_auto_attaches_recorder(spark, tmp_path):
