@@ -146,10 +146,6 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     return F.array_distinct(word_ngrams(tokens(text), n))
 
 
-def shingle_hashes(text: Column, n: int = 3) -> Column:
-    return F.transform(word_shingles(text, n), hash32)
-
-
 def minhash_signature(text: Column, n: int = 3, k: int = MINHASH_K) -> Column:
     """array<bigint> length k; empty-shingle docs get MINHASH_PRIME
     sentinels (never collide with real mins).

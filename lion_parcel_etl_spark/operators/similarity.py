@@ -445,39 +445,6 @@ def embedding_near_dup(
     # sorts rows itself)
 
 
-def pair_cosine_udf():
-    """Arrow-batched exact cosine for (vector, vector) pair rows, with
-    the same strictly-sequential per-dimension accumulation as
-    :func:`_seq_cosine_block` — bit-identical to the JVM fold
-    (:func:`cosine`) and a SQL engine's left-to-right ``list_sum``.
-
-    Preferred over the fold for bulk pair verification: HOF aggregates
-    are codegen-fallback, so a fold referenced by BOTH a filter
-    predicate and its projection is interpreted and re-evaluated per
-    reference (with a per-pair array allocation inside ``zip_with``),
-    while a Python UDF is extracted into its own ArrowEvalPython node
-    and evaluated exactly once per row, as one numpy pass per batch.
-    """
-
-    @F.pandas_udf("double")
-    def pair_cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if len(va) == 0:
-            return pd.Series([], dtype="float64")
-        A = np.vstack(va.to_numpy()).astype(np.float64)
-        B = np.vstack(vb.to_numpy()).astype(np.float64)
-        S = np.zeros(len(A))
-        na = np.zeros(len(A))
-        nb = np.zeros(len(A))
-        for d in range(A.shape[1]):
-            S += A[:, d] * B[:, d]
-            na += A[:, d] * A[:, d]
-            nb += B[:, d] * B[:, d]
-        den = np.sqrt(na) * np.sqrt(nb)
-        return pd.Series(np.where(den > 0, S / np.where(den > 0, den, 1.0), 0.0))
-
-    return pair_cos
-
-
 def embedding_near_dup_lsh(
     corpus: DataFrame,
     threshold: float = 0.35,

@@ -10,13 +10,29 @@ reference ``public/lion_parcell_bonus_test_stg.py:175-247``:
   ``sum(sum_ms)/sum(cnt)/60000`` (NOT mean of per-file means), and a
   sorted-distinct '; '-join of non-empty messages.
 
-The whole thing is ONE lazy DataFrame plan: scan → from_json → explode
-→ array ops → groupBy. Catalyst fuses the projections; the only shuffle
-is the final groupBy(id). Floating-point folds are done with
-``F.aggregate`` in deterministic (file-name-sorted) order so results
-are bit-identical to the reference's sequential Python sums — this
-costs nothing at scale because the fold happens inside a single row's
-collected array after the shuffle's map-side combine.
+The whole thing is ONE lazy DataFrame plan over ONE corpus scan: scan
+→ from_json → explode → array ops → detail sort → groupBy. Catalyst
+fuses the projections. There are two exchanges:
+
+- the detail sort: ``repartition(1).sortWithinPartitions(source_file,
+  pos)``, one task. A global ``orderBy`` would range-sample its input
+  first, and that sampling job re-runs the corpus scan and everything
+  above it. The ``Messages`` normalizer (a Python UDF, see
+  sources/metrics_json.py) runs after this exchange, in the sort task,
+  so Python is paid once per row and never in the scan stage.
+- the final ``groupBy(id)``.
+
+Scale limit: the detail sort is one task, so the whole detail table
+passes through one core. A larger corpus would range-partition by
+``source_file`` with bounds taken from the file listing (the file names
+are known before the scan), which keeps the order without a sampling
+job.
+
+Floating-point folds are done with ``F.aggregate`` in deterministic
+(file-name-sorted) order so results are bit-identical to the
+reference's sequential Python sums — this costs nothing at scale
+because the fold happens inside a single row's collected array after
+the shuffle's map-side combine.
 """
 
 from __future__ import annotations
@@ -24,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lion_parcel_etl_spark.sources.metrics_json import read_metrics_docs
+from lion_parcel_etl_spark.sources.metrics_json import normalize_messages, read_metrics_docs
 
 
 def _kahan_sum(pairs):
@@ -52,11 +68,13 @@ def _kahan_sum(pairs):
 def detail_from_docs(docs: DataFrame) -> DataFrame:
     """Per-(file, metric entry) detail plan over a docs DataFrame from
     ``read_metrics_docs`` — shared by the batch pipeline and the
-    streaming ingest (streaming/jobs.py), which can't sort."""
+    streaming ingest (streaming/jobs.py), which can't sort. Rows carry
+    the document's ``raw_messages`` text and ``pos``; :func:`with_message`
+    turns them into the output columns."""
     docs = docs.filter(~F.col("corrupt"))
     entries = docs.select(
         "source_file",
-        "messages",
+        "raw_messages",
         F.posexplode("metrics").alias("pos", "m"),
     )
     valid = F.filter(
@@ -68,7 +86,7 @@ def detail_from_docs(docs: DataFrame) -> DataFrame:
         F.array_max("m.Timestamps").alias("runtime_date"),  # string max (ISO sorts)
         F.aggregate(valid, F.lit(0.0), lambda acc, x: acc + x).alias("sum_ms"),
         F.size(valid).cast("long").alias("cnt"),
-        "messages",
+        "raw_messages",
         "source_file",
         "pos",
     ).select(
@@ -79,17 +97,36 @@ def detail_from_docs(docs: DataFrame) -> DataFrame:
         F.when(F.col("cnt") > 0, F.col("sum_ms") / F.col("cnt") / F.lit(60000.0)).alias(
             "load_time"
         ),
-        F.col("messages").alias("Message"),
+        "raw_messages",
         "source_file",
         "pos",
     )
     return detail.filter(F.col("id").isNotNull())
 
 
+def with_message(detail: DataFrame) -> DataFrame:
+    """Output columns of a ``detail_from_docs`` plan: ``raw_messages``
+    normalized into ``Message``, ``pos`` dropped. Apply it last, so the
+    Python UDF runs in as few tasks and jobs as the plan allows."""
+    return detail.select(
+        "id",
+        "runtime_date",
+        "sum_ms",
+        "cnt",
+        "load_time",
+        normalize_messages(F.col("raw_messages")).alias("Message"),
+        "source_file",
+    )
+
+
 def metrics_detail(spark: SparkSession, path: str) -> DataFrame:
-    """One row per (file, metric entry). Golden: combined_detail_per_file.csv."""
+    """One row per (file, metric entry). Golden: combined_detail_per_file.csv.
+
+    Sorted in one task after a single-partition exchange, and
+    ``Message`` is normalized there: the plan scans the corpus once and
+    runs the Python UDF once per row (module docstring)."""
     detail = detail_from_docs(read_metrics_docs(spark, path))
-    return detail.orderBy("source_file", "pos").drop("pos")
+    return with_message(detail.repartition(1).sortWithinPartitions("source_file", "pos"))
 
 
 def metrics_final(detail: DataFrame) -> DataFrame:

@@ -11,56 +11,73 @@ then ``from_json`` with the strict schema for ``MetricDataResults``.
 
 The ``Messages`` field is heterogeneous (``array<string | object>``,
 e.g. ``result-json-6.json`` holds ``[{"Description": ...}]``), which no
-Spark JSON schema can type (SURVEY.md §7 hard part 1). We extract the
-raw array text with ``get_json_object`` and normalize it with a
-vectorized Pandas UDF that mirrors the reference's fallback chain
-(string → itself; object → first of Message/message/text, else compact
-JSON dump; other → str). This is a deliberate, justified Python escape
-hatch: it runs once per *document*, not per value, so it is never the
-hot path.
+Spark JSON schema can type (SURVEY.md §7 hard part 1). The source keeps
+the raw array text (``get_json_object``) as ``raw_messages`` and does
+not normalize it. :func:`normalize_messages` is the one rule that turns
+it into text: a vectorized Pandas UDF over :func:`normalize_message_doc`,
+which mirrors the reference's fallback chain (string → itself; object →
+first of Message/message/text, else JSON dump; other → str).
+
+Where the UDF sits in a plan decides how often it runs. Catalyst cannot
+push work through or around a Python UDF (Spark SQL paper), and a UDF in
+the scan stage runs again in every job that re-executes that stage —
+including the range-sampling job of a global sort — and pays its
+per-task Python worker cost even when every input is null. So callers
+apply it last: ``pipelines/bonus.metrics_detail`` applies it in the one
+task of its single-partition detail sort, and the streaming twin at the
+end of its plan.
 """
 
 from __future__ import annotations
 
 import json
+import sys
 
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from lion_parcel_etl_spark.schemas import METRICS_DOC
 
+# The UDF calls a module-level function, which cloudpickle would send to
+# Python workers by reference, so workers would have to import this
+# package. Send this module's functions by value instead: the bonus
+# pipeline runs wherever pyspark does.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
-@F.pandas_udf(StringType())
-def _normalize_messages(raw: pd.Series) -> pd.Series:
-    """JSON array text → '; '-joined normalized message strings.
+
+def normalize_message_doc(txt: str | None) -> str:
+    """One document's ``Messages`` JSON text → '; '-joined message strings.
 
     Mirrors extract_messages semantics
     (reference public/lion_parcell_bonus_test_stg.py:161-173).
     """
+    if txt is None:
+        return ""
+    try:
+        msgs = json.loads(txt)
+    except (ValueError, TypeError):
+        return ""
+    if not isinstance(msgs, list):
+        msgs = [msgs]
+    out = []
+    for m in msgs:
+        if isinstance(m, str):
+            out.append(m)
+        elif isinstance(m, dict):
+            val = m.get("Message") or m.get("message") or m.get("text")
+            out.append(val if isinstance(val, str) else json.dumps(m))
+        else:
+            out.append(str(m))
+    return "; ".join(out)
 
-    def one(txt):
-        if txt is None:
-            return ""
-        try:
-            msgs = json.loads(txt)
-        except (ValueError, TypeError):
-            return ""
-        if not isinstance(msgs, list):
-            msgs = [msgs]
-        out = []
-        for m in msgs:
-            if isinstance(m, str):
-                out.append(m)
-            elif isinstance(m, dict):
-                val = m.get("Message") or m.get("message") or m.get("text")
-                out.append(val if isinstance(val, str) else json.dumps(m))
-            else:
-                out.append(str(m))
-        return "; ".join(out)
 
-    return raw.map(one)
+@F.pandas_udf(StringType())
+def normalize_messages(raw_messages: pd.Series) -> pd.Series:
+    """``raw_messages`` text → normalized ``Message`` strings."""
+    return raw_messages.map(normalize_message_doc)
 
 
 def read_metrics_docs(spark: SparkSession, path: str, streaming: bool = False) -> DataFrame:
@@ -68,7 +85,8 @@ def read_metrics_docs(spark: SparkSession, path: str, streaming: bool = False) -
 
     Returns one row per document:
       source_file string, metrics array<struct<Id,Label,Timestamps,Values,StatusCode>>,
-      messages string ('; '-joined, normalized), corrupt boolean.
+      raw_messages string (the raw ``$.Messages`` JSON text, not
+      normalized; see :func:`normalize_messages`), corrupt boolean.
 
     Malformed documents get ``corrupt=true`` and null metrics (the
     skip-on-error analog); callers filter them out.
@@ -89,6 +107,6 @@ def read_metrics_docs(spark: SparkSession, path: str, streaming: bool = False) -
     return parsed.select(
         "source_file",
         F.col("doc.MetricDataResults").alias("metrics"),
-        _normalize_messages(F.col("raw_messages")).alias("messages"),
+        "raw_messages",
         F.col("doc").isNull().alias("corrupt"),
     )

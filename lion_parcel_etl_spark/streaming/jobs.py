@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from lion_parcel_etl_spark.pipelines.bonus import detail_from_docs
+from lion_parcel_etl_spark.pipelines.bonus import detail_from_docs, with_message
 from lion_parcel_etl_spark.sources.metrics_json import read_metrics_docs
 
 EVENTS_SCHEMA = T.StructType(
@@ -54,9 +54,10 @@ EVENTS_SCHEMA = T.StructType(
 
 
 def stream_metrics_detail(spark: SparkSession, path: str) -> DataFrame:
-    """Streaming per-(file, metric) detail rows from a JSON landing dir."""
+    """Streaming per-(file, metric) detail rows from a JSON landing dir;
+    ``Message`` is normalized at the end of the plan, as in batch."""
     docs = read_metrics_docs(spark, path, streaming=True)
-    return detail_from_docs(docs).drop("pos")
+    return with_message(detail_from_docs(docs))
 
 
 def stream_hourly_counts(

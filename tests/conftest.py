@@ -19,8 +19,9 @@ needs_ref = pytest.mark.skipif(
 
 # A small MetricDataResults corpus (FIXTURES.md §5) covering the shapes the
 # bonus pipeline must handle: ids shared across files (m1, m2), several
-# entries in one document, an empty Values array (m3) and an object-valued
-# message.
+# entries in one document, an empty Values array (m3), an object-valued
+# message, and one document (result-json-4) whose Messages reach every
+# branch of the message normalizer.
 _TS = ["2025-08-01T03:15:00+00:00", "2025-08-01T04:15:00+00:00"]
 BONUS_DOCS = {
     "result-json-0.json": {
@@ -53,6 +54,21 @@ BONUS_DOCS = {
         ],
         "Messages": [{"Description": "High Priority Access"}],
     },
+    "result-json-4.json": {
+        "MetricDataResults": [
+            {"Id": "m4", "Label": "FirstByte", "Timestamps": _TS,
+             "Values": [310.0, 290.5], "StatusCode": "Complete"},
+        ],
+        "Messages": [
+            {"Message": "keyed message"},
+            "plain string",
+            {"message": "", "text": "falls through to text"},
+            42.5,
+            True,
+            None,
+            "pengiriman tertunda — été ✓",
+        ],
+    },
 }
 
 
@@ -75,7 +91,7 @@ def bonus_json(tmp_path_factory):
     ``ids`` (final rows) are derived from the documents themselves."""
     d = tmp_path_factory.mktemp("bonus_json")
     for name, doc in BONUS_DOCS.items():
-        (d / name).write_text(json.dumps(doc))
+        (d / name).write_text(json.dumps(doc, ensure_ascii=False), encoding="utf-8")
     metrics = [m for doc in BONUS_DOCS.values() for m in doc["MetricDataResults"]]
     return SimpleNamespace(
         path=str(d),
