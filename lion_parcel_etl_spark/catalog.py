@@ -1,37 +1,66 @@
-"""Parquet-backed warehouse with atomic overwrite semantics.
+"""Parquet-backed warehouse with one atomic write path.
 
 Replaces the reference's Postgres schemas/tables (``CREATE SCHEMA IF NOT
 EXISTS`` at ``public/lion_parcell_bonus_test_stg.py:269-270``,
 truncate-reload at ``public/source_transaction_lion_parcel.py:50-68``).
 
-A table is a directory of parquet files. Overwrites are atomic at the
-directory level: write to ``<table>.__tmp__``, then swap. This is the
+A table is a directory of parquet files. A DataFrame becomes a table
+directory in one place: :meth:`Warehouse.publish` writes it into
+``staging_dir(<table>)`` and installs it with :func:`swap_dir`, at the
+table or at one of its partition directories. This is the
 non-transactional stand-in for Postgres MERGE atomicity documented in
 SURVEY.md §7 hard part 4 — on a real deployment you'd back this with a
 table format (Delta/Iceberg) instead, but the engine API stays the same.
+
+The suffix grammar of the debris a crashed write leaves is defined here
+too: ``<path>.__tmp__<8hex>`` (staged, never installed) and
+``<path>.__old__<8hex>`` (demoted by a swap; next to the table for a
+micro-batch dir). :data:`ORPHAN_NAME` parses it for
+operators/maintenance.vacuum.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+ORPHAN_NAME = re.compile(r"^(?P<base>.+)\.(?P<marker>__tmp__|__old__)[0-9a-f]{8}$")
+BATCH_ID = "__batch_id"
+
+
+def staging_dir(path: str) -> str:
+    """A fresh ``<path>.__tmp__<8hex>`` sibling of ``path`` to stage a
+    write in. Staging next to the table, never inside it, keeps an
+    unfinished write out of every reader's partition discovery."""
+    return f"{path}.__tmp__{uuid.uuid4().hex[:8]}"
+
 
 def swap_dir(tmp: str, dst: str) -> None:
     """Install ``tmp`` at ``dst`` with the crash-recoverable rename
-    protocol every materializer shares (Warehouse.overwrite /
-    append_batch, scd2_apply_partitioned, merge_upsert_partitioned):
-    demote any existing ``dst`` to a ``.__old__<uuid8>`` sibling,
-    rename ``tmp`` in, drop the old copy. ONE source of truth — the
-    ``__tmp__``/``__old__`` suffix grammar is what
-    operators/maintenance.py's orphan recovery parses, so changing the
-    protocol here is the only place it can change. Same-filesystem
-    renames; a crash leaves either a ``__tmp__`` (unfinished, discard)
-    or ``__old__`` (already superseded) orphan for recovery."""
-    old = f"{dst}.__old__{uuid.uuid4().hex[:8]}"
+    protocol every materializer shares. Its callers are
+    Warehouse.publish and the two writers that stage their own output:
+    the bucketed SCD2 first load and ``rebucket`` (via
+    ``scd2._stage_buckets``), and merge_upsert_partitioned's
+    per-partition loop. It demotes any existing ``dst`` to a
+    ``.__old__<uuid8>`` sibling, renames ``tmp`` in and drops the old
+    copy. Same-filesystem renames; a crash leaves either a ``__tmp__``
+    (unfinished, discard) or ``__old__`` (already superseded) orphan for
+    recovery.
+
+    A micro-batch directory (``<table>/__batch_id=<id>``) is demoted
+    next to its TABLE instead. In the table, ``__batch_id=N.__old__x``
+    contains ``=``, so partition discovery would read it as one more
+    batch: readers would count batch N twice until the old copy is
+    gone, and for good after a crash before that. The stream replays an
+    uncommitted batch, so the demoted copy never needs restoring and
+    vacuum removes it."""
+    parent, leaf = os.path.split(dst)
+    near = parent if leaf.startswith(f"{BATCH_ID}=") else dst
+    old = f"{near}.__old__{uuid.uuid4().hex[:8]}"
     if os.path.exists(dst):
         os.rename(dst, old)
     os.rename(tmp, dst)
@@ -80,229 +109,69 @@ class Warehouse:
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.parquet(self.table_path(name))
 
+    def publish(
+        self,
+        df: DataFrame,
+        name: str,
+        dst: str | None = None,
+        partition_by: list[str] | None = None,
+    ) -> str:
+        """Write ``df`` into a staging dir next to table ``name`` and
+        swap it in at ``dst`` (default: the table dir; may be one of its
+        partition directories). A concurrent reader sees the old or the
+        new directory, never a partial write. Returns ``dst``."""
+        table = self.table_path(name)
+        dst = dst or table
+        tmp = staging_dir(table)
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(tmp)
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        swap_dir(tmp, dst)
+        return dst
+
+    def record(self, name: str, *paths: str) -> None:
+        """Attribute the directories a write installed to ``name`` in
+        ``metrics`` (a no-op without one)."""
+        if self.metrics is not None:
+            self.metrics.record_write(name, *paths)
+
     def overwrite(
         self,
         df: DataFrame,
         name: str,
         partition_by: list[str] | None = None,
     ) -> None:
-        """Atomic full-replace (reference K1/K2 truncate-reload semantics).
-
-        Writes to a temp dir then swaps, so a concurrent reader sees
-        either the old or the new table, never a partial write.
-        """
-        final = self.table_path(name)
-        os.makedirs(os.path.dirname(final), exist_ok=True)
-        tmp = f"{final}.__tmp__{uuid.uuid4().hex[:8]}"
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
-        swap_dir(tmp, final)
-        if self.metrics is not None:
-            self.metrics.record_write(name, final)
-
-    def append(
-        self,
-        df: DataFrame,
-        name: str,
-        partition_by: list[str] | None = None,
-    ) -> None:
-        """Append-only write (no swap): the shape for accretive tables
-        — signature stores, history partitions, pair logs. Not atomic
-        against concurrent readers the way overwrite is; a reader may
-        see a partially-moved batch's files (back with a table format
-        for snapshot isolation).
-
-        The batch lands in a private tmp dir and its files are RENAMED
-        into the table (uuid-prefixed names; same-filesystem renames),
-        so both the write and the metrics attribution are
-        O(files-just-written) — never a walk of the accreted table,
-        which for a long-lived store would grow with table age."""
-        final = self.table_path(name)
-        os.makedirs(final, exist_ok=True)
-        tmp = f"{final}.__tmp__{uuid.uuid4().hex[:8]}"
-        writer = df.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
-        moved: list[str] = []
-        for dirpath, _dirs, files in os.walk(tmp):
-            rel = os.path.relpath(dirpath, tmp)
-            for f in files:
-                if not f.endswith(".parquet"):
-                    continue
-                dstdir = final if rel == "." else os.path.join(final, rel)
-                os.makedirs(dstdir, exist_ok=True)
-                dst = os.path.join(dstdir, f"{uuid.uuid4().hex[:8]}-{f}")
-                os.rename(os.path.join(dirpath, f), dst)
-                moved.append(dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        if self.metrics is not None:
-            self.metrics.record_files(name, sorted(moved))
+        """Atomic full-replace (reference K1/K2 truncate-reload semantics)."""
+        self.record(name, self.publish(df, name, partition_by=partition_by))
 
     def append_batch(self, df: DataFrame, name: str, batch_id: int | str) -> None:
         """Idempotent append for checkpointed micro-batch writers: the
-        batch lands in a ``__batch_id=<id>`` partition directory that is
-        swapped atomically, so a checkpoint REPLAY of the same batch
-        rewrites its own directory instead of duplicating rows — the
-        plain-parquet stand-in for a table format's transactional
-        append. Readers see ``__batch_id`` as a partition column; select
-        explicit columns (or drop it) downstream.
+        batch is published to a ``__batch_id=<id>`` partition directory,
+        so a checkpoint REPLAY of the same batch rewrites its own
+        directory instead of duplicating rows — the plain-parquet
+        stand-in for a table format's transactional append. Readers see
+        ``__batch_id`` as a partition column; select explicit columns
+        (or drop it) downstream.
 
-        The scratch dirs live OUTSIDE the readable table directory
-        (siblings of the TABLE, not of the batch dir): a name like
-        ``__batch_id=N.__tmp__x`` inside the table contains ``=``, so
-        partition discovery would read it as a real partition and a
-        crashed or in-flight replay would double-count the batch for
-        every concurrent reader. Out-of-tree scratch keeps readers on
-        committed batches only; crash windows recover by checkpoint
-        REPLAY of the uncommitted batch (the stream's contract), and
-        vacuum removes the stale scratch by the shared suffix grammar.
+        Neither the staged batch (:func:`staging_dir`) nor the committed
+        copy a replay demotes (:func:`swap_dir`) is ever inside the
+        table: a name like ``__batch_id=N.__tmp__x`` contains ``=``, so
+        partition discovery would read it as a real partition and
+        double-count batch N for every reader. A crash anywhere in the
+        write leaves readers on committed batches only (batch N is
+        missing after a crash between the swap's two renames); the
+        stream recovers by checkpoint REPLAY, and vacuum removes the
+        debris next to the table.
         """
-        table = self.table_path(name)
-        final = os.path.join(table, f"__batch_id={batch_id}")
-        os.makedirs(table, exist_ok=True)
-        tmp = f"{table}.__tmp__{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(tmp)
-        old = f"{table}.__old__{uuid.uuid4().hex[:8]}"
-        if os.path.exists(final):
-            os.rename(final, old)
-        os.rename(tmp, final)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if self.metrics is not None:
-            self.metrics.record_write(name, final)
+        dst = os.path.join(self.table_path(name), f"{BATCH_ID}={batch_id}")
+        self.record(name, self.publish(df, name, dst))
 
     def drop(self, name: str) -> None:
         path = self.table_path(name)
         if os.path.exists(path):
             shutil.rmtree(path)
-
-
-class VersionedTable:
-    """Snapshot-versioned table: immutable version directories plus an
-    atomically-flipped ``_current`` pointer file — the plain-parquet
-    stand-in for a table format's commit log (Delta/Iceberg style,
-    public design), one step up from ``Warehouse.overwrite``'s
-    directory swap:
-
-    - **commit** writes a brand-new ``_versions/v<N>`` directory and
-      only then flips the pointer (``os.replace`` — atomic on POSIX).
-      A crash before the flip leaves an orphan data dir and an intact
-      previous version; readers can never observe a partial commit.
-    - **read(version=…)** is table-level time travel; concurrent
-      readers of an old snapshot are unaffected by later commits
-      because version directories are never mutated.
-    - **rollback** is a pointer flip — O(1) undo, no data movement.
-    - **vacuum** deletes unreferenced version dirs beyond
-      ``keep_last`` (and orphans from crashed commits), bounding
-      storage like a table format's retention policy.
-
-    Single-writer, like the rest of the Warehouse; a real deployment
-    swaps this class for an actual table format behind the same calls.
-    """
-
-    POINTER = "_current"
-    VDIR = "_versions"
-
-    def __init__(self, wh: Warehouse, name: str):
-        self.wh = wh
-        self.path = wh.table_path(name)
-        self.name = name
-
-    def _vpath(self, version: int) -> str:
-        return os.path.join(self.path, self.VDIR, f"v{version:08d}")
-
-    def versions(self) -> list[int]:
-        """COMMITTED versions only: a directory counts when Spark's
-        ``_SUCCESS`` marker exists, so a commit that crashed mid-write
-        (no marker) is invisible to versions()/read()/rollback() — the
-        guarantee that readers never observe a partial commit holds
-        even for explicitly-addressed versions."""
-        vdir = os.path.join(self.path, self.VDIR)
-        if not os.path.isdir(vdir):
-            return []
-        out = []
-        for d in os.listdir(vdir):
-            if (
-                d.startswith("v")
-                and d[1:].isdigit()
-                and os.path.isfile(os.path.join(vdir, d, "_SUCCESS"))
-            ):
-                out.append(int(d[1:]))
-        return sorted(out)
-
-    def _all_version_dirs(self) -> list[int]:
-        """Every v-numbered directory, committed or orphaned — the
-        numbering domain for the next commit and vacuum's sweep set."""
-        vdir = os.path.join(self.path, self.VDIR)
-        if not os.path.isdir(vdir):
-            return []
-        return sorted(
-            int(d[1:])
-            for d in os.listdir(vdir)
-            if d.startswith("v") and d[1:].isdigit()
-        )
-
-    def current_version(self) -> int | None:
-        ptr = os.path.join(self.path, self.POINTER)
-        if not os.path.isfile(ptr):
-            return None
-        with open(ptr) as f:
-            return int(f.read().strip()[1:])
-
-    def commit(self, df: DataFrame, partition_by: list[str] | None = None) -> int:
-        # number past orphans too, so a crashed v<N> slot is never reused
-        version = (self._all_version_dirs() or [0])[-1] + 1
-        target = self._vpath(version)
-        os.makedirs(os.path.dirname(target), exist_ok=True)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(target)
-        self._flip(version)
-        if self.wh.metrics is not None:
-            self.wh.metrics.record_write(self.name, target)
-        return version
-
-    def _flip(self, version: int) -> None:
-        ptr = os.path.join(self.path, self.POINTER)
-        tmp = f"{ptr}.__tmp__{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(f"v{version:08d}")
-        os.replace(tmp, ptr)
-
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        if version is None:
-            version = self.current_version()
-            if version is None:
-                raise FileNotFoundError(f"{self.name}: no committed version")
-        if version not in self.versions():
-            raise FileNotFoundError(f"{self.name}: version {version} not committed")
-        return spark.read.parquet(self._vpath(version))
-
-    def rollback(self, version: int) -> None:
-        if version not in self.versions():
-            raise FileNotFoundError(f"{self.name}: version {version} not committed")
-        self._flip(version)
-
-    def vacuum(self, keep_last: int = 2) -> list[str]:
-        """Drop version dirs older than the newest ``keep_last`` —
-        including orphans from crashed commits — but never the current
-        pointer's target (a rolled-back current survives even when
-        old). Returns removed paths."""
-        cur = self.current_version()
-        vs = self.versions()
-        keep = set(vs[-keep_last:]) if keep_last > 0 else set()
-        if cur is not None:
-            keep.add(cur)
-        removed = []
-        for v in self._all_version_dirs():
-            if v not in keep:
-                shutil.rmtree(self._vpath(v))
-                removed.append(self._vpath(v))
-        return removed
 
 
 def write_csv(df: DataFrame, path: str) -> None:

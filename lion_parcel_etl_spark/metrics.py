@@ -86,29 +86,15 @@ class RunMetrics:
         self.writes.append(wm)
         return wm
 
-    def record_write(self, table: str, path: str) -> WriteMetrics:
-        return self._add(table, *scan_parquet_dir(path))
-
-    def record_dirs(self, table: str, paths: list[str]) -> WriteMetrics:
-        """One WriteMetrics over several directories — the partitioned
-        materializers' shape, where a run swaps/appends a subset of
-        partition directories and only those count as 'written'."""
+    def record_write(self, table: str, *paths: str) -> WriteMetrics:
+        """One WriteMetrics over the directories a write installed: the
+        whole table for an overwrite, or only the partition, bucket or
+        batch directories a partitioned materializer swapped."""
         rows = size = files = 0
         for p in paths:
             r, s, f = scan_parquet_dir(p)
             rows, size, files = rows + r, size + s, files + f
         return self._add(table, rows, size, files)
-
-    def record_files(self, table: str, paths: list[str]) -> WriteMetrics:
-        """One WriteMetrics over an explicit file list — the append
-        shape, where only the files a batch just added count."""
-        import pyarrow.parquet as pq
-
-        rows = size = 0
-        for fp in paths:
-            rows += pq.ParquetFile(fp).metadata.num_rows
-            size += os.path.getsize(fp)
-        return self._add(table, rows, size, len(paths))
 
     def mark(self) -> int:
         """Position marker; writes[mark:] are the ones since (for

@@ -19,7 +19,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from lion_parcel_etl_spark.catalog import Warehouse
+from lion_parcel_etl_spark.catalog import ORPHAN_NAME, Warehouse
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
@@ -75,7 +75,8 @@ def compact(
 
 def vacuum(wh: Warehouse, min_age_seconds: float = 3600.0) -> list[str]:
     """Clean up ``.__tmp__*`` / ``.__old__*`` directories left by a
-    writer that crashed between its write and its swap.
+    writer that crashed between its write and its swap (the suffix
+    grammar is ``catalog.ORPHAN_NAME``).
 
     Crash-recovery rule first, deletion second: a swap renames
     ``base -> base.__old__x`` and then ``tmp -> base``; a crash between
@@ -93,11 +94,8 @@ def vacuum(wh: Warehouse, min_age_seconds: float = 3600.0) -> list[str]:
 
     Returns the removed paths (restores are not in the list).
     """
-    import re
     import shutil
     import time
-
-    pat = re.compile(r"^(?P<base>.+)\.(?P<marker>__tmp__|__old__)[0-9a-f]{8}$")
 
     def newest_mtime(path: str) -> float:
         newest = os.path.getmtime(path)
@@ -113,7 +111,7 @@ def vacuum(wh: Warehouse, min_age_seconds: float = 3600.0) -> list[str]:
     cutoff = time.time() - min_age_seconds
     for dirpath, dirnames, _files in os.walk(wh.root):
         for d in list(dirnames):
-            m = pat.match(d)
+            m = ORPHAN_NAME.match(d)
             if not m:
                 continue
             full = os.path.join(dirpath, d)

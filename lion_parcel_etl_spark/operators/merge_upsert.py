@@ -120,9 +120,8 @@ def merge_upsert_partitioned(
     """
     import os
     import shutil
-    import uuid
 
-    from lion_parcel_etl_spark.catalog import swap_dir
+    from lion_parcel_etl_spark.catalog import staging_dir, swap_dir
 
     if not warehouse.exists(table):
         warehouse.overwrite(updates, table, partition_by=[partition_col])
@@ -168,7 +167,7 @@ def merge_upsert_partitioned(
     merged = merge_upsert(affected, updates, keys)
 
     table_dir = warehouse.table_path(table)
-    tmp = f"{table_dir}.__tmp__{uuid.uuid4().hex[:8]}"
+    tmp = staging_dir(table_dir)
     merged.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
     # Swap every partition directory Spark actually wrote, DISCOVERED by
     # listing the tmp output — never reconstructed from str(value), whose
@@ -183,10 +182,9 @@ def merge_upsert_partitioned(
         swap_dir(src, os.path.join(table_dir, entry))
         swapped.append(entry[len(prefix):])
     shutil.rmtree(tmp, ignore_errors=True)
-    if getattr(warehouse, "metrics", None) is not None and swapped:
-        warehouse.metrics.record_dirs(
-            table,
-            [os.path.join(table_dir, f"{prefix}{p}") for p in swapped],
+    if swapped:
+        warehouse.record(
+            table, *(os.path.join(table_dir, f"{prefix}{p}") for p in swapped)
         )
     if raw_parts and not swapped:
         # merge_upsert never drops update rows, so an empty swap set means

@@ -200,9 +200,6 @@ def scd2_apply_partitioned(
     """
     import hashlib
     import os
-    import uuid
-
-    from lion_parcel_etl_spark.catalog import swap_dir
 
     STATE = "state"
     state_col = F.when(F.col("is_current"), F.lit("current")).otherwise(F.lit("history"))
@@ -225,30 +222,26 @@ def scd2_apply_partitioned(
     newly_expired = out.filter(~F.col("is_current"))
 
     table_dir = warehouse.table_path(table)
-    # Idempotent history append: write this run's expired versions to a
-    # tmp dir, then swap into a run_ts-keyed subdirectory of the
-    # history partition. The digest (not the raw timestamp) names the
-    # dir so ':' and other chars never meet filesystem escaping.
+    # Idempotent history append: publish this run's expired versions to
+    # a run_ts-keyed subdirectory of the history partition (publish
+    # creates the partition dir, which an all-current initial load
+    # lacks). The digest (not the raw timestamp) names the dir so ':'
+    # and other chars never meet filesystem escaping.
     run_dir = os.path.join(
         table_dir,
         f"{STATE}=history",
         f"run-{hashlib.md5(run_ts.encode()).hexdigest()[:12]}",
     )
-    hist_tmp = f"{table_dir}.__tmp__{uuid.uuid4().hex[:8]}"
-    newly_expired.write.parquet(hist_tmp)
-    # an all-current initial load creates no history partition dir
-    os.makedirs(os.path.dirname(run_dir), exist_ok=True)
-    swap_dir(hist_tmp, run_dir)
-
-    tmp = f"{table_dir}.__tmp__{uuid.uuid4().hex[:8]}"
-    new_current.write.parquet(tmp)
-    out.unpersist()
-    dst = os.path.join(table_dir, f"{STATE}=current")
-    swap_dir(tmp, dst)
-    if getattr(warehouse, "metrics", None) is not None:
-        # this run's writes = the swapped current partition plus its
-        # run-keyed history subdirectory (isolated per run by design)
-        warehouse.metrics.record_dirs(table, [dst, run_dir])
+    try:
+        warehouse.publish(newly_expired, table, run_dir)
+        cur_dir = warehouse.publish(
+            new_current, table, os.path.join(table_dir, f"{STATE}=current")
+        )
+    finally:
+        out.unpersist()
+    # this run's writes = the swapped current partition plus its
+    # run-keyed history subdirectory (isolated per run by design)
+    warehouse.record(table, cur_dir, run_dir)
 
 
 def bucket_of(key: list[str], n_buckets: int, key_types: list[str] | None = None):
@@ -297,17 +290,19 @@ def _write_marker(marker: str, n_buckets: int, key_types: list[str]) -> None:
     the key columns' canonical Spark dtypes (simpleString form)."""
     import json
     import os
-    import uuid
 
-    tmp = f"{marker}.__tmp__{uuid.uuid4().hex[:8]}"
+    from lion_parcel_etl_spark.catalog import staging_dir
+
+    tmp = staging_dir(marker)
     with open(tmp, "w") as mf:
         mf.write(f"{n_buckets}\n{json.dumps(key_types)}\n")
     os.replace(tmp, marker)
 
 
-def _read_marker(marker: str) -> tuple[str | None, list[str] | None]:
-    """Read (bucket-count string, key dtypes or None). Tolerates the
-    pre-round-6 single-line format (no dtype line)."""
+def _read_marker(marker: str, table: str) -> tuple[str | None, list[str] | None]:
+    """Read (bucket-count string, key dtypes); (None, None) when the
+    table has no marker. A marker without its dtype line is refused:
+    the key dtypes decide every row's bucket."""
     import json
     import os
 
@@ -315,10 +310,12 @@ def _read_marker(marker: str) -> tuple[str | None, list[str] | None]:
         return None, None
     with open(marker) as mf:
         lines = mf.read().splitlines()
-    if not lines:
-        return None, None
-    types = json.loads(lines[1]) if len(lines) > 1 and lines[1].strip() else None
-    return lines[0].strip(), types
+    if len(lines) < 2 or not lines[1].strip():
+        raise ValueError(
+            f"{table!r} bucket marker {marker} has no key-dtype line; "
+            "reload the table with scd2_apply_bucketed"
+        )
+    return lines[0].strip(), json.loads(lines[1])
 
 
 def scd2_apply_bucketed(
@@ -385,9 +382,8 @@ def scd2_apply_bucketed(
     overhead — use :func:`scd2_apply_partitioned` for that regime."""
     import hashlib
     import os
-    import uuid
 
-    from lion_parcel_etl_spark.catalog import swap_dir
+    from lion_parcel_etl_spark.catalog import staging_dir, swap_dir
 
     if n_buckets < 1 or n_buckets > 4096:
         raise ValueError(f"n_buckets={n_buckets} outside [1, 4096]")
@@ -416,16 +412,15 @@ def scd2_apply_bucketed(
         full = scd2_apply(
             None, snapshot, key, tracked, snapshot_ts_col, run_ts
         ).withColumn("__b", bexpr)
-        tmp_root = f"{table_dir}.__tmp__{uuid.uuid4().hex[:8]}"
+        tmp_root = staging_dir(table_dir)
         _stage_buckets(full, tmp_root)
         _write_marker(marker, n_buckets, key_types)
         os.makedirs(os.path.dirname(cur_root), exist_ok=True)
         swap_dir(tmp_root, cur_root)
-        if getattr(warehouse, "metrics", None) is not None:
-            warehouse.metrics.record_dirs(table, [cur_root])
+        warehouse.record(table, cur_root)
         return
 
-    stored, key_types = _read_marker(marker)
+    stored, key_types = _read_marker(marker, table)
     if stored != str(n_buckets):
         raise ValueError(
             f"{table!r} current partition exists with bucket marker "
@@ -433,16 +428,6 @@ def scd2_apply_bucketed(
             "was loaded with a different bucket count (or by "
             "scd2_apply_partitioned); re-load before switching layouts"
         )
-    if key_types is None:
-        # pre-round-6 marker without a dtype line: recover the
-        # canonical types from any existing bucket's footer (schema
-        # read only) and upgrade the marker in place.
-        existing = sorted(
-            d for d in os.listdir(cur_root) if d.startswith("bucket-")
-        )
-        sch = spark.read.parquet(os.path.join(cur_root, existing[0])).schema
-        key_types = [sch[k].dataType.simpleString() for k in key]
-        _write_marker(marker, n_buckets, key_types)
     # Canonicalize the snapshot's key dtypes BEFORE anything hashes or
     # joins on them: Murmur3 hashes int vs bigint differently, so an
     # uncast drifted snapshot would compute a wrong touched-bucket set
@@ -476,20 +461,12 @@ def scd2_apply_bucketed(
             # the bucket sees no changes and must not replace the
             # existing record with an empty one
             if expired_b.limit(1).count() > 0:
-                tmp = f"{table_dir}.__tmp__{uuid.uuid4().hex[:8]}"
-                expired_b.write.parquet(tmp)
-                os.makedirs(hist_root, exist_ok=True)
-                swap_dir(tmp, run_dir)
-                written.append(run_dir)
+                written.append(warehouse.publish(expired_b, table, run_dir))
             cur_b = out.filter(F.col("is_current") & (F.col("__b") == b)).drop("__b")
-            tmp = f"{table_dir}.__tmp__{uuid.uuid4().hex[:8]}"
-            cur_b.write.parquet(tmp)
-            swap_dir(tmp, bucket_dir(b))
-            written.append(bucket_dir(b))
+            written.append(warehouse.publish(cur_b, table, bucket_dir(b)))
     finally:
         out.unpersist()
-    if getattr(warehouse, "metrics", None) is not None:
-        warehouse.metrics.record_dirs(table, written)
+    warehouse.record(table, *written)
 
 
 def rebucket(
@@ -525,9 +502,8 @@ def rebucket(
     Returns ``{"rows": n, "n_old": old_count, "n_new": n_new}`` for
     the SCALE.md migration-cost ledger."""
     import os
-    import uuid
 
-    from lion_parcel_etl_spark.catalog import swap_dir
+    from lion_parcel_etl_spark.catalog import staging_dir, swap_dir
 
     if n_new < 1 or n_new > 4096:
         raise ValueError(f"n_new={n_new} outside [1, 4096]")
@@ -537,22 +513,18 @@ def rebucket(
     marker = f"{table_dir}.__buckets__"
     if not os.path.isdir(cur_root):
         raise ValueError(f"{table!r} has no current partition to rebucket")
-    stored, key_types = _read_marker(marker)
+    stored, key_types = _read_marker(marker, table)
     if stored is None:
         raise ValueError(
             f"{table!r} has no bucket marker — it was not loaded by "
             "scd2_apply_bucketed; nothing to rebucket"
         )
     existing = sorted(d for d in os.listdir(cur_root) if d.startswith("bucket-"))
-    if key_types is None:
-        sch = spark.read.parquet(os.path.join(cur_root, existing[0])).schema
-        key_types = [sch[k].dataType.simpleString() for k in key]
     cur = spark.read.parquet(*[os.path.join(cur_root, d) for d in existing])
     n_rows = cur.count()
-    tmp_root = f"{table_dir}.__tmp__{uuid.uuid4().hex[:8]}"
+    tmp_root = staging_dir(table_dir)
     _stage_buckets(cur.withColumn("__b", bucket_of(key, n_new, key_types)), tmp_root)
     swap_dir(tmp_root, cur_root)
     _write_marker(marker, n_new, key_types)
-    if getattr(warehouse, "metrics", None) is not None:
-        warehouse.metrics.record_dirs(table, [cur_root])
+    warehouse.record(table, cur_root)
     return {"rows": int(n_rows), "n_old": int(stored), "n_new": n_new}

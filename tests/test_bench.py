@@ -1,6 +1,7 @@
 """bench.measure, the one timing protocol behind bench.py and
 tools/bench_isolated.py, the floor-exceeder selection, the bench lists
-derived from the query registry, and the session-store table."""
+derived from the query registry, the session-store table, and the
+engine names perfbench's tracer patches."""
 
 from __future__ import annotations
 
@@ -110,3 +111,42 @@ def test_exceeders_select_by_ratio_and_slack():
         "no_floor": 100.0,
     }
     assert bench.exceeders(timings, floors) == ["ratio_above", "slack_above"]
+
+
+def test_perfbench_patch_targets_resolve():
+    """Every (owner, attr) perfbench/spans.PATCHES wraps still exists,
+    so an engine rename cannot silently drop a traced layer."""
+    from perfbench.spans import PATCHES, _resolve
+
+    missing = [
+        (path, attr)
+        for path, attr, _span in PATCHES
+        if not callable(getattr(_resolve(path), attr, None))
+    ]
+    assert missing == []
+
+
+def test_overwrite_swaps_and_records_once(spark, tmp_path, monkeypatch):
+    """One Warehouse.overwrite goes through catalog.swap_dir and
+    RunMetrics.record_write exactly once each, the module attributes
+    perfbench's catalog.swap and metrics.record_write spans wrap."""
+    import lion_parcel_etl_spark.catalog as cat
+    from lion_parcel_etl_spark.metrics import RunMetrics
+
+    calls = Counter()
+
+    def counting(owner, attr):
+        real = getattr(owner, attr)
+
+        def wrapper(*args, **kwargs):
+            calls[attr] += 1
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(owner, attr, wrapper)
+
+    counting(cat, "swap_dir")
+    counting(RunMetrics, "record_write")
+    rm = RunMetrics()
+    cat.Warehouse(str(tmp_path / "wh"), metrics=rm).overwrite(spark.range(3), "t")
+    assert calls == {"swap_dir": 1, "record_write": 1}
+    assert [w.rows for w in rm.writes] == [3]

@@ -448,6 +448,29 @@ def test_scd2_bucketed_rejects_bucket_count_change(spark, tmp_path):
         )
 
 
+def test_scd2_bucketed_marker_without_dtype_line_is_refused(spark, tmp_path):
+    """A one-line bucket marker (no key-dtype line) names the table and
+    asks for a reload, in both the apply and the rebucket path."""
+    import os
+
+    from lion_parcel_etl_spark.catalog import Warehouse
+    from lion_parcel_etl_spark.operators.scd2 import rebucket, scd2_apply_bucketed
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    table_dir = wh.table_path("dim")
+    os.makedirs(os.path.join(table_dir, "state=current"))
+    with open(f"{table_dir}.__buckets__", "w") as mf:
+        mf.write("4\n")
+    snap = _scd_snap(spark, [(1, "A")], "2024-01-01 00:00:00")
+    with pytest.raises(ValueError, match="'dim'.*reload"):
+        scd2_apply_bucketed(
+            spark, wh, "dim", snap, ["id"], ["status"], "snap_ts",
+            "2024-01-01 01:00:00", n_buckets=4,
+        )
+    with pytest.raises(ValueError, match="'dim'.*reload"):
+        rebucket(spark, wh, "dim", ["id"], 8)
+
+
 def test_scd2_bucketed_first_load_crash_converges(spark, tmp_path, monkeypatch):
     """Crash during the FIRST load's single current-partition swap:
     no partial current partition is ever visible (cur_root absent —
@@ -692,3 +715,100 @@ def test_merge_partitioned_crash_before_any_swap_leaves_table_untouched(
         (1, "new", "d1"),
         (3, "old", "d2"),
     }
+
+
+def test_append_batch_crash_before_swap_keeps_committed_batches(
+    spark, tmp_path, monkeypatch
+):
+    """A crash in the swap of batch 1 leaves batch 0 as the table, the
+    staging dir outside the table for vacuum, and a checkpoint replay
+    of batch 1 converges without duplicates."""
+    import os
+
+    from lion_parcel_etl_spark.catalog import Warehouse
+    from lion_parcel_etl_spark.operators.maintenance import vacuum
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.append_batch(spark.range(10), "log", 0)
+    state = _crash_swap_on(monkeypatch, "__batch_id=1")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        wh.append_batch(spark.range(10, 15), "log", 1)
+
+    def rows():
+        return sorted((r["__batch_id"], r.id) for r in wh.read(spark, "log").collect())
+
+    assert rows() == [(0, i) for i in range(10)]
+    table = wh.table_path("log")
+    orphans = _orphans(wh)
+    assert orphans and all(
+        os.path.dirname(p) == os.path.dirname(table) and "__tmp__" in p
+        for p in orphans
+    )
+    assert sorted(vacuum(wh, min_age_seconds=0)) == sorted(orphans)
+    assert not _orphans(wh)
+
+    state["armed"] = False
+    wh.append_batch(spark.range(10, 15), "log", 1)
+    assert rows() == [(0, i) for i in range(10)] + [(1, i) for i in range(10, 15)]
+
+
+@pytest.mark.parametrize("window", ["between_renames", "after_renames"])
+def test_append_batch_replay_crash_never_duplicates_batch(
+    spark, tmp_path, monkeypatch, window
+):
+    """A replay of committed batch 1 crashes inside its swap: between
+    the two renames (batch 1 demoted, replay not yet installed) or after
+    them (before the demoted copy is deleted). The demoted copy is a
+    sibling of the table, so reads never see batch 1 twice and
+    ``__batch_id`` stays an integer column; vacuum removes the debris
+    and a disarmed replay converges."""
+    import os
+    import shutil
+
+    from lion_parcel_etl_spark.catalog import Warehouse
+    from lion_parcel_etl_spark.operators.maintenance import vacuum
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.append_batch(spark.range(10), "log", 0)
+    wh.append_batch(spark.range(10, 15), "log", 1)
+    state = {"armed": True}
+    if window == "between_renames":
+        real_rename = os.rename
+
+        def rename(src, dst):
+            if state["armed"] and "__tmp__" in str(src) and str(dst).endswith(
+                "__batch_id=1"
+            ):
+                raise RuntimeError("injected crash between renames")
+            real_rename(src, dst)
+
+        monkeypatch.setattr(os, "rename", rename)
+    else:
+        real_rmtree = shutil.rmtree
+
+        def rmtree(path, *a, **kw):
+            if state["armed"] and "__old__" in str(path):
+                raise RuntimeError("injected crash after renames")
+            real_rmtree(path, *a, **kw)
+
+        monkeypatch.setattr(shutil, "rmtree", rmtree)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        wh.append_batch(spark.range(10, 15), "log", 1)
+    state["armed"] = False
+
+    def rows():
+        return sorted((r["__batch_id"], r.id) for r in wh.read(spark, "log").collect())
+
+    batch0 = [(0, i) for i in range(10)]
+    batch1 = [(1, i) for i in range(10, 15)]
+    assert rows() == (batch0 if window == "between_renames" else batch0 + batch1)
+    table = wh.table_path("log")
+    orphans = _orphans(wh)
+    assert orphans and all(
+        os.path.dirname(p) == os.path.dirname(table) for p in orphans
+    )
+    assert sorted(vacuum(wh, min_age_seconds=0)) == sorted(orphans)
+    assert not _orphans(wh)
+
+    wh.append_batch(spark.range(10, 15), "log", 1)
+    assert rows() == batch0 + batch1

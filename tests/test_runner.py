@@ -273,20 +273,6 @@ def test_partitioned_merge_records_swapped_partitions_only(spark, tmp_path):
     assert new[0].rows == 10
 
 
-def test_append_metrics_record_batch_only(spark, tmp_path):
-    """Warehouse.append attributes rows/bytes of THIS append, not the
-    accreted table."""
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.metrics import RunMetrics
-
-    rm = RunMetrics()
-    wh = Warehouse(str(tmp_path / "wh"), metrics=rm)
-    wh.append(spark.range(10), "log")
-    wh.append(spark.range(3), "log")
-    assert [w.rows for w in rm.writes] == [10, 3]
-    assert wh.read(spark, "log").count() == 13
-
-
 def _hourly(pipeline_runs: list):
     """A one-task pipeline that logs each run's injected timestamps."""
     p = Pipeline("hourly")
