@@ -4,7 +4,8 @@ Replaces the reference's Postgres schemas/tables (``CREATE SCHEMA IF NOT
 EXISTS`` at ``public/lion_parcell_bonus_test_stg.py:269-270``,
 truncate-reload at ``public/source_transaction_lion_parcel.py:50-68``).
 
-A table is a directory of parquet files. A DataFrame becomes a table
+A table is a directory of parquet files plus a ``_schema.json`` file at
+its root holding the table's Spark schema. A DataFrame becomes a table
 directory in one place: :meth:`Warehouse.publish` writes it into
 ``staging_dir(<table>)`` and installs it with :func:`swap_dir`, at the
 table or at one of its partition directories. This is the
@@ -12,24 +13,41 @@ non-transactional stand-in for Postgres MERGE atomicity documented in
 SURVEY.md §7 hard part 4 — on a real deployment you'd back this with a
 table format (Delta/Iceberg) instead, but the engine API stays the same.
 
+The schema file plays the role of Postgres's catalog (or a Hive
+metastore, or a Delta log): :meth:`Warehouse.read` hands it to
+``spark.read.schema``, so a read runs no schema-inference job and
+partition columns keep their written types (a boolean partition reads
+back as a boolean, not a string). Only a write that installs the table
+root defines it; a partition-level install keeps the table's schema.
+Spark, pyarrow and :func:`~lion_parcel_etl_spark.metrics.scan_parquet_dir`
+all skip the ``_``-prefixed file. A table without it — an
+:meth:`Warehouse.append_batch` table, whose batches may drift — is read
+by inference.
+
 The suffix grammar of the debris a crashed write leaves is defined here
-too: ``<path>.__tmp__<8hex>`` (staged, never installed) and
-``<path>.__old__<8hex>`` (demoted by a swap; next to the table for a
-micro-batch dir). :data:`ORPHAN_NAME` parses it for
-operators/maintenance.vacuum.
+too: ``<path>.__tmp__<8hex>`` (staged next to the table, never
+installed) and ``.<leaf>.__old__<8hex>`` (demoted by a swap, in the
+same directory; the ``.`` prefix keeps a demoted partition out of every
+reader's partition discovery). A demoted micro-batch dir goes next to
+the table as ``<table>.__old__<8hex>``. :data:`ORPHAN_NAME` parses both
+for operators/maintenance.vacuum.
 """
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
 import re
 import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
-ORPHAN_NAME = re.compile(r"^(?P<base>.+)\.(?P<marker>__tmp__|__old__)[0-9a-f]{8}$")
+ORPHAN_NAME = re.compile(r"^\.?(?P<base>.+)\.(?P<marker>__tmp__|__old__)[0-9a-f]{8}$")
 BATCH_ID = "__batch_id"
+SCHEMA_FILE = "_schema.json"
 
 
 def staging_dir(path: str) -> str:
@@ -46,26 +64,55 @@ def swap_dir(tmp: str, dst: str) -> None:
     the bucketed SCD2 first load and ``rebucket`` (via
     ``scd2._stage_buckets``), and merge_upsert_partitioned's
     per-partition loop. It demotes any existing ``dst`` to a
-    ``.__old__<uuid8>`` sibling, renames ``tmp`` in and drops the old
-    copy. Same-filesystem renames; a crash leaves either a ``__tmp__``
-    (unfinished, discard) or ``__old__`` (already superseded) orphan for
-    recovery.
+    ``.<leaf>.__old__<uuid8>`` sibling, renames ``tmp`` in and drops the
+    old copy. Same-filesystem renames; a crash leaves either a
+    ``__tmp__`` (unfinished, discard) or ``__old__`` (already superseded,
+    or the only committed copy when the crash fell between the renames)
+    orphan for recovery.
+
+    The ``.`` prefix matters inside a table: a demoted ``state=current``,
+    ``bucket-N`` or ``day=…`` dir named ``day=….__old__x`` would be read
+    as one more partition, so a whole-table read would count its rows
+    twice until the old copy is gone, and for good after a crash before
+    that. Spark and pyarrow skip ``.``-prefixed names.
 
     A micro-batch directory (``<table>/__batch_id=<id>``) is demoted
-    next to its TABLE instead. In the table, ``__batch_id=N.__old__x``
-    contains ``=``, so partition discovery would read it as one more
-    batch: readers would count batch N twice until the old copy is
-    gone, and for good after a crash before that. The stream replays an
-    uncommitted batch, so the demoted copy never needs restoring and
-    vacuum removes it."""
+    next to its TABLE instead. The stream replays an uncommitted batch,
+    so the demoted copy never needs restoring and vacuum removes it."""
     parent, leaf = os.path.split(dst)
-    near = parent if leaf.startswith(f"{BATCH_ID}=") else dst
-    old = f"{near}.__old__{uuid.uuid4().hex[:8]}"
+    if leaf.startswith(f"{BATCH_ID}="):
+        old = f"{parent}.__old__{uuid.uuid4().hex[:8]}"
+    else:
+        old = os.path.join(parent, f".{leaf}.__old__{uuid.uuid4().hex[:8]}")
     if os.path.exists(dst):
         os.rename(dst, old)
     os.rename(tmp, dst)
     if os.path.exists(old):
         shutil.rmtree(old)
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable: the schema
+    Spark's parquet inference reports for the data ``dt`` describes."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _table_schema(df: DataFrame, partition_by: list[str] | None = None) -> T.StructType:
+    """The schema a read of ``df`` written with ``partition_by`` reports:
+    partition columns last, in ``partition_by`` order and their written
+    types; every field nullable."""
+    parts = [p.lower() for p in partition_by or []]
+    data = [f for f in df.schema if f.name.lower() not in parts]
+    last = [f for p in parts for f in df.schema if f.name.lower() == p]
+    return _as_nullable(T.StructType(data + last))
 
 
 class Warehouse:
@@ -107,7 +154,15 @@ class Warehouse:
         return False
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(self.table_path(name))
+        """The table, typed by its ``_schema.json`` (no Spark job), or by
+        parquet schema inference when the table has none."""
+        path = self.table_path(name)
+        try:
+            with open(os.path.join(path, SCHEMA_FILE)) as f:
+                schema = T.StructType.fromJson(json.load(f))
+        except FileNotFoundError:
+            return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
 
     def publish(
         self,
@@ -119,7 +174,11 @@ class Warehouse:
         """Write ``df`` into a staging dir next to table ``name`` and
         swap it in at ``dst`` (default: the table dir; may be one of its
         partition directories). A concurrent reader sees the old or the
-        new directory, never a partial write. Returns ``dst``."""
+        new directory, never a partial write. Returns ``dst``.
+
+        An install at the table dir stages the table's ``_schema.json``
+        with the data, so both swap in together. An install at a
+        partition dir writes none: it keeps the table's schema."""
         table = self.table_path(name)
         dst = dst or table
         tmp = staging_dir(table)
@@ -127,6 +186,9 @@ class Warehouse:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp)
+        if dst == table:
+            with open(os.path.join(tmp, SCHEMA_FILE), "w") as f:
+                f.write(_table_schema(df, partition_by).json())
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         swap_dir(tmp, dst)
         return dst
@@ -164,8 +226,15 @@ class Warehouse:
         missing after a crash between the swap's two renames); the
         stream recovers by checkpoint REPLAY, and vacuum removes the
         debris next to the table.
+
+        An appended table has no ``_schema.json`` (one left by an earlier
+        overwrite is removed): it is read by inference, so a batch whose
+        columns drift is never hidden behind a stale schema.
         """
-        dst = os.path.join(self.table_path(name), f"{BATCH_ID}={batch_id}")
+        table = self.table_path(name)
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(os.path.join(table, SCHEMA_FILE))
+        dst = os.path.join(table, f"{BATCH_ID}={batch_id}")
         self.record(name, self.publish(df, name, dst))
 
     def drop(self, name: str) -> None:

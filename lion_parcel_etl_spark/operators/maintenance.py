@@ -79,7 +79,7 @@ def vacuum(wh: Warehouse, min_age_seconds: float = 3600.0) -> list[str]:
     grammar is ``catalog.ORPHAN_NAME``).
 
     Crash-recovery rule first, deletion second: a swap renames
-    ``base -> base.__old__x`` and then ``tmp -> base``; a crash between
+    ``base -> .base.__old__x`` and then ``tmp -> base``; a crash between
     the two leaves the COMMITTED data only in ``__old__`` with no
     ``base``. Such an ``__old__`` is RESTORED (renamed back to
     ``base``), never deleted — deleting it would turn a recoverable

@@ -138,15 +138,17 @@ def merge_upsert_partitioned(
     t_type = dict(target.dtypes).get(partition_col)
     u_type = dict(updates.dtypes).get(partition_col)
     if t_type != u_type and vals:
-        # Parquet infers partition-directory types on read: a STRING
-        # value like '01' writes day=01 but reads back as int 1, and
-        # sync_columns then re-keys the merged batch to day=1 while the
-        # stale day=01 directory survives the swap — silent duplicate
-        # keys. The mismatch is only dangerous when a value's string
-        # form does NOT survive the cast round-trip ('2024-01-01' ->
-        # date -> '2024-01-01' is fine; '01' -> 1 -> '1' is not), so
-        # check the actual batch values (a tiny driver list) and raise
-        # before corrupting the layout.
+        # The table's partition dtype differs from the batch's: the
+        # table has no _schema.json (partition-directory types are then
+        # inferred, so a STRING value like '01' writes day=01 but reads
+        # back as int 1), or the batch drifted. sync_columns then
+        # re-keys the merged batch to day=1 while the stale day=01
+        # directory survives the swap — silent duplicate keys. The
+        # mismatch is only dangerous when a value's string form does
+        # NOT survive the cast round-trip ('2024-01-01' -> date ->
+        # '2024-01-01' is fine; '01' -> 1 -> '1' is not), so check the
+        # actual batch values (a tiny driver list) and raise before
+        # corrupting the layout.
         rt = (
             spark.createDataFrame([(str(v),) for v in vals], "v string")
             .select(F.col("v").cast(t_type).cast("string").alias("r"), "v")

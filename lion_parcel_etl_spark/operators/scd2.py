@@ -180,9 +180,10 @@ def scd2_apply_partitioned(
     - APPENDS newly-expired versions to the history partition,
     - atomically swaps the (small) current partition.
 
-    ``state`` is a partition-only derivative of ``is_current`` (kept
-    because boolean partition values read back as strings under
-    partition-type inference; the real flag stays a typed data column).
+    ``state`` is a partition-only derivative of ``is_current``; the real
+    flag stays a typed data column. It is kept for the on-disk layout of
+    existing tables, not for typing: the table's ``_schema.json`` would
+    read a boolean partition back as a boolean.
 
     Crash story (chaos-tested in tests/test_maintenance.py): the two
     mutations are BOTH swap_dir renames — the history append lands in
@@ -391,9 +392,10 @@ def scd2_apply_bucketed(
     STATE = "state"
     table_dir = warehouse.table_path(table)
     cur_root = os.path.join(table_dir, f"{STATE}=current")
-    # sidecar NEXT TO the table directory, not inside it: any stray
-    # non-parquet file under the partition tree breaks Spark's footer
-    # reads (even underscore-prefixed ones on the schema-merge path)
+    # sidecar NEXT TO the table directory, not inside it: file listing
+    # reads every name under the table as data except ``_``- and
+    # ``.``-prefixed ones (which is why the table-root ``_schema.json``
+    # is safe), and this marker describes the layout, not the rows
     marker = f"{table_dir}.__buckets__"
 
     def bucket_dir(b: int) -> str:

@@ -58,9 +58,6 @@ def build_retail_pipeline() -> Pipeline:
         staging = wh.read(spark, "stg_retail_transactions")
         snap = retail_snapshot(staging, ctx["run_ts"])
         target = _read_if_exists(wh, spark, "retail_transactions_scd")
-        if target is not None:
-            # partition-column values come back type-inferred as string
-            target = target.withColumn("is_current", F.col("is_current").cast("boolean"))
         out = scd2_apply(
             target, snap, ["id"], SCD_TRACKED, "updated_at", ctx["run_ts"]
         )
@@ -75,9 +72,7 @@ def build_retail_pipeline() -> Pipeline:
         # (SURVEY §5): the constraints its models imply, enforced.
         spark, wh = ctx["spark"], ctx["warehouse"]
         mart = wh.read(spark, "retail_transactions")
-        scd = wh.read(spark, "retail_transactions_scd").withColumn(
-            "is_current", F.col("is_current").cast("boolean")
-        )
+        scd = wh.read(spark, "retail_transactions_scd")
         summary = run_checks(
             {
                 "retail_transactions.id_unique": expect_unique(mart, ["id"]),

@@ -688,6 +688,50 @@ def test_merge_partitioned_crash_mid_swap_loop_recovers(spark, tmp_path, monkeyp
     }
 
 
+def test_merge_partitioned_crash_after_renames_hides_demoted_partition(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after a partition swap's second rename, before the
+    demoted copy is deleted: the copy sits in the table under a
+    ``.``-prefixed name, so a whole-table read counts its rows once (an
+    in-table ``day=d1.__old__x`` would add them again), and vacuum
+    removes it."""
+    import os
+    import shutil
+
+    from lion_parcel_etl_spark.catalog import Warehouse
+    from lion_parcel_etl_spark.operators.maintenance import vacuum
+    from lion_parcel_etl_spark.operators.merge_upsert import merge_upsert_partitioned
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    base = spark.createDataFrame(
+        [(i, "old", f"d{1 + i % 2}") for i in range(6)], "id long, v string, day string"
+    )
+    merge_upsert_partitioned(spark, wh, "mart", base, ["id"], "day")
+    real_rmtree = shutil.rmtree
+    state = {"armed": True}
+
+    def rmtree(path, *a, **kw):
+        if state["armed"] and "__old__" in str(path):
+            raise RuntimeError("injected crash after renames")
+        real_rmtree(path, *a, **kw)
+
+    monkeypatch.setattr(shutil, "rmtree", rmtree)
+    updates = spark.createDataFrame([(2, "new", "d1")], "id long, v string, day string")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        merge_upsert_partitioned(spark, wh, "mart", updates, ["id"], "day")
+    state["armed"] = False
+
+    table = wh.table_path("mart")
+    assert any(d.startswith(".day=d1.__old__") for d in os.listdir(table))
+    want = {(i, "new" if i == 2 else "old", f"d{1 + i % 2}") for i in range(6)}
+    for df in (wh.read(spark, "mart"), spark.read.parquet(table)):
+        got = [(r.id, r.v, r.day) for r in df.collect()]
+        assert len(got) == 6 and set(got) == want
+    assert vacuum(wh, min_age_seconds=0) and not _orphans(wh)
+    assert wh.read(spark, "mart").count() == 6
+
+
 def test_merge_partitioned_crash_before_any_swap_leaves_table_untouched(
     spark, tmp_path, monkeypatch
 ):

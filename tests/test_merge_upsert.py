@@ -207,9 +207,33 @@ def test_merge_null_key_replaces_not_duplicates(spark):
 def test_partitioned_merge_rejects_non_roundtripping_partition_values(  # noqa: E302
     spark, tmp_path
 ):
-    """'01' writes day=01 but reads back as int 1 — the merge must
-    refuse rather than strand the original directory."""
+    """On a table read by inference, '01' writes day=01 but reads back
+    as int 1 — the merge must refuse rather than strand the original
+    directory."""
+    import os
+
     import pytest
+    from lion_parcel_etl_spark.catalog import SCHEMA_FILE, Warehouse
+    from lion_parcel_etl_spark.operators.merge_upsert import (
+        merge_upsert_partitioned,
+    )
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    first = spark.createDataFrame([(1, "a", "01")], "id long, v string, day string")
+    merge_upsert_partitioned(spark, wh, "m", first, ["id"], "day")
+    os.remove(os.path.join(wh.table_path("m"), SCHEMA_FILE))
+    upd = spark.createDataFrame([(1, "b", "01")], "id long, v string, day string")
+    with pytest.raises(ValueError, match="round-trip"):
+        merge_upsert_partitioned(spark, wh, "m", upd, ["id"], "day")
+
+
+def test_partitioned_merge_string_partition_merges_in_place_with_schema_file(
+    spark, tmp_path
+):
+    """With the table's _schema.json, day='01' reads back as the string
+    it was written as, so the merge rewrites day=01 in place."""
+    import os
+
     from lion_parcel_etl_spark.catalog import Warehouse
     from lion_parcel_etl_spark.operators.merge_upsert import (
         merge_upsert_partitioned,
@@ -219,8 +243,10 @@ def test_partitioned_merge_rejects_non_roundtripping_partition_values(  # noqa: 
     first = spark.createDataFrame([(1, "a", "01")], "id long, v string, day string")
     merge_upsert_partitioned(spark, wh, "m", first, ["id"], "day")
     upd = spark.createDataFrame([(1, "b", "01")], "id long, v string, day string")
-    with pytest.raises(ValueError, match="round-trip"):
-        merge_upsert_partitioned(spark, wh, "m", upd, ["id"], "day")
+    assert merge_upsert_partitioned(spark, wh, "m", upd, ["id"], "day") == ["01"]
+    table = wh.table_path("m")
+    assert sorted(d for d in os.listdir(table) if "=" in d) == ["day=01"]
+    assert [tuple(r) for r in wh.read(spark, "m").collect()] == [(1, "b", "01")]
 
 
 def test_schema_drift_replay_mart_continuity(spark, tmp_path):
