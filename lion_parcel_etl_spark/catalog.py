@@ -8,7 +8,9 @@ A table is a directory of parquet files plus a ``_schema.json`` file at
 its root holding the table's Spark schema. A DataFrame becomes a table
 directory in one place: :meth:`Warehouse.publish` writes it into
 ``staging_dir(<table>)`` and installs it with :func:`swap_dir`, at the
-table or at one of its partition directories. This is the
+table root or, for :meth:`Warehouse.append_batch`, at one
+``__batch_id=<id>`` directory of the table. No other module stages or
+swaps a directory. This is the
 non-transactional stand-in for Postgres MERGE atomicity documented in
 SURVEY.md §7 hard part 4 — on a real deployment you'd back this with a
 table format (Delta/Iceberg) instead, but the engine API stays the same.
@@ -18,7 +20,7 @@ metastore, or a Delta log): :meth:`Warehouse.read` hands it to
 ``spark.read.schema``, so a read runs no schema-inference job and
 partition columns keep their written types (a boolean partition reads
 back as a boolean, not a string). Only a write that installs the table
-root defines it; a partition-level install keeps the table's schema.
+root defines it.
 Spark, pyarrow and :func:`~lion_parcel_etl_spark.metrics.scan_parquet_dir`
 all skip the ``_``-prefixed file. A table without it — an
 :meth:`Warehouse.append_batch` table, whose batches may drift — is read
@@ -27,10 +29,12 @@ by inference.
 The suffix grammar of the debris a crashed write leaves is defined here
 too: ``<path>.__tmp__<8hex>`` (staged next to the table, never
 installed) and ``.<leaf>.__old__<8hex>`` (demoted by a swap, in the
-same directory; the ``.`` prefix keeps a demoted partition out of every
-reader's partition discovery). A demoted micro-batch dir goes next to
-the table as ``<table>.__old__<8hex>``. :data:`ORPHAN_NAME` parses both
-for operators/maintenance.vacuum.
+same directory; the ``.`` prefix keeps a demoted directory out of
+every reader's listing). A demoted micro-batch dir goes next to the
+table as ``<table>.__old__<8hex>``. :data:`ORPHAN_NAME` parses both
+for operators/maintenance.vacuum, which also still clears the debris
+an older in-table layout (``state=…``, ``bucket-N``, ``day=…``) left
+inside a table.
 """
 
 from __future__ import annotations
@@ -59,22 +63,16 @@ def staging_dir(path: str) -> str:
 
 def swap_dir(tmp: str, dst: str) -> None:
     """Install ``tmp`` at ``dst`` with the crash-recoverable rename
-    protocol every materializer shares. Its callers are
-    Warehouse.publish and the two writers that stage their own output:
-    the bucketed SCD2 first load and ``rebucket`` (via
-    ``scd2._stage_buckets``), and merge_upsert_partitioned's
-    per-partition loop. It demotes any existing ``dst`` to a
-    ``.<leaf>.__old__<uuid8>`` sibling, renames ``tmp`` in and drops the
-    old copy. Same-filesystem renames; a crash leaves either a
+    protocol; its only caller is Warehouse.publish, so ``dst`` is a
+    table root or a ``__batch_id=<id>`` dir. It demotes any existing
+    ``dst`` to a ``.<leaf>.__old__<uuid8>`` sibling, renames ``tmp`` in
+    and drops the old copy. Same-filesystem renames; a crash leaves either a
     ``__tmp__`` (unfinished, discard) or ``__old__`` (already superseded,
     or the only committed copy when the crash fell between the renames)
     orphan for recovery.
 
-    The ``.`` prefix matters inside a table: a demoted ``state=current``,
-    ``bucket-N`` or ``day=…`` dir named ``day=….__old__x`` would be read
-    as one more partition, so a whole-table read would count its rows
-    twice until the old copy is gone, and for good after a crash before
-    that. Spark and pyarrow skip ``.``-prefixed names.
+    Spark and pyarrow skip the ``.``-prefixed demoted name, so no
+    reader of the database dir mistakes it for data.
 
     A micro-batch directory (``<table>/__batch_id=<id>``) is demoted
     next to its TABLE instead. The stream replays an uncommitted batch,
@@ -168,36 +166,36 @@ class Warehouse:
         self,
         df: DataFrame,
         name: str,
-        dst: str | None = None,
+        batch_id: int | str | None = None,
         partition_by: list[str] | None = None,
     ) -> str:
         """Write ``df`` into a staging dir next to table ``name`` and
-        swap it in at ``dst`` (default: the table dir; may be one of its
-        partition directories). A concurrent reader sees the old or the
-        new directory, never a partial write. Returns ``dst``.
+        swap it in at the table dir, or at its ``__batch_id=<batch_id>``
+        dir when ``batch_id`` is given. A concurrent reader sees the old
+        or the new directory, never a partial write. Returns the
+        installed directory.
 
-        An install at the table dir stages the table's ``_schema.json``
-        with the data, so both swap in together. An install at a
-        partition dir writes none: it keeps the table's schema."""
+        A table-root install stages the table's ``_schema.json`` with
+        the data, so both swap in together. A batch install writes none."""
         table = self.table_path(name)
-        dst = dst or table
+        dst = table if batch_id is None else os.path.join(table, f"{BATCH_ID}={batch_id}")
         tmp = staging_dir(table)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp)
-        if dst == table:
+        if batch_id is None:
             with open(os.path.join(tmp, SCHEMA_FILE), "w") as f:
                 f.write(_table_schema(df, partition_by).json())
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         swap_dir(tmp, dst)
         return dst
 
-    def record(self, name: str, *paths: str) -> None:
-        """Attribute the directories a write installed to ``name`` in
+    def record(self, name: str, path: str) -> None:
+        """Attribute the directory a write installed to ``name`` in
         ``metrics`` (a no-op without one)."""
         if self.metrics is not None:
-            self.metrics.record_write(name, *paths)
+            self.metrics.record_write(name, path)
 
     def overwrite(
         self,
@@ -234,8 +232,7 @@ class Warehouse:
         table = self.table_path(name)
         with contextlib.suppress(FileNotFoundError):
             os.remove(os.path.join(table, SCHEMA_FILE))
-        dst = os.path.join(table, f"{BATCH_ID}={batch_id}")
-        self.record(name, self.publish(df, name, dst))
+        self.record(name, self.publish(df, name, batch_id))
 
     def drop(self, name: str) -> None:
         path = self.table_path(name)

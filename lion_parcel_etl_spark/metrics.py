@@ -80,21 +80,14 @@ class RunMetrics:
         finally:
             self._current.task = prev
 
-    def _add(self, table: str, rows: int, size: int, files: int) -> WriteMetrics:
+    def record_write(self, table: str, path: str) -> WriteMetrics:
+        """One WriteMetrics over the directory a write installed: the
+        whole table for an overwrite, or the one batch directory of an
+        appended micro-batch."""
         task = getattr(self._current, "task", None)
-        wm = WriteMetrics(table, rows, size, files, task)
+        wm = WriteMetrics(table, *scan_parquet_dir(path), task)
         self.writes.append(wm)
         return wm
-
-    def record_write(self, table: str, *paths: str) -> WriteMetrics:
-        """One WriteMetrics over the directories a write installed: the
-        whole table for an overwrite, or only the partition, bucket or
-        batch directories a partitioned materializer swapped."""
-        rows = size = files = 0
-        for p in paths:
-            r, s, f = scan_parquet_dir(p)
-            rows, size, files = rows + r, size + s, files + f
-        return self._add(table, rows, size, files)
 
     def mark(self) -> int:
         """Position marker; writes[mark:] are the ones since (for

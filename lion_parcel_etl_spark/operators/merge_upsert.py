@@ -15,8 +15,9 @@ Scale design (100 TB target):
   the target; the anti-join is marked broadcast-able so Catalyst/AQE
   plans a BroadcastHashJoin — the target is scanned once, never
   shuffled, and no sort is required.
-- With a date/bucket-partitioned target, combine with dynamic partition
-  overwrite so only partitions containing matched keys are rewritten.
+- The caller installs the merged result with one ``Warehouse.overwrite``
+  (a full rewrite); Catalyst still prunes the partitions of any
+  partitioned table on read.
 - ``on_schema_change='sync_all_columns'`` (reference K9) is a pure
   StructType diff, applied before the union.
 """
@@ -90,112 +91,6 @@ def merge_upsert(
         cond = eq if cond is None else cond & eq
     retained = target.join(uk, cond, "left_anti")
     return retained.unionByName(updates)
-
-
-def merge_upsert_partitioned(
-    spark,
-    warehouse,
-    table: str,
-    updates: DataFrame,
-    keys: list[str],
-    partition_col: str,
-) -> list[str]:
-    """Partition-pruned incremental merge: rewrite ONLY the partitions
-    the update batch touches (the SCALE.md contract for merges into a
-    100 TB date-partitioned mart — a day's worth of updates rewrites a
-    day, not the table).
-
-    Mechanics: collect the batch's distinct partition values (an
-    incremental batch touches a handful — this is a tiny driver list),
-    read the target pruned to those partitions (directory-level skip,
-    see tests/test_partition_pruning.py), merge, write the merged
-    partitions to a temp dir, then swap each partition directory
-    atomically. Untouched partitions are never read, shuffled, or
-    rewritten.
-
-    Constraint: ``partition_col`` must be stable per key (a key never
-    moves between partitions) — otherwise the old version in another
-    partition survives. For partition-mobile keys use the full
-    ``merge_upsert`` + ``Warehouse.overwrite`` path.
-    """
-    import os
-    import shutil
-
-    from lion_parcel_etl_spark.catalog import staging_dir, swap_dir
-
-    if not warehouse.exists(table):
-        warehouse.overwrite(updates, table, partition_by=[partition_col])
-        return [str(r[0]) for r in updates.select(partition_col).distinct().collect()]
-
-    raw_parts = [r[0] for r in updates.select(partition_col).distinct().collect()]
-    # Null-safe prune on the ORIGINAL typed values (a string cast would
-    # miss nulls and can disagree with partition-directory escaping).
-    vals = [p for p in raw_parts if p is not None]
-    cond = F.col(partition_col).isin(vals) if vals else F.lit(False)
-    if len(vals) < len(raw_parts):  # batch contains a null partition value
-        cond = cond | F.col(partition_col).isNull()
-    target = warehouse.read(spark, table)
-    t_type = dict(target.dtypes).get(partition_col)
-    u_type = dict(updates.dtypes).get(partition_col)
-    if t_type != u_type and vals:
-        # The table's partition dtype differs from the batch's: the
-        # table has no _schema.json (partition-directory types are then
-        # inferred, so a STRING value like '01' writes day=01 but reads
-        # back as int 1), or the batch drifted. sync_columns then
-        # re-keys the merged batch to day=1 while the stale day=01
-        # directory survives the swap — silent duplicate keys. The
-        # mismatch is only dangerous when a value's string form does
-        # NOT survive the cast round-trip ('2024-01-01' -> date ->
-        # '2024-01-01' is fine; '01' -> 1 -> '1' is not), so check the
-        # actual batch values (a tiny driver list) and raise before
-        # corrupting the layout.
-        rt = (
-            spark.createDataFrame([(str(v),) for v in vals], "v string")
-            .select(F.col("v").cast(t_type).cast("string").alias("r"), "v")
-            .collect()
-        )
-        bad = [r.v for r in rt if r.r != r.v]
-        if bad:
-            raise ValueError(
-                f"partition column {partition_col!r} reads back as {t_type} "
-                f"but the update batch carries {u_type}, and value(s) "
-                f"{bad!r} do not round-trip through that cast: the merged "
-                "write would land in a re-keyed directory while the "
-                "original survives the swap. Use a partition representation "
-                "whose string form round-trips, or the unpartitioned merge "
-                "path."
-            )
-    affected = target.filter(cond)
-    merged = merge_upsert(affected, updates, keys)
-
-    table_dir = warehouse.table_path(table)
-    tmp = staging_dir(table_dir)
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(tmp)
-    # Swap every partition directory Spark actually wrote, DISCOVERED by
-    # listing the tmp output — never reconstructed from str(value), whose
-    # escaping (':' → '%3A', null → __HIVE_DEFAULT_PARTITION__, …) can
-    # differ and would silently rmtree the merged data with the tmp dir.
-    prefix = f"{partition_col}="
-    swapped = []
-    for entry in sorted(os.listdir(tmp)):
-        src = os.path.join(tmp, entry)
-        if not (entry.startswith(prefix) and os.path.isdir(src)):
-            continue
-        swap_dir(src, os.path.join(table_dir, entry))
-        swapped.append(entry[len(prefix):])
-    shutil.rmtree(tmp, ignore_errors=True)
-    if swapped:
-        warehouse.record(
-            table, *(os.path.join(table_dir, f"{prefix}{p}") for p in swapped)
-        )
-    if raw_parts and not swapped:
-        # merge_upsert never drops update rows, so an empty swap set means
-        # the write itself produced nothing — surface it, don't lose data.
-        raise RuntimeError(
-            f"merge_upsert_partitioned: batch touched partitions {raw_parts!r} "
-            f"but the merged write produced no partition directories"
-        )
-    return swapped
 
 
 # numeric widening lattice for union_evolve: the smallest common type

@@ -20,10 +20,12 @@ Re-expresses (not ports) the dbt SCD2 model at reference
 
 Scale design (100 TB target): the snapshot of an incremental run is
 small next to the accumulated history, so the snapshot side of every
-join is broadcast — the target is never shuffled. Partition the stored
-table by ``is_current``: the history partition is append-only (expired
-rows are appended, untouched rows never rewritten) and only the small
-current partition is replaced per run.
+join is broadcast — the target is never shuffled. The caller stores the
+full result with one ``Warehouse.overwrite`` partitioned by
+``is_current`` (``pipelines/dags.py`` ``mart_scd``, the streaming twin
+``stream_scd2``): each run rewrites the whole table, history included.
+An append-only history layout was measured on the retail DAG and was
+slower at its history depth (SCALE.md §Incremental materialization).
 """
 
 from __future__ import annotations
@@ -160,373 +162,3 @@ def scd2_apply(
         .unionByName(new_rows.select(*unchanged.columns))
     )
 
-
-def scd2_apply_partitioned(
-    spark,
-    warehouse,
-    table: str,
-    snapshot: DataFrame,
-    key: list[str],
-    tracked: list[str],
-    snapshot_ts_col: str,
-    run_ts: str,
-) -> None:
-    """SCD2 with the SCALE.md storage layout: the table partitions on a
-    derived ``state`` column ('current' / 'history'), so each run
-
-    - reads ONLY the current partition (directory-level prune; the
-      accumulated history — the bulk of a 100 TB dimension — is never
-      scanned, shuffled, or rewritten),
-    - APPENDS newly-expired versions to the history partition,
-    - atomically swaps the (small) current partition.
-
-    ``state`` is a partition-only derivative of ``is_current``; the real
-    flag stays a typed data column. It is kept for the on-disk layout of
-    existing tables, not for typing: the table's ``_schema.json`` would
-    read a boolean partition back as a boolean.
-
-    Crash story (chaos-tested in tests/test_maintenance.py): the two
-    mutations are BOTH swap_dir renames — the history append lands in
-    a per-run subdirectory ``state=history/run-<digest(run_ts)>``
-    (plain nested dir, not hive ``k=v``, so partition discovery still
-    reads it as history) via its own tmp+swap. A crash at any point
-    leaves the table readable with at worst a ``__tmp__`` orphan (for
-    operators/maintenance.vacuum) plus, in the window between the two
-    renames, this run's expired versions in history alongside their
-    still-open predecessors in current. Re-running the SAME run (same
-    run_ts — what an Airflow-style retry does) REPLACES that run
-    subdirectory instead of appending a duplicate, then completes the
-    current swap: convergence, not accumulation. True multi-directory
-    atomicity still needs a transactional table format.
-    """
-    import hashlib
-    import os
-
-    STATE = "state"
-    state_col = F.when(F.col("is_current"), F.lit("current")).otherwise(F.lit("history"))
-    if not warehouse.exists(table):
-        full = scd2_apply(None, snapshot, key, tracked, snapshot_ts_col, run_ts)
-        warehouse.overwrite(
-            full.withColumn(STATE, state_col), table, partition_by=[STATE]
-        )
-        return
-
-    cur = warehouse.read(spark, table).filter(F.col(STATE) == "current").drop(STATE)
-    # target = current rows only → the result's non-current rows are
-    # exactly the versions expired by THIS run (history passes through
-    # scd2_apply untouched and is absent here).
-    # persist: the history append and the current swap are two separate
-    # actions — uncached, each would re-execute the full snapshot-join
-    # lineage (incl. re-reading the current partition)
-    out = scd2_apply(cur, snapshot, key, tracked, snapshot_ts_col, run_ts).persist()
-    new_current = out.filter(F.col("is_current"))
-    newly_expired = out.filter(~F.col("is_current"))
-
-    table_dir = warehouse.table_path(table)
-    # Idempotent history append: publish this run's expired versions to
-    # a run_ts-keyed subdirectory of the history partition (publish
-    # creates the partition dir, which an all-current initial load
-    # lacks). The digest (not the raw timestamp) names the dir so ':'
-    # and other chars never meet filesystem escaping.
-    run_dir = os.path.join(
-        table_dir,
-        f"{STATE}=history",
-        f"run-{hashlib.md5(run_ts.encode()).hexdigest()[:12]}",
-    )
-    try:
-        warehouse.publish(newly_expired, table, run_dir)
-        cur_dir = warehouse.publish(
-            new_current, table, os.path.join(table_dir, f"{STATE}=current")
-        )
-    finally:
-        out.unpersist()
-    # this run's writes = the swapped current partition plus its
-    # run-keyed history subdirectory (isolated per run by design)
-    warehouse.record(table, cur_dir, run_dir)
-
-
-def bucket_of(key: list[str], n_buckets: int, key_types: list[str] | None = None):
-    """Deterministic key→bucket column: pmod(hash(key cols), n) —
-    Spark's Murmur3 over the key tuple (NULL key values hash to a
-    fixed seed, consistent with the null-safe key joins).
-
-    ``key_types`` (the CANONICAL dtypes recorded at first load) is
-    applied as a cast before hashing: Murmur3 hashes ``int`` and
-    ``bigint`` representations of the same value differently, so a
-    later snapshot arriving with a widened/narrowed numeric key would
-    otherwise compute a wrong touched-bucket set, never read the keys'
-    real current bucket, and silently insert duplicate current
-    versions into a second bucket."""
-    cols = [
-        F.col(k).cast(t) if key_types else F.col(k)
-        for k, t in zip(key, key_types or key)
-    ]
-    return F.pmod(F.hash(*cols), F.lit(n_buckets))
-
-
-def _stage_buckets(df_with_b: DataFrame, tmp_root: str) -> None:
-    """Write a whole bucketed current partition under ``tmp_root`` in
-    ONE Spark job: hive-partition on the ``__b`` bucket column, then
-    rename each ``__b=N`` directory to the layout's ``bucket-N`` plain
-    nested form. One job instead of n_buckets sequential
-    filter+write jobs (measured: the per-bucket loop made a 128-bucket
-    rebucket of a 150k-row dimension take 35 s of pure job overhead —
-    one partitionBy pass is 4 s and the gap widens with bucket count);
-    empty buckets simply produce no directory, preserving the
-    missing-dir-reads-as-empty convention."""
-    import os
-
-    df_with_b.write.partitionBy("__b").parquet(tmp_root)
-    for d in os.listdir(tmp_root):
-        if d.startswith("__b="):
-            os.rename(
-                os.path.join(tmp_root, d),
-                os.path.join(tmp_root, f"bucket-{d[4:]}"),
-            )
-
-
-def _write_marker(marker: str, n_buckets: int, key_types: list[str]) -> None:
-    """Atomically (tmp + rename, matching the swap protocol) write the
-    bucket-layout sidecar: line 1 = bucket count, line 2 = JSON list of
-    the key columns' canonical Spark dtypes (simpleString form)."""
-    import json
-    import os
-
-    from lion_parcel_etl_spark.catalog import staging_dir
-
-    tmp = staging_dir(marker)
-    with open(tmp, "w") as mf:
-        mf.write(f"{n_buckets}\n{json.dumps(key_types)}\n")
-    os.replace(tmp, marker)
-
-
-def _read_marker(marker: str, table: str) -> tuple[str | None, list[str] | None]:
-    """Read (bucket-count string, key dtypes); (None, None) when the
-    table has no marker. A marker without its dtype line is refused:
-    the key dtypes decide every row's bucket."""
-    import json
-    import os
-
-    if not os.path.exists(marker):
-        return None, None
-    with open(marker) as mf:
-        lines = mf.read().splitlines()
-    if len(lines) < 2 or not lines[1].strip():
-        raise ValueError(
-            f"{table!r} bucket marker {marker} has no key-dtype line; "
-            "reload the table with scd2_apply_bucketed"
-        )
-    return lines[0].strip(), json.loads(lines[1])
-
-
-def scd2_apply_bucketed(
-    spark,
-    warehouse,
-    table: str,
-    snapshot: DataFrame,
-    key: list[str],
-    tracked: list[str],
-    snapshot_ts_col: str,
-    run_ts: str,
-    n_buckets: int = 16,
-) -> None:
-    """:func:`scd2_apply_partitioned` with a KEY-BUCKETED current
-    partition: ``state=current`` subdivides into ``bucket-<b>`` plain
-    nested directories (NOT hive ``k=v`` dirs, so the read schema is
-    unchanged), b = pmod(hash(key), n_buckets). Each run
-
-    - computes the snapshot's TOUCHED bucket set (≤ n_buckets ids —
-      the only thing collected),
-    - reads ONLY the touched buckets' current rows (directory-level
-      prune: a run whose snapshot touches 1% of the key space reads
-      and rewrites ~1% of the current partition, where
-      scd2_apply_partitioned rewrites it wholesale),
-    - per touched bucket, appends that bucket's newly-expired versions
-      to a run+bucket-keyed history subdirectory, THEN swaps that
-      bucket's current directory (history-before-current per bucket,
-      the same crash ordering as the unbucketed form).
-
-    Crash story (chaos-tested in tests/test_maintenance.py): every
-    mutation is a tmp+swap rename; a crash leaves at worst a
-    ``__tmp__`` orphan plus a prefix of buckets fully applied. A
-    retry with the SAME run_ts converges: already-applied buckets
-    detect no tracked change, produce zero expired rows, and —
-    because a bucket's history run-dir is only (re)written when the
-    retry produces >0 expired rows for it — their existing history
-    record is PRESERVED, not replaced with emptiness; a bucket that
-    crashed between its history swap and its current swap reproduces
-    the identical expired rows (its current dir is still the
-    predecessor state), replaces its run-dir with identical content,
-    and completes the current swap. Untouched buckets are never read,
-    written, or renamed. The FIRST load stages every bucket under one
-    ``__tmp__`` root and installs ``state=current`` with a single
-    rename (marker written atomically just before it), so a crashed
-    first load leaves cur_root absent and the retry re-enters the
-    first-load branch — never a partial current partition.
-
-    The bucket count is a layout constant: changing ``n_buckets`` on
-    an existing table would strand rows in wrong-bucket directories,
-    so it is validated against a sidecar marker written at first load
-    (which also records the key columns' canonical dtypes — later
-    snapshots are cast to them before hashing, because Murmur3 hashes
-    int vs bigint values differently). Use :func:`rebucket` to migrate
-    an existing table to a new bucket count.
-
-    WHEN TO USE (measured, tools/scale_smoke.py --scd2-bucketed, 150k
-    keys, 64 buckets): the layout wins for SPARSE updates — touched
-    keys comparable to or below n_buckets (corrections, GDPR deletes,
-    late-arriving fixes): a 10-key run rewrote 0.30 MB / 18.9k rows
-    vs the unbucketed swap's 1.54 MB / 150k rows (5× fewer bytes, 8×
-    fewer rows; the data term is what scales). A BROAD uniform
-    snapshot (1% of keys ≫ n_buckets) touches every hash bucket and
-    degenerates to the wholesale rewrite plus per-bucket job
-    overhead — use :func:`scd2_apply_partitioned` for that regime."""
-    import hashlib
-    import os
-
-    from lion_parcel_etl_spark.catalog import staging_dir, swap_dir
-
-    if n_buckets < 1 or n_buckets > 4096:
-        raise ValueError(f"n_buckets={n_buckets} outside [1, 4096]")
-
-    STATE = "state"
-    table_dir = warehouse.table_path(table)
-    cur_root = os.path.join(table_dir, f"{STATE}=current")
-    # sidecar NEXT TO the table directory, not inside it: file listing
-    # reads every name under the table as data except ``_``- and
-    # ``.``-prefixed ones (which is why the table-root ``_schema.json``
-    # is safe), and this marker describes the layout, not the rows
-    marker = f"{table_dir}.__buckets__"
-
-    def bucket_dir(b: int) -> str:
-        return os.path.join(cur_root, f"bucket-{b}")
-
-    if not os.path.isdir(cur_root):
-        # FIRST LOAD — crash-convergent by construction: every bucket
-        # is staged under ONE __tmp__ root, the marker is written
-        # (atomically) BEFORE the swap, and state=current is installed
-        # with a single rename. A crash anywhere before that rename
-        # leaves cur_root absent, so a retry simply re-enters this
-        # branch (a marker left by the crashed attempt is overwritten);
-        # a crash after it leaves a complete, marker-described table.
-        key_types = [snapshot.schema[k].dataType.simpleString() for k in key]
-        bexpr = bucket_of(key, n_buckets, key_types)
-        full = scd2_apply(
-            None, snapshot, key, tracked, snapshot_ts_col, run_ts
-        ).withColumn("__b", bexpr)
-        tmp_root = staging_dir(table_dir)
-        _stage_buckets(full, tmp_root)
-        _write_marker(marker, n_buckets, key_types)
-        os.makedirs(os.path.dirname(cur_root), exist_ok=True)
-        swap_dir(tmp_root, cur_root)
-        warehouse.record(table, cur_root)
-        return
-
-    stored, key_types = _read_marker(marker, table)
-    if stored != str(n_buckets):
-        raise ValueError(
-            f"{table!r} current partition exists with bucket marker "
-            f"{stored!r}, not the requested n_buckets={n_buckets} — it "
-            "was loaded with a different bucket count (or by "
-            "scd2_apply_partitioned); re-load before switching layouts"
-        )
-    # Canonicalize the snapshot's key dtypes BEFORE anything hashes or
-    # joins on them: Murmur3 hashes int vs bigint differently, so an
-    # uncast drifted snapshot would compute a wrong touched-bucket set
-    # and duplicate current versions into a second bucket.
-    for k, t in zip(key, key_types):
-        if snapshot.schema[k].dataType.simpleString() != t:
-            snapshot = snapshot.withColumn(k, F.col(k).cast(t))
-    bexpr = bucket_of(key, n_buckets, key_types)
-
-    touched = sorted(
-        r["__b"] for r in snapshot.select(bexpr.alias("__b")).distinct().collect()
-    )
-    have = [b for b in touched if os.path.isdir(bucket_dir(b))]
-    cur = (
-        spark.read.parquet(*[bucket_dir(b) for b in have]) if have else None
-    )
-    out = scd2_apply(
-        cur, snapshot, key, tracked, snapshot_ts_col, run_ts
-    ).withColumn("__b", bexpr).persist()
-    written: list[str] = []
-    run_digest = hashlib.md5(run_ts.encode()).hexdigest()[:12]
-    hist_root = os.path.join(table_dir, f"{STATE}=history")
-    try:
-        for b in touched:
-            expired_b = out.filter(~F.col("is_current") & (F.col("__b") == b)).drop(
-                "__b"
-            )
-            run_dir = os.path.join(hist_root, f"run-{run_digest}-b{b}")
-            # only (re)write the history record when THIS run produced
-            # expired rows for the bucket: a retry that already applied
-            # the bucket sees no changes and must not replace the
-            # existing record with an empty one
-            if expired_b.limit(1).count() > 0:
-                written.append(warehouse.publish(expired_b, table, run_dir))
-            cur_b = out.filter(F.col("is_current") & (F.col("__b") == b)).drop("__b")
-            written.append(warehouse.publish(cur_b, table, bucket_dir(b)))
-    finally:
-        out.unpersist()
-    warehouse.record(table, *written)
-
-
-def rebucket(
-    spark,
-    warehouse,
-    table: str,
-    key: list[str],
-    n_new: int,
-) -> dict:
-    """Migrate a :func:`scd2_apply_bucketed` table's current partition
-    to a new bucket count — the operation the bucket-count guard
-    refuses to do implicitly (a growing dimension eventually outgrows
-    its layout constant). One full read + one full rewrite of the
-    CURRENT partition only (history is bucket-agnostic and untouched),
-    staged under a single ``__tmp__`` root and installed with one
-    rename, then the marker is updated atomically.
-
-    Crash windows (chaos-tested in tests/test_maintenance.py):
-
-    - before the swap: old layout + old marker intact; at worst a
-      ``__tmp__`` orphan for operators/maintenance.vacuum. Retry
-      redoes the staging — convergent.
-    - between the swap and the marker write: cur_root is the NEW
-      layout but the marker still says the old count. This window is
-      FAIL-STOP by design: the next ``scd2_apply_bucketed`` raises the
-      marker-mismatch ValueError (loud), and re-running ``rebucket``
-      converges (it re-reads whatever layout exists — bucket dirs are
-      read explicitly, so the count on disk doesn't matter — and
-      rewrites it to ``n_new``). The opposite ordering (marker first)
-      would instead leave a SILENT corruption window where an apply
-      hashes against the new count over old-layout directories.
-
-    Returns ``{"rows": n, "n_old": old_count, "n_new": n_new}`` for
-    the SCALE.md migration-cost ledger."""
-    import os
-
-    from lion_parcel_etl_spark.catalog import staging_dir, swap_dir
-
-    if n_new < 1 or n_new > 4096:
-        raise ValueError(f"n_new={n_new} outside [1, 4096]")
-    STATE = "state"
-    table_dir = warehouse.table_path(table)
-    cur_root = os.path.join(table_dir, f"{STATE}=current")
-    marker = f"{table_dir}.__buckets__"
-    if not os.path.isdir(cur_root):
-        raise ValueError(f"{table!r} has no current partition to rebucket")
-    stored, key_types = _read_marker(marker, table)
-    if stored is None:
-        raise ValueError(
-            f"{table!r} has no bucket marker — it was not loaded by "
-            "scd2_apply_bucketed; nothing to rebucket"
-        )
-    existing = sorted(d for d in os.listdir(cur_root) if d.startswith("bucket-"))
-    cur = spark.read.parquet(*[os.path.join(cur_root, d) for d in existing])
-    n_rows = cur.count()
-    tmp_root = staging_dir(table_dir)
-    _stage_buckets(cur.withColumn("__b", bucket_of(key, n_new, key_types)), tmp_root)
-    swap_dir(tmp_root, cur_root)
-    _write_marker(marker, n_new, key_types)
-    warehouse.record(table, cur_root)
-    return {"rows": int(n_rows), "n_old": int(stored), "n_new": n_new}

@@ -62,9 +62,9 @@ def build_retail_pipeline() -> Pipeline:
             target, snap, ["id"], SCD_TRACKED, "updated_at", ctx["run_ts"]
         )
         # partitioned by is_current, but overwrite rewrites the WHOLE
-        # table (history included) every run; the layout that appends
-        # history and swaps only the current partition is
-        # operators.scd2.scd2_apply_partitioned (SURVEY §7 item 8)
+        # table (history included) every run: at this history depth one
+        # rewrite beat an append-only history layout (SCALE.md
+        # §Incremental materialization)
         wh.overwrite(out, "retail_transactions_scd", partition_by=["is_current"])
 
     def checks(ctx):

@@ -53,6 +53,19 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
+def _run_foreach_batch(df: DataFrame, checkpoint: str, fn) -> None:
+    """Run ``fn(batch_df, batch_id)`` over every micro-batch that has
+    arrived (``Trigger.AvailableNow``, checkpointed at ``checkpoint``)
+    and block until the stream stops."""
+    (
+        df.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def stream_metrics_detail(spark: SparkSession, path: str) -> DataFrame:
     """Streaming per-(file, metric) detail rows from a JSON landing dir;
     ``Message`` is normalized at the end of the plan, as in batch."""
@@ -226,13 +239,7 @@ def stream_merge_into(
         )
         warehouse.overwrite(merged, table)
 
-    q = (
-        df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(df, checkpoint, _merge)
 
 
 DOCS_SCHEMA = T.StructType(
@@ -360,13 +367,7 @@ def stream_near_dup_pairs(
                 minhash_signatures(batch, id_col, text_col), sig_table, batch_id
             )
 
-    q = (
-        df.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(df, checkpoint, _batch)
 
 
 def stream_session_windows(
@@ -417,9 +418,9 @@ def stream_scd2(
     """Streaming SCD2 dimension maintenance via ``foreachBatch`` — the
     continuous twin of the reference's hourly SCD2 dbt run: each
     micro-batch reduces to one snapshot row per key (latest by
-    ``snapshot_ts_col``) and applies one SCD2 run through
-    ``scd2_apply_partitioned``, so the history partition is append-only
-    and only the small current partition is swapped per batch (the
+    ``snapshot_ts_col``), applies one ``scd2_apply`` run to the stored
+    table and installs the result the way the retail DAG's ``mart_scd``
+    does: one ``Warehouse.overwrite`` partitioned by ``is_current`` (the
     target dimension is never shuffled — scd2_apply's semi-prune +
     broadcast contract).
 
@@ -427,64 +428,19 @@ def stream_scd2(
     (or ``run_ts_col`` if given) — deterministic from the data, never
     wall clock, so a checkpoint replay of the same batch applies an
     IDENTICAL run: change detection then sees no differences and the
-    dimension is unchanged (idempotent up to the non-transactional
-    swap caveat of the partitioned materializer).
+    dimension is unchanged. A crash before or after the table swap
+    leaves the old or the new table; the replay converges on both.
     """
-    from lion_parcel_etl_spark.operators.scd2 import scd2_apply_partitioned
+    from pyspark.sql import Window
 
-    def materialize(spark, snap, run_ts):
-        scd2_apply_partitioned(
-            spark, warehouse, table, snap, key, tracked, snapshot_ts_col, run_ts
-        )
+    from lion_parcel_etl_spark.operators.scd2 import scd2_apply
 
-    _run_scd2_stream(df, key, run_ts_col or snapshot_ts_col, checkpoint, materialize)
-
-
-def stream_scd2_bucketed(
-    df: DataFrame,
-    warehouse,
-    table: str,
-    key: list[str],
-    tracked: list[str],
-    snapshot_ts_col: str,
-    checkpoint: str,
-    n_buckets: int = 16,
-    run_ts_col: str | None = None,
-) -> None:
-    """:func:`stream_scd2` through the KEY-BUCKETED current partition
-    (``scd2_apply_bucketed``): each micro-batch reads and rewrites ONLY
-    the buckets its keys hash into — the continuous-ingest twin of the
-    sparse-update regime the bucketed layout exists for (a micro-batch
-    touching 10 keys rewrites ~10 buckets' worth of current rows, not
-    the whole current partition per batch). Same determinism contract
-    as stream_scd2 (run_ts = batch max of the order column), and the
-    same per-bucket crash convergence as the batch operator — a replay
-    of the same batch detects no tracked change and leaves every
-    bucket's history record intact (chaos-tested in
-    tests/test_streaming.py)."""
-    from lion_parcel_etl_spark.operators.scd2 import scd2_apply_bucketed
-
-    def materialize(spark, snap, run_ts):
-        scd2_apply_bucketed(
-            spark, warehouse, table, snap, key, tracked, snapshot_ts_col,
-            run_ts, n_buckets=n_buckets,
-        )
-
-    _run_scd2_stream(df, key, run_ts_col or snapshot_ts_col, checkpoint, materialize)
-
-
-def _run_scd2_stream(df, key, order_col, checkpoint, materialize) -> None:
-    """Shared foreachBatch driver for the SCD2 streaming twins: dedupe
-    the micro-batch to one snapshot row per key (latest by the order
-    column), derive the deterministic run_ts, hand off to the batch
-    materializer."""
+    order_col = run_ts_col or snapshot_ts_col
 
     def _batch(batch: DataFrame, _batch_id: int) -> None:
         spark = batch.sparkSession
         if batch.isEmpty():
             return
-        from pyspark.sql import Window
-
         w = Window.partitionBy(*key).orderBy(F.col(order_col).desc())
         snap = (
             batch.withColumn("__rn", F.row_number().over(w))
@@ -501,16 +457,11 @@ def _run_scd2_stream(df, key, order_col, checkpoint, materialize) -> None:
                 f"stream_scd2: micro-batch has all-NULL {order_col!r}; "
                 "cannot order snapshot rows or derive run_ts"
             )
-        run_ts = str(max_ord)
-        materialize(spark, snap, run_ts)
+        target = warehouse.read(spark, table) if warehouse.exists(table) else None
+        out = scd2_apply(target, snap, key, tracked, snapshot_ts_col, str(max_ord))
+        warehouse.overwrite(out, table, partition_by=["is_current"])
 
-    q = (
-        df.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(df, checkpoint, _batch)
 
 
 def stream_rollup_into(
@@ -543,13 +494,7 @@ def stream_rollup_into(
             return
         warehouse.append_batch(rollup_state(batch, keys, metrics), table, batch_id)
 
-    q = (
-        df.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(df, checkpoint, _batch)
 
 
 def read_rollup(spark: SparkSession, warehouse, table: str, keys: list[str]) -> DataFrame:
@@ -674,13 +619,7 @@ def stream_snapshot_diff(
         finally:
             changes.unpersist()
 
-    q = (
-        df.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(df, checkpoint, _batch)
 
 
 def stream_heavy_hitters(
@@ -713,13 +652,7 @@ def stream_heavy_hitters(
             _mg_partials(batch.select(col), col, capacity), table, batch_id
         )
 
-    q = (
-        df.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(df, checkpoint, _batch)
 
 
 def read_heavy_hitters(
@@ -985,13 +918,7 @@ def stream_span_dedup(
         warehouse.append_batch(clean, clean_table, batch_id)
         warehouse.append_batch(new_hashes, hash_table, batch_id)
 
-    q = (
-        df.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(df, checkpoint, _batch)
 
 
 def stream_quality_filter(
@@ -1048,13 +975,7 @@ def stream_kmv_sketch(
             kmv_sketch(batch, key_col, group_cols, k=k), table, batch_id
         )
 
-    q = (
-        df.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(df, checkpoint, _batch)
 
 
 def read_kmv(
@@ -1115,13 +1036,7 @@ def stream_psi_histograms(
             batch_id,
         )
 
-    q = (
-        df.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(df, checkpoint, _batch)
 
 
 def read_psi(
@@ -1183,13 +1098,7 @@ def stream_token_counts(
             batch_id,
         )
 
-    q = (
-        df.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(df, checkpoint, _batch)
 
 
 def read_vocab_kl(spark: SparkSession, warehouse, table: str) -> DataFrame:
@@ -1237,13 +1146,7 @@ def stream_daily_counts(
         )
         warehouse.append_batch(part, table, batch_id)
 
-    q = (
-        df.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(df, checkpoint, _batch)
 
 
 def read_cusum(
@@ -1308,13 +1211,7 @@ def stream_score_histograms(
         )
         warehouse.append_batch(part, table, batch_id)
 
-    q = (
-        df.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(df, checkpoint, _batch)
 
 
 def read_auc(spark: SparkSession, warehouse, table: str) -> DataFrame:
@@ -1436,13 +1333,7 @@ def stream_market_basket(
         ).distinct()
         warehouse.append_batch(frag, table, batch_id)
 
-    q = (
-        df.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(df, checkpoint, _batch)
 
 
 def read_market_basket(
@@ -1534,13 +1425,7 @@ def stream_value_counts(
         )
         warehouse.append_batch(part, table, batch_id)
 
-    q = (
-        df.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(df, checkpoint, _batch)
 
 
 def read_ks_drift(spark: SparkSession, warehouse, table: str) -> DataFrame:
@@ -1640,13 +1525,7 @@ def stream_digit_counts(
         )
         warehouse.append_batch(part, table, batch_id)
 
-    q = (
-        df.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(df, checkpoint, _batch)
 
 
 def read_benford_audit(spark: SparkSession, warehouse, table: str) -> DataFrame:
@@ -1685,13 +1564,7 @@ def stream_media_frames(
             return
         warehouse.append_batch(gif_frame_stats(batch), table, batch_id)
 
-    q = (
-        df.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(df, checkpoint, _batch)
 
 
 def read_gif_frames(spark: SparkSession, warehouse, table: str) -> DataFrame:

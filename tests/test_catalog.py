@@ -173,3 +173,25 @@ def test_schema_file_is_invisible_to_merge_schema_and_pandas(spark, tmp_path):
     pdf = pd.read_parquet(path)
     assert set(pdf.columns) == {"id", "v", "day"}
     assert sorted(pdf["id"].tolist()) == [1, 2]
+
+
+def test_only_catalog_stages_or_swaps_a_directory():
+    """``Warehouse.publish`` is the one install path: no package module
+    besides catalog.py names ``swap_dir`` or ``staging_dir``, so no
+    materializer stages or renames its own table directories."""
+    import re
+
+    import lion_parcel_etl_spark
+
+    pkg = os.path.dirname(os.path.abspath(lion_parcel_etl_spark.__file__))
+    offenders = []
+    for dirpath, _dirs, files in os.walk(pkg):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            if not f.endswith(".py") or path == os.path.join(pkg, "catalog.py"):
+                continue
+            with open(path) as fh:
+                for n, line in enumerate(fh, 1):
+                    if re.search(r"\b(swap_dir|staging_dir)\b", line):
+                        offenders.append(f"{os.path.relpath(path, pkg)}:{n}")
+    assert not offenders, offenders

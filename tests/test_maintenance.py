@@ -151,14 +151,14 @@ def test_vacuum_restore_waits_for_staleness(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Chaos tests: the two non-transactional multi-action materializers.
-# Inject a crash into swap_dir at each window and prove the documented
-# recovery story — table stays readable, at worst a __tmp__ orphan for
-# vacuum, and re-running the SAME run converges with no data loss and
-# no duplicates.
+# Chaos tests: Warehouse.publish, the one install path (a table root or
+# an append_batch batch dir). Inject a crash into swap_dir at each window
+# and prove the documented recovery story — the table stays readable or
+# vacuum restores it, at worst a __tmp__ orphan for vacuum, and
+# re-running the SAME write converges with no data loss and no
+# duplicates.
 # ---------------------------------------------------------------------------
 
-import pyspark.sql.functions as _F
 import pytest
 
 
@@ -181,16 +181,6 @@ def _crash_swap_on(monkeypatch, substr: str):
     return state
 
 
-def _scd_snap(spark, rows, ts):
-    df = spark.createDataFrame(rows, "id long, status string")
-    return df.withColumn("snap_ts", _F.to_timestamp(_F.lit(ts)))
-
-
-def _scd_canon(df):
-    cols = ["id", "status", "valid_from", "valid_to", "is_current"]
-    return sorted(tuple(str(r[c]) for c in cols) for r in df.collect())
-
-
 def _orphans(wh):
     import os
 
@@ -200,565 +190,6 @@ def _orphans(wh):
         for d in dns
         if "__tmp__" in d or "__old__" in d
     ]
-
-
-@pytest.mark.parametrize("window", ["state=history", "state=current"])
-def test_scd2_partitioned_crash_windows_recover_on_rerun(
-    spark, tmp_path, monkeypatch, window
-):
-    """Crash before the history swap (table untouched) and between the
-    history swap and the current swap (the documented anomaly window:
-    expired version in history alongside its still-open predecessor in
-    current). Both must leave the table readable and converge to the
-    clean-run result when the SAME run retries — the run_ts-keyed
-    history subdirectory replaces instead of duplicating."""
-    import os
-
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.maintenance import vacuum
-    from lion_parcel_etl_spark.operators.scd2 import scd2_apply, scd2_apply_partitioned
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    snap1 = _scd_snap(spark, [(1, "A"), (2, "A")], "2024-01-01 00:00:00")
-    snap2 = _scd_snap(spark, [(1, "B"), (2, "A")], "2024-01-02 00:00:00")
-    rts1, rts2 = "2024-01-01 01:00:00", "2024-01-02 01:00:00"
-    scd2_apply_partitioned(spark, wh, "dim", snap1, ["id"], ["status"], "snap_ts", rts1)
-    pre_current = _scd_canon(
-        wh.read(spark, "dim").filter(_F.col("is_current")).drop("state")
-    )
-
-    state = _crash_swap_on(monkeypatch, window)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        scd2_apply_partitioned(
-            spark, wh, "dim", snap2, ["id"], ["status"], "snap_ts", rts2
-        )
-
-    # Crashed state: table still readable, current partition untouched
-    # (the current swap never completed in either window).
-    got = wh.read(spark, "dim")
-    assert (
-        _scd_canon(got.filter(_F.col("is_current")).drop("state")) == pre_current
-    )
-    if window == "state=history":
-        # history swap itself crashed → no run dir was installed
-        hist_root = os.path.join(wh.table_path("dim"), "state=history")
-        assert not os.path.isdir(hist_root) or not any(
-            d.startswith("run-") for d in os.listdir(hist_root)
-        )
-    # debris is confined to __tmp__ orphans, which vacuum removes
-    assert all("__tmp__" in p for p in _orphans(wh))
-    removed = vacuum(wh, min_age_seconds=0)
-    assert removed and not _orphans(wh)
-
-    # Recovery: retry the SAME run (same run_ts, same snapshot).
-    state["armed"] = False
-    scd2_apply_partitioned(spark, wh, "dim", snap2, ["id"], ["status"], "snap_ts", rts2)
-
-    twin = scd2_apply(
-        scd2_apply(None, snap1, ["id"], ["status"], "snap_ts", rts1),
-        snap2,
-        ["id"],
-        ["status"],
-        "snap_ts",
-        rts2,
-    )
-    assert _scd_canon(wh.read(spark, "dim").drop("state")) == _scd_canon(twin)
-
-
-def test_scd2_partitioned_same_run_retry_does_not_duplicate_history(
-    spark, tmp_path, monkeypatch
-):
-    """The regression the run-keyed subdirectory exists to prevent: a
-    blind mode=append history write would land id 1's expired version
-    TWICE when the crashed run retries."""
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.scd2 import scd2_apply_partitioned
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    snap1 = _scd_snap(spark, [(1, "A")], "2024-01-01 00:00:00")
-    snap2 = _scd_snap(spark, [(1, "B")], "2024-01-02 00:00:00")
-    rts2 = "2024-01-02 01:00:00"
-    scd2_apply_partitioned(
-        spark, wh, "dim", snap1, ["id"], ["status"], "snap_ts", "2024-01-01 01:00:00"
-    )
-    state = _crash_swap_on(monkeypatch, "state=current")
-    with pytest.raises(RuntimeError):
-        scd2_apply_partitioned(
-            spark, wh, "dim", snap2, ["id"], ["status"], "snap_ts", rts2
-        )
-    # history already holds the expired version from the crashed run …
-    assert wh.read(spark, "dim").filter(~_F.col("is_current")).count() == 1
-    state["armed"] = False
-    scd2_apply_partitioned(spark, wh, "dim", snap2, ["id"], ["status"], "snap_ts", rts2)
-    # … and the retry REPLACED it, not appended a second copy
-    hist = wh.read(spark, "dim").filter(~_F.col("is_current"))
-    assert hist.count() == 1
-
-
-def _bucket_ids_for(spark, n_buckets, want_distinct=2):
-    """First `want_distinct` ids (1..99) landing in distinct buckets,
-    as {id: bucket} — lets tests pick keys with known bucket homes."""
-    from lion_parcel_etl_spark.operators.scd2 import bucket_of
-
-    rows = (
-        spark.createDataFrame([(i,) for i in range(1, 100)], "id long")
-        .select("id", bucket_of(["id"], n_buckets).alias("b"))
-        .collect()
-    )
-    picked: dict[int, int] = {}
-    for r in rows:
-        if r["b"] not in picked.values():
-            picked[r["id"]] = r["b"]
-        if len(picked) == want_distinct:
-            break
-    return picked
-
-
-def test_scd2_bucketed_matches_twin_and_prunes_untouched_buckets(
-    spark, tmp_path
-):
-    """Two bucketed runs produce exactly the scd2_apply twin's state,
-    and a run whose snapshot touches ONE bucket leaves every other
-    bucket directory byte-untouched (the wholesale-rewrite fix)."""
-    import os
-
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.scd2 import (
-        scd2_apply,
-        scd2_apply_bucketed,
-    )
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    n_buckets = 4
-    picked = _bucket_ids_for(spark, n_buckets, want_distinct=2)
-    (id_a, b_a), (id_b, b_b) = list(picked.items())
-    snap1 = _scd_snap(
-        spark, [(id_a, "A"), (id_b, "A")], "2024-01-01 00:00:00"
-    )
-    # second snapshot touches ONLY id_a's bucket
-    snap2 = _scd_snap(spark, [(id_a, "B")], "2024-01-02 00:00:00")
-    rts1, rts2 = "2024-01-01 01:00:00", "2024-01-02 01:00:00"
-    scd2_apply_bucketed(
-        spark, wh, "dim", snap1, ["id"], ["status"], "snap_ts", rts1,
-        n_buckets=n_buckets,
-    )
-
-    def listing(b):
-        d = os.path.join(wh.table_path("dim"), "state=current", f"bucket-{b}")
-        if not os.path.isdir(d):
-            return None
-        return sorted(
-            (f, os.path.getmtime(os.path.join(d, f))) for f in os.listdir(d)
-        )
-
-    before_b = listing(b_b)
-    scd2_apply_bucketed(
-        spark, wh, "dim", snap2, ["id"], ["status"], "snap_ts", rts2,
-        n_buckets=n_buckets,
-    )
-    assert listing(b_b) == before_b  # untouched bucket: not even renamed
-
-    twin = scd2_apply(
-        scd2_apply(None, snap1, ["id"], ["status"], "snap_ts", rts1),
-        snap2, ["id"], ["status"], "snap_ts", rts2,
-    )
-    assert _scd_canon(wh.read(spark, "dim").drop("state")) == _scd_canon(twin)
-
-
-@pytest.mark.parametrize("window", ["first-history", "second-bucket"])
-def test_scd2_bucketed_crash_windows_recover_on_rerun(
-    spark, tmp_path, monkeypatch, window
-):
-    """Crash (a) before the first bucket's history swap — table
-    untouched — and (b) before the SECOND touched bucket's current
-    swap — first bucket fully applied, second bucket in the
-    history-installed/current-stale anomaly window. Both retry to the
-    clean twin with exactly one expired version per changed key: the
-    >0-rows guard preserves the already-applied bucket's history
-    run-dir instead of replacing it with emptiness."""
-    import os
-
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.maintenance import vacuum
-    from lion_parcel_etl_spark.operators.scd2 import (
-        scd2_apply,
-        scd2_apply_bucketed,
-    )
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    n_buckets = 4
-    picked = _bucket_ids_for(spark, n_buckets, want_distinct=2)
-    (id_a, b_a), (id_b, b_b) = list(picked.items())
-    snap1 = _scd_snap(
-        spark, [(id_a, "A"), (id_b, "A")], "2024-01-01 00:00:00"
-    )
-    snap2 = _scd_snap(
-        spark, [(id_a, "B"), (id_b, "B")], "2024-01-02 00:00:00"
-    )
-    rts1, rts2 = "2024-01-01 01:00:00", "2024-01-02 01:00:00"
-    scd2_apply_bucketed(
-        spark, wh, "dim", snap1, ["id"], ["status"], "snap_ts", rts1,
-        n_buckets=n_buckets,
-    )
-    substr = (
-        "state=history" if window == "first-history"
-        else f"bucket-{max(b_a, b_b)}"
-    )
-    state = _crash_swap_on(monkeypatch, substr)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        scd2_apply_bucketed(
-            spark, wh, "dim", snap2, ["id"], ["status"], "snap_ts", rts2,
-            n_buckets=n_buckets,
-        )
-    # crashed state: table readable; debris confined to __tmp__ orphans
-    assert wh.read(spark, "dim").count() >= 2
-    assert all("__tmp__" in p for p in _orphans(wh))
-    vacuum(wh, min_age_seconds=0)
-
-    state["armed"] = False
-    scd2_apply_bucketed(
-        spark, wh, "dim", snap2, ["id"], ["status"], "snap_ts", rts2,
-        n_buckets=n_buckets,
-    )
-    twin = scd2_apply(
-        scd2_apply(None, snap1, ["id"], ["status"], "snap_ts", rts1),
-        snap2, ["id"], ["status"], "snap_ts", rts2,
-    )
-    got = wh.read(spark, "dim")
-    assert _scd_canon(got.drop("state")) == _scd_canon(twin)
-    # exactly one expired version per changed key — nothing duplicated,
-    # nothing lost across the partial application
-    assert got.filter(~_F.col("is_current")).count() == 2
-
-
-def test_scd2_bucketed_rejects_bucket_count_change(spark, tmp_path):
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.scd2 import scd2_apply_bucketed
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    snap1 = _scd_snap(spark, [(1, "A")], "2024-01-01 00:00:00")
-    scd2_apply_bucketed(
-        spark, wh, "dim", snap1, ["id"], ["status"], "snap_ts",
-        "2024-01-01 01:00:00", n_buckets=4,
-    )
-    with pytest.raises(ValueError, match="_buckets"):
-        scd2_apply_bucketed(
-            spark, wh, "dim", snap1, ["id"], ["status"], "snap_ts",
-            "2024-01-02 01:00:00", n_buckets=8,
-        )
-
-
-def test_scd2_bucketed_marker_without_dtype_line_is_refused(spark, tmp_path):
-    """A one-line bucket marker (no key-dtype line) names the table and
-    asks for a reload, in both the apply and the rebucket path."""
-    import os
-
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.scd2 import rebucket, scd2_apply_bucketed
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    table_dir = wh.table_path("dim")
-    os.makedirs(os.path.join(table_dir, "state=current"))
-    with open(f"{table_dir}.__buckets__", "w") as mf:
-        mf.write("4\n")
-    snap = _scd_snap(spark, [(1, "A")], "2024-01-01 00:00:00")
-    with pytest.raises(ValueError, match="'dim'.*reload"):
-        scd2_apply_bucketed(
-            spark, wh, "dim", snap, ["id"], ["status"], "snap_ts",
-            "2024-01-01 01:00:00", n_buckets=4,
-        )
-    with pytest.raises(ValueError, match="'dim'.*reload"):
-        rebucket(spark, wh, "dim", ["id"], 8)
-
-
-def test_scd2_bucketed_first_load_crash_converges(spark, tmp_path, monkeypatch):
-    """Crash during the FIRST load's single current-partition swap:
-    no partial current partition is ever visible (cur_root absent —
-    the round-5 layout swapped buckets one-by-one and could serve a
-    prefix as complete), and the retry re-enters the first-load branch
-    and completes instead of tripping the marker guard."""
-    import os
-
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.maintenance import vacuum
-    from lion_parcel_etl_spark.operators.scd2 import scd2_apply, scd2_apply_bucketed
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    snap1 = _scd_snap(spark, [(1, "A"), (2, "A"), (3, "A")], "2024-01-01 00:00:00")
-    rts1 = "2024-01-01 01:00:00"
-    state = _crash_swap_on(monkeypatch, "state=current")
-    with pytest.raises(RuntimeError, match="injected crash"):
-        scd2_apply_bucketed(
-            spark, wh, "dim", snap1, ["id"], ["status"], "snap_ts", rts1,
-            n_buckets=4,
-        )
-    cur_root = os.path.join(wh.table_path("dim"), "state=current")
-    assert not os.path.isdir(cur_root)  # never a partial current partition
-    vacuum(wh, min_age_seconds=0)
-
-    state["armed"] = False
-    scd2_apply_bucketed(
-        spark, wh, "dim", snap1, ["id"], ["status"], "snap_ts", rts1,
-        n_buckets=4,
-    )
-    twin = scd2_apply(None, snap1, ["id"], ["status"], "snap_ts", rts1)
-    assert _scd_canon(wh.read(spark, "dim").drop("state")) == _scd_canon(twin)
-
-
-def test_scd2_bucketed_key_dtype_drift_no_duplicate_current(spark, tmp_path):
-    """A later snapshot whose key column arrives as int (first load
-    was long) must hash to the SAME buckets: the marker's recorded key
-    dtypes are cast onto the snapshot before bucket_of, so the changed
-    key gets exactly one current version and one expired version — not
-    a silent duplicate in a second bucket."""
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.scd2 import scd2_apply_bucketed
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    snap1 = _scd_snap(spark, [(1, "A"), (2, "A")], "2024-01-01 00:00:00")
-    scd2_apply_bucketed(
-        spark, wh, "dim", snap1, ["id"], ["status"], "snap_ts",
-        "2024-01-01 01:00:00", n_buckets=8,
-    )
-    snap2 = spark.createDataFrame([(1, "B")], "id int, status string").withColumn(
-        "snap_ts", _F.to_timestamp(_F.lit("2024-01-02 00:00:00"))
-    )
-    scd2_apply_bucketed(
-        spark, wh, "dim", snap2, ["id"], ["status"], "snap_ts",
-        "2024-01-02 01:00:00", n_buckets=8,
-    )
-    got = wh.read(spark, "dim")
-    cur1 = got.filter(_F.col("is_current") & (_F.col("id") == 1)).collect()
-    assert len(cur1) == 1 and cur1[0]["status"] == "B"
-    assert got.filter(~_F.col("is_current")).count() == 1
-
-
-def test_rebucket_preserves_state_and_scd2_straddles_migration(spark, tmp_path):
-    """Migrate 4→8 buckets mid-stream: state after
-    run1(4) → rebucket(8) → run2(8) equals the plain twin of the two
-    runs, and the marker now enforces the new count."""
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.scd2 import (
-        rebucket,
-        scd2_apply,
-        scd2_apply_bucketed,
-    )
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    snap1 = _scd_snap(
-        spark, [(i, "A") for i in range(1, 13)], "2024-01-01 00:00:00"
-    )
-    snap2 = _scd_snap(spark, [(1, "B"), (7, "B")], "2024-01-02 00:00:00")
-    rts1, rts2 = "2024-01-01 01:00:00", "2024-01-02 01:00:00"
-    scd2_apply_bucketed(
-        spark, wh, "dim", snap1, ["id"], ["status"], "snap_ts", rts1, n_buckets=4
-    )
-    stats = rebucket(spark, wh, "dim", ["id"], 8)
-    assert stats == {"rows": 12, "n_old": 4, "n_new": 8}
-    with pytest.raises(ValueError, match="_buckets"):
-        scd2_apply_bucketed(
-            spark, wh, "dim", snap2, ["id"], ["status"], "snap_ts", rts2,
-            n_buckets=4,
-        )
-    scd2_apply_bucketed(
-        spark, wh, "dim", snap2, ["id"], ["status"], "snap_ts", rts2, n_buckets=8
-    )
-    twin = scd2_apply(
-        scd2_apply(None, snap1, ["id"], ["status"], "snap_ts", rts1),
-        snap2, ["id"], ["status"], "snap_ts", rts2,
-    )
-    assert _scd_canon(wh.read(spark, "dim").drop("state")) == _scd_canon(twin)
-
-
-def test_rebucket_crash_windows(spark, tmp_path, monkeypatch):
-    """(a) Crash before the layout swap: old layout + old marker
-    intact, debris vacuums, retry converges. (b) Crash between the
-    swap and the marker write: FAIL-STOP — apply raises the marker
-    mismatch loudly (never silent corruption), and re-running rebucket
-    converges."""
-    import lion_parcel_etl_spark.operators.scd2 as scd2mod
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.maintenance import vacuum
-    from lion_parcel_etl_spark.operators.scd2 import (
-        rebucket,
-        scd2_apply,
-        scd2_apply_bucketed,
-    )
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    snap1 = _scd_snap(
-        spark, [(i, "A") for i in range(1, 13)], "2024-01-01 00:00:00"
-    )
-    rts1 = "2024-01-01 01:00:00"
-    scd2_apply_bucketed(
-        spark, wh, "dim", snap1, ["id"], ["status"], "snap_ts", rts1, n_buckets=4
-    )
-
-    # window (a): before the swap
-    state = _crash_swap_on(monkeypatch, "state=current")
-    with pytest.raises(RuntimeError, match="injected crash"):
-        rebucket(spark, wh, "dim", ["id"], 8)
-    assert wh.read(spark, "dim").count() == 12  # old layout serves fine
-    vacuum(wh, min_age_seconds=0)
-    state["armed"] = False
-
-    # window (b): between the swap and the marker write
-    real_write = scd2mod._write_marker
-    armed = {"on": True}
-
-    def crashy_marker(marker, n, types):
-        if armed["on"]:
-            raise RuntimeError("injected crash before marker write")
-        real_write(marker, n, types)
-
-    monkeypatch.setattr(scd2mod, "_write_marker", crashy_marker)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        rebucket(spark, wh, "dim", ["id"], 8)
-    snap2 = _scd_snap(spark, [(1, "B")], "2024-01-02 00:00:00")
-    with pytest.raises(ValueError, match="_buckets"):  # loud, not silent
-        scd2_apply_bucketed(
-            spark, wh, "dim", snap2, ["id"], ["status"], "snap_ts",
-            "2024-01-02 01:00:00", n_buckets=8,
-        )
-    armed["on"] = False
-    stats = rebucket(spark, wh, "dim", ["id"], 8)
-    assert stats["n_new"] == 8 and stats["rows"] == 12
-    scd2_apply_bucketed(
-        spark, wh, "dim", snap2, ["id"], ["status"], "snap_ts",
-        "2024-01-02 01:00:00", n_buckets=8,
-    )
-    twin = scd2_apply(
-        scd2_apply(None, snap1, ["id"], ["status"], "snap_ts", rts1),
-        snap2, ["id"], ["status"], "snap_ts", "2024-01-02 01:00:00",
-    )
-    assert _scd_canon(wh.read(spark, "dim").drop("state")) == _scd_canon(twin)
-
-
-def test_merge_partitioned_crash_mid_swap_loop_recovers(spark, tmp_path, monkeypatch):
-    """Crash after swapping the first of two touched partitions: each
-    partition is individually consistent (one merged, one stale), the
-    leftover tmp dir vacuums away, and retrying the same batch
-    converges because the merge is idempotent per key."""
-    import os
-
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.maintenance import vacuum
-    from lion_parcel_etl_spark.operators.merge_upsert import merge_upsert_partitioned
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    base = spark.createDataFrame(
-        [(1, "old", "d1"), (2, "old", "d1"), (3, "old", "d2"), (4, "old", "d3")],
-        "id long, v string, day string",
-    )
-    merge_upsert_partitioned(spark, wh, "mart", base, ["id"], "day")
-    updates = spark.createDataFrame(
-        [(1, "new", "d1"), (3, "new", "d2"), (5, "new", "d2")],
-        "id long, v string, day string",
-    )
-
-    # swap loop iterates sorted(day=d1, day=d2): crash on the second
-    state = _crash_swap_on(monkeypatch, "day=d2")
-    with pytest.raises(RuntimeError, match="injected crash"):
-        merge_upsert_partitioned(spark, wh, "mart", updates, ["id"], "day")
-
-    got = {(r.id, r.v, r.day) for r in wh.read(spark, "mart").collect()}
-    # d1 merged, d2 untouched, d3 never read or rewritten — no data loss
-    assert got == {
-        (1, "new", "d1"),
-        (2, "old", "d1"),
-        (3, "old", "d2"),
-        (4, "old", "d3"),
-    }
-    orphans = _orphans(wh)
-    assert orphans and all("__tmp__" in p for p in orphans)
-    removed = vacuum(wh, min_age_seconds=0)
-    assert removed and not _orphans(wh)
-
-    # retry the same batch → exact clean-run result
-    state["armed"] = False
-    swapped = merge_upsert_partitioned(spark, wh, "mart", updates, ["id"], "day")
-    assert set(swapped) == {"d1", "d2"}
-    got = {(r.id, r.v, r.day) for r in wh.read(spark, "mart").collect()}
-    assert got == {
-        (1, "new", "d1"),
-        (2, "old", "d1"),
-        (3, "new", "d2"),
-        (5, "new", "d2"),
-        (4, "old", "d3"),
-    }
-
-
-def test_merge_partitioned_crash_after_renames_hides_demoted_partition(
-    spark, tmp_path, monkeypatch
-):
-    """A crash after a partition swap's second rename, before the
-    demoted copy is deleted: the copy sits in the table under a
-    ``.``-prefixed name, so a whole-table read counts its rows once (an
-    in-table ``day=d1.__old__x`` would add them again), and vacuum
-    removes it."""
-    import os
-    import shutil
-
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.maintenance import vacuum
-    from lion_parcel_etl_spark.operators.merge_upsert import merge_upsert_partitioned
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    base = spark.createDataFrame(
-        [(i, "old", f"d{1 + i % 2}") for i in range(6)], "id long, v string, day string"
-    )
-    merge_upsert_partitioned(spark, wh, "mart", base, ["id"], "day")
-    real_rmtree = shutil.rmtree
-    state = {"armed": True}
-
-    def rmtree(path, *a, **kw):
-        if state["armed"] and "__old__" in str(path):
-            raise RuntimeError("injected crash after renames")
-        real_rmtree(path, *a, **kw)
-
-    monkeypatch.setattr(shutil, "rmtree", rmtree)
-    updates = spark.createDataFrame([(2, "new", "d1")], "id long, v string, day string")
-    with pytest.raises(RuntimeError, match="injected crash"):
-        merge_upsert_partitioned(spark, wh, "mart", updates, ["id"], "day")
-    state["armed"] = False
-
-    table = wh.table_path("mart")
-    assert any(d.startswith(".day=d1.__old__") for d in os.listdir(table))
-    want = {(i, "new" if i == 2 else "old", f"d{1 + i % 2}") for i in range(6)}
-    for df in (wh.read(spark, "mart"), spark.read.parquet(table)):
-        got = [(r.id, r.v, r.day) for r in df.collect()]
-        assert len(got) == 6 and set(got) == want
-    assert vacuum(wh, min_age_seconds=0) and not _orphans(wh)
-    assert wh.read(spark, "mart").count() == 6
-
-
-def test_merge_partitioned_crash_before_any_swap_leaves_table_untouched(
-    spark, tmp_path, monkeypatch
-):
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.maintenance import vacuum
-    from lion_parcel_etl_spark.operators.merge_upsert import merge_upsert_partitioned
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    base = spark.createDataFrame(
-        [(1, "old", "d1"), (3, "old", "d2")], "id long, v string, day string"
-    )
-    merge_upsert_partitioned(spark, wh, "mart", base, ["id"], "day")
-    before = {(r.id, r.v, r.day) for r in wh.read(spark, "mart").collect()}
-
-    updates = spark.createDataFrame([(1, "new", "d1")], "id long, v string, day string")
-    state = _crash_swap_on(monkeypatch, "day=d1")
-    with pytest.raises(RuntimeError):
-        merge_upsert_partitioned(spark, wh, "mart", updates, ["id"], "day")
-    assert {(r.id, r.v, r.day) for r in wh.read(spark, "mart").collect()} == before
-    vacuum(wh, min_age_seconds=0)
-    assert not _orphans(wh)
-    state["armed"] = False
-    merge_upsert_partitioned(spark, wh, "mart", updates, ["id"], "day")
-    assert {(r.id, r.v, r.day) for r in wh.read(spark, "mart").collect()} == {
-        (1, "new", "d1"),
-        (3, "old", "d2"),
-    }
 
 
 def test_append_batch_crash_before_swap_keeps_committed_batches(
@@ -856,3 +287,49 @@ def test_append_batch_replay_crash_never_duplicates_batch(
 
     wh.append_batch(spark.range(10, 15), "log", 1)
     assert rows() == batch0 + batch1
+
+
+def test_overwrite_crash_between_renames_vacuum_restores_table(
+    spark, tmp_path, monkeypatch
+):
+    """An overwrite of a boolean-partitioned table crashes between the
+    swap's two renames: the table is absent, its demoted copy and the
+    staged replacement sit in the database dir, and vacuum restores the
+    old table (typed by its own schema file) and removes the tmp."""
+    import os
+    import re
+
+    import lion_parcel_etl_spark.catalog as cat
+    from lion_parcel_etl_spark.operators.maintenance import vacuum
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    schema = "id long, is_current boolean"
+    old_rows = [(1, True), (2, False), (3, True)]
+    wh.overwrite(spark.createDataFrame(old_rows, schema), "t", partition_by=["is_current"])
+    table = wh.table_path("t")
+    db = os.path.dirname(table)
+
+    real_rename = cat.os.rename
+
+    def rename(src, dst):
+        if "__tmp__" in str(src) and str(dst) == table:
+            raise RuntimeError("injected crash between renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(cat.os, "rename", rename)
+    new = spark.createDataFrame([(9, True)], schema)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        wh.overwrite(new, "t", partition_by=["is_current"])
+    monkeypatch.undo()
+
+    assert not os.path.exists(table)
+    debris = sorted(os.listdir(db))
+    assert len(debris) == 2
+    assert re.fullmatch(r"\.t\.__old__[0-9a-f]{8}", debris[0])
+    assert re.fullmatch(r"t\.__tmp__[0-9a-f]{8}", debris[1])
+
+    assert vacuum(wh, min_age_seconds=0) == [os.path.join(db, debris[1])]
+    assert os.listdir(db) == ["t"]
+    got = wh.read(spark, "t")
+    assert dict(got.dtypes)["is_current"] == "boolean"
+    assert sorted(tuple(r) for r in got.select("id", "is_current").collect()) == old_rows

@@ -55,93 +55,6 @@ def test_merge_plan_broadcasts_updates(spark):
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
-def test_partitioned_merge_rewrites_only_touched_partitions(spark, tmp_path):
-    import os
-
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.merge_upsert import merge_upsert_partitioned
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    base = spark.createDataFrame(
-        [(i, f"v{i}", f"2024-01-{(i % 3) + 1:02d}") for i in range(30)],
-        ["id", "v", "day"],
-    )
-    merge_upsert_partitioned(spark, wh, "mart", base, ["id"], "day")
-    tdir = wh.table_path("mart")
-
-    def files_of(day):
-        d = os.path.join(tdir, f"day={day}")
-        return {
-            (f, os.path.getmtime(os.path.join(d, f)))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        }
-
-    before_d2, before_d3 = files_of("2024-01-02"), files_of("2024-01-03")
-
-    # update two ids in day 1 and insert one new id into a NEW day
-    updates = spark.createDataFrame(
-        [(0, "NEW", "2024-01-01"), (3, "NEW", "2024-01-01"), (99, "NEW", "2024-01-09")],
-        ["id", "v", "day"],
-    )
-    touched = merge_upsert_partitioned(spark, wh, "mart", updates, ["id"], "day")
-    assert sorted(touched) == ["2024-01-01", "2024-01-09"]
-
-    # untouched partitions: exact same files, byte-identical mtimes
-    assert files_of("2024-01-02") == before_d2
-    assert files_of("2024-01-03") == before_d3
-
-    got = wh.read(spark, "mart")
-    assert got.count() == 31
-    assert got.filter("id in (0, 3, 99)").filter("v = 'NEW'").count() == 3
-    # no duplicated keys anywhere
-    assert got.groupBy("id").count().filter("count > 1").count() == 0
-
-
-def test_partitioned_merge_escaped_partition_values(spark, tmp_path):
-    """Partition values containing ':' are %3A-escaped in directory
-    names; the swap must discover directories by LISTING the tmp output
-    — reconstructing them from str(value) silently skipped the swap and
-    then deleted the merged data with the tmp dir (ADVICE r01)."""
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.merge_upsert import merge_upsert_partitioned
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    base = spark.createDataFrame(
-        [(1, "a", "2024-01-01 10:00:00"), (2, "b", "2024-01-01 11:00:00")],
-        "id long, v string, hr string",
-    )
-    merge_upsert_partitioned(spark, wh, "mart", base, ["id"], "hr")
-    updates = spark.createDataFrame(
-        [(1, "NEW", "2024-01-01 10:00:00")], "id long, v string, hr string"
-    )
-    touched = merge_upsert_partitioned(spark, wh, "mart", updates, ["id"], "hr")
-    assert len(touched) == 1
-    got = wh.read(spark, "mart")
-    assert got.count() == 2
-    assert got.filter("id = 1").collect()[0].v == "NEW"
-    assert got.filter("id = 2").collect()[0].v == "b"
-
-
-def test_partitioned_merge_null_partition_value(spark, tmp_path):
-    """Null partition values land in __HIVE_DEFAULT_PARTITION__; the
-    prune must match them with isNull (a string-cast isin can't) and
-    the swap must install the escaped directory."""
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.merge_upsert import merge_upsert_partitioned
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    base = spark.createDataFrame(
-        [(1, "a", None), (2, "b", "d1")], "id long, v string, day string"
-    )
-    merge_upsert_partitioned(spark, wh, "mart", base, ["id"], "day")
-    updates = spark.createDataFrame([(1, "NEW", None)], "id long, v string, day string")
-    merge_upsert_partitioned(spark, wh, "mart", updates, ["id"], "day")
-    got = wh.read(spark, "mart")
-    assert got.count() == 2
-    assert got.filter("id = 1").collect()[0].v == "NEW"
-
-
 def test_union_evolve_widens_and_fills(spark):
     from lion_parcel_etl_spark.operators.merge_upsert import union_evolve
 
@@ -202,51 +115,6 @@ def test_merge_null_key_replaces_not_duplicates(spark):
     upd = spark.createDataFrame([(None, "new")], "id long, v string")
     out = sorted(map(tuple, merge_upsert(tgt, upd, ["id"]).collect()), key=str)
     assert out == sorted([(None, "new"), (1, "x")], key=str)
-
-
-def test_partitioned_merge_rejects_non_roundtripping_partition_values(  # noqa: E302
-    spark, tmp_path
-):
-    """On a table read by inference, '01' writes day=01 but reads back
-    as int 1 — the merge must refuse rather than strand the original
-    directory."""
-    import os
-
-    import pytest
-    from lion_parcel_etl_spark.catalog import SCHEMA_FILE, Warehouse
-    from lion_parcel_etl_spark.operators.merge_upsert import (
-        merge_upsert_partitioned,
-    )
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    first = spark.createDataFrame([(1, "a", "01")], "id long, v string, day string")
-    merge_upsert_partitioned(spark, wh, "m", first, ["id"], "day")
-    os.remove(os.path.join(wh.table_path("m"), SCHEMA_FILE))
-    upd = spark.createDataFrame([(1, "b", "01")], "id long, v string, day string")
-    with pytest.raises(ValueError, match="round-trip"):
-        merge_upsert_partitioned(spark, wh, "m", upd, ["id"], "day")
-
-
-def test_partitioned_merge_string_partition_merges_in_place_with_schema_file(
-    spark, tmp_path
-):
-    """With the table's _schema.json, day='01' reads back as the string
-    it was written as, so the merge rewrites day=01 in place."""
-    import os
-
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.merge_upsert import (
-        merge_upsert_partitioned,
-    )
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    first = spark.createDataFrame([(1, "a", "01")], "id long, v string, day string")
-    merge_upsert_partitioned(spark, wh, "m", first, ["id"], "day")
-    upd = spark.createDataFrame([(1, "b", "01")], "id long, v string, day string")
-    assert merge_upsert_partitioned(spark, wh, "m", upd, ["id"], "day") == ["01"]
-    table = wh.table_path("m")
-    assert sorted(d for d in os.listdir(table) if "=" in d) == ["day=01"]
-    assert [tuple(r) for r in wh.read(spark, "m").collect()] == [(1, "b", "01")]
 
 
 def test_schema_drift_replay_mart_continuity(spark, tmp_path):

@@ -214,42 +214,6 @@ def test_range_join_matches_bruteforce(spark, points, intervals, bin_s):
     assert got == want
 
 
-# --- partitioned merge vs plain merge -----------------------------------
-
-PART_ROWS = st.lists(
-    st.tuples(KEYS, VALS.filter(lambda v: v is not None)),
-    min_size=1,
-    max_size=10,
-).map(lambda rows: list({k: (k, v, f"d{k % 3}") for k, v in rows}.values()))
-# partition derived from the key → partition-stable by construction
-
-
-@given(base=PART_ROWS, updates=PART_ROWS)
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
-def test_partitioned_merge_equals_plain_merge(spark, tmp_path_factory, base, updates):
-    """merge_upsert_partitioned (partition-pruned read + per-partition
-    swap) must land the exact same table state as plain merge_upsert +
-    full overwrite, for ANY partition-stable input."""
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.merge_upsert import (
-        merge_upsert,
-        merge_upsert_partitioned,
-    )
-
-    wh = Warehouse(str(tmp_path_factory.mktemp("wh")))
-    schema = "id int, val string, day string"
-    b, u = spark.createDataFrame(base, schema), spark.createDataFrame(updates, schema)
-    merge_upsert_partitioned(spark, wh, "t", b, ["id"], "day")
-    merge_upsert_partitioned(spark, wh, "t", u, ["id"], "day")
-    got = sorted(tuple(r) for r in wh.read(spark, "t").select("id", "val", "day").collect())
-    want = sorted(tuple(r) for r in merge_upsert(b, u, keys=["id"]).collect())
-    assert got == want
-
-
 # --- stratified sample invariants ----------------------------------------
 
 STRATA_ROWS = st.lists(

@@ -253,26 +253,6 @@ def test_run_with_metrics_auto_attaches_recorder(spark, tmp_path):
     assert report["w"]["writes"][0]["rows"] == 7
 
 
-def test_partitioned_merge_records_swapped_partitions_only(spark, tmp_path):
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.metrics import RunMetrics
-    from lion_parcel_etl_spark.operators.merge_upsert import merge_upsert_partitioned
-
-    rm = RunMetrics()
-    wh = Warehouse(str(tmp_path / "wh"), metrics=rm)
-    base = spark.createDataFrame(
-        [(i, "v", f"d{i % 3}") for i in range(30)], "id long, v string, day string"
-    )
-    merge_upsert_partitioned(spark, wh, "mart", base, ["id"], "day")
-    mark = rm.mark()
-    upd = spark.createDataFrame([(0, "NEW", "d0")], "id long, v string, day string")
-    merge_upsert_partitioned(spark, wh, "mart", upd, ["id"], "day")
-    new = rm.writes[mark:]
-    assert len(new) == 1
-    # only the d0 partition (10 rows) was rewritten, not the whole mart
-    assert new[0].rows == 10
-
-
 def _hourly(pipeline_runs: list):
     """A one-task pipeline that logs each run's injected timestamps."""
     p = Pipeline("hourly")

@@ -177,69 +177,6 @@ def test_scd2_never_shuffles_target(spark):
     assert not shuffles, f"target shuffled: {shuffles}"
 
 
-def test_partitioned_scd2_appends_history_and_swaps_current(spark, tmp_path):
-    import os
-
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.scd2 import scd2_apply_partitioned
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    t0 = ts("2025-10-01 10:00:00")
-
-    runs = [
-        ([(1, 10, "Created", "JKT", "BDG", t0, ts("2025-10-01 10:00:00")),
-          (2, 20, "Created", "SUB", "JKT", t0, ts("2025-10-01 10:00:00"))],
-         "2025-10-01 10:05:00"),
-        ([(1, 10, "On Way", "JKT", "BDG", t0, ts("2025-10-02 09:00:00")),
-          (2, 20, "Created", "SUB", "JKT", t0, ts("2025-10-01 10:00:00"))],
-         "2025-10-02 09:05:00"),
-        ([(1, 10, "DONE", "JKT", "BDG", t0, ts("2025-10-03 08:00:00")),
-          (2, 20, "On Way", "SUB", "JKT", t0, ts("2025-10-03 08:00:00"))],
-         "2025-10-03 08:05:00"),
-    ]
-
-    plain = None
-    for rows, rts in runs[:2]:
-        snap = retail_snapshot(src_df(spark, rows), rts)
-        scd2_apply_partitioned(
-            spark, wh, "scd", snap, KEY, TRACKED, "updated_at", rts
-        )
-        plain = scd2_apply(plain, snap, KEY, TRACKED, "updated_at", rts).cache()
-        plain.count()
-
-    hist_dir = os.path.join(wh.table_path("scd"), "state=history")
-
-    def hist_files():
-        # history files live in per-run subdirectories (the idempotent
-        # append protocol) — walk the whole partition tree
-        return {
-            (os.path.relpath(os.path.join(dp, f), hist_dir), os.path.getmtime(os.path.join(dp, f)))
-            for dp, _dns, fns in os.walk(hist_dir)
-            for f in fns
-            if f.endswith(".parquet")
-        }
-
-    before = hist_files()
-    assert before  # run 2 expired id 1's first version
-
-    rows, rts = runs[2]
-    snap = retail_snapshot(src_df(spark, rows), rts)
-    scd2_apply_partitioned(spark, wh, "scd", snap, KEY, TRACKED, "updated_at", rts)
-    plain = scd2_apply(plain, snap, KEY, TRACKED, "updated_at", rts).cache()
-
-    # run-2 history files untouched byte-for-byte; run 3 only appended
-    after = hist_files()
-    assert before <= after and len(after) > len(before)
-
-    got = wh.read(spark, "scd")
-    cols = ["id", "last_status", "valid_from", "valid_to", "is_current"]
-    def canon(df):
-        return sorted(tuple(str(r[c]) for c in cols) for r in df.collect())
-    assert canon(got) == canon(plain)
-    # partition column complements the typed flag
-    assert got.filter((F.col("state") == "current") != F.col("is_current")).count() == 0
-
-
 def test_scd2_null_key_updates_instead_of_accumulating(spark):
     """A NULL business key is a real key: repeated runs must expire
     and replace its version, never pile up open current rows."""

@@ -341,41 +341,25 @@ def test_stream_scd2_matches_batch_two_runs(spark, tmp_path):
     assert got.filter("user_id = 2").count() == 1
 
 
-def test_stream_scd2_bucketed_matches_batch_and_recovers_from_crash(
-    spark, tmp_path, monkeypatch
+@pytest.mark.parametrize("window", ["before_swap", "after_swap"])
+def test_stream_scd2_crash_around_swap_replays_to_batch_state(
+    spark, tmp_path, monkeypatch, window
 ):
-    """The bucketed streaming twin: (1) two micro-batches leave the
-    dimension in the batch twin's exact state; (2) a crash injected at
-    the second touched bucket's current swap mid-batch fails the query
-    loudly, and re-running the stream on the SAME checkpoint replays
-    the batch and converges — one expired version per changed key,
-    nothing duplicated (the batch operator's per-bucket convergence
-    carried through foreachBatch)."""
+    """Batch 2 crashes before or after its table swap; a rerun on the
+    same checkpoint replays it. The dimension ends equal to two batch
+    scd2_apply runs, with one current version per key and is_current
+    read back as a boolean."""
     import datetime as dt
 
     import lion_parcel_etl_spark.catalog as cat
     from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.scd2 import bucket_of, scd2_apply
-    from lion_parcel_etl_spark.streaming import stream_scd2_bucketed
-
-    n_buckets = 4
-    # two user ids in DIFFERENT buckets so the crash window "second
-    # touched bucket" exists
-    rows = spark.createDataFrame(
-        [(i,) for i in range(1, 50)], "user_id long"
-    ).select("user_id", bucket_of(["user_id"], n_buckets).alias("b")).collect()
-    picked: dict[int, int] = {}
-    for r in rows:
-        if r["b"] not in picked.values():
-            picked[r["user_id"]] = r["b"]
-        if len(picked) == 2:
-            break
-    (id_a, b_a), (id_b, b_b) = list(picked.items())
+    from lion_parcel_etl_spark.operators.scd2 import scd2_apply
+    from lion_parcel_etl_spark.streaming import stream_scd2
 
     schema = "user_id long, status string, ts timestamp"
     t1, t2 = dt.datetime(2024, 1, 1, 10), dt.datetime(2024, 1, 2, 10)
-    b1 = [(id_a, "new", t1), (id_b, "new", t1)]
-    b2 = [(id_a, "active", t2), (id_b, "active", t2)]
+    b1 = [(1, "new", t1), (2, "new", t1), (3, "new", t1)]
+    b2 = [(1, "active", t2), (2, "new", t2), (4, "new", t2)]
 
     landing = str(tmp_path / "landing")
     wh = Warehouse(str(tmp_path / "wh"))
@@ -383,42 +367,63 @@ def test_stream_scd2_bucketed_matches_batch_and_recovers_from_crash(
 
     def run():
         stream = spark.readStream.schema(schema).parquet(landing)
-        stream_scd2_bucketed(
-            stream, wh, "dim", ["user_id"], ["status"], "ts", ckpt,
-            n_buckets=n_buckets,
-        )
+        stream_scd2(stream, wh, "dim", ["user_id"], ["status"], "ts", ckpt)
 
     spark.createDataFrame(b1, schema).write.mode("append").parquet(landing)
     run()
+    before = sorted(tuple(r) for r in wh.read(spark, "dim").collect())
 
-    # arm a crash on the LATER touched bucket's current swap
     real = cat.swap_dir
     state = {"armed": True}
-    crash_sub = f"bucket-{max(b_a, b_b)}"
 
     def chaotic(tmp, dst):
-        if state["armed"] and crash_sub in dst:
+        if state["armed"] and window == "before_swap":
             raise RuntimeError("injected crash before swap")
         real(tmp, dst)
+        if state["armed"]:
+            raise RuntimeError("injected crash after swap")
 
     monkeypatch.setattr(cat, "swap_dir", chaotic)
     spark.createDataFrame(b2, schema).write.mode("append").parquet(landing)
     with pytest.raises(Exception, match="injected crash"):
         run()
-    state["armed"] = False
-    run()  # same checkpoint: the uncommitted batch replays and converges
+    if window == "before_swap":
+        assert sorted(tuple(r) for r in wh.read(spark, "dim").collect()) == before
 
-    got = wh.read(spark, "dim").drop("state")
-    want1 = scd2_apply(
-        None, spark.createDataFrame(b1, schema), ["user_id"], ["status"], "ts", str(t1)
-    )
-    want = scd2_apply(
-        want1, spark.createDataFrame(b2, schema), ["user_id"], ["status"], "ts", str(t2)
-    )
+    state["armed"] = False
+    run()
+    got = wh.read(spark, "dim")
+    assert dict(got.dtypes)["is_current"] == "boolean"
+    s1 = spark.createDataFrame(b1, schema)
+    s2 = spark.createDataFrame(b2, schema)
+    want1 = scd2_apply(None, s1, ["user_id"], ["status"], "ts", str(t1))
+    want = scd2_apply(want1, s2, ["user_id"], ["status"], "ts", str(t2))
     cols = ["user_id", "status", "valid_from", "valid_to", "is_current"]
     canon = lambda df: sorted(tuple(str(r[c]) for c in cols) for r in df.collect())
     assert canon(got) == canon(want)
-    assert got.filter(~F.col("is_current")).count() == 2  # exactly one per key
+    current = got.filter("is_current").groupBy("user_id").count().collect()
+    assert sorted((r.user_id, r["count"]) for r in current) == [
+        (1, 1), (2, 1), (3, 1), (4, 1)
+    ]
+
+
+def test_stream_scd2_refuses_all_null_order_batch(spark, tmp_path):
+    """A micro-batch whose order column is NULL on every row has no
+    snapshot ordering and no run timestamp: the stream raises and
+    writes nothing."""
+    from lion_parcel_etl_spark.catalog import Warehouse
+    from lion_parcel_etl_spark.streaming import stream_scd2
+
+    schema = "user_id long, status string, ts timestamp"
+    landing = str(tmp_path / "landing")
+    wh = Warehouse(str(tmp_path / "wh"))
+    spark.createDataFrame([(1, "new", None)], schema).write.parquet(landing)
+    stream = spark.readStream.schema(schema).parquet(landing)
+    with pytest.raises(Exception, match="all-NULL"):
+        stream_scd2(
+            stream, wh, "dim", ["user_id"], ["status"], "ts", str(tmp_path / "ckpt")
+        )
+    assert not wh.exists("dim")
 
 
 def test_stream_rollup_matches_batch_single_shot(spark, tmp_path):

@@ -212,12 +212,6 @@ def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--eval":
         eval_main()
         return
-    if len(sys.argv) > 1 and sys.argv[1] == "--scd2-bucketed":
-        scd2_bucketed_main()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--rebucket":
-        rebucket_main()
-        return
     mult = int(sys.argv[1]) if len(sys.argv) > 1 else 20
     spark = get_spark(
         app_name="scale-smoke",
@@ -488,150 +482,6 @@ def eval_main() -> None:
         f"shuffle {(_shuffle_bytes(spark) - sb0) / 1e6:.1f} MB"
     )
     fused.unpersist()
-
-
-def scd2_bucketed_main() -> None:
-    """Measure the bucketed-SCD2 claim: an incremental run whose
-    snapshot touches a small fraction of the key space should read and
-    rewrite ~that fraction of the current partition, where the
-    unbucketed layout rewrites current wholesale. Loads an sf0.1-sized
-    dimension (orders keys), applies a 1%-of-keys snapshot to (a)
-    scd2_apply_partitioned and (b) scd2_apply_bucketed(64), and
-    reports wall time + bytes written under each layout's table dir."""
-    import os
-    import tempfile
-    import time as _t
-
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.scd2 import (
-        scd2_apply_bucketed,
-        scd2_apply_partitioned,
-    )
-
-    spark = get_spark(app_name="scd2-bucketed-smoke")
-    spark.sparkContext.setLogLevel("ERROR")
-    orders = spark.read.parquet("/root/testdata/sf0.1/orders.parquet")
-    snap1 = orders.select(
-        F.col("o_orderkey").alias("id"),
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_totalprice").alias("price"),
-    ).withColumn("snap_ts", F.to_timestamp(F.lit("2024-01-01 00:00:00")))
-    n = snap1.count()
-    # two incremental regimes: a BROAD snapshot (1% of keys, uniform —
-    # with hash bucketing this touches every bucket) and a SPARSE one
-    # (10 keys — the correction/GDPR-delete/late-fix shape, touching
-    # ≤10 buckets)
-    broad = (
-        snap1.filter(F.pmod("id", F.lit(100)) == 0)
-        .withColumn("status", F.lit("Z"))
-        .withColumn("snap_ts", F.to_timestamp(F.lit("2024-01-02 00:00:00")))
-    )
-    sparse = (
-        snap1.orderBy("id").limit(10)
-        .withColumn("status", F.lit("Z"))
-        .withColumn("snap_ts", F.to_timestamp(F.lit("2024-01-03 00:00:00")))
-    )
-    print(
-        f"dimension: {n} keys; broad snapshot: {broad.count()} keys (~1%); "
-        f"sparse snapshot: {sparse.count()} keys"
-    )
-
-    def tree_bytes(d):
-        total = 0
-        for dp, _dns, fns in os.walk(d):
-            for fn in fns:
-                total += os.path.getsize(os.path.join(dp, fn))
-        return total
-
-    from lion_parcel_etl_spark.metrics import RunMetrics
-
-    for mode in ("partitioned", "bucketed"):
-        root = tempfile.mkdtemp(prefix=f"scd2_{mode}_")
-        wh = Warehouse(root, metrics=RunMetrics())
-        apply_ = (
-            scd2_apply_partitioned
-            if mode == "partitioned"
-            else lambda *a, **k: scd2_apply_bucketed(*a, n_buckets=64, **k)
-        )
-        apply_(spark, wh, "dim", snap1, ["id"], ["status", "price"],
-               "snap_ts", "2024-01-01 01:00:00")
-        for label, snap, rts in (
-            ("broad-1pct", broad, "2024-01-02 01:00:00"),
-            ("sparse-10", sparse, "2024-01-03 01:00:00"),
-        ):
-            mark = wh.metrics.mark()
-            t0 = _t.perf_counter()
-            apply_(spark, wh, "dim", snap, ["id"], ["status", "price"],
-                   "snap_ts", rts)
-            dt = _t.perf_counter() - t0
-            written = sum(w.bytes for w in wh.metrics.writes[mark:])
-            wrows = sum(w.rows for w in wh.metrics.writes[mark:])
-            print(
-                f"{mode:12s} {label:10s}: {dt:6.2f}s, written "
-                f"{written / 1e6:.2f} MB / {wrows} rows"
-            )
-
-
-def rebucket_main() -> None:
-    """Measure the rebucket migration (the one-time cost of changing
-    the bucketed-SCD2 layout constant): load an sf0.1-sized dimension
-    at 64 buckets, migrate 64→128 and 128→32, and verify a sparse
-    incremental apply works at the new count. The claim: the migration
-    is one read + one rewrite of the CURRENT partition only (history
-    untouched), so its cost is the current partition's size — pay it
-    once instead of every sparse run degrading forever."""
-    import tempfile
-    import time as _t
-
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.metrics import RunMetrics
-    from lion_parcel_etl_spark.operators.scd2 import (
-        rebucket,
-        scd2_apply_bucketed,
-    )
-
-    spark = get_spark(app_name="rebucket-smoke")
-    spark.sparkContext.setLogLevel("ERROR")
-    orders = spark.read.parquet("/root/testdata/sf0.1/orders.parquet")
-    snap1 = orders.select(
-        F.col("o_orderkey").alias("id"),
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_totalprice").alias("price"),
-    ).withColumn("snap_ts", F.to_timestamp(F.lit("2024-01-01 00:00:00")))
-    root = tempfile.mkdtemp(prefix="rebucket_")
-    wh = Warehouse(root, metrics=RunMetrics())
-    scd2_apply_bucketed(
-        spark, wh, "dim", snap1, ["id"], ["status", "price"], "snap_ts",
-        "2024-01-01 01:00:00", n_buckets=64,
-    )
-    print(f"dimension: {snap1.count()} keys at 64 buckets")
-    for n_new in (128, 32):
-        mark = wh.metrics.mark()
-        t0 = _t.perf_counter()
-        stats = rebucket(spark, wh, "dim", ["id"], n_new)
-        dt = _t.perf_counter() - t0
-        written = sum(w.bytes for w in wh.metrics.writes[mark:])
-        print(
-            f"rebucket {stats['n_old']:3d}->{stats['n_new']:3d}: {dt:6.2f}s, "
-            f"{stats['rows']} rows, rewrote {written / 1e6:.2f} MB"
-        )
-    sparse = (
-        snap1.orderBy("id").limit(10)
-        .withColumn("status", F.lit("Z"))
-        .withColumn("snap_ts", F.to_timestamp(F.lit("2024-01-03 00:00:00")))
-    )
-    mark = wh.metrics.mark()
-    t0 = _t.perf_counter()
-    scd2_apply_bucketed(
-        spark, wh, "dim", sparse, ["id"], ["status", "price"], "snap_ts",
-        "2024-01-03 01:00:00", n_buckets=32,
-    )
-    dt = _t.perf_counter() - t0
-    written = sum(w.bytes for w in wh.metrics.writes[mark:])
-    print(
-        f"post-migration sparse-10 apply at 32 buckets: {dt:6.2f}s, "
-        f"rewrote {written / 1e6:.2f} MB"
-    )
 
 
 def classifier_main() -> None:
