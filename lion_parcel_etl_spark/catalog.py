@@ -138,13 +138,23 @@ class Warehouse:
         return os.path.join(self.root, *parts)
 
     def exists(self, name: str) -> bool:
-        """True when the table directory holds any parquet data —
-        including under partition subdirectories (day=…, __batch_id=…),
-        which a top-level-only listing would miss. os.walk short-
-        circuits on the first data file, so this is O(dirs-until-hit),
-        not a full-tree scan."""
+        """True when the table directory holds parquet data, at its root
+        or in a ``__batch_id=…`` dir (os.walk stops at the first hit).
+        Raises when the table is absent but its demoted copy
+        ``.<leaf>.__old__<8hex>`` is not: a swap crashed between its
+        renames, and "no table" would send an incremental writer down its
+        first-load branch, losing history. vacuum restores it (not done
+        here: a live swap passes through the same state)."""
         path = self.table_path(name)
         if not os.path.isdir(path):
+            db, leaf = os.path.split(path)
+            for d in os.listdir(db) if os.path.isdir(db) else []:
+                m = ORPHAN_NAME.match(d)
+                if d.startswith(".") and m and m["marker"] == "__old__" and m["base"] == leaf:
+                    raise RuntimeError(
+                        f"table {name!r} survives only as {os.path.join(db, d)!r}; restore "
+                        "it with operators.maintenance.vacuum(wh, min_age_seconds=0)"
+                    )
             return False
         for _dirpath, _dirs, files in os.walk(path):
             if any(f.endswith(".parquet") or f == "_SUCCESS" for f in files):

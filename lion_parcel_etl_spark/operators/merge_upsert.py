@@ -12,9 +12,11 @@ delete+insert equivalence of Postgres MERGE on a unique key.
 
 Scale design (100 TB target):
 - The updates side of an incremental run is normally tiny relative to
-  the target; the anti-join is marked broadcast-able so Catalyst/AQE
-  plans a BroadcastHashJoin — the target is scanned once, never
-  shuffled, and no sort is required.
+  the target; its keys are the broadcast build side of the anti-join,
+  so the plan is a BroadcastHashJoin — the target is scanned once,
+  never shuffled, and no sort is required. The keys are not
+  deduplicated first: an anti-join ignores build-side duplicates, and
+  a ``distinct()`` would add the plan's only shuffle.
 - The caller installs the merged result with one ``Warehouse.overwrite``
   (a full rewrite); Catalyst still prunes the partitions of any
   partitioned table on read.
@@ -46,7 +48,6 @@ def merge_upsert(
     target: DataFrame | None,
     updates: DataFrame,
     keys: list[str],
-    broadcast_updates: bool = True,
     dedupe_updates: bool = False,
     order_col: str | None = None,
 ) -> DataFrame:
@@ -81,10 +82,9 @@ def merge_upsert(
     if target is None:
         return updates
     updates = sync_columns(updates, target)
-    update_keys = updates.select(*keys).distinct()
-    if broadcast_updates:
-        update_keys = F.broadcast(update_keys)
-    uk = update_keys.alias("__u")
+    # no distinct() on the key set: an anti-join ignores build-side
+    # duplicates, and the distinct's hash aggregate would be a shuffle
+    uk = F.broadcast(updates.select(*keys)).alias("__u")
     cond = None
     for k in keys:
         eq = target[k].eqNullSafe(F.col(f"__u.{k}"))

@@ -1,34 +1,37 @@
 """SCD Type 2 materializer (reference's retail_transactions_scd model).
 
 Re-expresses (not ports) the dbt SCD2 model at reference
-``dbt/models/marts/retail_transactions_scd.sql``:
+``dbt/models/marts/retail_transactions_scd.sql``. Its three joins and
+four-way union become one left join of the stored table against the
+snapshot plus one anti-join for the inserts:
 
-- change detection: snapshot ⟕ previous-current on key, any tracked
-  column differing under null-safe inequality (``IS DISTINCT FROM``,
-  :65-68) → UPDATE; missing in previous → INSERT (J2/F4);
-- expiry: previous-current ⨝ UPDATE-changes → ``valid_to`` = the new
-  version's snapshot time, ``is_current`` = false (J3, :81-101);
-- carry: unchanged current rows AND rows absent from the snapshot are
-  retained as-is (anti-join, J4, :125-142);
-- history: non-current rows pass through untouched (:146-164);
-- new versions: INSERT+UPDATE changes become current rows with
-  ``valid_from`` = snapshot time, ``valid_to`` = the 9999-12-31
-  sentinel (F16), first-seen ``dw_inserted_at`` carried forward
-  (:104-121);
-- result: 4-way ``unionByName`` (U1, :123-201);
+- probe: stored rows ⟕ snapshot on key AND stored row current; a
+  tracked column differing under null-safe inequality (``IS DISTINCT
+  FROM``, :65-68) is a change (J2/F4);
+- carry: history rows (:146-164), unchanged current rows and rows
+  absent from the snapshot (J4, :125-142) yield themselves as-is;
+- a changed row yields its expired copy (``valid_to`` = the new
+  snapshot time, ``is_current`` = false; J3, :81-101) and the new
+  version (``valid_to`` = the 9999-12-31 sentinel, F16; first-seen
+  ``dw_inserted_at`` carried forward, :104-121) from one projection;
+- inserts: snapshot keys with no current row (J2) become new versions;
+- result: carried ∪ inserts (U1, :123-201);
 - first run: full-refresh branch (:203-219).
 
 Scale design (100 TB target): the snapshot of an incremental run is
-small next to the accumulated history, so the snapshot side of every
-join is broadcast — the target is never shuffled. The caller stores the
-full result with one ``Warehouse.overwrite`` partitioned by
-``is_current`` (``pipelines/dags.py`` ``mart_scd``, the streaming twin
-``stream_scd2``): each run rewrites the whole table, history included.
-An append-only history layout was measured on the retail DAG and was
-slower at its history depth (SCALE.md §Incremental materialization).
+small next to the accumulated history, so it is broadcast: the stored
+table streams, is scanned twice (probe, current keys), never shuffled.
+The caller stores the full result with one ``Warehouse.overwrite``
+partitioned by ``is_current`` (``pipelines/dags.py`` ``mart_scd``, the
+streaming twin ``stream_scd2``): each run rewrites the whole table,
+history included. An append-only history layout was measured on the
+retail DAG and was slower at its history depth (SCALE.md §Incremental
+materialization).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -46,7 +49,6 @@ def scd2_apply(
     snapshot_ts_col: str,
     run_ts: str,
     sentinel: str = SCD_SENTINEL,
-    broadcast_snapshot: bool = True,
 ) -> DataFrame:
     """Apply one SCD2 run; returns the full new state of the dimension.
 
@@ -87,9 +89,6 @@ def scd2_apply(
         # open current version.
         return as_version(snapshot, run_ts_c)
 
-    prev = target.filter(F.col("is_current"))
-    hist = target.filter(~F.col("is_current"))
-
     def key_cond(la: str, ra: str):
         # null-safe: a NULL key value matches its stored predecessor
         cond = None
@@ -98,67 +97,47 @@ def scd2_apply(
             cond = eq if cond is None else cond & eq
         return cond
 
-    s = snapshot.alias("s")
-    if broadcast_snapshot:
-        # Spark cannot broadcast the PRESERVED (left) side of a left-outer
-        # join — a hint there is silently dropped and the planner falls
-        # back to shuffling BOTH sides (at 100 TB: the full current
-        # dimension). Instead: semi-prune prev down to the snapshot's keys
-        # (broadcast the tiny key set → prev streams, never shuffles),
-        # then broadcast the pruned side as the BUILD of the left join.
-        # |pruned prev| ≤ |snapshot|, so it is broadcastable whenever the
-        # snapshot itself is. No distinct() on the key set: left-semi
-        # semantics ignore build-side duplicates, and the distinct's
-        # hash-aggregate would be the only shuffle in the whole plan.
-        key_set = F.broadcast(snapshot.select(*key).alias("k"))
-        pruned = prev.alias("pv").join(key_set, key_cond("pv", "k"), "left_semi")
-        p = F.broadcast(pruned.withColumn("__in_prev", F.lit(True))).alias("p")
-    else:
-        p = prev.withColumn("__in_prev", F.lit(True)).alias("p")
+    # Every stored row streams past the broadcast snapshot; only current
+    # rows match. Presence via the marker, NOT `s.key IS NULL`: with
+    # null-safe matching a NULL key is a real, matchable key value.
+    s = F.broadcast(snapshot.withColumn("__in_snap", F.lit(True))).alias("s")
+    probe = target.alias("t").join(s, key_cond("t", "s") & F.col("t.is_current"), "left")
+    changed = F.col("s.__in_snap").isNotNull() & reduce(
+        lambda a, b: a | b,
+        [~F.col(f"s.{c}").eqNullSafe(F.col(f"t.{c}")) for c in tracked],
+    )
+    new_ts = F.col(f"s.{snapshot_ts_col}")
+    # one ordered column list builds both structs, so their field order
+    # is the target's whatever order the snapshot carries its columns in
+    cols = target.columns
+    expire = {"valid_to": new_ts, "is_current": F.lit(False), "dw_updated_at": run_ts_c}
+    version = {
+        "valid_from": new_ts,
+        "valid_to": sentinel_c,
+        "is_current": F.lit(True),
+        "dw_inserted_at": F.coalesce(F.col("t.dw_inserted_at"), run_ts_c),
+        "dw_updated_at": run_ts_c,
+    }
 
-    changed = None
-    for c in tracked:
-        neq = ~F.col(f"s.{c}").eqNullSafe(F.col(f"p.{c}"))
-        changed = neq if changed is None else (changed | neq)
+    def kept(c: str):
+        if c not in expire:
+            return F.col(f"t.{c}")
+        return F.when(changed, expire[c]).otherwise(F.col(f"t.{c}"))
 
-    # presence via the literal marker, NOT `p.key IS NULL`: with
-    # null-safe matching a NULL key is a real, matchable key value
-    chg = s.join(p, key_cond("s", "p"), "left").select(
-        *[F.col(f"s.{c}").alias(c) for c in attrs],
-        F.col("p.dw_inserted_at").alias("__prev_inserted"),
-        F.when(F.col("p.__in_prev").isNull(), F.lit("INSERT"))
-        .when(changed, F.lit("UPDATE"))
-        .otherwise(F.lit("NOCHANGE"))
-        .alias("change_type"),
-    )
+    old = F.struct(*[kept(c).alias(c) for c in cols])
+    new = F.when(changed, F.struct(*[version.get(c, F.col(f"s.{c}")).alias(c) for c in cols]))
+    # a stored row yields itself, or its expired copy plus the new version
+    carried = probe.select(F.inline(F.filter(F.array(old, new), lambda x: x.isNotNull())))
 
-    upd = chg.filter(F.col("change_type") == "UPDATE").select(
-        *key, F.col(snapshot_ts_col).alias("__new_ts")
+    # Inserts: semi-prune the current keys to the snapshot's (broadcast
+    # key set, the target streams), then anti-join the snapshot against
+    # them. No distinct(): semi/anti joins ignore build-side duplicates,
+    # and its hash aggregate would be a shuffle.
+    key_set = F.broadcast(snapshot.select(*key).alias("k"))
+    cur_keys = (
+        target.filter(F.col("is_current")).select(*key).alias("pv")
+        .join(key_set, key_cond("pv", "k"), "left_semi")
     )
-    upd_b = F.broadcast(upd) if broadcast_snapshot else upd
-
-    expired = (
-        prev.alias("pv")
-        .join(upd_b.alias("u"), key_cond("pv", "u"), "inner")
-        .select(
-            *[F.col(f"pv.{c}").alias(c) for c in attrs],
-            F.col("pv.valid_from").alias("valid_from"),
-            F.col("u.__new_ts").alias("valid_to"),
-            F.lit(False).alias("is_current"),
-            F.col("pv.dw_inserted_at").alias("dw_inserted_at"),
-            run_ts_c.alias("dw_updated_at"),
-        )
-    )
-    unchanged = prev.alias("pv").join(
-        upd_b.select(*key).alias("u"), key_cond("pv", "u"), "left_anti"
-    )
-    new_rows = as_version(
-        chg.filter(F.col("change_type").isin("INSERT", "UPDATE")),
-        F.coalesce(F.col("__prev_inserted"), run_ts_c),
-    )
-    return (
-        unchanged.unionByName(hist)
-        .unionByName(expired.select(*unchanged.columns))
-        .unionByName(new_rows.select(*unchanged.columns))
-    )
-
+    cur = F.broadcast(cur_keys).alias("c")
+    inserts = as_version(snapshot.alias("s").join(cur, key_cond("s", "c"), "left_anti"), run_ts_c)
+    return carried.unionByName(inserts.select(*cols))

@@ -421,8 +421,8 @@ def stream_scd2(
     ``snapshot_ts_col``), applies one ``scd2_apply`` run to the stored
     table and installs the result the way the retail DAG's ``mart_scd``
     does: one ``Warehouse.overwrite`` partitioned by ``is_current`` (the
-    target dimension is never shuffled — scd2_apply's semi-prune +
-    broadcast contract).
+    target dimension is never shuffled: scd2_apply streams it past the
+    broadcast snapshot).
 
     The injected run timestamp is the batch's max ``snapshot_ts_col``
     (or ``run_ts_col`` if given) — deterministic from the data, never

@@ -333,3 +333,64 @@ def test_overwrite_crash_between_renames_vacuum_restores_table(
     got = wh.read(spark, "t")
     assert dict(got.dtypes)["is_current"] == "boolean"
     assert sorted(tuple(r) for r in got.select("id", "is_current").collect()) == old_rows
+
+
+def test_scd2_after_crash_between_renames_raises_then_keeps_history(
+    spark, tmp_path, monkeypatch
+):
+    """An SCD2 overwrite crashes between the swap's two renames: the
+    table's only committed copy is its demoted dir. Reading it "if it
+    exists" must raise (a first load there would rebuild the dimension
+    from one snapshot), and after vacuum restores it the rerun keeps
+    every earlier version."""
+    import os
+
+    import lion_parcel_etl_spark.catalog as cat
+    from lion_parcel_etl_spark.operators.maintenance import vacuum
+    from lion_parcel_etl_spark.operators.scd2 import scd2_apply
+    from lion_parcel_etl_spark.pipelines.dags import _read_if_exists
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    table = wh.table_path("dim")
+
+    def run(status, day):
+        snap = spark.createDataFrame(
+            [(1, status, f"2024-01-0{day} 00:00:00"), (2, "fixed", "2024-01-01 00:00:00")],
+            "id long, status string, snap_ts string",
+        ).withColumn("snap_ts", F.to_timestamp("snap_ts"))
+        out = scd2_apply(
+            _read_if_exists(wh, spark, "dim"), snap, ["id"], ["status"], "snap_ts",
+            f"2024-01-0{day} 01:00:00",
+        )
+        wh.overwrite(out, "dim", partition_by=["is_current"])
+
+    def versions():
+        return sorted(
+            (r.id, r.status, r.is_current) for r in wh.read(spark, "dim").collect()
+        )
+
+    run("a", 1)
+    run("b", 2)
+    before = versions()
+    assert before == [(1, "a", False), (1, "b", True), (2, "fixed", True)]
+
+    real_rename = cat.os.rename
+
+    def rename(src, dst):
+        if "__tmp__" in str(src) and str(dst) == table:
+            raise RuntimeError("injected crash between renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(cat.os, "rename", rename)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run("c", 3)
+    monkeypatch.undo()
+
+    assert not os.path.exists(table)
+    with pytest.raises(RuntimeError, match=r"\.dim\.__old__[0-9a-f]{8}.*vacuum"):
+        _read_if_exists(wh, spark, "dim")
+
+    vacuum(wh, min_age_seconds=0)
+    assert versions() == before
+    run("c", 3)
+    assert versions() == [(1, "a", False), (1, "b", False), (1, "c", True), (2, "fixed", True)]

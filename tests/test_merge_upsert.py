@@ -55,6 +55,26 @@ def test_merge_plan_broadcasts_updates(spark):
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 
 
+def test_merge_duplicate_update_keys_plan_no_shuffle(spark):
+    """Duplicate update keys need no distinct() before the anti-join
+    (its build side ignores duplicates): the plan holds no
+    hash-partitioning shuffle, the matched target rows (the null key
+    included) go, and every update row lands once."""
+    from lion_parcel_etl_spark.operators.bucketing import plan_string
+
+    schema = "id long, v string"
+    tgt = spark.createDataFrame([(1, "old"), (2, "keep"), (None, "null-old")], schema)
+    upd = spark.createDataFrame(
+        [(1, "a"), (1, "b"), (None, "n1"), (None, "n2"), (3, "ins"), (3, "ins")], schema
+    )
+    out = merge_upsert(tgt, upd, ["id"])
+    assert "hashpartitioning" not in plan_string(out)
+    got = sorted(tuple(r) for r in out.fillna(-1, ["id"]).collect())
+    assert got == [
+        (-1, "n1"), (-1, "n2"), (1, "a"), (1, "b"), (2, "keep"), (3, "ins"), (3, "ins")
+    ]
+
+
 def test_union_evolve_widens_and_fills(spark):
     from lion_parcel_etl_spark.operators.merge_upsert import union_evolve
 

@@ -106,6 +106,31 @@ def test_scd2_invariants_across_runs(spark, snaps):
             assert c["valid_to"] in froms
             assert c["valid_from"] <= c["valid_to"]
 
+    # and the state is exactly that of a pure-Python SCD2 over the runs
+    meta = ["valid_from", "valid_to", "is_current", "dw_inserted_at", "dw_updated_at"]
+    got = state.select("id", "val", *[F.col(c).cast("string") for c in meta])
+    got = sorted(tuple(r) for r in got.collect())
+    assert got == sorted(_scd2_model(snaps, run_days))
+
+
+def _scd2_model(snaps, run_days):
+    """SCD2 over ``snaps`` (one per run, snapshot ts = run ts) as rows of
+    (id, val, valid_from, valid_to, is_current, dw_inserted_at,
+    dw_updated_at), timestamps as strings."""
+    end = "9999-12-31 23:59:59"
+    state: list[tuple] = []
+    for rows, ts in zip(snaps, run_days):
+        cur = {r[0]: r for r in state if r[4] == "true"}
+        for k, v in rows:
+            prev = cur.get(k)
+            if prev is None:
+                state.append((k, v, ts, end, "true", ts, ts))
+            elif prev[1] != v:
+                state.remove(prev)
+                state.append(prev[:3] + (ts, "false", prev[5], ts))
+                state.append((k, v, ts, end, "true", prev[5], ts))
+    return state
+
 
 @given(rows=ROWS.filter(lambda r: len(r) > 0))
 @SLOW_OK

@@ -208,3 +208,34 @@ def test_scd2_rejects_meta_column_collisions(spark):
     with pytest.raises(ValueError, match="valid_from"):
         scd2_apply(None, snap, ["user_id"], ["valid_from"], "snap_ts",
                    "2024-01-01 01:00:00")
+
+
+def test_scd2_probes_stored_table_twice(spark, tmp_path):
+    """An incremental run over a stored, is_current-partitioned dimension
+    reads it in two scans (the carry probe and the insert anti-join's
+    current keys) and broadcasts three sides. The snapshot is in memory,
+    so every parquet scan in the plan is a read of the target."""
+    from lion_parcel_etl_spark.catalog import Warehouse
+
+    t0 = ts("2025-10-01 10:00:00")
+    wh = Warehouse(str(tmp_path / "wh"))
+    first = run(
+        spark,
+        None,
+        [(1, 10, "Created", "JKT", "BDG", t0, t0), (2, 20, "Created", "SBY", "JKT", t0, t0)],
+        "2025-10-01 10:05:00",
+    )
+    wh.overwrite(first, "scd", partition_by=["is_current"])
+    snap = retail_snapshot(
+        src_df(spark, [(1, 10, "On Way", "JKT", "BDG", t0, ts("2025-10-01 11:00:00"))]),
+        "2025-10-01 11:05:00",
+    )
+    out = scd2_apply(
+        wh.read(spark, "scd"), snap, KEY, TRACKED, "updated_at", "2025-10-01 11:05:00"
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("AdaptiveSparkPlan")
+    scans = plan.count("FileScan parquet")
+    assert 1 <= scans <= 2, plan
+    assert plan.count("BroadcastExchange") <= 3, plan
+    assert out.count() == 3
