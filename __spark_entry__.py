@@ -12,10 +12,10 @@ oracles replay them exactly.
 
 Every query builder is wrapped so it runs correctly on ANY
 SparkSession the caller provides, not just the repo's own
-``session.get_spark()``: the wrapper pins the three runtime-settable
+``session.get_spark()``: the wrapper pins the two runtime-settable
 SQL confs the plans depend on (ANSI off for legacy null-on-error
-semantics, UTC session time zone for timestamp formatting, and
-nanos-as-long for the events table's TIMESTAMP(NANOS) parquet column).
+semantics, UTC session time zone for timestamp formatting). Source
+tables are read with declared schemas, so no parquet read conf matters.
 """
 
 from __future__ import annotations
@@ -29,16 +29,14 @@ from lion_parcel_etl_spark.plans.queries import QUERIES
 _REQUIRED_CONFS = {
     "spark.sql.ansi.enabled": "false",
     "spark.sql.session.timeZone": "UTC",
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 
 def _harden(spark: SparkSession) -> None:
     """Pin the runtime SQL confs the query plans assume.
 
-    All three are runtime-settable; a conf a particular build refuses
-    to set at runtime is skipped (the plans degrade gracefully — e.g.
-    ``_t`` handles both bigint-nanos and native-timestamp reads).
+    Both are runtime-settable; a conf a particular build refuses to
+    set at runtime is skipped.
     """
     for k, v in _REQUIRED_CONFS.items():
         try:

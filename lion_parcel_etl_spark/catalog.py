@@ -20,7 +20,9 @@ metastore, or a Delta log): :meth:`Warehouse.read` hands it to
 ``spark.read.schema``, so a read runs no schema-inference job and
 partition columns keep their written types (a boolean partition reads
 back as a boolean, not a string). Only a write that installs the table
-root defines it.
+root defines it. :func:`write_schema` and :func:`read_parquet` are the
+one schema-file path: the registry's session stores
+(``plans/queries._session_store``) write and read theirs with them too.
 Spark, pyarrow and :func:`~lion_parcel_etl_spark.metrics.scan_parquet_dir`
 all skip the ``_``-prefixed file. A table without it — an
 :meth:`Warehouse.append_batch` table, whose batches may drift — is read
@@ -113,6 +115,24 @@ def _table_schema(df: DataFrame, partition_by: list[str] | None = None) -> T.Str
     return _as_nullable(T.StructType(data + last))
 
 
+def write_schema(path: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
+    """Write the schema a read of ``df``, written to parquet dir ``path``
+    with ``partition_by``, reports as ``path/_schema.json``."""
+    with open(os.path.join(path, SCHEMA_FILE), "w") as f:
+        f.write(_table_schema(df, partition_by).json())
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet dir ``path``, typed by its ``_schema.json`` (no Spark
+    job), or by parquet schema inference when it has none."""
+    try:
+        with open(os.path.join(path, SCHEMA_FILE)) as f:
+            schema = T.StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
 class Warehouse:
     """A directory of databases, each a directory of parquet tables.
 
@@ -164,13 +184,7 @@ class Warehouse:
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         """The table, typed by its ``_schema.json`` (no Spark job), or by
         parquet schema inference when the table has none."""
-        path = self.table_path(name)
-        try:
-            with open(os.path.join(path, SCHEMA_FILE)) as f:
-                schema = T.StructType.fromJson(json.load(f))
-        except FileNotFoundError:
-            return spark.read.parquet(path)
-        return spark.read.schema(schema).parquet(path)
+        return read_parquet(spark, self.table_path(name))
 
     def publish(
         self,
@@ -195,8 +209,7 @@ class Warehouse:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp)
         if batch_id is None:
-            with open(os.path.join(tmp, SCHEMA_FILE), "w") as f:
-                f.write(_table_schema(df, partition_by).json())
+            write_schema(tmp, df, partition_by)
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         swap_dir(tmp, dst)
         return dst

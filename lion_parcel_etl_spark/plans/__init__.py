@@ -1,3 +1,3 @@
-from lion_parcel_etl_spark.plans.queries import QUERIES, load_tables
+from lion_parcel_etl_spark.plans.queries import QUERIES
 
-__all__ = ["QUERIES", "load_tables"]
+__all__ = ["QUERIES"]

@@ -24,25 +24,26 @@ relative to /root/reference).
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import shutil
 import tempfile
 from collections.abc import Callable
 from typing import NamedTuple
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from lion_parcel_etl_spark import catalog
 from lion_parcel_etl_spark.operators import dedup as DD
 from lion_parcel_etl_spark.operators import similarity as SIM
 from lion_parcel_etl_spark.operators import text as TX
 from lion_parcel_etl_spark.operators.merge_upsert import merge_upsert
 from lion_parcel_etl_spark.operators.scd2 import scd2_apply
+from lion_parcel_etl_spark.schemas import SOURCE_TABLES
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+TABLES = list(SOURCE_TABLES)
 
 # fixed analysis cutoffs / injected run timestamps (deterministic)
 SHIP_CUTOFF = "2000-01-01 00:00:00"
@@ -61,17 +62,42 @@ from lion_parcel_etl_spark.functions import (  # noqa: E402
 )
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in TABLES}
-
-
 def _t(spark, sf_dir, name) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    # events.ts is parquet TIMESTAMP(NANOS): read as long nanos (see
-    # session.py), truncate to micros — the same conversion DuckDB does.
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+    """Source table ``name``, ``<sf_dir>/<name>.parquet`` (a file or a dir
+    of part files), read with its declared schema
+    (``schemas.SOURCE_TABLES``), so building a plan runs no Spark job.
+
+    A declared schema would read a missing column as nulls and fail on a
+    TIMESTAMP(NANOS) column only at the first action, so the parquet
+    footer (pyarrow, no Spark job) is checked first: its columns must be
+    the declared ones in order, and no timestamp may be NANOS. Anything
+    else raises ValueError naming the table, path and columns."""
+    path = f"{sf_dir}/{name}.parquet"
+    schema = SOURCE_TABLES[name]
+    footer = path
+    if os.path.isdir(path):
+        parts = sorted(f for f in os.listdir(path) if not f.startswith(("_", ".")))
+        if not parts:
+            raise ValueError(f"source table {name!r}: {path} holds no parquet file")
+        footer = os.path.join(path, parts[0])
+    pschema = pq.read_metadata(footer).schema
+    cols = pschema.to_arrow_schema().names
+    if cols != schema.fieldNames():
+        raise ValueError(
+            f"source table {name!r}: {footer} has columns {cols}, "
+            f"declared {schema.fieldNames()}"
+        )
+    nanos = [
+        c.path
+        for c in map(pschema.column, range(len(pschema)))
+        if json.loads(c.logical_type.to_json()).get("timeUnit") == "nanoseconds"
+    ]
+    if nanos:
+        raise ValueError(
+            f"source table {name!r}: {footer} stores {nanos} as TIMESTAMP(NANOS); "
+            "write timestamps in micros"
+        )
+    return spark.read.schema(schema).parquet(path)
 
 
 # ---------------------------------------------------------------------------
@@ -130,12 +156,16 @@ def _session_store(spark, sf_dir, name: str) -> DataFrame:
     An existence check decides build or read, as dbt's
     ``is_incremental()`` checks for its target table: the directory's
     ``_SUCCESS`` marker. A directory without it (a killed write) is
-    rebuilt."""
+    rebuilt. A store carries its schema as a warehouse table does
+    (``catalog.write_schema`` next to ``_SUCCESS``), so a readout runs
+    no Spark job; a store dir without the file is read by inference."""
     path = _store_path(spark, sf_dir, name)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        STORES[name](spark, sf_dir).write.mode("overwrite").parquet(path)
+        df = STORES[name](spark, sf_dir)
+        df.write.mode("overwrite").parquet(path)
+        catalog.write_schema(path, df)
         _register_store_cleanup(path)
-    return spark.read.parquet(path)
+    return catalog.read_parquet(spark, path)
 
 
 def _evict_session_store(spark, sf_dir, name: str) -> None:

@@ -41,9 +41,6 @@ _DEFAULTS = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
     "spark.sql.parquet.compression.codec": "snappy",
-    # Read INT64 TIMESTAMP(NANOS) parquet columns (which Spark has no
-    # native type for) as raw nanos; sources convert to micros.
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 

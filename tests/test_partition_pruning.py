@@ -14,10 +14,7 @@ EVENTS = "/root/testdata/sf0.001/events.parquet"
 
 
 def _events(spark):
-    ev = spark.read.parquet(EVENTS)
-    if dict(ev.dtypes).get("ts") == "bigint":  # TIMESTAMP(NANOS) as long
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return ev.withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
+    return spark.read.parquet(EVENTS).withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
 
 
 def test_partitioned_write_prunes_on_read(spark, tmp_path):

@@ -32,10 +32,7 @@ def _rows(df, cols):
 def events_dir(spark, tmp_path):
     # copy events to a directory the file-stream source can list
     out = str(tmp_path / "events_in")
-    ev = spark.read.parquet(EVENTS)
-    if dict(ev.dtypes).get("ts") == "bigint":  # TIMESTAMP(NANOS) read as long
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    ev.repartition(2).write.parquet(out)
+    spark.read.parquet(EVENTS).repartition(2).write.parquet(out)
     return out
 
 

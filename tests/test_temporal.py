@@ -14,13 +14,7 @@ from lion_parcel_etl_spark.operators.temporal import asof_join, range_join
 
 @pytest.fixture(scope="module")
 def events(spark, sf_dir):
-    return spark.read.parquet(os.path.join(sf_dir, "events.parquet")).withColumn(
-        "ts",
-        F.timestamp_micros(F.expr("ts div 1000"))
-        if dict(spark.read.parquet(os.path.join(sf_dir, "events.parquet")).dtypes).get("ts")
-        == "bigint"
-        else F.col("ts"),
-    )
+    return spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
 
 
 def _sides(events):

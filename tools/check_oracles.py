@@ -9,7 +9,7 @@ repo's, catching the two failure classes a get_spark()-based check is
 structurally blind to:
 
 - a **default-conf SparkSession** (no ANSI override → ANSI ON in
-  Spark 4, no UTC pin, no nanosAsLong) — the queries() wrappers must
+  Spark 4, no UTC pin) — the queries() wrappers must
   set whatever they need on the session they're handed;
 - **pandas canonicalization** on both sides (Spark ``toPandas``,
   DuckDB ``.df()``) — DuckDB types integer SUMs as HUGEINT which
