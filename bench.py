@@ -105,10 +105,17 @@ if not set(ANCHOR) <= set(HEADLINE):
 
 
 def _machine_state() -> dict:
-    """Telemetry snapshot (timestamp + /proc/loadavg + meminfo free)
-    recorded at sweep start/end so same-day machine drift between
-    bench artifacts is decidable post-hoc instead of argued."""
-    state: dict = {"unix_time": round(time.time(), 1)}
+    """Telemetry snapshot (timestamp, core count, /proc/loadavg and
+    meminfo free) recorded at sweep start/end so same-day machine drift
+    between bench artifacts is decidable post-hoc instead of argued.
+    ``cpus`` is ``SPARK_GRAFT_CPUS`` when set (the ``local[N]`` the
+    session runs on), else the cores this process may run on: seconds
+    taken at different core counts do not compare."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    state: dict = {
+        "unix_time": round(time.time(), 1),
+        "cpus": int(cpus) if cpus else len(os.sched_getaffinity(0)),
+    }
     try:
         with open("/proc/loadavg") as f:
             state["loadavg"] = f.read().strip()

@@ -7,11 +7,9 @@ truncate-reload at ``public/source_transaction_lion_parcel.py:50-68``).
 A table is a directory of parquet files plus a ``_schema.json`` file at
 its root holding the table's Spark schema. A DataFrame becomes a table
 directory in one place: :meth:`Warehouse.publish` writes it into
-``staging_dir(<table>)`` and installs it with :func:`swap_dir`, at the
-table root or, for :meth:`Warehouse.append_batch`, at one
-``__batch_id=<id>`` directory of the table. No other module stages or
-swaps a directory. This is the
-non-transactional stand-in for Postgres MERGE atomicity documented in
+``staging_dir(<table>)`` and installs it at the table root with
+:func:`swap_dir`. No other module stages or swaps a directory. This is
+the non-transactional stand-in for Postgres MERGE atomicity documented in
 SURVEY.md §7 hard part 4 — on a real deployment you'd back this with a
 table format (Delta/Iceberg) instead, but the engine API stays the same.
 
@@ -19,29 +17,26 @@ The schema file plays the role of Postgres's catalog (or a Hive
 metastore, or a Delta log): :meth:`Warehouse.read` hands it to
 ``spark.read.schema``, so a read runs no schema-inference job and
 partition columns keep their written types (a boolean partition reads
-back as a boolean, not a string). Only a write that installs the table
-root defines it. :func:`write_schema` and :func:`read_parquet` are the
-one schema-file path: the registry's session stores
+back as a boolean, not a string). Every publish stages it with the
+data. :func:`write_schema` and :func:`read_parquet` are the one
+schema-file path: the registry's session stores
 (``plans/queries._session_store``) write and read theirs with them too.
 Spark, pyarrow and :func:`~lion_parcel_etl_spark.metrics.scan_parquet_dir`
-all skip the ``_``-prefixed file. A table without it — an
-:meth:`Warehouse.append_batch` table, whose batches may drift — is read
-by inference.
+all skip the ``_``-prefixed file. A directory without it (written before
+schema files existed, or by hand) is read by inference.
 
 The suffix grammar of the debris a crashed write leaves is defined here
 too: ``<path>.__tmp__<8hex>`` (staged next to the table, never
 installed) and ``.<leaf>.__old__<8hex>`` (demoted by a swap, in the
 same directory; the ``.`` prefix keeps a demoted directory out of
-every reader's listing). A demoted micro-batch dir goes next to the
-table as ``<table>.__old__<8hex>``. :data:`ORPHAN_NAME` parses both
-for operators/maintenance.vacuum, which also still clears the debris
-an older in-table layout (``state=…``, ``bucket-N``, ``day=…``) left
-inside a table.
+every reader's listing). :data:`ORPHAN_NAME` parses both for
+operators/maintenance.vacuum, which also still clears the debris older
+layouts left: undotted ``<table>.__old__<8hex>`` siblings and in-table
+dirs (``state=…``, ``bucket-N``, ``day=…``).
 """
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
 import re
@@ -52,7 +47,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 ORPHAN_NAME = re.compile(r"^\.?(?P<base>.+)\.(?P<marker>__tmp__|__old__)[0-9a-f]{8}$")
-BATCH_ID = "__batch_id"
 SCHEMA_FILE = "_schema.json"
 
 
@@ -66,24 +60,17 @@ def staging_dir(path: str) -> str:
 def swap_dir(tmp: str, dst: str) -> None:
     """Install ``tmp`` at ``dst`` with the crash-recoverable rename
     protocol; its only caller is Warehouse.publish, so ``dst`` is a
-    table root or a ``__batch_id=<id>`` dir. It demotes any existing
-    ``dst`` to a ``.<leaf>.__old__<uuid8>`` sibling, renames ``tmp`` in
-    and drops the old copy. Same-filesystem renames; a crash leaves either a
+    table root. It demotes any existing ``dst`` to a
+    ``.<leaf>.__old__<uuid8>`` sibling, renames ``tmp`` in and drops the
+    old copy. Same-filesystem renames; a crash leaves either a
     ``__tmp__`` (unfinished, discard) or ``__old__`` (already superseded,
     or the only committed copy when the crash fell between the renames)
     orphan for recovery.
 
     Spark and pyarrow skip the ``.``-prefixed demoted name, so no
-    reader of the database dir mistakes it for data.
-
-    A micro-batch directory (``<table>/__batch_id=<id>``) is demoted
-    next to its TABLE instead. The stream replays an uncommitted batch,
-    so the demoted copy never needs restoring and vacuum removes it."""
+    reader of the database dir mistakes it for data."""
     parent, leaf = os.path.split(dst)
-    if leaf.startswith(f"{BATCH_ID}="):
-        old = f"{parent}.__old__{uuid.uuid4().hex[:8]}"
-    else:
-        old = os.path.join(parent, f".{leaf}.__old__{uuid.uuid4().hex[:8]}")
+    old = os.path.join(parent, f".{leaf}.__old__{uuid.uuid4().hex[:8]}")
     if os.path.exists(dst):
         os.rename(dst, old)
     os.rename(tmp, dst)
@@ -124,7 +111,8 @@ def write_schema(path: str, df: DataFrame, partition_by: list[str] | None = None
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Parquet dir ``path``, typed by its ``_schema.json`` (no Spark
-    job), or by parquet schema inference when it has none."""
+    job), or by parquet schema inference when it has none (a dir
+    written before schema files existed)."""
     try:
         with open(os.path.join(path, SCHEMA_FILE)) as f:
             schema = T.StructType.fromJson(json.load(f))
@@ -159,7 +147,7 @@ class Warehouse:
 
     def exists(self, name: str) -> bool:
         """True when the table directory holds parquet data, at its root
-        or in a ``__batch_id=…`` dir (os.walk stops at the first hit).
+        or in a partition dir (os.walk stops at the first hit).
         Raises when the table is absent but its demoted copy
         ``.<leaf>.__old__<8hex>`` is not: a swap crashed between its
         renames, and "no table" would send an incremental writer down its
@@ -190,29 +178,24 @@ class Warehouse:
         self,
         df: DataFrame,
         name: str,
-        batch_id: int | str | None = None,
         partition_by: list[str] | None = None,
     ) -> str:
         """Write ``df`` into a staging dir next to table ``name`` and
-        swap it in at the table dir, or at its ``__batch_id=<batch_id>``
-        dir when ``batch_id`` is given. A concurrent reader sees the old
-        or the new directory, never a partial write. Returns the
-        installed directory.
+        swap it in at the table dir. A concurrent reader sees the old or
+        the new directory, never a partial write. Returns the installed
+        directory.
 
-        A table-root install stages the table's ``_schema.json`` with
-        the data, so both swap in together. A batch install writes none."""
+        The table's ``_schema.json`` is staged with the data, so both
+        swap in together."""
         table = self.table_path(name)
-        dst = table if batch_id is None else os.path.join(table, f"{BATCH_ID}={batch_id}")
         tmp = staging_dir(table)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp)
-        if batch_id is None:
-            write_schema(tmp, df, partition_by)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        swap_dir(tmp, dst)
-        return dst
+        write_schema(tmp, df, partition_by)
+        swap_dir(tmp, table)
+        return table
 
     def record(self, name: str, path: str) -> None:
         """Attribute the directory a write installed to ``name`` in
@@ -228,34 +211,6 @@ class Warehouse:
     ) -> None:
         """Atomic full-replace (reference K1/K2 truncate-reload semantics)."""
         self.record(name, self.publish(df, name, partition_by=partition_by))
-
-    def append_batch(self, df: DataFrame, name: str, batch_id: int | str) -> None:
-        """Idempotent append for checkpointed micro-batch writers: the
-        batch is published to a ``__batch_id=<id>`` partition directory,
-        so a checkpoint REPLAY of the same batch rewrites its own
-        directory instead of duplicating rows — the plain-parquet
-        stand-in for a table format's transactional append. Readers see
-        ``__batch_id`` as a partition column; select explicit columns
-        (or drop it) downstream.
-
-        Neither the staged batch (:func:`staging_dir`) nor the committed
-        copy a replay demotes (:func:`swap_dir`) is ever inside the
-        table: a name like ``__batch_id=N.__tmp__x`` contains ``=``, so
-        partition discovery would read it as a real partition and
-        double-count batch N for every reader. A crash anywhere in the
-        write leaves readers on committed batches only (batch N is
-        missing after a crash between the swap's two renames); the
-        stream recovers by checkpoint REPLAY, and vacuum removes the
-        debris next to the table.
-
-        An appended table has no ``_schema.json`` (one left by an earlier
-        overwrite is removed): it is read by inference, so a batch whose
-        columns drift is never hidden behind a stale schema.
-        """
-        table = self.table_path(name)
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(os.path.join(table, SCHEMA_FILE))
-        self.record(name, self.publish(df, name, batch_id))
 
     def drop(self, name: str) -> None:
         path = self.table_path(name)

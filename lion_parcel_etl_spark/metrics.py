@@ -81,9 +81,8 @@ class RunMetrics:
             self._current.task = prev
 
     def record_write(self, table: str, path: str) -> WriteMetrics:
-        """One WriteMetrics over the directory a write installed: the
-        whole table for an overwrite, or the one batch directory of an
-        appended micro-batch."""
+        """One WriteMetrics over the table directory a write
+        installed."""
         task = getattr(self._current, "task", None)
         wm = WriteMetrics(table, *scan_parquet_dir(path), task)
         self.writes.append(wm)

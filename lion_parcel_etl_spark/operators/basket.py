@@ -1,9 +1,5 @@
 """Market-basket association rules over a deduped (order, part) basket
-table — the ONE rule pipeline shared by the batch query
-(plans/queries.q_market_basket) and the streaming twin
-(streaming/jobs.stream_market_basket → read_market_basket), so the two
-can't drift: the streaming read IS this function over the distinct-
-merged basket log.
+table — the rule pipeline behind plans/queries.q_market_basket.
 
 Reference analog: the retail-mart analytics the reference's domain
 implies (``etl/`` staging models feed exactly this kind of readout).

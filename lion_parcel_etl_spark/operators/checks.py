@@ -185,8 +185,8 @@ def psi_histogram(
     n_bins: int = 10,
 ) -> DataFrame:
     """(g, bin, cnt) fixed-width histogram — the mergeable half of
-    :func:`psi_drift`: per-batch histograms sum into the same
-    statistic, so streams persist these and never rescan."""
+    :func:`psi_drift`: histograms of disjoint splits sum into the
+    histogram of their union."""
     b = F.width_bucket(F.col(value_col), F.lit(lo), F.lit(hi), F.lit(n_bins))
     # NaN joins the NULL filter: width_bucket(NaN) is NULL, and a
     # NULL-bin row would be counted in the totals but silently miss
@@ -208,10 +208,7 @@ def psi_from_histogram(
     smooth: float = 0.5,
 ) -> DataFrame:
     """PSI/verdict from a pre-built (g, bin, cnt) histogram — the math
-    half of :func:`psi_drift`, split out so continuously-maintained
-    histogram stores (streaming/jobs.stream_psi_histograms) compute
-    the identical statistic at read time from merged per-batch
-    counts."""
+    half of :func:`psi_drift`."""
     base = per.groupBy("bin").agg(F.sum("cnt").alias("bcnt"))
     gtot = per.groupBy("g").agg(F.sum("cnt").alias("gn"))
     btot = base.agg(F.sum("bcnt").alias("bn"))
@@ -590,8 +587,8 @@ def theil_sen_trend(
     if n_rows > max_rows:
         # release the pinned cache before failing: the gate rejects
         # exactly the over-sized inputs whose cached partitions would
-        # otherwise squat on executor memory (outside any _PIN_TRACKERS
-        # context nothing else would ever unpersist them); blocking so
+        # otherwise squat on executor memory (a pin lives until the
+        # session ends; nothing else would unpersist it); blocking so
         # the storage is actually gone when the caller sees the error
         base.unpersist(blocking=True)
         raise ValueError(
@@ -629,12 +626,10 @@ def theil_sen_trend(
 
 def ks_from_group_value_counts(cnt: DataFrame) -> DataFrame:
     """Exact two-sample KS per group vs the pooled complement from a
-    (g, v, c) count table — the ONE statistic pipeline shared by the
-    batch query (plans/queries.q_ks_drift) and the streaming twin
-    (streaming/jobs.read_ks_drift over merged per-batch counts), so
-    the two can't drift. Counts are sufficient statistics for an ECDF,
-    and they are a commutative monoid under addition — which is what
-    makes the streaming twin lossless.
+    (g, v, c) count table — the statistic pipeline behind
+    plans/queries.q_ks_drift and :func:`ks_binned_from_counts`. Counts
+    are sufficient statistics for an ECDF, and they are a commutative
+    monoid under addition.
 
     Plan: totals re-aggregate from the count table (never rescanning
     rows); the ECDF grid is a broadcast |groups|-row fan-out over
@@ -693,8 +688,7 @@ def ks_from_group_value_counts(cnt: DataFrame) -> DataFrame:
 
 
 #: Binned-KS bucket count: KS_BINS − 1 quantile boundaries → KS_BINS
-#: buckets; shared by plans/queries.q_ks_drift_binned and the
-#: streaming reader (streaming/jobs.read_ks_drift_binned).
+#: buckets (plans/queries.q_ks_drift_binned).
 KS_BINS = 16
 
 
@@ -706,10 +700,9 @@ def ks_binned_from_counts(
     :func:`ks_from_group_value_counts`, whose ECDF grid is |distinct
     values|-bound. ``bins − 1`` quantile boundaries come from an exact
     frequency-weighted interpolated percentile over the sampled counts
-    (counts are sufficient for a percentile, so the boundary a batch
-    job gets from sampled ROWS and the one a streaming reader gets
-    from merged sampled COUNTS are identical — that is what keeps the
-    streaming twin lossless); every (g, v) count then width-buckets
+    (counts are sufficient for a percentile, so the boundary from
+    sampled ROWS and the one from merged sampled COUNTS are
+    identical); every (g, v) count then width-buckets
     with ``bins − 1`` comparisons against the broadcast 1-row boundary
     scalars — zero global sorts — and the SAME statistic pipeline runs
     on the (g, bucket) counts: the grid is now ``bins`` rows per group
@@ -721,11 +714,10 @@ def ks_binned_from_counts(
     rows yields a NULL boundary array, every (v > NULL) comparison is
     NULL, and all rows would collapse into a NULL bucket that the
     downstream grid join silently drops (NULL = NULL never matches) —
-    garbage KS stats instead of an error. Reachable both in batch (a
-    corpus so small the 1/APPROX_SAMPLE_DIV md5 sample selects zero
-    events) and in the streaming reader before any sampled row lands,
-    so the guard rides the SAME one-row bounds aggregate (no extra
-    pass over the sample)."""
+    garbage KS stats instead of an error. Reachable with a corpus so
+    small the 1/APPROX_SAMPLE_DIV md5 sample selects zero events, so
+    the guard rides the SAME one-row bounds aggregate (no extra pass
+    over the sample)."""
     qarr = "array(" + ", ".join(f"{i / bins}D" for i in range(1, bins)) + ")"
     bounds = (
         sampled_cnt.agg(
@@ -739,8 +731,7 @@ def ks_binned_from_counts(
                     F.lit(
                         "ks_binned_from_counts: sampled count table is "
                         "empty — no rows to derive quantile boundaries "
-                        "from (corpus too small for the md5 sample, or "
-                        "streaming sample log not yet populated)"
+                        "from (corpus too small for the md5 sample)"
                     )
                 )
             )
@@ -760,12 +751,11 @@ def ks_binned_from_counts(
 
 
 def ks_agreement_from(exact: DataFrame, binned: DataFrame) -> DataFrame:
-    """Admissibility join shared by plans/queries.q_ks_agreement and
-    the streaming reader (streaming/jobs.read_ks_agreement), so the
-    two readouts can't drift: per event type, exact D next to binned D
-    and the gap between them. Both sides are |event types|-sized (a
-    handful of rows at any corpus size) — broadcast beats the SMJ
-    Catalyst guesses for two stats-free aggregates."""
+    """Admissibility join behind plans/queries.q_ks_agreement: per
+    event type, exact D next to binned D and the gap between them.
+    Both sides are |event types|-sized (a handful of rows at any
+    corpus size) — broadcast beats the SMJ Catalyst guesses for two
+    stats-free aggregates."""
     e = exact.select("event_type", F.col("ks_d").alias("ks_d_exact"))
     b = binned.select("event_type", F.col("ks_d").alias("ks_d_binned"))
     return (
@@ -784,13 +774,12 @@ def ks_agreement_from(exact: DataFrame, binned: DataFrame) -> DataFrame:
 
 def benford_from_digit_counts(obs: DataFrame) -> DataFrame:
     """Benford conformance readout from a (digit, n_obs) count table —
-    the ONE pipeline shared by plans/queries.q_benford_audit and the
-    streaming twin (streaming/jobs.read_benford_audit), so the two
-    can't drift. The digit domain is DENSIFIED against a literal 1–9
-    spine before the chi-square: a digit with ZERO observations
-    contributes (0 − n·p)²/(n·p) = n·p — the dominant evidence of a
-    fabricated column — which a groupBy over observed digits alone
-    would silently drop exactly when the data is most broken.
+    the pipeline behind plans/queries.q_benford_audit. The digit
+    domain is DENSIFIED against a literal 1–9 spine before the
+    chi-square: a digit with ZERO observations contributes
+    (0 − n·p)²/(n·p) = n·p — the dominant evidence of a fabricated
+    column — which a groupBy over observed digits alone would silently
+    drop exactly when the data is most broken.
 
     CONTRACT: every input row's ``digit`` must already be a first
     significant digit in 1–9. A row outside that domain (digit 0 from

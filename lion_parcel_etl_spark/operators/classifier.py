@@ -258,60 +258,3 @@ def quality_filter(
     return logreg_score(feats, w, id_col).filter(
         F.col("p") >= F.lit(threshold)
     )
-
-
-def weights_array(
-    weights: dict[int, float], buckets: int = DSIR_BUCKETS
-) -> tuple[list[float], float]:
-    """Dense (values, bias) form of a fitted model for
-    :func:`logreg_score_row` — index b holds w_b, missing buckets 0.0
-    (a bucket no training doc touched has zero gradient everywhere)."""
-    vals = [0.0] * buckets
-    for b, w in weights.items():
-        if b != BIAS_BUCKET:
-            vals[b] = float(w)
-    return vals, float(weights.get(BIAS_BUCKET, 0.0))
-
-
-def logreg_score_row(
-    docs: DataFrame,
-    w_values: list[float],
-    bias: float,
-    text_col: str = "text",
-    buckets: int = DSIR_BUCKETS,
-) -> DataFrame:
-    """Append (n_feats, p, pred) per-row with the fitted model embedded
-    as ONE array literal — the dsir_score pattern: a stateless
-    zero-shuffle JVM fold (margin = bias + Σ_f w[bucket(f)], which
-    equals the batch Σ_b tf_b·w_b exactly), so a streaming admission
-    filter needs no join, no state store, no watermark. Each expensive
-    array is staged in its own projection (higher-order functions are
-    CodegenFallback — no subexpression reuse). Featureless docs carry
-    NULL p (nothing to classify; a threshold filter drops them, same
-    as their absence from the batch feature table). Margins match
-    :func:`logreg_score` to well below the 1e-6 rounding; ``pred``
-    thresholds the rounded p on both paths. The tokenize→bucket
-    staging is selection.bucketed_feature_rows — ONE spelling shared
-    with DSIR scoring and the fit-side feature_buckets, so fit and
-    score cannot drift."""
-    from lion_parcel_etl_spark.operators.selection import (
-        bucketed_feature_rows,
-    )
-
-    w_arr = F.array(*[F.lit(v) for v in w_values])
-    others = list(docs.columns)
-    bucketed = bucketed_feature_rows(docs, text_col, buckets)
-    m = F.lit(bias) + F.aggregate(
-        F.col("__buckets"),
-        F.lit(0.0),
-        lambda acc, b: acc + F.element_at(w_arr, b + 1),
-    )
-    p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-m)), 6)
-    return bucketed.select(
-        *others,
-        F.when(F.col("n_feats") > 0, F.col("n_feats")).alias("n_feats"),
-        F.when(F.col("n_feats") > 0, p).alias("p"),
-        F.when(F.col("n_feats") > 0, F.when(p >= 0.5, 1).otherwise(0)).alias(
-            "pred"
-        ),
-    )

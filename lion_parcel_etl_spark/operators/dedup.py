@@ -40,35 +40,6 @@ def spread_input(df: DataFrame) -> DataFrame:
     return df
 
 
-_PIN_TRACKERS: list[list] = []
-
-
-def tracked_pins():
-    """Context manager collecting every :func:`pin` made inside it and
-    unpersisting them on exit — for long-running callers (streaming
-    foreachBatch loops) where each micro-batch would otherwise leak
-    one permanently-cached signature table per batch into executor
-    storage. Batch pipelines don't need it: their pins die with the
-    session."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _cm():
-        pins: list = []
-        _PIN_TRACKERS.append(pins)
-        try:
-            yield
-        finally:
-            _PIN_TRACKERS.pop()
-            for d in pins:
-                try:
-                    d.unpersist()
-                except Exception:
-                    pass
-
-    return _cm()
-
-
 def pin(df: DataFrame) -> DataFrame:
     """Persist a signature-style table and force ONE materialization.
 
@@ -81,9 +52,8 @@ def pin(df: DataFrame) -> DataFrame:
     table to storage and read it back"."""
     df = df.persist()
     df.count()
-    if _PIN_TRACKERS:
-        _PIN_TRACKERS[-1].append(df)
     return df
+
 
 # Deterministic MinHash permutation coefficients: a*h + b mod P over the
 # 32-bit base hash. Generated once from a fixed LCG (seed 1); literal so
@@ -1093,77 +1063,3 @@ def _span_rebuild(toked, removed, positions, chunk_at, id_col) -> DataFrame:
         .cast("long")
         .alias("n_removed"),
     )
-
-
-def remove_duplicate_spans_incremental(
-    store_hashes: DataFrame,
-    batch: DataFrame,
-    id_col: str,
-    text_col: str,
-    window: int = 16,
-) -> tuple[DataFrame, DataFrame]:
-    """Continuous-ingest twin of :func:`remove_duplicate_spans`: rewrite
-    an arriving BATCH of documents against everything already ingested,
-    represented as a persisted chunk-hash store (one ``h`` column of
-    md5 chunk hashes). A batch chunk is dropped when its hash is
-    already in the store, or when it duplicates an earlier chunk of
-    the batch itself (the same canonical (doc, pos)-first rule as the
-    corpus-wide rewrite). Returns ``(clean_docs, new_hashes)`` —
-    ``new_hashes`` is exactly the batch's surviving distinct hashes,
-    i.e. what the caller appends to the store to keep the invariant
-    "store = chunk hashes of everything kept so far".
-
-    Scale shape: the store is streamed ONCE through a left-semi probe
-    against the broadcast distinct batch-hash set (the store is never
-    re-hashed, shuffled, or self-joined), so per-batch cost is
-    O(store scan + batch) — the property that makes ingest-time span
-    dedup sustainable; hit sets and removal arrays are ∝ the batch's
-    duplicated chunks.
-    """
-    toked, positions, chunk_at = _span_chunked(
-        batch, id_col, text_col, window
-    )
-    hashed = _span_hashes(toked, positions, chunk_at).localCheckpoint()
-    batch_hashes = hashed.select("h").distinct()
-    # store ∩ batch: probe the (huge) store with the broadcast batch
-    # set; the result is at most |batch_hashes| rows.
-    hits = (
-        store_hashes.select(F.col("h"))
-        .join(F.broadcast(batch_hashes), "h", "left_semi")
-        .distinct()
-    )
-    in_store = hashed.join(F.broadcast(hits), "h", "left_semi").select(
-        "doc", "pos"
-    )
-    # within-batch duplicates: same canonical-first rule as the batch op
-    canon = (
-        hashed.groupBy("h")
-        .agg(
-            F.count(F.lit(1)).alias("n_occ"),
-            F.min(F.struct("doc", "pos")).alias("first"),
-        )
-        .filter(F.col("n_occ") >= 2)
-    )
-    intra = (
-        hashed.join(canon, "h")
-        .filter(
-            ~(
-                (F.col("doc") == F.col("first.doc"))
-                & (F.col("pos") == F.col("first.pos"))
-            )
-        )
-        .select("doc", "pos")
-    )
-    dropped = in_store.unionByName(intra).distinct().localCheckpoint()
-    removed = dropped.groupBy("doc").agg(
-        F.sort_array(F.collect_list(F.col("pos").cast("long"))).alias(
-            "__drop"
-        )
-    )
-    clean = _span_rebuild(toked, removed, positions, chunk_at, id_col)
-    new_hashes = (
-        hashed.join(dropped, ["doc", "pos"], "left_anti")
-        .select("h")
-        .distinct()
-    )
-    return clean, new_hashes

@@ -33,12 +33,11 @@ from pyspark.sql import functions as F
 
 def auc_from_score_counts(per_score: DataFrame) -> DataFrame:
     """(n_pos, n_neg, auc) from a per-DISTINCT-SCORE count table
-    (s, np_, nn_) — the Mann-Whitney mid-rank rank-sum core shared by
-    :func:`roc_auc` (batch) and streaming ``read_auc``: because the
-    per-score counts are MERGEABLE (sum matching score rows), a
-    continuously-maintained count log yields the EXACT batch AUC of
-    the full stream at read time. The running-negatives window runs
-    over distinct score values only."""
+    (s, np_, nn_) — the Mann-Whitney mid-rank rank-sum core of
+    :func:`roc_auc`. The per-score counts are MERGEABLE (sum matching
+    score rows), so count tables of disjoint splits yield the EXACT AUC
+    of their union. The running-negatives window runs over distinct
+    score values only."""
     w = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, -1)
     cum = per_score.withColumn(
         "cum_nn", F.coalesce(F.sum("nn_").over(w), F.lit(0)).cast("double")
@@ -117,8 +116,7 @@ def roc_auc(
     # the rank window as inert columns, and the single final aggregate
     # re-sums them next to the Mann-Whitney U — term-for-term the same
     # integers and the same AUC arithmetic as auc_from_score_counts
-    # (which stays the canonical shared form for the pred-less path
-    # and the streaming read_auc).
+    # (which stays the canonical form for the pred-less path).
     per_score = s.groupBy("s").agg(
         F.sum("y").alias("np_"),
         F.sum(F.lit(1) - F.col("y")).alias("nn_"),
@@ -174,7 +172,7 @@ def ap_from_score_counts(per_score: DataFrame) -> DataFrame:
     """(n_pos, n_neg, ap) average precision from a per-DISTINCT-SCORE
     count table (s, np_, nn_) — the PR-curve twin of
     :func:`auc_from_score_counts`, sharing its input so the SAME
-    streaming state answers both metrics.
+    count table answers both metrics.
 
     AP = Σ_thresholds ΔR(t)·P(t) over distinct scores DESCENDING
     (every distinct score is a threshold): ΔR = np_/n_pos at that

@@ -2,8 +2,7 @@
 
 The reference never needs this (Postgres tables, ≤20 rows —
 SURVEY.md §6), but any parquet warehouse fed by incremental merges
-(operators/merge_upsert.py) or streaming micro-batches accretes small
-files: at 100 TB a table touched hourly for a year is ~10^4 commits,
+(operators/merge_upsert.py) accretes small files: at 100 TB a table touched hourly for a year is ~10^4 commits,
 and a scan pays an open/footer-parse per file. Compaction rewrites a
 table to ~target-sized files; the optional sort column rewrites the
 layout so parquet row-group min/max stats turn point/range predicates

@@ -658,11 +658,9 @@ def gif_frame_stats(
 ) -> DataFrame:
     """(media_id, frame_idx, n_vals, v_sum) per decoded GIF frame —
     one Arrow pass over a (id, binary payload) table, the decode stage
-    SHARED by the batch query (plans/queries.q_gif_frames) and the
-    streaming ingest twin (streaming/jobs.stream_media_frames) so the
-    two cannot drift. Row-local and deterministic per payload, which
-    is exactly what makes the streamed frame-stat log lossless under
-    any batch split. Corrupt payloads raise (the loud-failure
+    of plans/queries.q_gif_frames. Row-local and deterministic per
+    payload, so any split of the input gives the same frame stats.
+    Corrupt payloads raise (the loud-failure
     contract); callers that want skip-on-error filter upstream."""
     schema = "media_id long, frame_idx int, n_vals long, v_sum long"
 

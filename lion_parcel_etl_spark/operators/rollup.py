@@ -56,9 +56,7 @@ def rollup_state(
 
 def state_aggs(cols: list[str]) -> list[Column]:
     """The merge aggregate for each state column, dispatched on the
-    STATE_SUFFIXES convention — the single source of truth shared by
-    rollup_merge and the streaming read path (streaming.read_rollup),
-    so a new state kind can't silently diverge between them."""
+    STATE_SUFFIXES convention, used by rollup_merge."""
     aggs = []
     for c in cols:
         if c.endswith("__sum") or c.endswith("__cnt"):

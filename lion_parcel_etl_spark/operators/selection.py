@@ -207,86 +207,6 @@ def dsir_weights(
     )
 
 
-def logratio_values(logratio: DataFrame, buckets: int = DSIR_BUCKETS) -> list[float]:
-    """Collect a fitted (bucket, lr) table into a dense buckets-long
-    list (missing buckets → 0.0, the same neutral fallback
-    :func:`dsir_weights` coalesces to). ≤buckets tiny rows reach the
-    driver — the IVF-centroid precedent: an intentionally small model
-    artifact crossing once at plan-build time so that SCORING can be a
-    pure per-row expression (streaming-safe, no per-batch join)."""
-    vals = [0.0] * buckets
-    for r in logratio.collect():
-        vals[r["bucket"]] = float(r["lr"])
-    return vals
-
-
-def bucketed_feature_rows(
-    docs: DataFrame,
-    text_col: str = "text",
-    buckets: int = DSIR_BUCKETS,
-) -> DataFrame:
-    """Append (n_feats, __buckets) per row — the staged
-    tokenize→ngram→md5-bucket spelling shared by every per-row scorer
-    (:func:`dsir_score` here, ``classifier.logreg_score_row``) so the
-    bucket hash cannot drift between fitting (:func:`feature_buckets`)
-    and row scoring. Each expensive array (features, buckets) is
-    staged in its own projection — higher-order functions are
-    CodegenFallback with no subexpression reuse, so an inline spelling
-    would tokenize once for size() and again for the fold."""
-    from lion_parcel_etl_spark.operators.dedup import tokens
-
-    others = list(docs.columns)
-    staged = docs.select(
-        *others, ngram_features(tokens(F.col(text_col))).alias("__feats")
-    )
-    return staged.select(
-        *others,
-        F.size("__feats").cast("bigint").alias("n_feats"),
-        F.transform(
-            "__feats",
-            lambda f: F.pmod(
-                F.conv(F.substring(F.md5(f), 1, 15), 16, 10).cast("bigint"),
-                F.lit(buckets),
-            ).cast("int"),
-        ).alias("__buckets"),
-    )
-
-
-def dsir_score(
-    docs: DataFrame,
-    lr_values: list[float],
-    text_col: str = "text",
-    buckets: int = DSIR_BUCKETS,
-) -> DataFrame:
-    """Append (n_feats, logw) per-row: the fitted log-ratio table
-    embedded as ONE array literal in the plan (the bpe-merge-table /
-    LSH-hyperplane precedent) and indexed by each feature's bucket in
-    a JVM fold. No shuffle, no state, no Python — exactly what a
-    streaming append-mode admission filter needs, since a per-doc
-    groupBy on an unbounded stream would demand watermarks the corpus
-    doesn't have. The tokenize→bucket staging is the shared
-    :func:`bucketed_feature_rows`. Scores equal
-    :func:`dsir_weights` (same lr doubles, same sum) to well below the
-    1e-6 output rounding; docs with no features carry NULL logw (their
-    distribution is undefined — a threshold filter drops them, same as
-    their absence from the batch weights table)."""
-    lr_arr = F.array(*[F.lit(v) for v in lr_values])
-    others = [c for c in docs.columns]
-    bucketed = bucketed_feature_rows(docs, text_col, buckets)
-    return bucketed.select(
-        *others,
-        F.when(F.col("n_feats") > 0, F.col("n_feats")).alias("n_feats"),
-        F.when(
-            F.col("n_feats") > 0,
-            F.aggregate(
-                F.col("__buckets"),
-                F.lit(0.0),
-                lambda acc, b: acc + F.element_at(lr_arr, b + 1),
-            ),
-        ).alias("logw"),
-    )
-
-
 def gumbel_key(logw: Column, id_c: Column, salt: str = "dsir") -> Column:
     """logw + Gumbel(0,1) noise from the deterministic 60-bit id hash:
     u = (h + 0.5)/2^60 is strictly inside (0,1), g = −ln(−ln u).

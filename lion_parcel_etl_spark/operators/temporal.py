@@ -359,10 +359,9 @@ def densify_daily(
     series' OWN [min, max] day span — the structural fix for the
     row-lag-vs-day-lag hazard (r07 verdict item 5): every lag-family
     consumer (acf_lags, seasonal_naive_eval, holt_winters_eval,
-    seasonal_dow and the streaming read_holt_winters twin) runs
-    ``lag(y, k)`` over rows, which means day-k ONLY when every day in
-    the span has a row. Shared by plans/queries._daily_volumes and the
-    streaming reader so batch and twin can't drift.
+    seasonal_dow) runs ``lag(y, k)`` over rows, which means day-k ONLY
+    when every day in the span has a row. Used by
+    plans/queries._daily_volumes.
 
     Plan cost: one |series|-row min/max aggregate, a sequence-explode
     over day spans (days, not data — tiny at any corpus size) and one
@@ -390,11 +389,10 @@ def holt_winters_backtest(
 ) -> DataFrame:
     """Additive Holt-Winters one-step-ahead backtest over a
     (series, x, y) daily-volume frame — the operator behind
-    plans/queries.q_holt_winters_eval and the streaming read twin
-    (streaming/jobs.read_holt_winters), shared so the two can't
-    drift. Fixed smoothing constants (queries.HW_ALPHA/BETA/GAMMA);
-    init: level = mean of the first ``season`` days, trend = 0,
-    season_i = y_i − mean; forecasts and error columns
+    plans/queries.q_holt_winters_eval. Fixed smoothing constants
+    (queries.HW_ALPHA/BETA/GAMMA); init: level = mean of the first
+    ``season`` days, trend = 0, season_i = y_i − mean; forecasts and
+    error columns
     (n_days/mae/mape/smape) start at day season+1 — exactly the days
     a seasonal-naive lag-``season`` is defined on, so the two models'
     rows compare directly.

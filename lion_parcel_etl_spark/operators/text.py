@@ -242,8 +242,7 @@ def source_token_counts(
     """(source, token, c_st) unigram counts per source — the exact,
     trivially-mergeable sufficient statistic of the vocab-KL drift
     diagnostic (counts are a sum-monoid, so per-batch tables merge by
-    addition: the streaming twin stores these and never rescans the
-    raw stream). One scan, one partial-aggregated exchange."""
+    addition). One scan, one partial-aggregated exchange."""
     return (
         docs.select(
             F.col(source_col).alias("source"),
@@ -260,12 +259,9 @@ def source_token_counts(
 
 def vocab_kl_from_counts(st: DataFrame) -> DataFrame:
     """KL(source ‖ corpus) in bits from a (source, token, c_st) count
-    table — the math shared by the batch query (plans/queries.
-    q_vocab_kl) and the streaming monitor (streaming/jobs.
-    read_vocab_kl), so stream-merged counts provably yield the
-    identical statistic. The log argument is a ratio of exact integer
-    counts, so engines (and the batch/stream twins) feed log2
-    identical doubles; per-source sums round at 1e-6.
+    table — the math behind plans/queries.q_vocab_kl. The log argument
+    is a ratio of exact integer counts, so engines feed log2 identical
+    doubles; per-source sums round at 1e-6.
 
     Scale shape: everything re-aggregates from the count table —
     corpus token totals, per-source totals — and the KL join is

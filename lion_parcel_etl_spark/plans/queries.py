@@ -1036,9 +1036,8 @@ GROUP BY o_orderpriority
 
 
 def q_tumbling_window(spark, sf_dir):
-    """Tumbling event-time window aggregate (batch form of the
-    Structured Streaming windowed agg in streaming/jobs.py — identical
-    F.window semantics)."""
+    """Tumbling event-time window aggregate (``F.window``, one-hour
+    buckets per event type)."""
     ev = _t(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -1200,8 +1199,8 @@ GROUP BY w.user_id, w.win_start
 
 
 def q_sessionize(spark, sf_dir):
-    """Gap-based sessionization via lag window (batch analog of
-    streaming session windows): a >30-min silence starts a new session."""
+    """Gap-based sessionization via lag window: a >30-min silence
+    starts a new session."""
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
@@ -2577,9 +2576,8 @@ def _gif_video_payloads(spark, sf_dir) -> DataFrame:
     """(media_id, payload) — the video-kind rows' animated-GIF
     containers (the q_multimodal_decode generator: 4×4 frames over the
     256-gray identity palette, 1 frame for doc_id%4==0, 2 otherwise,
-    interlaced for doc_id%4==2; md5 byte stream). Shared by
-    q_gif_frames and the streaming media-ingest test so the ingest
-    corpus and the batch corpus are the same bytes."""
+    interlaced for doc_id%4==2; md5 byte stream), the input of
+    q_gif_frames."""
     import hashlib
 
     import numpy as np
@@ -2627,13 +2625,12 @@ def q_gif_frames(spark, sf_dir):
     """REAL video frame sampling (r09): the video-kind rows'
     animated-GIF payloads (_gif_video_payloads — the
     q_multimodal_decode generator) are decoded frame by frame with
-    operators/multimodal.gif_frame_stats (decode stage SHARED with
-    the streaming ingest twin stream_media_frames, so batch and
-    stream cannot drift), and each frame emits its own stats row —
-    the per-frame readout a real sampler feeds downstream (dedup per
-    frame, embedding per frame), next to frame_sample's timestamp
-    plan. The full LZW entropy chain + compositing sit on the oracle
-    hash path: the oracle replays the md5 byte generator per frame
+    operators/multimodal.gif_frame_stats, and each frame emits its
+    own stats row — the per-frame readout a real sampler feeds
+    downstream (dedup per frame, embedding per frame), next to
+    frame_sample's timestamp plan. The full LZW entropy chain +
+    compositing sit on the oracle hash path: the oracle replays the md5
+    byte generator per frame
     (frame f = bytes 16f..16f+15; identity palette → each index
     contributes three copies of itself)."""
     from lion_parcel_etl_spark.operators.multimodal import gif_frame_stats
@@ -5654,13 +5651,11 @@ def q_ks_drift(spark, sf_dir):
     bins, KS says the largest CDF gap anywhere, bin-free.
 
     One scan reduces the corpus to per-(group, value) counts — the
-    ECDF's sufficient statistic and an additive monoid, which is why
-    the streaming twin (stream_value_counts → read_ks_drift) is
-    lossless; the statistic pipeline is SHARED with that twin
-    (operators/checks.ks_from_group_value_counts — grid/window/scale
-    notes live there). The per-type readout rides the `ks_exact`
-    store: q_ks_agreement consumes the same rows,
-    so the corpus scan + ECDF grid run once per session, not twice."""
+    ECDF's sufficient statistic and an additive monoid; the statistic
+    pipeline is operators/checks.ks_from_group_value_counts
+    (grid/window/scale notes live there). The per-type readout rides
+    the `ks_exact` store: q_ks_agreement consumes the same rows, so the
+    corpus scan + ECDF grid run once per session, not twice."""
     return _session_store(spark, sf_dir, "ks_exact")
 
 
@@ -5727,7 +5722,7 @@ cnt AS (SELECT g, v, CAST(count(*) AS BIGINT) AS c FROM pts GROUP BY 1, 2),
 #: boundaries come from a deterministic md5 1/APPROX_SAMPLE_DIV event
 #: sample (the rfm_segments_approx estimator — exact interpolated
 #: percentile over the sample, SQL-replayable). Defined next to the
-#: shared statistic pipeline so the streaming reader can't drift.
+#: statistic pipeline in operators/checks.
 from lion_parcel_etl_spark.operators.checks import KS_BINS  # noqa: E402
 
 
@@ -5752,12 +5747,10 @@ def q_ks_drift_binned(spark, sf_dir):
     q_ks_agreement is the measured-fidelity readout (the ann_recall
     discipline). Both the boundary percentile and the bucketing run
     over COUNT tables (operators/checks.ks_binned_from_counts — counts
-    are sufficient for a frequency-weighted percentile), which is
-    exactly what makes the streaming twin
-    (streaming/jobs.read_ks_drift_binned over merged count logs)
-    lossless. The per-type readout rides the `ks_binned`
-    store: q_ks_agreement consumes the same rows,
-    so the scan + bucketing run once per session, not twice."""
+    are sufficient for a frequency-weighted percentile). The per-type
+    readout rides the `ks_binned` store: q_ks_agreement consumes the
+    same rows, so the scan + bucketing run once per session, not
+    twice."""
     return _session_store(spark, sf_dir, "ks_binned")
 
 
@@ -5943,8 +5936,7 @@ WHERE core_degree >= {KCORE_K} ORDER BY node
 
 def q_session_window_native(spark, sf_dir):
     """Spark's NATIVE session_window aggregation in batch mode (the
-    merging-session operator Catalyst implements specially; the
-    streaming twin is streaming/jobs.stream_session_windows): per-user
+    merging-session operator Catalyst implements specially): per-user
     sessions that extend while events arrive within 30 minutes of the
     last one; window end = last event + gap, end-exclusive, so a gap
     of EXACTLY 30 minutes starts a new session (note the >= vs the
@@ -11082,9 +11074,7 @@ def q_vocab_kl(spark, sf_dir):
     corpus-token and per-source totals — the corpus is scanned ONCE;
     the KL join is vocabulary-sized; the output is |sources| rows.
     The count stage and the KL math live in operators/text.py
-    (source_token_counts / vocab_kl_from_counts) so the streaming
-    monitor twin (streaming/jobs.read_vocab_kl) provably computes the
-    identical statistic from merged per-batch counts."""
+    (source_token_counts / vocab_kl_from_counts)."""
     docs = _t(spark, sf_dir, "documents")
     return TX.vocab_kl_from_counts(DD.pin(TX.source_token_counts(docs)))
 
@@ -11231,9 +11221,8 @@ def q_market_basket(spark, sf_dir):
     support / directional confidence / lift, top {MB_TOP} by lift —
     the classic market-basket readout, all from exact integer counts
     so every ratio replays bit-for-bit in SQL. The rule pipeline
-    lives in operators/basket.basket_rules, SHARED with the streaming
-    twin (stream_market_basket / read_market_basket) so the two can't
-    drift; scale notes live on the operator (pair self-join fanout =
+    lives in operators/basket.basket_rules; scale notes live on the
+    operator (pair self-join fanout =
     basket size → corpus-linear, broadcast scalars, deterministic
     rounded top-k)."""
     from lion_parcel_etl_spark.operators.basket import basket_rules
@@ -11814,10 +11803,8 @@ def q_holt_winters_eval(spark, sf_dir):
     baseline). The whole recurrence lives in
     operators/temporal.holt_winters_backtest (one JVM higher-order
     fold per series, rotating seasonal queue, no UDF / driver loop /
-    per-iteration shuffle — scale notes on the operator), SHARED with
-    the streaming twin (read_holt_winters over merged daily counts) so
-    the two can't drift; the oracle replays the identical arithmetic
-    as a recursive CTE below."""
+    per-iteration shuffle — scale notes on the operator); the oracle
+    replays the identical arithmetic as a recursive CTE below."""
     from lion_parcel_etl_spark.operators.temporal import holt_winters_backtest
 
     return holt_winters_backtest(_daily_volumes(spark, sf_dir))

@@ -1,21 +1,6 @@
 from lion_parcel_etl_spark.streaming.jobs import (  # noqa: F401
     run_available_now,
-    stream_dedup_events,
-    stream_hourly_counts,
     stream_merge_into,
     stream_metrics_detail,
-    read_rollup,
-    stream_near_dup_pairs,
-    stream_rollup_into,
-    stream_interval_join,
     stream_scd2,
-    stream_session_windows,
-    stream_running_user_totals,
-    stream_snapshot_diff,
-    stream_heavy_hitters,
-    read_heavy_hitters,
-    stream_sample_mix,
-    stream_token_budget,
-    stream_gopher_audit,
-    stream_training_mix,
 )

@@ -1,7 +1,8 @@
 """bench.measure, the one timing protocol behind bench.py and
-tools/bench_isolated.py, the floor-exceeder selection, the bench lists
-derived from the query registry, the session-store table, and the
-engine names perfbench's tracer patches."""
+tools/bench_isolated.py, the machine record both write, the
+floor-exceeder selection, the bench lists derived from the query
+registry, the session-store table, and the engine names perfbench's
+tracer patches."""
 
 from __future__ import annotations
 
@@ -111,6 +112,14 @@ def test_exceeders_select_by_ratio_and_slack():
         "no_floor": 100.0,
     }
     assert bench.exceeders(timings, floors) == ["ratio_above", "slack_above"]
+
+
+def test_machine_state_records_core_count(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    cpus = bench._machine_state()["cpus"]
+    assert isinstance(cpus, int) and cpus > 0
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert bench._machine_state()["cpus"] == 3
 
 
 def test_perfbench_patch_targets_resolve():

@@ -145,20 +145,6 @@ def test_schema_file_follows_merge_upsert_evolve(spark, tmp_path):
     assert sorted(map(tuple, dropped.collect())) == [(1, None), (2, 20), (3, 30)]
 
 
-def test_append_batch_tables_have_no_schema_file(spark, tmp_path):
-    wh = Warehouse(str(tmp_path / "wh"))
-    wh.append_batch(spark.range(3), "log", 0)
-    assert not os.path.exists(_schema_file(wh, "log"))
-
-    # an append into an overwritten table drops the overwrite's file,
-    # so a drifting batch is read by inference, not a stale schema
-    wh.overwrite(spark.range(3), "log2")
-    assert os.path.exists(_schema_file(wh, "log2"))
-    wh.append_batch(spark.range(3).withColumn("extra", F.lit("x")), "log2", 1)
-    assert not os.path.exists(_schema_file(wh, "log2"))
-    assert set(wh.read(spark, "log2").columns) == {"id", "extra", "__batch_id"}
-
-
 def test_schema_file_is_invisible_to_merge_schema_and_pandas(spark, tmp_path):
     import pandas as pd
 

@@ -66,9 +66,19 @@ def test_vacuum_removes_only_stale_writer_debris(spark, tmp_path):
     os.makedirs(stale)
     os.makedirs(fresh)
     os.utime(stale, (0, 0))  # ancient
+    # an undotted demoted copy beside its live table: the form older
+    # micro-batch demotions left on disk
+    stale_old = f"{tdir}.__old__0badf00d"
+    os.makedirs(os.path.join(stale_old, "__batch_id=1"))
+    part = os.path.join(stale_old, "__batch_id=1", "part-0.parquet")
+    with open(part, "w") as f:
+        f.write("x")
+    for path in (part, os.path.dirname(part), stale_old):
+        os.utime(path, (0, 0))
     removed = vacuum(wh, min_age_seconds=3600)
-    assert removed == [stale]
+    assert sorted(removed) == sorted([stale, stale_old])
     assert not os.path.exists(stale) and os.path.exists(fresh)
+    assert not os.path.exists(stale_old)
     # live table untouched
     assert wh.read(spark, "t").count() == 5
 
@@ -151,142 +161,14 @@ def test_vacuum_restore_waits_for_staleness(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Chaos tests: Warehouse.publish, the one install path (a table root or
-# an append_batch batch dir). Inject a crash into swap_dir at each window
-# and prove the documented recovery story — the table stays readable or
-# vacuum restores it, at worst a __tmp__ orphan for vacuum, and
-# re-running the SAME write converges with no data loss and no
-# duplicates.
+# Chaos tests: Warehouse.publish, the one install path (a table root).
+# Inject a crash between swap_dir's two renames and prove the documented
+# recovery story — the table is absent, "if it exists" reads raise,
+# vacuum restores the committed copy, and re-running the SAME write
+# converges with no data loss.
 # ---------------------------------------------------------------------------
 
 import pytest
-
-
-def _crash_swap_on(monkeypatch, substr: str):
-    """Patch catalog.swap_dir to raise when the destination path
-    contains ``substr`` (operators resolve swap_dir at call time, so
-    patching the catalog module is enough). Returns a dict; set
-    d['armed']=False to disarm for the recovery re-run."""
-    import lion_parcel_etl_spark.catalog as cat
-
-    real = cat.swap_dir
-    state = {"armed": True}
-
-    def chaotic(tmp, dst):
-        if state["armed"] and substr in dst:
-            raise RuntimeError(f"injected crash before swap of {dst}")
-        real(tmp, dst)
-
-    monkeypatch.setattr(cat, "swap_dir", chaotic)
-    return state
-
-
-def _orphans(wh):
-    import os
-
-    return [
-        os.path.join(dp, d)
-        for dp, dns, _f in os.walk(wh.root)
-        for d in dns
-        if "__tmp__" in d or "__old__" in d
-    ]
-
-
-def test_append_batch_crash_before_swap_keeps_committed_batches(
-    spark, tmp_path, monkeypatch
-):
-    """A crash in the swap of batch 1 leaves batch 0 as the table, the
-    staging dir outside the table for vacuum, and a checkpoint replay
-    of batch 1 converges without duplicates."""
-    import os
-
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.maintenance import vacuum
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    wh.append_batch(spark.range(10), "log", 0)
-    state = _crash_swap_on(monkeypatch, "__batch_id=1")
-    with pytest.raises(RuntimeError, match="injected crash"):
-        wh.append_batch(spark.range(10, 15), "log", 1)
-
-    def rows():
-        return sorted((r["__batch_id"], r.id) for r in wh.read(spark, "log").collect())
-
-    assert rows() == [(0, i) for i in range(10)]
-    table = wh.table_path("log")
-    orphans = _orphans(wh)
-    assert orphans and all(
-        os.path.dirname(p) == os.path.dirname(table) and "__tmp__" in p
-        for p in orphans
-    )
-    assert sorted(vacuum(wh, min_age_seconds=0)) == sorted(orphans)
-    assert not _orphans(wh)
-
-    state["armed"] = False
-    wh.append_batch(spark.range(10, 15), "log", 1)
-    assert rows() == [(0, i) for i in range(10)] + [(1, i) for i in range(10, 15)]
-
-
-@pytest.mark.parametrize("window", ["between_renames", "after_renames"])
-def test_append_batch_replay_crash_never_duplicates_batch(
-    spark, tmp_path, monkeypatch, window
-):
-    """A replay of committed batch 1 crashes inside its swap: between
-    the two renames (batch 1 demoted, replay not yet installed) or after
-    them (before the demoted copy is deleted). The demoted copy is a
-    sibling of the table, so reads never see batch 1 twice and
-    ``__batch_id`` stays an integer column; vacuum removes the debris
-    and a disarmed replay converges."""
-    import os
-    import shutil
-
-    from lion_parcel_etl_spark.catalog import Warehouse
-    from lion_parcel_etl_spark.operators.maintenance import vacuum
-
-    wh = Warehouse(str(tmp_path / "wh"))
-    wh.append_batch(spark.range(10), "log", 0)
-    wh.append_batch(spark.range(10, 15), "log", 1)
-    state = {"armed": True}
-    if window == "between_renames":
-        real_rename = os.rename
-
-        def rename(src, dst):
-            if state["armed"] and "__tmp__" in str(src) and str(dst).endswith(
-                "__batch_id=1"
-            ):
-                raise RuntimeError("injected crash between renames")
-            real_rename(src, dst)
-
-        monkeypatch.setattr(os, "rename", rename)
-    else:
-        real_rmtree = shutil.rmtree
-
-        def rmtree(path, *a, **kw):
-            if state["armed"] and "__old__" in str(path):
-                raise RuntimeError("injected crash after renames")
-            real_rmtree(path, *a, **kw)
-
-        monkeypatch.setattr(shutil, "rmtree", rmtree)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        wh.append_batch(spark.range(10, 15), "log", 1)
-    state["armed"] = False
-
-    def rows():
-        return sorted((r["__batch_id"], r.id) for r in wh.read(spark, "log").collect())
-
-    batch0 = [(0, i) for i in range(10)]
-    batch1 = [(1, i) for i in range(10, 15)]
-    assert rows() == (batch0 if window == "between_renames" else batch0 + batch1)
-    table = wh.table_path("log")
-    orphans = _orphans(wh)
-    assert orphans and all(
-        os.path.dirname(p) == os.path.dirname(table) for p in orphans
-    )
-    assert sorted(vacuum(wh, min_age_seconds=0)) == sorted(orphans)
-    assert not _orphans(wh)
-
-    wh.append_batch(spark.range(10, 15), "log", 1)
-    assert rows() == batch0 + batch1
 
 
 def test_overwrite_crash_between_renames_vacuum_restores_table(

@@ -409,27 +409,6 @@ def test_null_text_rows_score_null_not_negative(spark, tmp_path):
     assert len(r) == 1 and r[0]["n_words"] == 4  # NULL doc adds nothing
 
 
-def test_stream_token_budget_survives_null_text(spark, tmp_path):
-    """A NULL-text doc must not crash the streaming micro-batch
-    (int(NaN)); it flows through with NULL n_tokens and an unchanged
-    running total, exactly like the batch window SUM."""
-    from lion_parcel_etl_spark.streaming.jobs import (
-        run_available_now,
-        stream_token_budget,
-    )
-
-    cols = "doc_id long, text string, lang string, source string, n_chars long"
-    rows = [(1, "w w w", "en", "s", 5), (2, None, "en", "s", 0), (3, "w w", "en", "s", 3)]
-    docs_dir = str(tmp_path / "docs")
-    spark.createDataFrame(rows, cols).write.parquet(docs_dir)
-    stream = stream_token_budget(spark, docs_dir, {}, 100)
-    run_available_now(stream, str(tmp_path / "ck"), table_name="nb_out")
-    got = {r["doc_id"]: (r["n_tokens"], r["cum_tokens"]) for r in spark.table("nb_out").collect()}
-    assert set(got) == {1, 2, 3}
-    assert got[2][0] is None  # null tokens, admitted, total unchanged
-    assert sum(v for v, _ in got.values() if v is not None) == 5
-
-
 def test_bpe_encode_oracle_survives_early_stop(spark, tmp_path):
     """All-single-character corpus: the trainer learns ZERO merges
     (early stop) and the DuckDB oracle must still return every doc

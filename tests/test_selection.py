@@ -93,28 +93,6 @@ def test_one_pass_fit_matches_two_pass(spark, corpus):
     assert one == two
 
 
-def test_per_row_score_matches_aggregate_weights(spark, corpus):
-    """dsir_score (plan-literal lr array + per-row fold — the
-    streaming-safe spelling) must reproduce dsir_weights' per-doc
-    sums, and give NULL to featureless docs the aggregate path
-    drops."""
-    from lion_parcel_etl_spark.operators.selection import (
-        dsir_score,
-        logratio_values,
-    )
-
-    lr = _fit(corpus, F.col("src") == "target")
-    want = {r["doc_id"]: (r["n_feats"], r["logw"])
-            for r in dsir_weights(corpus, lr).collect()}
-    got = {r["doc_id"]: (r["n_feats"], r["logw"])
-           for r in dsir_score(corpus, logratio_values(lr)).collect()}
-    assert set(got) == {1, 2, 3, 4, 5}
-    assert got[4] == (None, None) and got[5] == (None, None)
-    for d, (nf, lw) in want.items():
-        assert got[d][0] == nf
-        assert abs(got[d][1] - lw) < 1e-9
-
-
 def test_logratio_smoothing_bounds(spark, corpus):
     """Add-one smoothing keeps every ratio finite, and a bucket seen
     only in raw scores below one seen in both (target mass missing)."""
