@@ -172,26 +172,11 @@ def psi_drift(
     the only exchange (≤ groups×(n_bins+2) rows after map-side
     combine); the baseline histogram derives from it by re-aggregation
     — the raw data is NOT scanned twice."""
-    per = psi_histogram(df, value_col, group_col, lo, hi, n_bins)
-    return psi_from_histogram(per, group_col, n_bins, smooth)
-
-
-def psi_histogram(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    lo: float,
-    hi: float,
-    n_bins: int = 10,
-) -> DataFrame:
-    """(g, bin, cnt) fixed-width histogram — the mergeable half of
-    :func:`psi_drift`: histograms of disjoint splits sum into the
-    histogram of their union."""
     b = F.width_bucket(F.col(value_col), F.lit(lo), F.lit(hi), F.lit(n_bins))
     # NaN joins the NULL filter: width_bucket(NaN) is NULL, and a
     # NULL-bin row would be counted in the totals but silently miss
     # the dense 0..n_bins+1 grid, biasing every PSI low
-    return (
+    per = (
         df.filter(
             F.col(value_col).isNotNull()
             & ~F.isnan(F.col(value_col).cast("double"))
@@ -199,16 +184,6 @@ def psi_histogram(
         .groupBy(F.col(group_col).alias("g"), b.alias("bin"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-
-
-def psi_from_histogram(
-    per: DataFrame,
-    group_col: str,
-    n_bins: int = 10,
-    smooth: float = 0.5,
-) -> DataFrame:
-    """PSI/verdict from a pre-built (g, bin, cnt) histogram — the math
-    half of :func:`psi_drift`."""
     base = per.groupBy("bin").agg(F.sum("cnt").alias("bcnt"))
     gtot = per.groupBy("g").agg(F.sum("cnt").alias("gn"))
     btot = base.agg(F.sum("bcnt").alias("bn"))

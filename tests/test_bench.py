@@ -1,11 +1,13 @@
 """bench.measure, the one timing protocol behind bench.py and
 tools/bench_isolated.py, the machine record both write, the
 floor-exceeder selection, the bench lists derived from the query
-registry, the session-store table, and the engine names perfbench's
-tracer patches."""
+registry, the session-store table, the engine names perfbench's
+tracer patches, and the codegen class cache that keeps a repeated
+pass from recompiling."""
 
 from __future__ import annotations
 
+import os
 import time
 from collections import Counter
 
@@ -13,6 +15,9 @@ import pytest
 
 import bench
 import lion_parcel_etl_spark.plans.queries as Q
+from lion_parcel_etl_spark.session import codegen_compiles
+
+PERFBENCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
 
 
 def test_registry_ownership_and_bench_lists():
@@ -75,8 +80,9 @@ def test_measure_rebuilds_owned_store_before_every_run(spark, sf_dir, monkeypatc
         return real(spark, sf_dir)
 
     monkeypatch.setitem(Q.STORES, "ks_exact", counting)
-    times, shuffle = bench.measure(spark, sf_dir, "ks_drift", 3)
-    assert len(times) == len(shuffle) == 3
+    times, shuffle, compiles = bench.measure(spark, sf_dir, "ks_drift", 3)
+    assert len(times) == len(shuffle) == len(compiles) == 3
+    assert all(c >= 0 for c in compiles)
     assert all(t > 0 for t in times)
     assert builds == [sf_dir] * 3
 
@@ -159,3 +165,30 @@ def test_overwrite_swaps_and_records_once(spark, tmp_path, monkeypatch):
     cat.Warehouse(str(tmp_path / "wh"), metrics=rm).overwrite(spark.range(3), "t")
     assert calls == {"swap_dir": 1, "record_write": 1}
     assert [w.rows for w in rm.writes] == [3]
+
+
+def test_second_query_mix_pass_compiles_nothing(spark, sf_dir, monkeypatch):
+    """perfbench's query_mix queries, run twice as perfbench runs them
+    (own stores evicted and the cache cleared before each, noop sink):
+    the second pass finds every generated class in Spark's codegen
+    cache. With a cache of Spark's default 100 entries it recompiles
+    ~180, and it would again if the registry's working set outgrew the
+    cache."""
+    monkeypatch.syspath_prepend(PERFBENCH)
+    from workloads import QUERY_SET
+
+    def pass_compiles() -> int:
+        before = codegen_compiles(spark)
+        for name in QUERY_SET:
+            bench._evict_owned(spark, sf_dir, name)
+            spark.catalog.clearCache()
+            Q.QUERIES[name].build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return codegen_compiles(spark) - before
+
+    pass_compiles()
+    assert pass_compiles() == 0
+    # the control: a literal no plan has carried is inlined into new code
+    fresh = spark.range(3).selectExpr(f"id + {time.time_ns()} AS x")
+    before = codegen_compiles(spark)
+    fresh.write.format("noop").mode("overwrite").save()
+    assert codegen_compiles(spark) > before

@@ -7,7 +7,8 @@ noise: for each query it spawns a fresh Python+JVM that times
 ``--runs`` + 1 runs with ``bench.measure`` (the sweep's protocol: owned
 stores evicted before every run, outside the timed region), reports
 the first as ``cold`` (Janino/JIT compilation) and the rest as raw
-steady-state times, then row-counts the result.
+steady-state times, with the classes each run compiled, then
+row-counts the result.
 
 ``--rounds N`` repeats the whole query list N times, queries
 interleaved across rounds so slow machine drift hits each query
@@ -22,6 +23,7 @@ Usage:
 
 Output: JSON {"sf_dir", "runs", "rounds", "floors": {name: sec},
 "cold": {name: [sec per round]}, "raw": {name: [sec, ...]},
+"compiles": {name: [codegen compiles per run, cold run first, ...]},
 "rows": {name: [distinct row counts]}, "errors": {name: msg},
 "telemetry": [per-child machine state], "machine": {start, end}}.
 The file is rewritten after every child, so an interrupted sweep
@@ -49,10 +51,10 @@ import bench
 name, sf_dir, runs = sys.argv[1], sys.argv[2], int(sys.argv[3])
 spark = get_spark(app_name="bench-isolated")
 spark.sparkContext.setLogLevel("ERROR")
-times, _ = bench.measure(spark, sf_dir, name, runs + 1)
+times, _, compiles = bench.measure(spark, sf_dir, name, runs + 1)
 rows = bench.QUERIES[name].build(spark, sf_dir).count()
 print("BENCH_ISOLATED_RESULT " + json.dumps(
-    {{"cold": times[0], "times": times[1:], "rows": rows}}
+    {{"cold": times[0], "times": times[1:], "compiles": compiles, "rows": rows}}
 ))
 """
 
@@ -92,6 +94,7 @@ def main() -> int:
         "rounds": args.rounds,
         "cold": {},
         "raw": {},
+        "compiles": {},
         "rows": {},
         "errors": {},
         "telemetry": [],
@@ -135,6 +138,7 @@ def main() -> int:
             res = json.loads(line.split(" ", 1)[1])
             out["cold"].setdefault(name, []).append(res["cold"])
             out["raw"].setdefault(name, []).extend(res["times"])
+            out["compiles"].setdefault(name, []).extend(res["compiles"])
             seen = out["rows"].setdefault(name, [])
             if res["rows"] not in seen:
                 seen.append(res["rows"])
