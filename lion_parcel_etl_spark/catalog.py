@@ -18,9 +18,8 @@ metastore, or a Delta log): :meth:`Warehouse.read` hands it to
 ``spark.read.schema``, so a read runs no schema-inference job and
 partition columns keep their written types (a boolean partition reads
 back as a boolean, not a string). Every publish stages it with the
-data. :func:`write_schema` and :func:`read_parquet` are the one
-schema-file path: the registry's session stores
-(``plans/queries._session_store``) write and read theirs with them too.
+data. The registry's session stores (``plans/queries._session_store``)
+are tables of a per-session warehouse, so they get theirs the same way.
 Spark, pyarrow and :func:`~lion_parcel_etl_spark.metrics.scan_parquet_dir`
 all skip the ``_``-prefixed file. A directory without it (written before
 schema files existed, or by hand) is read by inference.
@@ -102,25 +101,6 @@ def _table_schema(df: DataFrame, partition_by: list[str] | None = None) -> T.Str
     return _as_nullable(T.StructType(data + last))
 
 
-def write_schema(path: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
-    """Write the schema a read of ``df``, written to parquet dir ``path``
-    with ``partition_by``, reports as ``path/_schema.json``."""
-    with open(os.path.join(path, SCHEMA_FILE), "w") as f:
-        f.write(_table_schema(df, partition_by).json())
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet dir ``path``, typed by its ``_schema.json`` (no Spark
-    job), or by parquet schema inference when it has none (a dir
-    written before schema files existed)."""
-    try:
-        with open(os.path.join(path, SCHEMA_FILE)) as f:
-            schema = T.StructType.fromJson(json.load(f))
-    except FileNotFoundError:
-        return spark.read.parquet(path)
-    return spark.read.schema(schema).parquet(path)
-
-
 class Warehouse:
     """A directory of databases, each a directory of parquet tables.
 
@@ -134,9 +114,6 @@ class Warehouse:
         self.root = root
         self.metrics = metrics
         os.makedirs(root, exist_ok=True)
-
-    def create_database(self, name: str) -> None:
-        os.makedirs(os.path.join(self.root, name), exist_ok=True)
 
     def table_path(self, name: str) -> str:
         """``db.table`` or bare ``table`` (default db)."""
@@ -171,8 +148,15 @@ class Warehouse:
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         """The table, typed by its ``_schema.json`` (no Spark job), or by
-        parquet schema inference when the table has none."""
-        return read_parquet(spark, self.table_path(name))
+        parquet schema inference when the table has none (a table
+        written before schema files existed)."""
+        path = self.table_path(name)
+        try:
+            with open(os.path.join(path, SCHEMA_FILE)) as f:
+                schema = T.StructType.fromJson(json.load(f))
+        except FileNotFoundError:
+            return spark.read.parquet(path)
+        return spark.read.schema(schema).parquet(path)
 
     def publish(
         self,
@@ -186,15 +170,20 @@ class Warehouse:
         directory.
 
         The table's ``_schema.json`` is staged with the data, so both
-        swap in together."""
+        swap in together. Spark refreshes cached plans only over the
+        path it wrote (the staging dir), so the install refreshes every
+        cached plan over the table path: a pinned read of the replaced
+        table would otherwise keep serving its old rows."""
         table = self.table_path(name)
         tmp = staging_dir(table)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp)
-        write_schema(tmp, df, partition_by)
+        with open(os.path.join(tmp, SCHEMA_FILE), "w") as f:
+            f.write(_table_schema(df, partition_by).json())
         swap_dir(tmp, table)
+        df.sparkSession.catalog.refreshByPath(table)
         return table
 
     def record(self, name: str, path: str) -> None:

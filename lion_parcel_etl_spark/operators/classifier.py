@@ -235,26 +235,3 @@ def logreg_score(
         F.when(p >= 0.5, 1).otherwise(0).alias("pred"),
     )
 
-
-def quality_filter(
-    docs: DataFrame,
-    label_cond: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    buckets: int = DSIR_BUCKETS,
-    steps: int = DEFAULT_STEPS,
-    lr: float = DEFAULT_LR,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """End-to-end train-then-filter: fit on ``label_cond`` (typically a
-    'looks like the reference corpus' membership predicate or a rule
-    battery being distilled), keep docs scoring ≥ threshold. The
-    feature table is pinned for the duration of the fit — at cluster
-    scale, materialize :func:`doc_features` to storage instead."""
-    from lion_parcel_etl_spark.operators.dedup import pin
-
-    feats = pin(doc_features(docs, label_cond, id_col, text_col, buckets))
-    w = logreg_fit(feats, id_col, steps, lr)
-    return logreg_score(feats, w, id_col).filter(
-        F.col("p") >= F.lit(threshold)
-    )

@@ -529,39 +529,6 @@ def token_budget_select(
     )
 
 
-def write_training_shards(
-    df: DataFrame,
-    id_col: str,
-    out_path: str,
-    n_shards: int,
-    epoch: int = 0,
-    buckets: int = 256,
-) -> None:
-    """Export a curated corpus as training shards: every row gets its
-    dense epoch-shuffled position (:func:`epoch_shuffle` — global
-    order, deterministic per (id, epoch), never a single-task
-    window), shard = pos % n_shards (round-robin, so shards are
-    equal-sized ±1 AND each shard is an unbiased stride-sample of the
-    global order — a trainer reading shards in parallel still sees a
-    shuffled stream), written as parquet partitioned by shard with
-    ``pos`` retained. A loader reads its shard directory and sorts by
-    ``pos``; re-exporting the same (corpus, epoch) reproduces every
-    byte. One extra keyed join against the rank table and one
-    exchange on the shard key — nothing quadratic, nothing driver-
-    sized."""
-    ranked = epoch_shuffle(df, id_col, epoch=epoch, buckets=buckets)
-    out = (
-        df.join(ranked, id_col)
-        .withColumn("shard", F.pmod(F.col("pos"), F.lit(n_shards)))
-    )
-    (
-        out.repartition(n_shards, "shard")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(out_path)
-    )
-
-
 def temperature_mix(
     df: DataFrame,
     group_col: str,

@@ -23,6 +23,7 @@ relative to /root/reference).
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import json
 import os
@@ -126,22 +127,39 @@ def _store(name: str):
     return register
 
 
-def _store_path(spark, sf_dir, name: str) -> str:
-    """Directory of store ``name`` for this session and sf_dir. The
-    applicationId keeps concurrent sessions apart; an md5 of the FULL
-    sf_dir (stable across processes, unlike the builtin hash) keeps two
-    datasets that share a basename apart and makes a leftover directory
-    identifiable."""
-    sfd = hashlib.md5(str(sf_dir).encode()).hexdigest()[:8]
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"lpe_store_{spark.sparkContext.applicationId}_{name}_{sfd}",
+def _session_warehouse(spark) -> catalog.Warehouse:
+    """The warehouse holding this session's stores, rooted at
+    ``<tempdir>/lpe_session_<applicationId>``: the applicationId keeps
+    concurrent sessions apart. The call that creates the root (an atomic
+    ``os.mkdir``) registers its removal at exit, so the root is removed
+    once, with every store and any debris of a failed write in it."""
+    root = os.path.join(
+        tempfile.gettempdir(), f"lpe_session_{spark.sparkContext.applicationId}"
     )
+    try:
+        os.mkdir(root)
+    except FileExistsError:
+        pass
+    else:
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return catalog.Warehouse(root)
+
+
+def _store_table(sf_dir, name: str) -> str:
+    """Table of store ``name`` for ``sf_dir``: an md5 of the FULL sf_dir
+    (stable across processes, unlike the builtin hash) keeps two
+    datasets that share a basename apart."""
+    return f"{name}_{hashlib.md5(str(sf_dir).encode()).hexdigest()[:8]}"
+
+
+def _store_path(spark, sf_dir, name: str) -> str:
+    """Directory of store ``name`` for this session and sf_dir."""
+    return _session_warehouse(spark).table_path(_store_table(sf_dir, name))
 
 
 def _session_store(spark, sf_dir, name: str) -> DataFrame:
-    """Store ``name`` read back from its parquet directory, built first
-    if the directory holds no committed write.
+    """Store ``name`` read back from its session-warehouse table, built
+    first if the table does not exist.
 
     A store is an expensive deterministic intermediate that several
     queries share: a signature table, a pair list, an ANN ranking, a
@@ -154,50 +172,26 @@ def _session_store(spark, sf_dir, name: str) -> DataFrame:
     oracle parity does not depend on whether a call builds or reads.
 
     An existence check decides build or read, as dbt's
-    ``is_incremental()`` checks for its target table: the directory's
-    ``_SUCCESS`` marker. A directory without it (a killed write) is
-    rebuilt. A store carries its schema as a warehouse table does
-    (``catalog.write_schema`` next to ``_SUCCESS``), so a readout runs
-    no Spark job; a store dir without the file is read by inference."""
-    path = _store_path(spark, sf_dir, name)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        df = STORES[name](spark, sf_dir)
-        df.write.mode("overwrite").parquet(path)
-        catalog.write_schema(path, df)
-        _register_store_cleanup(path)
-    return catalog.read_parquet(spark, path)
+    ``is_incremental()`` checks for its target table. The store is
+    installed by ``Warehouse.overwrite``, so the table exists only once
+    its write committed: a failed build leaves only staging debris under
+    the session root. The table carries its ``_schema.json``, so a
+    readout runs no Spark job."""
+    wh, table = _session_warehouse(spark), _store_table(sf_dir, name)
+    if not wh.exists(table):
+        wh.overwrite(STORES[name](spark, sf_dir), table)
+    return wh.read(spark, table)
 
 
 def _evict_session_store(spark, sf_dir, name: str) -> None:
-    """Delete store ``name`` so the next ``_session_store`` call rebuilds
+    """Drop store ``name`` so the next ``_session_store`` call rebuilds
     it. bench.py evicts an owner query's stores before each timed run;
     tests evict after patching a builder's input. A name outside
     ``STORES`` raises KeyError, so a typo in ``Query.owns`` cannot leave
     the owner's row timing a warm scan."""
     if name not in STORES:
         raise KeyError(f"not a session store: {name!r}")
-    shutil.rmtree(_store_path(spark, sf_dir, name), ignore_errors=True)
-
-
-_STORE_CLEANUP_PATHS: list = []
-
-
-def _register_store_cleanup(path: str) -> None:
-    """atexit-remove every session store this process created, so
-    repeated sessions do not accumulate stores under the temp dir. Each
-    path is listed once however often its store is rebuilt, and the
-    atexit hook is registered once per process."""
-    import atexit
-
-    if path in _STORE_CLEANUP_PATHS:
-        return
-    if not _STORE_CLEANUP_PATHS:
-        def _cleanup():
-            for p in _STORE_CLEANUP_PATHS:
-                shutil.rmtree(p, ignore_errors=True)
-
-        atexit.register(_cleanup)
-    _STORE_CLEANUP_PATHS.append(path)
+    _session_warehouse(spark).drop(_store_table(sf_dir, name))
 
 
 # cents / fmt_ts now live in lion_parcel_etl_spark.functions (shared
@@ -1016,7 +1010,6 @@ def q_bucketed_join(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem").withColumnRenamed("l_orderkey", "o_orderkey")
     write_bucketed(orders, b_orders, ["o_orderkey"], 8, path=f"{root}/o")
     write_bucketed(li, b_lineitem, ["o_orderkey"], 8, path=f"{root}/l")
-    _register_store_cleanup(root)
     return (
         bucketed_join(spark, b_lineitem, b_orders, ["o_orderkey"])
         .groupBy("o_orderpriority")

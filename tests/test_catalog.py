@@ -161,6 +161,22 @@ def test_schema_file_is_invisible_to_merge_schema_and_pandas(spark, tmp_path):
     assert sorted(pdf["id"].tolist()) == [1, 2]
 
 
+def test_overwrite_refreshes_a_cached_read_of_the_table(spark, tmp_path):
+    """A cached read of a table sees the rows of the next overwrite:
+    the write lands in a staging dir, so the install itself must
+    refresh the plans Spark cached over the table path."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.overwrite(spark.range(3).toDF("n"), "t")
+    first = wh.read(spark, "t").repartition("n").persist()
+    again = wh.read(spark, "t").repartition("n")
+    try:
+        assert first.count() == 3
+        wh.overwrite(spark.range(7).toDF("n"), "t")
+        assert again.count() == 7
+    finally:
+        first.unpersist(blocking=True)
+
+
 def test_only_catalog_stages_or_swaps_a_directory():
     """``Warehouse.publish`` is the one install path: no package module
     besides catalog.py names ``swap_dir`` or ``staging_dir``, so no
@@ -180,4 +196,28 @@ def test_only_catalog_stages_or_swaps_a_directory():
                 for n, line in enumerate(fh, 1):
                     if re.search(r"\b(swap_dir|staging_dir)\b", line):
                         offenders.append(f"{os.path.relpath(path, pkg)}:{n}")
+    assert not offenders, offenders
+
+
+def test_only_catalog_bucketing_and_jdbc_hold_a_dataframe_writer():
+    """No package module outside catalog.py, operators/bucketing.py
+    (``saveAsTable`` needs the session metastore) and sources/jdbc.py
+    starts a ``.write.`` DataFrameWriter chain, so every parquet table
+    is installed by ``Warehouse.publish``."""
+    import re
+
+    import lion_parcel_etl_spark
+
+    pkg = os.path.dirname(os.path.abspath(lion_parcel_etl_spark.__file__))
+    allowed = {"catalog.py", os.path.join("operators", "bucketing.py"), os.path.join("sources", "jdbc.py")}
+    offenders = []
+    for dirpath, _dirs, files in os.walk(pkg):
+        for f in files:
+            rel = os.path.relpath(os.path.join(dirpath, f), pkg)
+            if not f.endswith(".py") or rel in allowed:
+                continue
+            with open(os.path.join(pkg, rel)) as fh:
+                for n, line in enumerate(fh, 1):
+                    if re.search(r"\.write(\.|\s*$)", line):
+                        offenders.append(f"{rel}:{n}")
     assert not offenders, offenders

@@ -9,7 +9,6 @@ from lion_parcel_etl_spark.operators.classifier import (
     doc_features,
     logreg_fit,
     logreg_score,
-    quality_filter,
 )
 from lion_parcel_etl_spark.operators.dedup import pin
 
@@ -75,15 +74,6 @@ def test_null_and_empty_text_excluded(spark):
     feats = doc_features(docs, F.coalesce(F.col("text"), F.lit("")).contains("excellent"))
     ids = {r["doc_id"] for r in feats.select("doc_id").distinct().collect()}
     assert ids == {1, 4}
-
-
-def test_quality_filter_end_to_end(corpus):
-    kept = quality_filter(corpus, F.col("text").contains("excellent"))
-    rows = kept.collect()
-    assert all(r["p"] >= 0.5 for r in rows)
-    # the filter should keep (almost exactly) the positive class
-    ids = {r["doc_id"] for r in rows}
-    assert len(ids.symmetric_difference(set(range(30)))) <= 2
 
 
 def test_probabilities_rounded_and_bounded(corpus):

@@ -11,7 +11,9 @@ accounting depends on.
 from __future__ import annotations
 
 import os
+import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -51,27 +53,47 @@ def test_evict_removes_store_path_and_next_call_rebuilds(spark, monkeypatch):
         shutil.rmtree(path, ignore_errors=True)
 
 
-def test_store_dir_without_success_marker_is_rebuilt(spark, monkeypatch):
-    """A directory at the store path with no _SUCCESS marker is a
-    killed write: the next call rebuilds it from the builder instead
-    of reading the partial rows."""
-    import shutil
-
+def test_failed_store_build_leaves_no_table_and_next_call_rebuilds(spark, monkeypatch):
+    """A store whose write fails mid-job installs nothing: no table is
+    readable at its path, the next call builds it from a healthy
+    builder, and the failed write's debris lies under the session root,
+    which is removed at exit."""
     import lion_parcel_etl_spark.plans.queries as Q
 
-    name = "killed_write_test_store"
+    name = "failed_write_test_store"
+    wh = Q._session_warehouse(spark)
+    table = Q._store_table("/x", name)
+    path = wh.table_path(table)
+    db = os.path.dirname(path)
+    before = set(os.listdir(db)) if os.path.isdir(db) else set()
     monkeypatch.setitem(
-        Q.STORES, name, lambda spark, sf_dir: spark.range(3).toDF("n")
+        Q.STORES,
+        name,
+        lambda spark, sf_dir: spark.range(3).select(
+            F.when(F.col("id") < 2, F.col("id"))
+            .otherwise(F.raise_error(F.lit("store build failed")))
+            .alias("n")
+        ),
     )
-    path = Q._store_path(spark, "/x", name)
     try:
-        spark.range(100, 107).toDF("n").write.mode("overwrite").parquet(path)
-        os.remove(os.path.join(path, "_SUCCESS"))
+        with pytest.raises(Exception, match="store build failed"):
+            Q._session_store(spark, "/x", name)
+        assert not os.path.exists(path)
+        assert not wh.exists(table)
+        # debris, if any, is the staged write's sibling under the
+        # session root; nothing of the store sits directly in the temp dir
+        debris = set(os.listdir(db)) - before
+        assert all(d.startswith(f"{table}.__tmp__") for d in debris), debris
+        assert os.path.dirname(wh.root) == tempfile.gettempdir()
+        assert not [d for d in os.listdir(tempfile.gettempdir()) if name in d]
+
+        monkeypatch.setitem(
+            Q.STORES, name, lambda spark, sf_dir: spark.range(3).toDF("n")
+        )
         rows = Q._session_store(spark, "/x", name).collect()
         assert sorted(r["n"] for r in rows) == [0, 1, 2]
-        assert os.path.exists(os.path.join(path, "_SUCCESS"))
     finally:
-        shutil.rmtree(path, ignore_errors=True)
+        Q._evict_session_store(spark, "/x", name)
 
 
 def test_bench_store_owners_map_to_real_stores(spark, sf_dir):
@@ -138,12 +160,15 @@ def test_bucketed_root_distinguishes_full_sf_dir(spark, sf_dir, tmp_path, monkey
     Q.q_bucketed_join(spark, sf_dir)
     Q.q_bucketed_join(spark, str(alias))
     assert len(calls) == 4  # orders + lineitem, per call
-    # roots embed the applicationId (concurrent sessions cannot
-    # clobber each other) and differ across the two sf_dirs
+    # roots lie under the session root, which embeds the applicationId
+    # (concurrent sessions cannot clobber each other), and differ
+    # across the two sf_dirs
     roots = {os.path.dirname(p) for _, p in calls}
     assert len(roots) == 2
+    session_root = Q._session_warehouse(spark).root
+    assert key in os.path.basename(session_root)
     for r in roots:
-        assert key in os.path.basename(r)
+        assert os.path.dirname(os.path.dirname(r)) == session_root
 
 
 def test_bench_guards_are_not_bare_asserts():
@@ -191,13 +216,18 @@ def test_qc_model_store_scores_identical_to_inline_fit(spark, sf_dir):
     assert stored.exceptAll(inline).count() == 0
 
 
-def test_bucketed_join_rewrites_fresh_root_each_call(spark, sf_dir):
+def test_bucketed_join_rewrites_fresh_root_each_call(spark, sf_dir, tmp_path, monkeypatch):
     """Every q_bucketed_join call replaces the per-(session, sf_dir)
     root with a fresh one, and rebuilding it (or any store) any number
-    of times lists its path for atexit cleanup only once."""
+    of times registers the session root's atexit removal only once."""
+    import atexit
+
     import bench
     import lion_parcel_etl_spark.plans.queries as Q
 
+    registered = []
+    monkeypatch.setattr(atexit, "register", lambda fn, *a, **kw: registered.append(a))
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
     root = Q._store_path(spark, sf_dir, "bucketed")
     for _ in range(2):
         Q.q_bucketed_join(spark, sf_dir)
@@ -205,11 +235,9 @@ def test_bucketed_join_rewrites_fresh_root_each_call(spark, sf_dir):
         for table in Q._BUCKETED_TABLES:
             assert spark.catalog.tableExists(table)
         open(os.path.join(root, "stale"), "w").close()
-    assert Q._STORE_CLEANUP_PATHS.count(root) == 1
 
     fn = Q.QUERIES["ks_drift"].build
     for _ in range(2):
         bench._evict_owned(spark, sf_dir, "ks_drift")
         fn(spark, sf_dir)
-    path = Q._store_path(spark, sf_dir, "ks_exact")
-    assert Q._STORE_CLEANUP_PATHS.count(path) == 1
+    assert registered == [(Q._session_warehouse(spark).root,)]

@@ -393,33 +393,6 @@ def test_token_budget_select_greedy_prefix(spark):
         assert run > budget - 15 or run == total
 
 
-def test_write_training_shards_round_trip(spark, docs, tmp_path):
-    """Shards are balanced round-robin slices of the epoch order;
-    reading all shards back and sorting by pos reconstructs the exact
-    epoch_shuffle permutation; re-export reproduces it."""
-    from lion_parcel_etl_spark.operators.sampling import (
-        epoch_shuffle,
-        write_training_shards,
-    )
-
-    out = str(tmp_path / "shards")
-    write_training_shards(docs, "doc_id", out, n_shards=4, epoch=2)
-    back = spark.read.parquet(out)
-    n = docs.count()
-    assert back.count() == n
-    sizes = {r["shard"]: r["n"] for r in back.groupBy("shard").agg(F.count("*").alias("n")).collect()}
-    assert set(sizes) == {0, 1, 2, 3}
-    assert max(sizes.values()) - min(sizes.values()) <= 1
-    # in-shard positions stride by n_shards: shard s holds pos ≡ s (mod 4)
-    assert back.filter(F.pmod("pos", F.lit(4)) != F.col("shard")).count() == 0
-    order = {r["doc_id"]: r["pos"] for r in back.select("doc_id", "pos").collect()}
-    want = {r["doc_id"]: r["pos"] for r in epoch_shuffle(docs, "doc_id", epoch=2).collect()}
-    assert order == want
-    write_training_shards(docs, "doc_id", out, n_shards=4, epoch=2)
-    again = {r["doc_id"]: r["pos"] for r in spark.read.parquet(out).collect()}
-    assert again == order
-
-
 class TestTemperatureMix:
     def test_alpha_one_is_natural_proportions(self, spark):
         from lion_parcel_etl_spark.operators.sampling import temperature_mix
