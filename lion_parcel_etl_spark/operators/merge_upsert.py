@@ -48,29 +48,21 @@ def merge_upsert(
     target: DataFrame | None,
     updates: DataFrame,
     keys: list[str],
-    dedupe_updates: bool = False,
     order_col: str | None = None,
 ) -> DataFrame:
     """Upsert ``updates`` into ``target`` by ``keys``; returns the merged
     DataFrame (caller materializes, e.g. Warehouse.overwrite).
 
     target=None → first run → updates as-is (dbt full-refresh branch).
-    ``dedupe_updates`` keeps the last row per key ordered by
-    ``order_col`` when the updates batch itself has duplicates —
-    ``order_col`` is REQUIRED with it: the old fallback of ordering by
-    the key itself is constant within the window partition, so "last"
-    silently meant "whichever row the shuffle delivered first".
+    ``order_col`` dedupes an updates batch that itself has duplicates:
+    the last row per key by ``order_col`` is kept (NULLs lose). Without
+    it the batch must hold one row per key.
 
     A NULL key value is treated as a real key (null-safe anti-join):
     an update for the null key replaces the null-key target row rather
     than accumulating next to it.
     """
-    if dedupe_updates:
-        if order_col is None:
-            raise ValueError(
-                "dedupe_updates requires order_col: without an ordering "
-                "column, 'keep the last row per key' is nondeterministic"
-            )
+    if order_col is not None:
         from pyspark.sql import Window
 
         w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc_nulls_last())

@@ -18,6 +18,10 @@ snapshot plus one anti-join for the inserts:
 - result: carried ∪ inserts (U1, :123-201);
 - first run: full-refresh branch (:203-219).
 
+The run clock is a snapshot column, not a literal: Catalyst folds a
+literal into the generated code, so each new clock would compile new
+classes.
+
 Scale design (100 TB target): the snapshot of an incremental run is
 small next to the accumulated history, so it is broadcast: the stored
 table streams, is scanned twice (probe, current keys), never shuffled.
@@ -35,6 +39,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from lion_parcel_etl_spark.schemas import SCD_SENTINEL
 
@@ -47,22 +52,23 @@ def scd2_apply(
     key: list[str],
     tracked: list[str],
     snapshot_ts_col: str,
-    run_ts: str,
-    sentinel: str = SCD_SENTINEL,
+    run_ts_col: str,
 ) -> DataFrame:
     """Apply one SCD2 run; returns the full new state of the dimension.
 
     ``snapshot`` carries the key, all attribute columns (including the
-    ``tracked`` change-detection set) and ``snapshot_ts_col``.
-    ``run_ts`` is the injected deterministic run timestamp replacing the
-    reference's ``current_timestamp`` (SURVEY.md §7 hard part 6).
+    ``tracked`` change-detection set), ``snapshot_ts_col`` and the run
+    clock ``run_ts_col``: a timestamp column, the reference's
+    ``current_timestamp`` (SURVEY.md §7 hard part 6), that stamps
+    ``dw_inserted_at``/``dw_updated_at`` and is not stored itself.
 
     A NULL business-key value is treated as a real key (all key joins
     are null-safe), so a null-key snapshot row updates/expires its
     predecessor like any other instead of accumulating a new INSERT
     every run. Snapshot columns may not collide with the SCD meta
-    columns — validated up front rather than failing later with an
-    ambiguous-reference or duplicate-parquet-column error.
+    columns, and the clock must be a column of its own: both checked
+    on the plan's schema up front (no Spark job) rather than failing
+    later with an ambiguous-reference or duplicate-parquet-column error.
     """
     clash = [c for c in snapshot.columns if c in SCD_META_COLS]
     if clash:
@@ -70,24 +76,29 @@ def scd2_apply(
             f"snapshot columns {clash!r} collide with SCD2 meta columns "
             f"{SCD_META_COLS}; rename them before applying"
         )
-    attrs = list(snapshot.columns)
-    run_ts_c = F.to_timestamp(F.lit(run_ts))
-    sentinel_c = F.to_timestamp(F.lit(sentinel))
+    clock = next((f.dataType for f in snapshot.schema if f.name == run_ts_col), None)
+    if not isinstance(clock, TimestampType) or run_ts_col in [*key, *tracked, snapshot_ts_col]:
+        raise ValueError(
+            f"run_ts_col {run_ts_col!r} must be a timestamp column of the snapshot "
+            f"(found {clock}) and not a key, tracked or snapshot-time column"
+        )
+    attrs = [c for c in snapshot.columns if c != run_ts_col]
+    sentinel_c = F.to_timestamp(F.lit(SCD_SENTINEL))
 
-    def as_version(df: DataFrame, dw_inserted) -> DataFrame:
+    def as_version(df: DataFrame) -> DataFrame:
         return df.select(
             *attrs,
             F.col(snapshot_ts_col).alias("valid_from"),
             sentinel_c.alias("valid_to"),
             F.lit(True).alias("is_current"),
-            dw_inserted.alias("dw_inserted_at"),
-            run_ts_c.alias("dw_updated_at"),
+            F.col(run_ts_col).alias("dw_inserted_at"),
+            F.col(run_ts_col).alias("dw_updated_at"),
         )
 
     if target is None:
         # Full refresh (reference :203-219): every snapshot row is the
         # open current version.
-        return as_version(snapshot, run_ts_c)
+        return as_version(snapshot)
 
     def key_cond(la: str, ra: str):
         # null-safe: a NULL key value matches its stored predecessor
@@ -107,16 +118,17 @@ def scd2_apply(
         [~F.col(f"s.{c}").eqNullSafe(F.col(f"t.{c}")) for c in tracked],
     )
     new_ts = F.col(f"s.{snapshot_ts_col}")
+    run = F.col(f"s.{run_ts_col}")
     # one ordered column list builds both structs, so their field order
     # is the target's whatever order the snapshot carries its columns in
     cols = target.columns
-    expire = {"valid_to": new_ts, "is_current": F.lit(False), "dw_updated_at": run_ts_c}
+    expire = {"valid_to": new_ts, "is_current": F.lit(False), "dw_updated_at": run}
     version = {
         "valid_from": new_ts,
         "valid_to": sentinel_c,
         "is_current": F.lit(True),
-        "dw_inserted_at": F.coalesce(F.col("t.dw_inserted_at"), run_ts_c),
-        "dw_updated_at": run_ts_c,
+        "dw_inserted_at": F.coalesce(F.col("t.dw_inserted_at"), run),
+        "dw_updated_at": run,
     }
 
     def kept(c: str):
@@ -139,5 +151,5 @@ def scd2_apply(
         .join(key_set, key_cond("pv", "k"), "left_semi")
     )
     cur = F.broadcast(cur_keys).alias("c")
-    inserts = as_version(snapshot.alias("s").join(cur, key_cond("s", "c"), "left_anti"), run_ts_c)
+    inserts = as_version(snapshot.alias("s").join(cur, key_cond("s", "c"), "left_anti"))
     return carried.unionByName(inserts.select(*cols))

@@ -10,7 +10,9 @@ E2 ``bonus_test`` (reference ``dags/bonus_test.py:17-39``):
 Each task reads/writes warehouse tables so a run is resumable and
 inspectable mid-pipeline, exactly like the reference's Postgres
 tables between Airflow tasks. ``ctx`` carries
-{spark, warehouse, run_ts, ...} — injected, deterministic.
+{spark, warehouse, run_ts, ...} — injected, deterministic. Only the
+``stage`` task reads ``run_ts``: it stamps staging's ``loaded_at``, and
+both retail marts take the run clock from that column.
 """
 
 from __future__ import annotations
@@ -50,17 +52,15 @@ def build_retail_pipeline() -> Pipeline:
         spark, wh = ctx["spark"], ctx["warehouse"]
         staging = wh.read(spark, "stg_retail_transactions")
         target = _read_if_exists(wh, spark, "retail_transactions")
-        out = retail_transactions_model(target, staging, ctx["run_ts"])
+        out = retail_transactions_model(target, staging)
         wh.overwrite(out, "retail_transactions")
 
     def mart_scd(ctx):
         spark, wh = ctx["spark"], ctx["warehouse"]
         staging = wh.read(spark, "stg_retail_transactions")
-        snap = retail_snapshot(staging, ctx["run_ts"])
+        snap = retail_snapshot(staging)
         target = _read_if_exists(wh, spark, "retail_transactions_scd")
-        out = scd2_apply(
-            target, snap, ["id"], SCD_TRACKED, "updated_at", ctx["run_ts"]
-        )
+        out = scd2_apply(target, snap, ["id"], SCD_TRACKED, "updated_at", "loaded_at")
         # partitioned by is_current, but overwrite rewrites the WHOLE
         # table (history included) every run: at this history depth one
         # rewrite beat an append-only history layout (SCALE.md

@@ -13,10 +13,13 @@ Re-expresses the reference's two-task hourly DAG
    ``deleted_at`` = run ts when ``last_status='DONE'`` and *preserved*
    once set via a left join to the previous target (J1).
 3. The SCD2 mart is ``operators.scd2.scd2_apply`` over the same staging
-   snapshot (see that module).
+   snapshot (see that module), clocked by its ``loaded_at`` column.
 
-All run-time expressions take ``run_ts`` (deterministic, testable)
-instead of ``current_timestamp`` — SURVEY.md §7 hard part 6.
+The run clock replaces the reference's ``current_timestamp`` (SURVEY.md
+§7 hard part 6) and enters the plans once: ``stage_source`` turns the
+injected ``run_ts`` into staging's ``loaded_at``, and every mart reads
+the clock from that column. A clock held as data, not as a literal,
+keeps the marts' generated code the same from one run to the next.
 """
 
 from __future__ import annotations
@@ -42,10 +45,11 @@ def stage_source(source: DataFrame, run_ts: str) -> DataFrame:
     return source.select(*SOURCE_COLS, F.to_timestamp(F.lit(run_ts)).alias("loaded_at"))
 
 
-def retail_snapshot(staging: DataFrame, run_ts: str) -> DataFrame:
+def retail_snapshot(staging: DataFrame) -> DataFrame:
     """Typed snapshot with soft-delete semantics, shared by both marts
-    (reference retail_transactions_scd.sql:9-24 casts + :19-22 deleted_at)."""
-    run = F.to_timestamp(F.lit(run_ts))
+    (reference retail_transactions_scd.sql:9-24 casts + :19-22 deleted_at),
+    carrying staging's ``loaded_at`` as the run clock."""
+    run = F.col("loaded_at")
     return staging.select(
         F.col("id").cast("long").alias("id"),
         F.col("customer_id").cast("string").alias("customer_id"),
@@ -55,37 +59,30 @@ def retail_snapshot(staging: DataFrame, run_ts: str) -> DataFrame:
         F.coalesce(F.col("created_at").cast("timestamp"), run).alias("created_at"),
         F.col("updated_at").cast("timestamp").alias("updated_at"),
         F.when(F.col("last_status") == "DONE", F.col("updated_at").cast("timestamp"))
-        .otherwise(F.lit(None).cast("timestamp"))
         .alias("deleted_at"),
+        run,
     )
 
 
-def retail_transactions_model(
-    target: DataFrame | None, staging: DataFrame, run_ts: str
-) -> DataFrame:
+def retail_transactions_model(target: DataFrame | None, staging: DataFrame) -> DataFrame:
     """Merge + soft delete mart (K6/J1/F1-F5), upsert by ``id``.
 
-    deleted_at: run ts when status is DONE, preserving any earlier value
-    from the target (``coalesce(t.deleted_at, now())``, reference :37-44);
+    updated_at: the run clock (staging's ``loaded_at``). deleted_at: the
+    run clock when status is DONE, preserving any earlier value from
+    the target (``coalesce(t.deleted_at, now())``, reference :37-44);
     null otherwise.
     """
-    run = F.to_timestamp(F.lit(run_ts))
-    src = staging.select(
-        F.col("id").cast("long").alias("id"),
-        F.col("customer_id").cast("string").alias("customer_id"),
-        "last_status",
-        "pos_origin",
-        "pos_destination",
-        F.coalesce(F.col("created_at").cast("timestamp"), run).alias("created_at"),
-        run.alias("updated_at"),
-    )
+    src = retail_snapshot(staging)
+    prior = F.lit(None)
     if target is not None:
         # Tiny key-value side of a broadcast left join: the previous
         # deleted_at per id (J1, reference :46-48).
-        prior = F.broadcast(target.select("id", F.col("deleted_at").alias("__prior_deleted")))
-        src = src.join(prior, on="id", how="left")
-    else:
-        src = src.withColumn("__prior_deleted", F.lit(None).cast("timestamp"))
+        src = src.join(
+            F.broadcast(target.select("id", F.col("deleted_at").alias("__prior_deleted"))),
+            on="id",
+            how="left",
+        )
+        prior = F.col("__prior_deleted")
     updates = src.select(
         "id",
         "customer_id",
@@ -93,12 +90,8 @@ def retail_transactions_model(
         "pos_origin",
         "pos_destination",
         "created_at",
-        "updated_at",
-        F.when(
-            F.col("last_status") == "DONE",
-            F.coalesce(F.col("__prior_deleted"), run),
-        )
-        .otherwise(F.lit(None).cast("timestamp"))
+        F.col("loaded_at").alias("updated_at"),
+        F.when(F.col("last_status") == "DONE", F.coalesce(prior, F.col("loaded_at")))
         .alias("deleted_at"),
     )
     return merge_upsert(target, updates, keys=["id"])

@@ -460,14 +460,10 @@ def _build_scd2_state(spark, sf_dir) -> DataFrame:
     machine to reach the same deterministic state. Timestamps are
     micros, which parquet round-trips exactly."""
     ev = _t(spark, sf_dir, "events")
-    s1 = _event_snapshot(ev, EV_C1)
-    s2 = _event_snapshot(ev, EV_C2)
-    state1 = scd2_apply(
-        None, s1, ["user_id"], ["event_type", "value"], "ts", RUN0
-    )
-    return scd2_apply(
-        state1, s2, ["user_id"], ["event_type", "value"], "ts", RUN1
-    )
+    s1 = _event_snapshot(ev, EV_C1).withColumn("run_at", F.to_timestamp(F.lit(RUN0)))
+    s2 = _event_snapshot(ev, EV_C2).withColumn("run_at", F.to_timestamp(F.lit(RUN1)))
+    state1 = scd2_apply(None, s1, ["user_id"], ["event_type", "value"], "ts", "run_at")
+    return scd2_apply(state1, s2, ["user_id"], ["event_type", "value"], "ts", "run_at")
 
 
 def q_scd2_events(spark, sf_dir):

@@ -122,14 +122,7 @@ def stream_merge_into(
                 .filter(F.col("__cur_ord").isNull() | (F.col(order_col) >= F.col("__cur_ord")))
                 .drop("__cur_ord", *[f"__k_{k}" for k in keys])
             )
-        merged = merge_upsert(
-            tgt,
-            batch,
-            keys,
-            dedupe_updates=order_col is not None,
-            order_col=order_col,
-        )
-        warehouse.overwrite(merged, table)
+        warehouse.overwrite(merge_upsert(tgt, batch, keys, order_col=order_col), table)
 
     _run_foreach_batch(df, checkpoint, _merge)
 
@@ -167,7 +160,6 @@ def stream_scd2(
     tracked: list[str],
     snapshot_ts_col: str,
     checkpoint: str,
-    run_ts_col: str | None = None,
 ) -> None:
     """Streaming SCD2 dimension maintenance via ``foreachBatch`` — the
     continuous twin of the reference's hourly SCD2 dbt run: each
@@ -178,41 +170,41 @@ def stream_scd2(
     target dimension is never shuffled: scd2_apply streams it past the
     broadcast snapshot).
 
-    The injected run timestamp is the batch's max ``snapshot_ts_col``
-    (or ``run_ts_col`` if given) — deterministic from the data, never
-    wall clock, so a checkpoint replay of the same batch applies an
-    IDENTICAL run: change detection then sees no differences and the
-    dimension is unchanged. A crash before or after the table swap
-    leaves the old or the new table; the replay converges on both.
+    The run clock is the batch's max ``snapshot_ts_col``, joined onto
+    the snapshot as a column and so never collected to Python (a
+    collected timestamp is a naive local datetime, which would shift the
+    clock by the process's UTC offset). It is deterministic from the
+    data, never wall clock, so a checkpoint replay of the same batch
+    applies an IDENTICAL run: change detection then sees no differences
+    and the dimension is unchanged. A crash before or after the table
+    swap leaves the old or the new table; the replay converges on both.
     """
     from pyspark.sql import Window
 
     from lion_parcel_etl_spark.operators.scd2 import scd2_apply
 
-    order_col = run_ts_col or snapshot_ts_col
-
     def _batch(batch: DataFrame, _batch_id: int) -> None:
         spark = batch.sparkSession
         if batch.isEmpty():
             return
-        w = Window.partitionBy(*key).orderBy(F.col(order_col).desc())
+        clock = batch.agg(F.max(snapshot_ts_col).cast("timestamp").alias("__run_clock"))
+        if clock.first()[0] is None:
+            # every row's snapshot time is NULL: no usable snapshot
+            # ordering exists, the row_number dedupe would pick
+            # arbitrary rows, and the run would stamp a NULL clock
+            raise ValueError(
+                f"stream_scd2: micro-batch has all-NULL {snapshot_ts_col!r}; "
+                "cannot order snapshot rows or derive the run clock"
+            )
+        w = Window.partitionBy(*key).orderBy(F.col(snapshot_ts_col).desc())
         snap = (
             batch.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
+            .crossJoin(F.broadcast(clock))
         )
-        max_ord = batch.agg(F.max(order_col)).first()[0]
-        if max_ord is None:
-            # every row's order column is NULL: no usable snapshot
-            # ordering exists, the row_number dedupe would pick
-            # arbitrary rows, and str(None) would stamp the literal
-            # string 'None' into the validity column — refuse loudly
-            raise ValueError(
-                f"stream_scd2: micro-batch has all-NULL {order_col!r}; "
-                "cannot order snapshot rows or derive run_ts"
-            )
         target = warehouse.read(spark, table) if warehouse.exists(table) else None
-        out = scd2_apply(target, snap, key, tracked, snapshot_ts_col, str(max_ord))
+        out = scd2_apply(target, snap, key, tracked, snapshot_ts_col, "__run_clock")
         warehouse.overwrite(out, table, partition_by=["is_current"])
 
     _run_foreach_batch(df, checkpoint, _batch)

@@ -76,7 +76,10 @@ def test_boolean_partition_round_trips_and_feeds_scd2_without_cast(spark, tmp_pa
         [(1, "a", dt.datetime(2024, 1, 1)), (2, "b", dt.datetime(2024, 1, 1))],
         "id long, status string, snap_ts timestamp",
     )
-    first = scd2_apply(None, snap, ["id"], ["status"], "snap_ts", "2024-01-01 01:00:00")
+    run1 = F.to_timestamp(F.lit("2024-01-01 01:00:00"))
+    first = scd2_apply(
+        None, snap.withColumn("run_at", run1), ["id"], ["status"], "snap_ts", "run_at"
+    )
     wh.overwrite(first, "dim", partition_by=["is_current"])
     target = wh.read(spark, "dim")
     assert dict(target.dtypes)["is_current"] == "boolean"
@@ -84,7 +87,10 @@ def test_boolean_partition_round_trips_and_feeds_scd2_without_cast(spark, tmp_pa
     snap2 = spark.createDataFrame(
         [(1, "z", dt.datetime(2024, 1, 2))], "id long, status string, snap_ts timestamp"
     )
-    out = scd2_apply(target, snap2, ["id"], ["status"], "snap_ts", "2024-01-02 01:00:00")
+    run2 = F.to_timestamp(F.lit("2024-01-02 01:00:00"))
+    out = scd2_apply(
+        target, snap2.withColumn("run_at", run2), ["id"], ["status"], "snap_ts", "run_at"
+    )
     assert sorted((r.id, r.status, r.is_current) for r in out.collect()) == [
         (1, "a", False),
         (1, "z", True),

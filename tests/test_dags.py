@@ -116,3 +116,84 @@ def test_write_csv_single_file(spark, wh, tmp_path):
     assert len(files) == 1  # coalesce(1): one golden file
     text = open(files[0]).read()
     assert text.startswith("id,v")
+
+
+def test_retail_tick_with_a_new_run_ts_compiles_at_most_two_classes(spark, wh):
+    """The marts read the run clock from staging's ``loaded_at`` column,
+    so only ``stage``'s projection carries ``run_ts`` as a literal: once
+    two ticks have warmed the codegen cache, a tick with a never-seen
+    ``run_ts`` compiles at most the 2 classes of that projection (8 when
+    every mart folded ``run_ts`` into its own generated code)."""
+    from lion_parcel_etl_spark.session import codegen_compiles
+
+    p = build_retail_pipeline()
+
+    def tick(hour, status):
+        rows = [
+            (1, "c1", status, "JKT", "BDG", "2031-07-15 00:00:00", f"2031-07-15 {hour:02d}:30:00"),
+            (2, "c2", "DONE", "JKT", "SMG", None, "2031-07-15 00:30:00"),
+        ]
+        ctx = {
+            "spark": spark,
+            "warehouse": wh,
+            "run_ts": f"2031-07-15 {hour:02d}:00:00",
+            "source_df": _src(spark, rows),
+        }
+        before = codegen_compiles(spark)
+        p.run(ctx)
+        return codegen_compiles(spark) - before
+
+    tick(1, "PICKED")
+    tick(2, "ON_WAY")
+    assert tick(3, "PICKED") <= 2
+    scd = wh.read(spark, "retail_transactions_scd")
+    assert scd.filter("id = 1").count() == 3 and scd.filter("id = 2").count() == 1
+
+
+def test_only_the_stage_step_reads_run_ts():
+    """``run_ts`` becomes a timestamp in one place: ``stage_source``
+    (called by the retail DAG's ``stage`` task) stamps it as staging's
+    ``loaded_at``. Besides the runner and the CLI that inject it, no
+    other package code names ``run_ts``, so no mart or operator folds
+    the run clock into a literal of its own plan."""
+    import ast
+    import os
+
+    import lion_parcel_etl_spark
+
+    pkg = os.path.dirname(os.path.abspath(lion_parcel_etl_spark.__file__))
+    allowed = {
+        os.path.join("pipelines", "retail.py"): "stage_source",
+        os.path.join("pipelines", "dags.py"): "stage",
+        "runner.py": None,
+        "cli.py": None,
+    }
+
+    def reads(node):
+        return (
+            (isinstance(node, ast.Name) and node.id == "run_ts")
+            or (isinstance(node, ast.arg) and node.arg == "run_ts")
+            or (isinstance(node, ast.keyword) and node.arg == "run_ts")
+            or (isinstance(node, ast.Attribute) and node.attr == "run_ts")
+            or (isinstance(node, ast.Constant) and node.value == "run_ts")
+        )
+
+    def offenders(node, rel, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = child.name
+            else:
+                inner = fn
+            if reads(child) and not (rel in allowed and allowed[rel] in (None, fn)):
+                yield f"{rel}:{child.lineno}"
+            yield from offenders(child, rel, inner)
+
+    found = []
+    for dirpath, _dirs, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                with open(path) as fh:
+                    tree = ast.parse(fh.read())
+                found += offenders(tree, os.path.relpath(path, pkg), None)
+    assert not found, found

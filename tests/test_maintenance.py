@@ -239,10 +239,11 @@ def test_scd2_after_crash_between_renames_raises_then_keeps_history(
         snap = spark.createDataFrame(
             [(1, status, f"2024-01-0{day} 00:00:00"), (2, "fixed", "2024-01-01 00:00:00")],
             "id long, status string, snap_ts string",
-        ).withColumn("snap_ts", F.to_timestamp("snap_ts"))
+        ).withColumn("snap_ts", F.to_timestamp("snap_ts")).withColumn(
+            "run_at", F.to_timestamp(F.lit(f"2024-01-0{day} 01:00:00"))
+        )
         out = scd2_apply(
-            _read_if_exists(wh, spark, "dim"), snap, ["id"], ["status"], "snap_ts",
-            f"2024-01-0{day} 01:00:00",
+            _read_if_exists(wh, spark, "dim"), snap, ["id"], ["status"], "snap_ts", "run_at"
         )
         wh.overwrite(out, "dim", partition_by=["is_current"])
 

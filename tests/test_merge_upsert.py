@@ -34,7 +34,7 @@ def test_dedupe_updates_keeps_last(spark):
     upd = spark.createDataFrame(
         [(1, 1, "mid"), (1, 2, "last")], "id long, seq long, v string"
     )
-    out = merge_upsert(tgt, upd, ["id"], dedupe_updates=True, order_col="seq")
+    out = merge_upsert(tgt, upd, ["id"], order_col="seq")
     assert rows(out, "id", "v") == [(1, "last")]
 
 
@@ -121,13 +121,6 @@ def test_union_evolve_rejects_incompatible_drift(spark):
     b = spark.createDataFrame([("s",)], "x string")
     with _pytest.raises(TypeError):
         union_evolve([a, b])
-
-
-def test_dedupe_updates_requires_order_col(spark):
-    import pytest
-    upd = spark.createDataFrame([(1, "a")], "id long, v string")
-    with pytest.raises(ValueError, match="order_col"):
-        merge_upsert(None, upd, ["id"], dedupe_updates=True)
 
 
 def test_merge_null_key_replaces_not_duplicates(spark):

@@ -40,14 +40,10 @@ def test_opt_stores_byte_identical_to_inline_builds(spark, sf_dir):
 
     def inline_scd2_state():
         ev = Q._t(spark, sf_dir, "events")
-        s1 = Q._event_snapshot(ev, Q.EV_C1)
-        s2 = Q._event_snapshot(ev, Q.EV_C2)
-        st1 = scd2_apply(
-            None, s1, ["user_id"], ["event_type", "value"], "ts", Q.RUN0
-        )
-        return scd2_apply(
-            st1, s2, ["user_id"], ["event_type", "value"], "ts", Q.RUN1
-        )
+        s1 = Q._event_snapshot(ev, Q.EV_C1).withColumn("run_at", F.to_timestamp(F.lit(Q.RUN0)))
+        s2 = Q._event_snapshot(ev, Q.EV_C2).withColumn("run_at", F.to_timestamp(F.lit(Q.RUN1)))
+        st1 = scd2_apply(None, s1, ["user_id"], ["event_type", "value"], "ts", "run_at")
+        return scd2_apply(st1, s2, ["user_id"], ["event_type", "value"], "ts", "run_at")
 
     inline_builds = {
         "trade_ed": inline_trade_ed(),

@@ -70,11 +70,12 @@ SNAPS = st.lists(
 
 
 def _snap_df(spark, rows, ts):
+    """Snapshot of ``rows`` at ``ts``, which is also its ``run_at`` clock."""
     data = [(k, v, ts) for k, v in rows] or [(None, None, None)]
     df = spark.createDataFrame(data, "id int, val string, snap_ts string")
     return df.filter(F.col("id").isNotNull()).withColumn(
         "snap_ts", F.to_timestamp("snap_ts")
-    )
+    ).withColumn("run_at", F.col("snap_ts"))
 
 
 @given(snaps=SNAPS)
@@ -84,7 +85,7 @@ def test_scd2_invariants_across_runs(spark, snaps):
     run_days = [f"2024-01-{d + 1:02d} 00:00:00" for d in range(len(snaps))]
     for rows, run_ts in zip(snaps, run_days):
         snap = _snap_df(spark, rows, run_ts)
-        state = scd2_apply(state, snap, ["id"], ["val"], "snap_ts", run_ts)
+        state = scd2_apply(state, snap, ["id"], ["val"], "snap_ts", "run_at")
     out = state.collect()
 
     by_key: dict[int, list] = {}
@@ -137,9 +138,9 @@ def _scd2_model(snaps, run_days):
 def test_scd2_unchanged_snapshot_is_noop(spark, rows):
     rows = [(k, v or "x") for k, v in rows]
     s1 = _snap_df(spark, rows, "2024-01-01 00:00:00")
-    state1 = scd2_apply(None, s1, ["id"], ["val"], "snap_ts", "2024-01-01 00:00:00")
+    state1 = scd2_apply(None, s1, ["id"], ["val"], "snap_ts", "run_at")
     s2 = _snap_df(spark, rows, "2024-01-02 00:00:00")
-    state2 = scd2_apply(state1, s2, ["id"], ["val"], "snap_ts", "2024-01-02 00:00:00")
+    state2 = scd2_apply(state1, s2, ["id"], ["val"], "snap_ts", "run_at")
     c1 = sorted(map(tuple, state1.select("id", "val", "is_current").collect()))
     c2 = sorted(map(tuple, state2.select("id", "val", "is_current").collect()))
     assert c1 == c2

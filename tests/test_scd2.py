@@ -7,10 +7,11 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from lion_parcel_etl_spark.operators.scd2 import scd2_apply
-from lion_parcel_etl_spark.pipelines.retail import retail_snapshot
+from lion_parcel_etl_spark.pipelines.retail import retail_snapshot, stage_source
 from lion_parcel_etl_spark.schemas import SCD_SENTINEL
 
 KEY = ["id"]
@@ -30,10 +31,19 @@ def src_df(spark, rows):
     return spark.createDataFrame(rows, SRC_SCHEMA)
 
 
+def snapshot(spark, rows, run_ts):
+    return retail_snapshot(stage_source(src_df(spark, rows), run_ts))
+
+
+def clocked(df, run_ts):
+    """``df`` with the run clock ``run_ts`` as its ``run_at`` column."""
+    return df.withColumn("run_at", F.to_timestamp(F.lit(run_ts)))
+
+
 def run(spark, target, rows, run_ts):
-    snap = retail_snapshot(src_df(spark, rows), run_ts)
+    snap = snapshot(spark, rows, run_ts)
     return scd2_apply(
-        target, snap, KEY, TRACKED, snapshot_ts_col="updated_at", run_ts=run_ts
+        target, snap, KEY, TRACKED, snapshot_ts_col="updated_at", run_ts_col="loaded_at"
     ).cache()
 
 
@@ -144,11 +154,11 @@ def test_null_safe_change_detection(spark):
 def test_scd2_plan_broadcasts_snapshot(spark):
     t0 = ts("2025-10-01 10:00:00")
     tgt = run(spark, None, [(1, 10, "Created", "JKT", "BDG", t0, t0)], "2025-10-01 10:05:00")
-    snap = retail_snapshot(
-        src_df(spark, [(1, 10, "On Way", "JKT", "BDG", t0, ts("2025-10-01 11:00:00"))]),
+    snap = snapshot(
+        spark, [(1, 10, "On Way", "JKT", "BDG", t0, ts("2025-10-01 11:00:00"))],
         "2025-10-01 11:05:00",
     )
-    out = scd2_apply(tgt, snap, KEY, TRACKED, "updated_at", "2025-10-01 11:05:00")
+    out = scd2_apply(tgt, snap, KEY, TRACKED, "updated_at", "loaded_at")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
 
@@ -162,11 +172,11 @@ def test_scd2_never_shuffles_target(spark):
 
     t0 = ts("2025-10-01 10:00:00")
     tgt = run(spark, None, [(1, 10, "Created", "JKT", "BDG", t0, t0)], "2025-10-01 10:05:00")
-    snap = retail_snapshot(
-        src_df(spark, [(1, 10, "On Way", "JKT", "BDG", t0, ts("2025-10-01 11:00:00"))]),
+    snap = snapshot(
+        spark, [(1, 10, "On Way", "JKT", "BDG", t0, ts("2025-10-01 11:00:00"))],
         "2025-10-01 11:05:00",
     )
-    out = scd2_apply(tgt, snap, KEY, TRACKED, "updated_at", "2025-10-01 11:05:00")
+    out = scd2_apply(tgt, snap, KEY, TRACKED, "updated_at", "loaded_at")
     plan = plan_string(out)
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
     shuffles = [
@@ -183,31 +193,29 @@ def test_scd2_null_key_updates_instead_of_accumulating(spark):
     snap = lambda v, ts: spark.createDataFrame(
         [(None, v, ts)], "user_id long, status string, snap_ts string"
     ).withColumn("snap_ts", F.to_timestamp("snap_ts"))
-    t1 = scd2_apply(None, snap("A", "2024-01-01 00:00:00"), ["user_id"],
-                    ["status"], "snap_ts", "2024-01-01 01:00:00")
-    t2 = scd2_apply(t1, snap("B", "2024-01-02 00:00:00"), ["user_id"],
-                    ["status"], "snap_ts", "2024-01-02 01:00:00")
+    t1 = scd2_apply(None, clocked(snap("A", "2024-01-01 00:00:00"), "2024-01-01 01:00:00"),
+                    ["user_id"], ["status"], "snap_ts", "run_at")
+    t2 = scd2_apply(t1, clocked(snap("B", "2024-01-02 00:00:00"), "2024-01-02 01:00:00"),
+                    ["user_id"], ["status"], "snap_ts", "run_at")
     rows = t2.collect()
     cur = [r for r in rows if r.is_current]
     assert len(cur) == 1 and cur[0].status == "B"
     hist = [r for r in rows if not r.is_current]
     assert len(hist) == 1 and hist[0].status == "A"
     # unchanged re-run: no new versions
-    t3 = scd2_apply(t2, snap("B", "2024-01-03 00:00:00"), ["user_id"],
-                    ["status"], "snap_ts", "2024-01-03 01:00:00")
+    t3 = scd2_apply(t2, clocked(snap("B", "2024-01-03 00:00:00"), "2024-01-03 01:00:00"),
+                    ["user_id"], ["status"], "snap_ts", "run_at")
     assert t3.count() == 2
 
 
 def test_scd2_rejects_meta_column_collisions(spark):
-    import pytest
-
     snap = spark.createDataFrame(
         [(1, "x", "2024-01-01 00:00:00")],
         "user_id long, valid_from string, snap_ts string",
     )
     with pytest.raises(ValueError, match="valid_from"):
-        scd2_apply(None, snap, ["user_id"], ["valid_from"], "snap_ts",
-                   "2024-01-01 01:00:00")
+        scd2_apply(None, clocked(snap, "2024-01-01 01:00:00"), ["user_id"],
+                   ["valid_from"], "snap_ts", "run_at")
 
 
 def test_scd2_probes_stored_table_twice(spark, tmp_path):
@@ -226,12 +234,12 @@ def test_scd2_probes_stored_table_twice(spark, tmp_path):
         "2025-10-01 10:05:00",
     )
     wh.overwrite(first, "scd", partition_by=["is_current"])
-    snap = retail_snapshot(
-        src_df(spark, [(1, 10, "On Way", "JKT", "BDG", t0, ts("2025-10-01 11:00:00"))]),
+    snap = snapshot(
+        spark, [(1, 10, "On Way", "JKT", "BDG", t0, ts("2025-10-01 11:00:00"))],
         "2025-10-01 11:05:00",
     )
     out = scd2_apply(
-        wh.read(spark, "scd"), snap, KEY, TRACKED, "updated_at", "2025-10-01 11:05:00"
+        wh.read(spark, "scd"), snap, KEY, TRACKED, "updated_at", "loaded_at"
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.startswith("AdaptiveSparkPlan")
@@ -239,3 +247,59 @@ def test_scd2_probes_stored_table_twice(spark, tmp_path):
     assert 1 <= scans <= 2, plan
     assert plan.count("BroadcastExchange") <= 3, plan
     assert out.count() == 3
+
+
+@pytest.mark.parametrize(
+    "key, tracked, run_ts_col, match",
+    [
+        (["user_id"], ["status"], "absent", r"'absent' must be .*\(found None\)"),
+        (["user_id"], ["status"], "note", r"'note' must be .*\(found StringType\(\)\)"),
+        (["user_id", "run_at"], ["status"], "run_at", "'run_at' must be .* not a key"),
+        (["user_id"], ["status", "seen_at"], "seen_at", "'seen_at' must be .* not a key, tracked"),
+        (["user_id"], ["status"], "snap_ts", "'snap_ts' must be .* or snapshot-time column"),
+    ],
+)
+def test_scd2_rejects_bad_run_clock_column_without_a_job(spark, key, tracked, run_ts_col, match):
+    """The run clock column is checked against the snapshot's schema
+    before any plan is built: it must exist, be a timestamp and be a
+    column of its own. No Spark job runs for the check."""
+    snap = spark.createDataFrame(
+        [(1, "a", "n", ts("2024-01-01 00:00:00"), ts("2024-01-01 00:00:00"), ts("2024-01-01 01:00:00"))],
+        "user_id long, status string, note string, seen_at timestamp, snap_ts timestamp, "
+        "run_at timestamp",
+    )
+    sc = spark.sparkContext
+    group = f"scd2_clock_check_{run_ts_col}_{len(key)}_{len(tracked)}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match=match):
+            scd2_apply(None, snap, key, tracked, "snap_ts", run_ts_col)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_scd2_run_clock_column_is_not_stored(spark):
+    """The clock stamps the meta columns on every row of a first and an
+    incremental run, and never becomes a column of the dimension."""
+    t0 = ts("2025-10-01 10:00:00")
+    first = run(spark, None, [(1, 10, "Created", "JKT", "BDG", t0, t0)], "2025-10-01 10:05:00")
+    second = run(
+        spark,
+        first,
+        [
+            (1, 10, "On Way", "JKT", "BDG", t0, ts("2025-10-01 11:00:00")),
+            (2, 20, "Created", "SBY", "JKT", t0, ts("2025-10-01 11:00:00")),
+        ],
+        "2025-10-01 11:05:00",
+    )
+    assert "loaded_at" not in first.columns and "loaded_at" not in second.columns
+    got = sorted(
+        (r.id, r.is_current, r.dw_inserted_at, r.dw_updated_at) for r in second.collect()
+    )
+    assert got == [
+        (1, False, ts("2025-10-01 10:05:00"), ts("2025-10-01 11:05:00")),
+        (1, True, ts("2025-10-01 10:05:00"), ts("2025-10-01 11:05:00")),
+        (2, True, ts("2025-10-01 11:05:00"), ts("2025-10-01 11:05:00")),
+    ]

@@ -143,8 +143,12 @@ def test_stream_scd2_matches_batch_two_runs(spark, tmp_path):
     got = wh.read(spark, "dim").drop("state")
     s1 = spark.createDataFrame(b1, schema)
     s2 = spark.createDataFrame(b2, schema)
-    want1 = scd2_apply(None, s1, ["user_id"], ["status"], "ts", str(t1))
-    want = scd2_apply(want1, s2, ["user_id"], ["status"], "ts", str(t2))
+    want1 = scd2_apply(
+        None, s1.withColumn("run_at", F.lit(t1)), ["user_id"], ["status"], "ts", "run_at"
+    )
+    want = scd2_apply(
+        want1, s2.withColumn("run_at", F.lit(t2)), ["user_id"], ["status"], "ts", "run_at"
+    )
     cols = ["user_id", "status", "valid_from", "valid_to", "is_current"]
     canon = lambda df: sorted(tuple(str(r[c]) for c in cols) for r in df.collect())
     assert canon(got) == canon(want)
@@ -208,8 +212,12 @@ def test_stream_scd2_crash_around_swap_replays_to_batch_state(
     assert dict(got.dtypes)["is_current"] == "boolean"
     s1 = spark.createDataFrame(b1, schema)
     s2 = spark.createDataFrame(b2, schema)
-    want1 = scd2_apply(None, s1, ["user_id"], ["status"], "ts", str(t1))
-    want = scd2_apply(want1, s2, ["user_id"], ["status"], "ts", str(t2))
+    want1 = scd2_apply(
+        None, s1.withColumn("run_at", F.lit(t1)), ["user_id"], ["status"], "ts", "run_at"
+    )
+    want = scd2_apply(
+        want1, s2.withColumn("run_at", F.lit(t2)), ["user_id"], ["status"], "ts", "run_at"
+    )
     cols = ["user_id", "status", "valid_from", "valid_to", "is_current"]
     canon = lambda df: sorted(tuple(str(r[c]) for c in cols) for r in df.collect())
     assert canon(got) == canon(want)
@@ -236,6 +244,45 @@ def test_stream_scd2_refuses_all_null_order_batch(spark, tmp_path):
             stream, wh, "dim", ["user_id"], ["status"], "ts", str(tmp_path / "ckpt")
         )
     assert not wh.exists("dim")
+
+
+def test_stream_scd2_clock_is_batch_max_in_any_process_timezone(spark, tmp_path):
+    """The run clock is the batch's max ``ts`` whatever the Python
+    process's time zone: it stays a Spark value, never a naive local
+    datetime handed back as a string (which, parsed in the session's
+    UTC, moved the clock by the process's UTC offset)."""
+    import os
+    import time
+
+    from lion_parcel_etl_spark.catalog import Warehouse
+    from lion_parcel_etl_spark.streaming import stream_scd2
+
+    schema = "user_id long, status string, ts timestamp"
+    landing = str(tmp_path / "landing")
+    wh = Warehouse(str(tmp_path / "wh"))
+    spark.createDataFrame(
+        [(1, "new", "2024-01-01 10:00:00"), (2, "new", "2024-01-02 10:00:00")],
+        "user_id long, status string, ts string",
+    ).withColumn("ts", F.to_timestamp("ts")).write.parquet(landing)
+
+    tz = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Jakarta"
+    time.tzset()
+    try:
+        stream = spark.readStream.schema(schema).parquet(landing)
+        stream_scd2(stream, wh, "dim", ["user_id"], ["status"], "ts", str(tmp_path / "ckpt"))
+        max_ts = spark.read.schema(schema).parquet(landing).agg(F.max("ts")).first()[0]
+        # valid_to (9999-12-31 23:59:59 UTC) is past year 9999 in this zone
+        rows = wh.read(spark, "dim").select("dw_inserted_at", "dw_updated_at").collect()
+    finally:
+        if tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = tz
+        time.tzset()
+    assert len(rows) == 2
+    assert {r.dw_updated_at for r in rows} == {max_ts}
+    assert {r.dw_inserted_at for r in rows} == {max_ts}
 
 
 def test_stream_merge_order_guard_protects_null_keys(spark, tmp_path):
